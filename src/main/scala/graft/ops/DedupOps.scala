@@ -459,14 +459,8 @@ object DedupOps {
     * sort-based aggregation past 128 groups), no shuffle of raw text. */
   def ngramJaccardPairs(df: DataFrame, text: Column, id: Column,
       k: Int = 3, maxDocFreq: Long = 100,
-      minJaccard: Double = 0.2,
-      pairStats: Option[DataFrame] = None): DataFrame =
-    pairStats.getOrElse(ngramPairStats(df, text, id, k, maxDocFreq))
-      .withColumn("jaccard", round(
-        col("common").cast("double") /
-          (col("size_a") + col("size_b") - col("common")).cast("double"), 6))
-      .where(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "common", "size_a", "size_b", "jaccard")
+      minJaccard: Double = 0.2): DataFrame =
+    jaccardFromStats(ngramPairStats(df, text, id, k, maxDocFreq), minJaccard)
 
   /** Asymmetric near-dup pairs by the overlap (containment) coefficient
     * `|A∩B| / min(|A|,|B|)` over the same capped shingle postings as
@@ -476,30 +470,39 @@ object DedupOps {
     * the quote/excerpt case every symmetric threshold misses). */
   def containmentPairs(df: DataFrame, text: Column, id: Column,
       k: Int = 3, maxDocFreq: Long = 100,
-      minContainment: Double = 0.5,
-      pairStats: Option[DataFrame] = None): DataFrame =
-    pairStats.getOrElse(ngramPairStats(df, text, id, k, maxDocFreq))
+      minContainment: Double = 0.5): DataFrame =
+    containmentFromStats(ngramPairStats(df, text, id, k, maxDocFreq),
+      minContainment)
+
+  /** Pair statistics → Jaccard: (doc_a, doc_b, common, size_a, size_b,
+    * jaccard) for every pair of `stats` (the [[ngramPairStats]] shape)
+    * with 6-dp Jaccard >= `minJaccard`.  The one definition of the
+    * coefficient — [[ngramJaccardPairs]], [[confirmJaccard]] and callers
+    * holding a landed statistics table all score through it. */
+  def jaccardFromStats(stats: DataFrame, minJaccard: Double): DataFrame =
+    stats
+      .withColumn("jaccard", round(
+        col("common").cast("double") /
+          (col("size_a") + col("size_b") - col("common")).cast("double"), 6))
+      .where(col("jaccard") >= minJaccard)
+      .select("doc_a", "doc_b", "common", "size_a", "size_b", "jaccard")
+
+  /** Pair statistics → containment (see [[containmentPairs]]). */
+  def containmentFromStats(stats: DataFrame,
+      minContainment: Double): DataFrame =
+    stats
       .withColumn("containment", round(
         col("common").cast("double") /
           least(col("size_a"), col("size_b")).cast("double"), 6))
       .where(col("containment") >= minContainment)
       .select("doc_a", "doc_b", "common", "size_a", "size_b", "containment")
 
-  /** The landable form of [[ngramPairStats]] — (doc_a, doc_b, common,
-    * size_a, size_b), all longs (exact parquet round-trip).  Callers that
-    * land it once (Tables.ngramPairStats) pass it back through the
-    * similarity coefficients' `pairStats` parameters, skipping the
-    * per-query shingle hash + posting-walk pass (the dominant cost of the
-    * n-gram pair family at any scale). */
-  def ngramPairStatsOf(df: DataFrame, text: Column, id: Column,
-      k: Int = 3, maxDocFreq: Long = 100): DataFrame =
-    ngramPairStats(df, text, id, k, maxDocFreq)
-
-  /** Shared pair-statistics stage behind the n-gram similarity
-    * coefficients: capped shingle postings → sorted posting walk →
-    * (doc_a, doc_b, common, size_a, size_b). */
-  private def ngramPairStats(df: DataFrame, text: Column, id: Column,
-      k: Int, maxDocFreq: Long): DataFrame = {
+  /** Pair-statistics stage behind the n-gram similarity coefficients:
+    * capped shingle postings → sorted posting walk → (doc_a, doc_b,
+    * common, size_a, size_b), all longs (exact parquet round-trip, so a
+    * landed copy — Tables.ngramPairStats — scores identically). */
+  def ngramPairStats(df: DataFrame, text: Column, id: Column,
+      k: Int = 3, maxDocFreq: Long = 100): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val hashes = udf { (t: String) =>
@@ -788,17 +791,21 @@ object DedupOps {
     * aggregate can actually afford. */
   def winnowPairs(df: DataFrame, text: Column, id: Column,
       k: Int = 25, w: Int = 4, maxDocFreq: Long = 100,
-      minSharedFps: Long = 2,
-      posAggTable: Option[DataFrame] = None): DataFrame = {
+      minSharedFps: Long = 2): DataFrame =
+    winnowPairsFrom(
+      winnowFingerprints(df, text, id, k, w)
+        .select(col("doc_id").cast("long").as("doc_id"), col("fp"))
+        .distinct(),
+      maxDocFreq, minSharedFps)
+
+  /** Fingerprint postings → [[winnowPairs]]: `postings` is the distinct
+    * (doc_id, fp) set — or any frame whose (doc_id, fp) keys are that set,
+    * e.g. a landed [[winnowPosAgg]] table (grouped on exactly that key). */
+  def winnowPairsFrom(postings: DataFrame, maxDocFreq: Long,
+      minSharedFps: Long): DataFrame = {
     require(minSharedFps >= 1, "minSharedFps must be >= 1")
-    // a landed [[winnowPosAgg]] table's keys ARE the distinct (doc, fp)
-    // set (it is grouped on exactly that key) — same rows either way
     val fps = graft.core.CacheScope.persist(
-      posAggTable.map(_.select(col("doc_id"), col("fp"))).getOrElse(
-        winnowFingerprints(df, text, id, k, w)
-          .select(col("doc_id").cast("long").as("doc_id"), col("fp"))
-          .distinct()),
-      eager = false)
+      postings.select(col("doc_id"), col("fp")), eager = false)
     val hot = fps.groupBy("fp").agg(count(lit(1)).as("__df"))
       .where(col("__df") > maxDocFreq).select("fp")
     val posts = fps.join(broadcast(hot), Seq("fp"), "left_anti")
@@ -840,26 +847,25 @@ object DedupOps {
     * all-pairs, no data-wide sort (the suffix-array alternative). */
   def sharedSpans(df: DataFrame, text: Column, id: Column,
       k: Int = 25, w: Int = 4, maxDocFreq: Long = 100,
-      minLen: Int = -1, posAggTable: Option[DataFrame] = None): DataFrame = {
-    val ml = if (minLen < 0) w + k - 1 else minLen
-    require(ml >= w + k - 1,
-      s"minLen=$ml below the winnowing guarantee w+k-1=${w + k - 1}: " +
-        "spans shorter than that may lack a selected seed (use a smaller " +
-        "k/w instead)")
+      minLen: Int = -1): DataFrame =
+    sharedSpansFrom(winnowPosAgg(df, text, id, k, w), df, text, id, k, w,
+      maxDocFreq, minLen)
+
+  /** Position aggregate → [[sharedSpans]]: `posAggTable` is the corpus's
+    * [[winnowPosAgg]] table at the same (k, w) — computed inline by the
+    * one-call form, or a landed copy (longs and long arrays round-trip
+    * parquet exactly, so the table is bit-identical). */
+  def sharedSpansFrom(posAggTable: DataFrame, df: DataFrame, text: Column,
+      id: Column, k: Int, w: Int, maxDocFreq: Long,
+      minLen: Int = -1): DataFrame = {
+    val ml = spanMinLen(k, w, minLen)
     // ONE cached table drives the whole pipeline: the per-(doc, fp)
     // sorted-position aggregate.  Its key set IS the distinct (doc, fp)
     // table (df-count + both sides of the candidate self-join), and its
     // position arrays ARE both seed sides — the old shape persisted the
     // raw positioned fingerprints AND a separate distinct table, then
-    // aggregated positions twice (once per pair side).  A caller with a
-    // LANDED copy ([[winnowPosAgg]]) passes it instead; longs and long
-    // arrays round-trip parquet exactly, so the table is bit-identical.
-    val agg = graft.core.CacheScope.persist(
-      posAggTable.getOrElse(
-        posAgg(winnowFingerprints(df, text, id, k, w)
-          .select(col("doc_id").cast("long").as("doc_id"), col("pos"),
-            col("fp")))),
-      eager = false)
+    // aggregated positions twice (once per pair side).
+    val agg = graft.core.CacheScope.persist(posAggTable, eager = false)
     val hot = agg.groupBy("fp").agg(count(lit(1)).as("__df"))
       .where(col("__df") > maxDocFreq).select("fp")
     val posts = agg.select("doc_id", "fp")
@@ -875,6 +881,18 @@ object DedupOps {
       df.select(id.cast("long").as("__tid"), lower(text).as("__t")),
       df.select(id.cast("long").as("__tid"), lower(text).as("__t")),
       k, ml)
+  }
+
+  /** The effective span threshold (`minLen < 0` = the winnowing bound
+    * w + k - 1), required to be at least that bound: spans shorter than
+    * it may lack a selected seed. */
+  private def spanMinLen(k: Int, w: Int, minLen: Int): Int = {
+    val ml = if (minLen < 0) w + k - 1 else minLen
+    require(ml >= w + k - 1,
+      s"minLen=$ml below the winnowing guarantee w+k-1=${w + k - 1}: " +
+        "spans shorter than that may lack a selected seed (use a smaller " +
+        "k/w instead)")
+    ml
   }
 
   /** Per-(doc, fp) sorted-position lists — the seed-side shape of
@@ -893,9 +911,9 @@ object DedupOps {
     * Every span operator (sharedSpans, spanDedupedText, winnowPairs'
     * distinct key set, contaminationSpans' corpus side) derives from
     * exactly this table, so a caller that lands it once (the
-    * Tables.minhashCands discipline) can pass it back via the operators'
-    * `posAggTable` parameters and skip the per-query fingerprint kernel
-    * (one md5 per char position — the tier's dominant cost at any scale). */
+    * Tables.minhashCands discipline) feeds it to the `*From` stages and
+    * skips the per-query fingerprint kernel (one md5 per char position —
+    * the tier's dominant cost at any scale). */
   def winnowPosAgg(df: DataFrame, text: Column, id: Column,
       k: Int = 25, w: Int = 4): DataFrame =
     posAgg(winnowFingerprints(df, text, id, k, w)
@@ -1004,26 +1022,23 @@ object DedupOps {
     * `start` into the corpus document's lowercased text. */
   def contaminationSpans(corpus: DataFrame, text: Column, id: Column,
       probe: DataFrame, ptext: Column, pid: Column,
-      k: Int = 25, w: Int = 4, minLen: Int = -1,
-      corpusPosAgg: Option[DataFrame] = None): DataFrame = {
-    val ml = if (minLen < 0) w + k - 1 else minLen
-    require(ml >= w + k - 1,
-      s"minLen=$ml below the winnowing guarantee w+k-1=${w + k - 1}")
+      k: Int = 25, w: Int = 4, minLen: Int = -1): DataFrame =
+    contaminationSpansFrom(winnowPosAgg(corpus, text, id, k, w), corpus,
+      text, id, probe, ptext, pid, k, w, minLen)
+
+  /** Corpus position aggregate → [[contaminationSpans]]: `corpusPosAgg`
+    * is the corpus's [[winnowPosAgg]] table at the same (k, w), inline or
+    * landed. */
+  def contaminationSpansFrom(corpusPosAgg: DataFrame, corpus: DataFrame,
+      text: Column, id: Column, probe: DataFrame, ptext: Column, pid: Column,
+      k: Int, w: Int, minLen: Int = -1): DataFrame = {
+    val ml = spanMinLen(k, w, minLen)
     // one cached per-(doc, fp) position aggregate per side (the sharedSpans
     // discipline): key sets drive the candidate join, position arrays are
-    // the seed sides — no separate positioned-fingerprint persists; a
-    // landed [[winnowPosAgg]] copy serves the corpus side when supplied
-    val aggC = graft.core.CacheScope.persist(
-      corpusPosAgg.getOrElse(
-        posAgg(winnowFingerprints(corpus, text, id, k, w)
-          .select(col("doc_id").cast("long").as("doc_id"), col("pos"),
-            col("fp")))),
-      eager = false)
+    // the seed sides — no separate positioned-fingerprint persists
+    val aggC = graft.core.CacheScope.persist(corpusPosAgg, eager = false)
     val aggP = graft.core.CacheScope.persist(
-      posAgg(winnowFingerprints(probe, ptext, pid, k, w)
-        .select(col("doc_id").cast("long").as("doc_id"), col("pos"),
-          col("fp"))),
-      eager = false)
+      winnowPosAgg(probe, ptext, pid, k, w), eager = false)
     val cand = aggC.select("doc_id", "fp").as("a")
       .join(broadcast(aggP.select("doc_id", "fp").as("b")),
         col("a.fp") === col("b.fp"))
@@ -1076,9 +1091,17 @@ object DedupOps {
     * as the empty string.  Output: (doc_id, deduped_text). */
   def spanDedupedText(df: DataFrame, text: Column, id: Column,
       k: Int = 25, w: Int = 4, maxDocFreq: Long = 100,
-      minLen: Int = -1, posAggTable: Option[DataFrame] = None): DataFrame = {
-    val removals = spanRemovals(
-      sharedSpans(df, text, id, k, w, maxDocFreq, minLen, posAggTable))
+      minLen: Int = -1): DataFrame =
+    spanCutText(df, text, id, sharedSpans(df, text, id, k, w, maxDocFreq,
+      minLen))
+
+  /** Spans → [[spanDedupedText]]: cut the [[spanRemovals]] of a
+    * [[sharedSpans]]-shaped pair list (inline or from a landed position
+    * aggregate via [[sharedSpansFrom]]) out of each document's lowercased
+    * text.  Output: (doc_id, deduped_text). */
+  def spanCutText(df: DataFrame, text: Column, id: Column,
+      spans: DataFrame): DataFrame = {
+    val removals = spanRemovals(spans)
       .groupBy("doc_id")
       .agg(collect_list(struct(col("start"), col("len"))).as("__iv"))
     val cut = udf { (t: String, iv: Seq[org.apache.spark.sql.Row]) =>
@@ -1462,28 +1485,7 @@ object DedupOps {
     * hash joins keyed on numeric columns, no raw text movement. */
   def confirmJaccard(df: DataFrame, text: Column, id: Column,
       pairs: DataFrame, k: Int = 3, maxDocFreq: Long = 100,
-      minJaccard: Double = 0.2,
-      pairStats: Option[DataFrame] = None): DataFrame = {
-    // A landed [[ngramPairStatsOf]] table (same k, same df-cap) already
-    // carries every (doc_a, doc_b, common, size_a, size_b) this confirm
-    // derives: identical capping (a run longer than the cap is dropped
-    // whole, exactly the left_anti hot filter), identical common counts
-    // (candidates share a MinHash band key, so any confirmable pair
-    // shares >= 1 uncapped shingle and appears in the stats; pairs whose
-    // only shared shingles are hot drop out of BOTH paths), identical
-    // sizes, formula, rounding, and doc_a < doc_b orientation — so the
-    // confirm reduces to an equi-join of two landed tables.
-    pairStats.foreach { st =>
-      return pairs
-        .select(col("doc_a").cast("long").as("doc_a"),
-          col("doc_b").cast("long").as("doc_b"))
-        .join(st, Seq("doc_a", "doc_b"))
-        .withColumn("jaccard", round(
-          col("common").cast("double") /
-            (col("size_a") + col("size_b") - col("common")).cast("double"), 6))
-        .where(col("jaccard") >= minJaccard)
-        .select("doc_a", "doc_b", "jaccard")
-    }
+      minJaccard: Double = 0.2): DataFrame = {
     val post = shinglePostings(df, text, id, k, maxDocFreq)
       .select(col("doc_id").cast("long").as("doc_id"), col("sh"))
     val postC = graft.core.CacheScope.persist(post, eager = false)
@@ -1495,16 +1497,17 @@ object DedupOps {
       .join(postC.as("pb"),
         col("doc_b") === col("pb.doc_id") && col("pa.sh") === col("pb.sh"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
-    common
+    // the candidates' own [[ngramPairStats]] rows: a caller holding the
+    // corpus table (same k, same df-cap) gets the identical rows by
+    // joining it to the candidates — same capping (a run longer than the
+    // cap drops whole, exactly the left_anti hot filter), same common
+    // counts, same sizes; zero-common candidates drop out of both
+    val stats = common
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("size_a")),
         Seq("doc_a"))
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("size_b")),
         Seq("doc_b"))
-      .withColumn("jaccard", round(
-        col("common").cast("double") /
-          (col("size_a") + col("size_b") - col("common")).cast("double"), 6))
-      .where(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
+    jaccardFromStats(stats, minJaccard).select("doc_a", "doc_b", "jaccard")
   }
 
   /** End-to-end fuzzy document dedup — the canonical curation pipeline as
@@ -1517,37 +1520,41 @@ object DedupOps {
     * Every stage is the bounded/banded shape verified in BENCH_SCALE.md;
     * nothing here is all-pairs.
     *
-    * Storage contract: the pipeline's intermediates (band table, shingle
-    * postings, pair cache, cluster labels) are MATERIALIZED into the final
-    * loser list and released before this returns — a one-call convenience
+    * Storage contract ([[removeClusterLosers]]): a one-call convenience
     * API must not pin corpus-derived tables in executor storage until the
-    * caller remembers [[graft.core.CacheScope.release]].  Only the loser
-    * list itself (≤ one row per duplicate document) stays cached; it is
-    * promoted to the caller's scope, so their usual per-query `release()`
-    * drops it.  The internal cleanup is SCOPED
-    * ([[graft.core.CacheScope.scoped]]): only frames this pipeline itself
-    * persisted are dropped — never a handle the caller (or a concurrent
-    * pipeline in the same JVM) registered. */
+    * caller remembers [[graft.core.CacheScope.release]] — only the loser
+    * list stays cached when this returns. */
   def fuzzyDedup(df: DataFrame, text: Column, id: Column, k: Int = 3,
       numHashes: Int = 16, bands: Int = 4, maxDocFreq: Long = 100,
-      minJaccard: Double = 0.5,
-      candidates: Option[DataFrame] = None,
-      pairStats: Option[DataFrame] = None): DataFrame =
+      minJaccard: Double = 0.5): DataFrame =
+    removeClusterLosers(df, id,
+      confirmJaccard(df, text, id,
+        minhashCandidates(df, text, id, k, numHashes, bands), k, maxDocFreq,
+        minJaccard))
+
+  /** Confirmed pairs → cluster-loser removal, the keeper tail of every
+    * one-call dedup: [[dedupClusters]] over `pairs` ((doc_a, doc_b)),
+    * then `df` minus every non-minimum cluster member.
+    *
+    * Storage contract: `pairs` is by-name and built INSIDE this call's
+    * [[graft.core.CacheScope.scoped]] scope, so every intermediate its
+    * stages persist (band table, postings, pair cache, cluster labels) is
+    * materialized into the loser list and released before this returns.
+    * Only the loser list (≤ one row per duplicate) stays cached, promoted
+    * to the caller's scope so their usual `release()` drops it; frames the
+    * caller (or a concurrent pipeline in the same JVM) registered are
+    * never touched. */
+  def removeClusterLosers(df: DataFrame, id: Column,
+      pairs: => DataFrame): DataFrame =
     graft.core.CacheScope.scoped { scope =>
-      // a landed candidate layout (Tables.minhashCands) skips the
-      // signature kernel + band self-join; identical pair set
-      val cand = candidates
-        .getOrElse(minhashCandidates(df, text, id, k, numHashes, bands))
-      val confirmed = confirmJaccard(df, text, id, cand, k, maxDocFreq,
-        minJaccard, pairStats)
       // rename to avoid capturing the caller frame's own id column
-      val losers = dedupClusters(confirmed)
+      val losers = dedupClusters(pairs)
         .where(col("doc_id") =!= col("keeper_id"))
         .select(col("doc_id").as("__loser_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       losers.count() // materialize BEFORE dropping the upstream caches
       scope.releaseExcept(losers)
-      df.join(losers, id === col("__loser_id"), "left_anti")
+      df.join(losers, id.cast("long") === col("__loser_id"), "left_anti")
     }
 
   /** In-cluster cosine near-duplicate pairs — the pair stage of semantic
@@ -1587,21 +1594,9 @@ object DedupOps {
     * list is materialized, every upstream cache released, and only the
     * loser list stays registered with the scope. */
   def semanticDedupAssigned(df: DataFrame, vec: Column, id: Column,
-      clusters: DataFrame, minCosine: Double,
-      pairsOverride: Option[DataFrame] = None): DataFrame =
-    graft.core.CacheScope.scoped { scope =>
-      // a landed copy of the in-cluster pair stage (same clusters, same
-      // threshold) serves when supplied; identical pair set
-      val pairs = pairsOverride.getOrElse(
-        semanticPairs(df, vec, id, clusters, minCosine))
-      val losers = dedupClusters(pairs)
-        .where(col("doc_id") =!= col("keeper_id"))
-        .select(col("doc_id").as("__loser_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      losers.count() // materialize BEFORE dropping the upstream caches
-      scope.releaseExcept(losers)
-      df.join(losers, id.cast("long") === col("__loser_id"), "left_anti")
-    }
+      clusters: DataFrame, minCosine: Double): DataFrame =
+    removeClusterLosers(df, id,
+      semanticPairs(df, vec, id, clusters, minCosine))
 
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication", 2023): embedding-tier
@@ -1862,20 +1857,18 @@ object DedupOps {
     * Output: ONE row (n_truth, n_candidates, n_hits, recall, precision). */
   def minhashEvalReport(df: DataFrame, text: Column, id: Column,
       k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      maxDocFreq: Long = 100, minJaccard: Double = 0.5,
-      candidates: Option[DataFrame] = None,
-      pairStats: Option[DataFrame] = None): DataFrame = {
-    val truth = ngramJaccardPairs(df, text, id, k, maxDocFreq, minJaccard,
-        pairStats)
-      .select(col("doc_a"), col("doc_b"))
-    // callers with a landed candidate layout (Tables.minhashCands) pass
-    // it instead of re-running the signature kernel + band self-join;
-    // the pair SET is identical by the layout's contract
-    val cand = candidates
-      .getOrElse(minhashCandidates(df, text, id, k, numHashes, bands))
-      .select(col("doc_a"), col("doc_b"))
-    val t = graft.core.CacheScope.persist(truth, eager = false)
-    val c = graft.core.CacheScope.persist(cand, eager = false)
+      maxDocFreq: Long = 100, minJaccard: Double = 0.5): DataFrame =
+    candidateRecall(ngramJaccardPairs(df, text, id, k, maxDocFreq, minJaccard),
+      minhashCandidates(df, text, id, k, numHashes, bands))
+
+  /** Ground truth + candidates → [[minhashEvalReport]]'s one-row report:
+    * both are (doc_a, doc_b) pair frames (extra columns ignored), e.g. a
+    * [[jaccardFromStats]] result and a landed candidate layout. */
+  def candidateRecall(truth: DataFrame, candidates: DataFrame): DataFrame = {
+    val t = graft.core.CacheScope.persist(
+      truth.select(col("doc_a"), col("doc_b")), eager = false)
+    val c = graft.core.CacheScope.persist(
+      candidates.select(col("doc_a"), col("doc_b")), eager = false)
     val hits = t.join(c, Seq("doc_a", "doc_b"), "left_semi")
     t.agg(count(lit(1)).as("n_truth"))
       .crossJoin(c.agg(count(lit(1)).as("n_candidates")))

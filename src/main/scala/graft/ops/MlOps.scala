@@ -306,14 +306,17 @@ object MlOps {
     val data = graft.core.CacheScope.persist(
       df.select(id.as("vec_id"), vec.cast("array<double>").as("v")),
       eager = false)
-    // one probe job for both driver scalars (count gate + dimension)
-    // instead of a count job plus a head job; dims are uniform for any
-    // input this fit accepts (the update algebra requires it), so
-    // max(size) equals the previous head-row size
-    val probeRow = data.agg(count(lit(1)), max(size(col("v")))).head
+    // one probe job for the driver scalars (count gate + dimension)
+    // instead of a count job plus a head job; the update algebra needs
+    // uniform dims, so ragged input is rejected here (min != max size)
+    val probeRow = data.agg(count(lit(1)), max(size(col("v"))),
+      min(size(col("v")))).head
     val n = probeRow.getLong(0)
     require(n >= k, s"k=$k exceeds corpus rows n=$n")
     val d = probeRow.getInt(1)
+    val dMin = probeRow.getInt(2)
+    require(dMin == d,
+      s"ragged vectors: min dimension $dMin != max dimension $d")
     // init = the k seeded-hash-ranked corpus vectors, centroid_id = rank
     // (the same set AND the same ids as the routed path's sorted collect)
     var cent: DataFrame = graft.core.CacheScope.persist(

@@ -56,9 +56,8 @@ object ExtQueries {
     // Dedup: n-gram Jaccard near-dup pairs (threshold calibrated to the
     // planted near-dups: clean separation at 0.5)
     "dd_jaccard_pairs" -> ((s, dir) =>
-      DedupOps.ngramJaccardPairs(docs(s, dir), col("text"), col("doc_id"),
-        k = 3, maxDocFreq = 100, minJaccard = 0.5,
-        pairStats = Some(Tables.ngramPairStats(s, dir)))),
+      DedupOps.jaccardFromStats(Tables.ngramPairStats(s, dir),
+        minJaccard = 0.5)),
 
     // Dedup: MinHash LSH band buckets
     "dd_minhash_bands" -> ((s, dir) =>

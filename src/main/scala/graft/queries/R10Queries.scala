@@ -54,22 +54,11 @@ object R10Queries {
     * (JVM, dir): the pair query and the SemDeDup keeper projection both
     * consume exactly this pair set.  (doc_a, doc_b, cos 6-dp) — exact
     * parquet round-trip. */
-  private def semanticPairs04(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_sem_pairs04_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_sem_pairs04@$dir") {
-      val pairs = DedupOps.semanticPairs(emb(s, dir), col("embedding"),
-        col("vec_id"), ivfClusters(s, dir), minCosine = 0.4)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(pairs, "doc_a", 8, tbl,
-        s"$wh/graft_layout/$tbl")
+  private def semanticPairs04(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "sem_pairs04", "doc_a") {
+      DedupOps.semanticPairs(emb(s, dir), col("embedding"), col("vec_id"),
+        ivfClusters(s, dir), minCosine = 0.4)
     }
-    s.table(tbl)
-  }
 
   /** The ivfAssign CTE prefix shared by the semantic oracle SQL — the
     * centroid count mirrors [[ivfClusters]]'s ⌈n/TargetCell⌉ (floor 8). */
@@ -131,25 +120,25 @@ object R10Queries {
     // -> connected components -> keep the min-id member of each dup group
     // (the pair stage comes from the same landed layout)
     "dd_semantic_keep" -> ((s, dir) =>
-      DedupOps.semanticDedupAssigned(emb(s, dir), col("embedding"),
-        col("vec_id"), ivfClusters(s, dir), minCosine = 0.4,
-        pairsOverride = Some(semanticPairs04(s, dir)))
+      DedupOps.removeClusterLosers(emb(s, dir), col("vec_id"),
+        semanticPairs04(s, dir))
         .select(col("vec_id"), col("label").cast("long").as("label"))),
 
     // ExactSubstr span extraction: winnow-seeded maximal shared char runs
     // >= w+k-1 = 28 chars across candidate document pairs
     "dd_spans" -> ((s, dir) =>
-      DedupOps.sharedSpans(Tables.docs(s, dir), col("text"), col("doc_id"),
-        k = 25, w = 4, maxDocFreq = 100,
-        posAggTable = Some(Tables.winnowPosAgg(s, dir)))),
+      DedupOps.sharedSpansFrom(Tables.winnowPosAgg(s, dir), Tables.docs(s, dir),
+        col("text"), col("doc_id"), k = 25, w = 4, maxDocFreq = 100)),
 
     // ExactSubstr removal: every shared span cut from the higher-id doc
     // (merged intervals), text rebuilt — the byte-range analogue of
     // dd_para_dedup's paragraph-aligned removal
-    "dd_span_dedup" -> ((s, dir) =>
-      DedupOps.spanDedupedText(Tables.docs(s, dir), col("text"),
-        col("doc_id"), k = 25, w = 4, maxDocFreq = 100,
-        posAggTable = Some(Tables.winnowPosAgg(s, dir)))),
+    "dd_span_dedup" -> ((s, dir) => {
+      val d = Tables.docs(s, dir)
+      DedupOps.spanCutText(d, col("text"), col("doc_id"),
+        DedupOps.sharedSpansFrom(Tables.winnowPosAgg(s, dir), d, col("text"),
+          col("doc_id"), k = 25, w = 4, maxDocFreq = 100))
+    }),
 
     // Incremental substring dedup: even docs are the persisted fingerprint
     // index, odd docs the new shard — candidates must equal the full-corpus
@@ -211,10 +200,9 @@ object R10Queries {
     // token-n-gram check can miss); uncapped probe-bounded candidates
     "text_contam_spans" -> ((s, dir) => {
       val d = Tables.docs(s, dir)
-      DedupOps.contaminationSpans(d, col("text"), col("doc_id"),
-        d.where(col("doc_id") < 5), col("text"), col("doc_id"),
-        k = 25, w = 4,
-        corpusPosAgg = Some(Tables.winnowPosAgg(s, dir)))
+      DedupOps.contaminationSpansFrom(Tables.winnowPosAgg(s, dir), d,
+        col("text"), col("doc_id"),
+        d.where(col("doc_id") < 5), col("text"), col("doc_id"), k = 25, w = 4)
     }),
 
     // Real greedy-BPE subword tokenization under a fixed ranked merge

@@ -46,11 +46,10 @@ object R11Queries {
     // Banding-quality report: MinHash-LSH candidate recall/precision vs
     // the exact n-gram-Jaccard ground truth at 0.5
     "dd_minhash_recall" -> ((s, dir) =>
-      DedupOps.minhashEvalReport(Tables.docs(s, dir), col("text"),
-        col("doc_id"), k = 3, numHashes = 16, bands = 4,
-        maxDocFreq = 100, minJaccard = 0.5,
-        candidates = Some(Tables.minhashCands(s, dir)),
-        pairStats = Some(Tables.ngramPairStats(s, dir)))),
+      DedupOps.candidateRecall(
+        DedupOps.jaccardFromStats(Tables.ngramPairStats(s, dir),
+          minJaccard = 0.5),
+        Tables.minhashCands(s, dir))),
 
     // Closed-form LSH tuner: collision S-curve + threshold location for
     // every (bands, rows) factorization of 8/16/32 hashes, target 0.5

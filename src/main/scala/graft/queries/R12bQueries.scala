@@ -111,9 +111,8 @@ object R12bQueries {
     // Asymmetric containment pairs: |A∩B|/min(|A|,|B|) on the capped
     // shingle postings — catches a short doc quoted inside a long one
     "dd_containment_pairs" -> ((s, dir) =>
-      DedupOps.containmentPairs(Tables.docs(s, dir), col("text"),
-        col("doc_id"), k = 3, maxDocFreq = 100, minContainment = 0.5,
-        pairStats = Some(Tables.ngramPairStats(s, dir)))),
+      DedupOps.containmentFromStats(Tables.ngramPairStats(s, dir),
+        minContainment = 0.5)),
 
     // Content-defined chunk dedup report: cut after every token 3-gram
     // with md5 bucket ≡ 0 (mod 8); duplicated chunk-mass fraction per doc

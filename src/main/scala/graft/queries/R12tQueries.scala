@@ -34,9 +34,10 @@ object R12tQueries {
           DedupOps.exactDedup(d, col("text"), col("doc_id"))))
         .unionByName(one("norm_exact", normKept))
         .unionByName(one("fuzzy",
-          DedupOps.fuzzyDedup(d, col("text"), col("doc_id"),
-            candidates = Some(Tables.minhashCands(s, dir)),
-            pairStats = Some(Tables.ngramPairStats(s, dir)))))
+          DedupOps.removeClusterLosers(d, col("doc_id"),
+            DedupOps.jaccardFromStats(Tables.minhashCands(s, dir)
+              .join(Tables.ngramPairStats(s, dir), Seq("doc_a", "doc_b")),
+              minJaccard = 0.5))))
     })
   )
 

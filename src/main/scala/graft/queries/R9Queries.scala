@@ -120,9 +120,8 @@ object R9Queries {
     // chars, boilerplate territory) and >= 2 shared fingerprints per pair,
     // thresholded inside the aggregate
     "dd_substr_pairs" -> ((s, dir) =>
-      DedupOps.winnowPairs(docs(s, dir), col("text"), col("doc_id"),
-        k = 25, w = 4, maxDocFreq = 100, minSharedFps = 2,
-        posAggTable = Some(Tables.winnowPosAgg(s, dir)))),
+      DedupOps.winnowPairsFrom(Tables.winnowPosAgg(s, dir), maxDocFreq = 100,
+        minSharedFps = 2)),
 
     // Corpus token-frequency fluency score (LM-free CCNet-perplexity
     // stand-in; integer-exact)
@@ -141,11 +140,13 @@ object R9Queries {
         sepRegex = ParaSep)),
 
     // End-to-end fuzzy dedup: MinHash candidates -> Jaccard confirm ->
-    // clusters -> keeper projection, one call
+    // clusters -> keeper projection (fuzzyDedup's stages, composed over
+    // the landed candidate and pair-statistics layouts)
     "dd_fuzzy_keep" -> ((s, dir) =>
-      DedupOps.fuzzyDedup(docs(s, dir), col("text"), col("doc_id"),
-          candidates = Some(Tables.minhashCands(s, dir)),
-          pairStats = Some(Tables.ngramPairStats(s, dir)))
+      DedupOps.removeClusterLosers(docs(s, dir), col("doc_id"),
+        DedupOps.jaccardFromStats(Tables.minhashCands(s, dir)
+          .join(Tables.ngramPairStats(s, dir), Seq("doc_a", "doc_b")),
+          minJaccard = 0.5))
         .select("doc_id", "source", "lang")),
 
     // Persisted IVF index: corpus written partitioned by coarse cell, then

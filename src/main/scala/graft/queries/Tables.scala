@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared loaders for the driver-generated test tables — one definition of
-  * each table's read path instead of per-query-file copies. */
+  * each table's read path instead of per-query-file copies — and the
+  * derived layouts every tier shares, each landed through [[Layout.land]]
+  * (build seconds booked as `index_build_s`). */
 private[queries] object Tables {
 
   def docs(s: SparkSession, dir: String): DataFrame =
@@ -13,42 +15,17 @@ private[queries] object Tables {
   def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  /** events.parquet has shipped with two physical types for `ts` across
-    * driver testdata generations: TIMESTAMP(NANOS) — which Spark's
-    * vectorized reader rejects, so `nanosAsLong=true` surfaces it as a
-    * BIGINT of nanos — and plain timestamp[us], which loads as a native
-    * TimestampType. Branch on the *loaded* dtype so both generations read
-    * to the same microsecond-precision timestamp column.
-    *
-    * `nanosAsLong` is a runtime-settable SQL conf; Verify/Bench also set it
-    * at session build, but it is (idempotently) re-asserted here so the
-    * loader stays correct under any caller-provided session (specs build
-    * their own). */
   /** The co-engagement item graph derived from events — the shared input
     * of the whole graph tier (reach, degree histogram, components,
     * triangles).  The expensive part is the user×item self-join; it runs
     * ONCE per (JVM, dir) and lands as a bucketed-by-src parquet layout
-    * ([[graft.ops.LayoutOps.writeBucketed]]), so every graph query scans
+    * ([[Layout.land]]), so every graph query scans
     * one committed table instead of re-deriving pairs from the events
     * fact — at 100 TB the derivation dominates each graph query and this
     * amortizes it across the tier (and the bucket spec makes src-keyed
     * joins exchange-free on the scan side). */
-  def coEdges(s: SparkSession, dir: String): DataFrame = {
-    // per-DIR lock (IndexBuilds.once discipline): a doubled
-    // getOrElseUpdate thunk would race the DROP TABLE + bucketed write,
-    // but a global lock would needlessly serialize different dirs
-    val lock = coEdgeLocks.getOrElseUpdate(dir, new Object)
-    val name = lock.synchronized(coEdgeTables.getOrElseUpdate(dir, {
-      // sanitized prefix for readability + an md5 suffix for injectivity:
-      // catalog identifiers are case-INSENSITIVE, so the sanitized dir
-      // alone could still collide (".../RunA" vs ".../runa"), and very
-      // long dirs would exceed metastore name limits
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(6)
-        .map(b => f"$b%02x").mkString
-      val tbl = "graft_co_edges_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-        "_" + digest
+  def coEdges(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "co_edges", "src") {
       val item =
         nullif(regexp_extract(col("props"), "\"k\": ([0-9]+)", 1), lit(""))
           .cast("int")
@@ -56,26 +33,9 @@ private[queries] object Tables {
         .select(col("user_id").as("u"), item.as("item"))
         .where(col("item").isNotNull).distinct()
       val b = ui.select(col("u"), col("item").as("item_b"))
-      val pairs = ui
-        .join(b, ui("u") === b("u") && col("item") < col("item_b"))
+      ui.join(b, ui("u") === b("u") && col("item") < col("item_b"))
         .select(col("item").as("src"), col("item_b").as("dst")).distinct()
-      // under the warehouse dir, NOT java.io.tmpdir: the warehouse is
-      // shared storage on a real cluster (executors must all reach the
-      // bucketed files), local ./spark-warehouse in local mode.  The
-      // conf value is a URI — pass it through untouched (Spark's path
-      // option accepts URIs; string-stripping the scheme would break
-      // URI-encoded characters)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(pairs, "src", 8, tbl,
-        s"$wh/graft_layout/$tbl")
-      tbl
-    }))
-    s.table(name)
-  }
-  private val coEdgeTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val coEdgeLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
+    }
 
   /** The REAL-pixel near-duplicate pair graph — the [[coEdges]] discipline
     * applied to the codec tier: render→encode→decode every document
@@ -89,18 +49,11 @@ private[queries] object Tables {
     * near-dup-graph query) scans the committed table instead of re-running
     * the per-document decode UDF and the banded self-join — at 100 TB the
     * derivation dominates each individual query and this amortizes it
-    * across the tier.  Build seconds are recorded via [[IndexBuilds.once]]
-    * so Bench reports them as `index_build_s`, not query time.
+    * across the tier.
     *
     * Columns: (doc_a, doc_b, hamming), doc_a < doc_b, hamming ≤ 3. */
-  def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_neardup_pairs_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_neardup_pairs@$dir") {
+  def nearDupPairs(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "neardup_pairs", "doc_a") {
       val toImg = udf((id: Long, text: String) =>
         graft.ops.ImageCodec.grayFromBytes(8, 8,
           graft.ops.MultimodalOps.asciiBytes(text), id % 2 == 1))
@@ -109,14 +62,9 @@ private[queries] object Tables {
           toImg(col("doc_id"), col("text"))),
         col("payload"), col("doc_id"),
         graft.ops.ImageCodec.kernel(8, 8)).toDF()
-      val pairs = graft.ops.MultimodalOps.aHashBandedPairs(decoded,
+      graft.ops.MultimodalOps.aHashBandedPairs(decoded,
         col("doc_id"), bits = 64, bands = 4, maxHamming = 3)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(pairs, "doc_a", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** MinHash-LSH candidate pairs at the engine's standard document-dedup
     * parameters (word-3-shingles, 16 hashes, 4 bands) over the FULL
@@ -130,29 +78,17 @@ private[queries] object Tables {
     * consumers scan — at 100 TB the signature pass over the corpus
     * dominates every one of those queries, and a production curation
     * run lands the band/pair table once and fans every downstream stage
-    * off it.  Build seconds are booked via [[IndexBuilds.once]] so
-    * Bench reports them as `index_build_s`, not query time.
+    * off it.
     *
     * Columns: (doc_a, doc_b) distinct, doc_a < doc_b — bit-identical to
     * `DedupOps.minhashCandidates(docs, text, doc_id, 3, 16, 4)` (parquet
     * round-trips longs exactly; row order is immaterial to every
     * consumer, all of which aggregate, join, or cluster the SET). */
-  def minhashCands(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_minhash_cands_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_minhash_cands@$dir") {
-      val pairs = graft.ops.DedupOps.minhashCandidates(docs(s, dir),
+  def minhashCands(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "minhash_cands", "doc_a") {
+      graft.ops.DedupOps.minhashCandidates(docs(s, dir),
         col("text"), col("doc_id"), k = 3, numHashes = 16, bands = 4)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(pairs, "doc_a", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** The corpus's winnow position-aggregate table at the span tier's
     * standard parameters (k=25-char grams, window w=4) — landed once per
@@ -165,22 +101,11 @@ private[queries] object Tables {
     * round-trip parquet exactly, so consumers see the identical table.
     * Bucketed by fp: the candidate self-join and the df-cap census both
     * key on it. */
-  def winnowPosAgg(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_winnow_posagg_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_winnow_posagg@$dir") {
-      val agg = graft.ops.DedupOps.winnowPosAgg(docs(s, dir),
+  def winnowPosAgg(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "winnow_posagg", "fp") {
+      graft.ops.DedupOps.winnowPosAgg(docs(s, dir),
         col("text"), col("doc_id"), k = 25, w = 4)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(agg, "fp", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** The word-3-gram pair-statistics table (doc_a, doc_b, common, size_a,
     * size_b) at the standard df-cap (100) — the shared base of the n-gram
@@ -189,22 +114,11 @@ private[queries] object Tables {
     * the per-query cost was one md5 per distinct shingle per document
     * plus the sorted posting walk, identical in all three queries.  All
     * columns are longs — exact parquet round-trip. */
-  def ngramPairStats(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_ngram_pairstats_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_ngram_pairstats@$dir") {
-      val stats = graft.ops.DedupOps.ngramPairStatsOf(docs(s, dir),
+  def ngramPairStats(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "ngram_pairstats", "doc_a") {
+      graft.ops.DedupOps.ngramPairStats(docs(s, dir),
         col("text"), col("doc_id"), k = 3, maxDocFreq = 100)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(stats, "doc_a", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** SRP-banded embedding near-dup pairs (vec_a, vec_b, cos) at the
     * permissive threshold 0.2 over the embeddings table — landed once per
@@ -213,22 +127,11 @@ private[queries] object Tables {
     * final threshold (0.2 histogram vs 0.4 pair list), so the 0.2 table
     * subsumes both: a consumer at a higher threshold post-filters on the
     * stored 6-dp cosine (doubles round-trip parquet bit-exactly). */
-  def embBandedPairs02(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_emb_banded02_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_emb_banded02@$dir") {
-      val pairs = graft.ops.DedupOps.embeddingPairsBanded(emb(s, dir),
+  def embBandedPairs02(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "emb_banded02", "vec_a") {
+      graft.ops.DedupOps.embeddingPairsBanded(emb(s, dir),
         col("embedding"), col("vec_id"), minCosine = 0.2, dims = 64)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(pairs, "vec_a", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** The kNN label predictions for the standard evaluation slice
     * (queries = vec_id < 200, k = 10 over the embeddings corpus) —
@@ -238,25 +141,14 @@ private[queries] object Tables {
     * re-ran the brute top-k + vote argmax; at scale the prediction pass
     * is THE cost and an evaluation suite scores one landed prediction
     * set.  Longs and label strings round-trip parquet exactly. */
-  def knnPred200(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_knn_pred200_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_knn_pred200@$dir") {
+  def knnPred200(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "knn_pred200", "query_id") {
       val e = emb(s, dir)
-      val pred = graft.ops.MlOps.knnClassify(e, col("embedding"),
+      graft.ops.MlOps.knnClassify(e, col("embedding"),
         col("vec_id"), col("label"),
         e.where(col("vec_id") < 200), col("embedding"), col("vec_id"),
         k = 10)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(pred, "query_id", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** IVF hard negatives at the standard contrastive parameters (every
     * vector a query, 32 fixed centroids, k=3, nprobe=2) — (query_id,
@@ -266,50 +158,39 @@ private[queries] object Tables {
     * dominant stage and a curation run mines once, then derives margins,
     * curricula, and triplets from the landed set.  Longs + 6-dp cosine
     * doubles round-trip parquet exactly. */
-  def hardNegIvf32(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_hardneg_ivf32_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_hardneg_ivf32@$dir") {
+  def hardNegIvf32(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "hardneg_ivf32", "query_id") {
       val e = emb(s, dir)
-      val neg = graft.ops.SimilarityOps.hardNegativesIvf(e,
+      graft.ops.SimilarityOps.hardNegativesIvf(e,
         col("embedding"), col("vec_id"), col("label"),
         e, col("embedding"), col("vec_id"), col("label"),
         e.where(col("vec_id") < 32), col("embedding"), col("vec_id"),
         k = 3, nprobe = 2)
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(neg, "query_id", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
   /** DSIR importance weights against the src0 target distribution —
     * (doc_id, n_tokens, log_w), landed once per (JVM, dir).  The weights
     * query and the top-n selection query run the identical model build +
     * scoring pass; log_w is integer micro-units / 1e6, so the double
     * round-trips parquet exactly. */
-  def dsirWeightsSrc0(s: SparkSession, dir: String): DataFrame = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
-    val tbl = "graft_dsir_w_src0_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
-      "_" + digest
-    IndexBuilds.once(s"layout_dsir_w_src0@$dir") {
+  def dsirWeightsSrc0(s: SparkSession, dir: String): DataFrame =
+    Layout.land(s, dir, "dsir_w_src0", "doc_id") {
       val d = docs(s, dir)
-      val w = graft.ops.TextOps.dsirWeights(d,
+      graft.ops.TextOps.dsirWeights(d,
         d.where(col("source") === "src0"), col("text"), col("doc_id"))
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      graft.ops.LayoutOps.writeBucketed(w, "doc_id", 8, tbl,
-        s"$wh/graft_layout/$tbl")
     }
-    s.table(tbl)
-  }
 
+  /** events.parquet has shipped with two physical types for `ts` across
+    * driver testdata generations: TIMESTAMP(NANOS) — which Spark's
+    * vectorized reader rejects, so `nanosAsLong=true` surfaces it as a
+    * BIGINT of nanos — and plain timestamp[us], which loads as a native
+    * TimestampType. Branch on the *loaded* dtype so both generations read
+    * to the same microsecond-precision timestamp column.
+    *
+    * `nanosAsLong` is a runtime-settable SQL conf; Verify/Bench also set it
+    * at session build, but it is (idempotently) re-asserted here so the
+    * loader stays correct under any caller-provided session (specs build
+    * their own). */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = s.read.parquet(s"$dir/events.parquet")

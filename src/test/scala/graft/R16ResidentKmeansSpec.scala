@@ -45,6 +45,16 @@ class R16ResidentKmeansSpec extends AnyFunSuite {
     graft.core.CacheScope.release()
   }
 
+  test("resident: ragged vectors are rejected up front") {
+    val ragged = Seq((0L, Seq(1.0, 2.0)), (1L, Seq(3.0)), (2L, Seq(4.0, 5.0)))
+      .toDF("vec_id", "v")
+    val e = intercept[IllegalArgumentException] {
+      MlOps.kmeansFitResident(ragged, col("v"), col("vec_id"), 2, seed = 7L)
+    }
+    assert(e.getMessage.contains("min dimension 1") &&
+      e.getMessage.contains("max dimension 2"), e.getMessage)
+  }
+
   test("resident: empty clusters carry their previous center") {
     // 5 points, k=4, one refine: some init centers attract no points
     // after the means move; the left-join fallback must keep them
