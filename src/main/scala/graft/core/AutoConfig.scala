@@ -36,7 +36,7 @@ object AutoConfig {
     * batch_transform before sizing).  Each probe row is staged as a batch of
     * ONE — the reference's per-sample simulation — so the measurement
     * includes batch collation overhead, which is what feeds the RAM-budget
-    * formula.  One bounded `limit(n)` job — never a full scan. */
+    * formula.  Bounded by `limit(n)` — never a full scan. */
   def estimateSampleBytes(df: DataFrame, hooks: Hooks = Hooks(),
       probeRows: Int = 16): Long = {
     import org.apache.spark.sql.functions._
@@ -65,11 +65,9 @@ object AutoConfig {
     val payloadCols = pf.columns.toSeq.filterNot(
       Set(SamplingStrategy.Ord, "fetch_id", "batch_id", "pos_in_batch",
         "__pos"))
-    val bf = hooks.batchAssemble match {
-      case Some(assemble) => assemble(pf, payloadCols)
-      case None => ScDataset.defaultAssembly(pf, payloadCols)
-    }
-    val probe = hooks.batchTransform(bf).collect()
+    // the batch path's own assembly: the sized row is the delivered row
+    // (batch_id, n, rows — no fetch_id)
+    val probe = ScDataset.assembleBatches(pf, payloadCols, hooks).collect()
     require(probe.nonEmpty, "empty collection — cannot size samples")
     // A4: SizeEstimator.estimate is the JVM deep-sizeof analogue of
     // auto_config.py:22-161 (numpy nbytes / sparse member walk).

@@ -344,12 +344,15 @@ final case class BlockWeightedSampling(
           .withColumn("__c", (g(col("__cum")) - g(col("__cum") - col("__wi"))).cast("long"))
           .where(col("__c") > 0)
         // the sampled order is the base order with multiplicities, so the
-        // sample rank needs NO sort: prefix-sum the copy counts in Ord
-        // order (exact integer two-phase cumsum), then each emitted copy's
-        // rank is offset + copy - 1.
-        val withOff = Ranker.withCumsumLong(withCopies, Ord,
-          col("__c"), "__ccum")
-        withOff
+        // sample rank needs NO sort: each emitted copy's rank is the copy
+        // prefix-sum in Ord order, minus this row's copies, plus copy - 1.
+        // That prefix sum needs no pass of its own — it telescopes.  Row
+        // i's `cum - wi` is exactly row i-1's `cum` (integer arithmetic),
+        // so sum_{j<=i} __c_j = g(cum_i) - g(0), and g(0) = ceil(-off) = 0
+        // for off in [0, 1): __ccum = g(__cum).  Rows dropped by the
+        // __c > 0 filter add 0 to the sum.
+        withCopies
+          .withColumn("__ccum", g(col("__cum")).cast("long"))
           .withColumn(Copy, explode(sequence(lit(1L), col("__c"))))
           .withColumn("__srank",
             col("__ccum") - col("__c") + col(Copy) - 1)

@@ -204,8 +204,10 @@ object CoverageQueries {
       val hooks = Hooks(
         fetchTransform = df => df.withColumn("acct_cents",
           (col("c_acctbal") * 100).cast("long")),
+        // grouped by (fetch_id, batch_id): the plan's fetch_id range
+        // partitioning serves the aggregate and the batch order
         batchAssemble = Some((pf, _) =>
-          pf.groupBy(col("batch_id"))
+          pf.groupBy(col("fetch_id"), col("batch_id"))
             .agg(count(lit(1)).as("n"), sum("acct_cents").as("cents_sum"))),
         batchTransform = bf => bf.withColumn("cents_mean",
           (col("cents_sum") / col("n")).cast("long")))
