@@ -46,6 +46,39 @@ object Bench {
     if (b._1 < a._1) b else a
   }
 
+  /** The samples/sec headliner queries BASELINE.md comparisons quote. */
+  private val Headliners = Seq("o1_streaming", "o2_block_shuffle",
+    "o3_weighted_replace", "o4_class_balanced", "pipeline_block",
+    "b2_buffer_shuffle")
+
+  /** 3-dp timings: a bench record that keeps only a ~2000-char tail of
+    * stdout makes every byte of the JSON line cost per-query visibility. */
+  private def s3(d: Double): String = (math.rint(d * 1000) / 1000.0).toString
+
+  /** One timed `.count()` of a registered query, then the release of the
+    * engine's registered intermediates so storage does not accumulate
+    * across queries.  User-level persists (the session-scoped collection
+    * handles) are deliberately KEPT — reuse across queries mirrors the
+    * reference's open-once benchmark methodology.  A failed query must be
+    * VISIBLE: it is logged and reads as rows = -1. */
+  private def countOnce(spark: SparkSession, sfDir: String,
+      name: String): (Double, Long) = {
+    val t0 = System.nanoTime()
+    val rows = try SparkEntry.queries(name)(spark, sfDir).count()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e"); -1L }
+    val sec = (System.nanoTime() - t0) / 1e9
+    try CacheScope.release() catch { case _: Throwable => () }
+    (sec, rows)
+  }
+
+  /** `reps` timed runs of each named query (an unknown name throws before
+    * anything runs): name -> (seconds, rows) per run. */
+  private def timeReps(spark: SparkSession, sfDir: String, names: Seq[String],
+      reps: Int): Seq[(String, Seq[(Double, Long)])] =
+    SparkEntry.pick(names).map { case (name, _) =>
+      name -> (1 to reps).map(_ => countOnce(spark, sfDir, name)) }
+
   /** Isolated per-query mode — the reference's methodology (its harness
     * times ONE config per process, benchmarks/utils.py:88-268) and the
     * only way to distinguish a real regression from cache/run-order noise
@@ -56,28 +89,14 @@ object Bench {
     * banked artifact stays the full-registry run. */
   private def runOnly(spark: SparkSession, sfDir: String,
       names: Seq[String], reps: Int): Unit = {
-    def s3(d: Double): String = (math.rint(d * 1000) / 1000.0).toString
-    val out = names.map { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        throw new IllegalArgumentException(s"unknown query: $name"))
-      val samples = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val rows = fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        try graft.core.CacheScope.release() catch { case _: Throwable => () }
-        (sec, rows)
-      }
+    val out = timeReps(spark, sfDir, names, reps).map { case (name, samples) =>
       val secs = samples.map(_._1)
-      s"\"$name\":{\"min\":${s3(secs.min)},\"samples\":[" +
-        secs.map(s3).mkString(",") + s"],\"rows\":${samples.head._2}}"
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"isolated","unit":"sec","reps":$reps,"queries":$out,"sf":"$sfDir"}""")
+      name -> Json.obj("min" -> s3(secs.min), "samples" -> Json.arr(secs.map(s3)),
+        "rows" -> samples.head._2)
+    }
+    println(Json.obj("metric" -> Json.str("isolated"), "unit" -> Json.str("sec"),
+      "reps" -> reps, "queries" -> Json.obj(out: _*), "sf" -> Json.str(sfDir)))
   }
-
-  /** The throughput headliner set BASELINE.md comparisons quote. */
-  private val HeadlinerSet = Seq("o1_streaming", "o2_block_shuffle",
-    "o3_weighted_replace", "o4_class_balanced", "pipeline_block",
-    "b2_buffer_shuffle")
 
   /** Child mode `--headliners [--reps N]`: samples/sec for the headliner
     * queries + the prefetched sink, min-of-`reps`, printed as ONE JSON
@@ -87,30 +106,21 @@ object Bench {
     * 617k→362k" was pure ambient noise the isolated re-measure cleared. */
   private def runHeadliners(spark: SparkSession, sfDir: String,
       reps: Int): Unit = {
-    val entries = HeadlinerSet.flatMap { k =>
-      val fn = SparkEntry.queries(k)
-      val samples = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val rows = fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        try graft.core.CacheScope.release() catch { case _: Throwable => () }
-        (sec, rows)
-      }
-      val best = samples.minBy(_._1)
-      if (best._2 > 0 && best._1 > 0)
-        Some("\"" + k + "\":" + math.round(best._2 / best._1))
-      else None
+    val entries = timeReps(spark, sfDir, Headliners, reps).flatMap {
+      case (k, samples) =>
+        val best = samples.minBy(_._1)
+        if (best._2 > 0 && best._1 > 0) Some(k -> math.round(best._2 / best._1))
+        else None
     } ++ (try {
       val best = (1 to reps).map(_ => prefetchThroughput(spark, sfDir))
         .minBy(_._1)
-      Seq("\"s6_prefetched_sink\":" + math.round(best._2 / best._1))
+      Seq("s6_prefetched_sink" -> math.round(best._2 / best._1))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] prefetch headliner FAILED: $e")
       Seq.empty
     })
-    println(s"""{"metric":"headliners_isolated","reps":$reps,""" +
-      s""""samples_per_sec":${entries.mkString("{", ",", "}")},""" +
-      s""""sf":"$sfDir"}""")
+    println(Json.obj("metric" -> Json.str("headliners_isolated"), "reps" -> reps,
+      "samples_per_sec" -> Json.obj(entries: _*), "sf" -> Json.str(sfDir)))
   }
 
   /** Fork ONE fresh JVM running `--headliners` and return its JSON
@@ -193,17 +203,13 @@ object Bench {
     if (perFork.isEmpty) return "null"
     val keys = perFork.flatMap(_.map(_._1)).distinct
     val quoted = keys.map { k =>
-      val vs = perFork.flatMap(_.collectFirst { case (`k`, v) => v })
-      "\"" + k + "\":" + vs.max
-    }.mkString("{", ",", "}")
-    val forksJson = perFork.map(_.map { case (k, v) =>
-        "\"" + k + "\":" + v }.mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
-    s"""{"metric":"headliners_isolated","reps":$reps,""" +
-      s""""forks":${perFork.size},""" +
-      s""""policy":"max_over_forks_of_min_of_reps",""" +
-      s""""samples_per_sec":$quoted,"per_fork":$forksJson,""" +
-      s""""sf":"$sfDir"}"""
+      k -> perFork.flatMap(_.collectFirst { case (`k`, v) => v }).max }
+    Json.obj("metric" -> Json.str("headliners_isolated"), "reps" -> reps,
+      "forks" -> perFork.size,
+      "policy" -> Json.str("max_over_forks_of_min_of_reps"),
+      "samples_per_sec" -> Json.obj(quoted: _*),
+      "per_fork" -> Json.arr(perFork.map(f => Json.obj(f: _*))),
+      "sf" -> Json.str(sfDir))
   }
 
   def main(args: Array[String]): Unit = {
@@ -223,16 +229,8 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - jvmT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contract: bench runs at local[32] unless explicitly overridden.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(
+      math.min(32, Runtime.getRuntime.availableProcessors())))
     // Warm-up outside the timed region (JIT + codegen + parquet reader init),
     // mirroring the reference's warm-up window (benchmarks/utils.py:90-92).
     try {
@@ -248,37 +246,22 @@ object Bench {
       // timed query and skews cross-round comparison — make it visible
       System.err.println(s"[bench] warm-up FAILED (timings will include JIT): $e")
     }
-    val onlyIdx = args.indexOf("--only")
-    if (onlyIdx >= 0) {
-      val names = args(onlyIdx + 1).split(",").map(_.trim).filter(_.nonEmpty)
-      val repsIdx = args.indexOf("--reps")
-      val reps = if (repsIdx >= 0) args(repsIdx + 1).toInt else 3
-      runOnly(spark, sfDir, names.toIndexedSeq, reps)
-      spark.stop()
-      return
+    val reps = args.indexOf("--reps") match {
+      case -1 => 3
+      case i => args(i + 1).toInt
     }
-    if (args.contains("--headliners")) {
-      val repsIdx = args.indexOf("--reps")
-      val reps = if (repsIdx >= 0) args(repsIdx + 1).toInt else 3
-      runHeadliners(spark, sfDir, reps)
+    val onlyIdx = args.indexOf("--only")
+    if (onlyIdx >= 0 || args.contains("--headliners")) {
+      if (onlyIdx >= 0) runOnly(spark, sfDir,
+        args(onlyIdx + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq, reps)
+      else runHeadliners(spark, sfDir, reps)
       spark.stop()
       return
     }
     // name-sorted so per-query timings stay comparable across rounds even
     // as the query set grows (Map iteration order reshuffles per round)
-    val pass1 = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failed query must be VISIBLE, not a suspiciously fast rows=-1 line
-      val rows = try fn(spark, sfDir).count() catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e"); -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // release the engine's registered intermediates so storage doesn't
-      // accumulate across 40+ queries.  User-level persists (the session-
-      // scoped collection handles) are deliberately KEPT — reuse across
-      // queries mirrors the reference's open-once benchmark methodology.
-      try graft.core.CacheScope.release() catch { case _: Throwable => () }
-      name -> (sec, rows)
-    }
+    val pass1 = SparkEntry.queries.keys.toSeq.sorted
+      .map(name => name -> countOnce(spark, sfDir, name))
     // Contention hardening (min-of-2): one contended window on the host
     // can inflate a handful of tail queries 5–25× and poison the banked
     // artifact (round-13's 865 s vs 256 s warm).  Re-time every query
@@ -292,39 +275,27 @@ object Bench {
     // sample and the banked throughput swung ±20% round-to-round on
     // scheduler noise alone (r15's "o1_streaming 542k→445k" was exactly
     // this — the plan was unchanged).
-    val tpSet = Set("o1_streaming", "o2_block_shuffle",
-      "o3_weighted_replace", "o4_class_balanced", "pipeline_block",
-      "b2_buffer_shuffle")
     var min2Skipped = 0
     val results = pass1.map { case (name, (sec, rows)) =>
-      if ((sec <= 1.0 && !tpSet(name)) || rows < 0) name -> (sec, rows)
+      if ((sec <= 1.0 && !Headliners.contains(name)) || rows < 0) name -> (sec, rows)
       else if (elapsedS > deadlineS * 0.75) {
         // deadline guard: a pass1 measurement is a valid (degenerate)
         // min-of-≤2 — keep it rather than risk the line never printing
         min2Skipped += 1
         name -> (sec, rows)
       } else {
-        val t0 = System.nanoTime()
-        val rows2 = try SparkEntry.queries(name)(spark, sfDir).count()
-          catch { case _: Throwable => -1L }
-        val sec2 = (System.nanoTime() - t0) / 1e9
-        try graft.core.CacheScope.release() catch { case _: Throwable => () }
+        val (sec2, rows2) = countOnce(spark, sfDir, name)
         if (rows2 == rows && sec2 < sec) name -> (sec2, rows)
         else name -> (sec, rows)
       }
     }
     System.err.println(f"[bench] pass1+min2 done at ${elapsedS}%.0f s " +
       s"(deadline $deadlineS, min2 skipped $min2Skipped)")
-    // 3-dp timings: the driver's artifact keeps only a ~2000-char tail of
-    // stdout, so every byte of the JSON line costs per-query visibility
-    def s3(d: Double): String = (math.rint(d * 1000) / 1000.0).toString
-    // The stdout line must PARSE inside that tail: with 130+ queries the
-    // full per-query map is ~4000 chars and the line's head gets cut
-    // ("parsed": null in BENCH_r10/r11).  stdout carries a curated headline
-    // subset (< ~1500 chars); the FULL map goes to BENCH_FULL.json below.
-    val headline = Seq(
-      "o1_streaming", "o2_block_shuffle", "o3_weighted_replace",
-      "o4_class_balanced", "pipeline_block", "b2_buffer_shuffle",
+    // The stdout line must PARSE inside a ~2000-char stdout tail: with 130+
+    // queries the full per-query map is ~4000 chars and the line's head gets
+    // cut ("parsed": null in BENCH_r10/r11).  stdout carries a curated
+    // headline subset (< ~1500 chars); the FULL map goes to BENCH_FULL.json.
+    val headline = (Headliners ++ Seq(
       "b3_batch_counts", "s1_scan", "s2_union_files", "a2_batch_entropy",
       "dd_exact", "dd_minhash_pairs", "dd_fuzzy_keep", "dd_simhash_pairs",
       "dd_spans", "dd_clusters", "dd_semantic_keep", "text_quality",
@@ -337,12 +308,8 @@ object Bench {
       "tpch_q1", "tpch_q9", "tpch_q18", "tpch_q21", "ev_asof_native",
       "ml_logreg", "graph_triangles", "graph_reach",
       "o5_pushdown_skip", "o5_stream_tail", "o5_merge_into",
-      "pipe_lake_dedup", "graph_lpa", "text_unigram_tokens")
-    val headSet = headline.toSet
-    val qs = results.collect { case (k, (sec, _)) if headSet(k) =>
-      s"\"" + k + "\":" + s3(sec) }.mkString("{", ",", "}")
-    val qsFull = results.map { case (k, (sec, _)) => s"\"" + k + "\":" + s3(sec) }
-      .mkString("{", ",", "}")
+      "pipe_lake_dedup", "graph_lpa", "text_unigram_tokens")).toSet
+    val timings = results.map { case (k, (sec, _)) => k -> s3(sec) }
     val total = results.map(_._2._1).sum
     // Both methodologies banked side-by-side so cross-round deltas can
     // separate real speedups from the r14 measurement change: `value` is
@@ -353,24 +320,18 @@ object Bench {
     // samples/sec for the headline sampling pipelines — the unit BASELINE.md
     // reports for the reference loader (rows emitted / wall time).
     val rmap = results.toMap
-    val tp = Seq("o1_streaming", "o2_block_shuffle", "o3_weighted_replace",
-        "o4_class_balanced", "pipeline_block", "b2_buffer_shuffle")
-      .flatMap(k => rmap.get(k).collect {
-        case (sec, rows) if rows > 0 && sec > 0 =>
-          s"\"" + k + "\":" + math.round(rows / sec)
-      })
-      .appendedAll(
-        try {
-          val (sec, n) = prefetchThroughput(spark, sfDir)
-          Seq("\"s6_prefetched_sink\":" + math.round(n / sec))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] prefetch throughput FAILED: $e")
-          Seq.empty
-        })
-      .mkString("{", ",", "}")
+    val tp = Json.obj(Headliners.flatMap(k => rmap.get(k).collect {
+        case (sec, rows) if rows > 0 && sec > 0 => k -> math.round(rows / sec)
+      }) ++ (try {
+        val (sec, n) = prefetchThroughput(spark, sfDir)
+        Seq("s6_prefetched_sink" -> math.round(n / sec))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] prefetch throughput FAILED: $e")
+        Seq.empty
+      }): _*)
     val ent = try {
       val (sh, pop) = batchEntropy(spark, sfDir)
-      s"""{"block1024_bs64":$sh,"population":$pop}"""
+      Json.obj("block1024_bs64" -> sh, "population" -> pop)
     } catch { case _: Throwable => "null" }
     // the isolated-methodology headliner block: THREE independent
     // fresh-JVM forks each re-measure the samples/sec headliners
@@ -380,16 +341,25 @@ object Bench {
     val iso = forkHeadliners(sfDir, reps = 3,
       remainingS = () => deadlineS - elapsedS)
     System.err.println(f"[bench] forks done at ${elapsedS}%.0f s")
-    val nq = results.size
     // persisted-index builds, timed once per JVM and reported as their own
     // map: the build is the amortized cost, the per-query numbers above
     // are (warm) search-only via the min-of-2 pass
-    val builds = graft.queries.IndexBuilds.buildSecs.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + s3(v) }
-      .mkString("{", ",", "}")
-    val skews = if (min2Skipped > 0) s""","min2_deadline_skipped":$min2Skipped""" else ""
-    val line = s"""{"metric":"total","value":${s3(total)},"unit":"sec","n_queries":$nq,"timing":"min2_over_1s"$skews,"pass1_total_s":${s3(pass1Total)},"queries":$qs,"samples_per_sec":$tp,"batch_entropy":$ent,"headliners_isolated":$iso,"queries_full":"BENCH_FULL.json","sf":"$sfDir"}"""
-    val fullLine = s"""{"metric":"total","value":${s3(total)},"unit":"sec","n_queries":$nq,"timing":"min2_over_1s"$skews,"pass1_total_s":${s3(pass1Total)},"queries":$qsFull,"samples_per_sec":$tp,"index_build_s":$builds,"batch_entropy":$ent,"headliners_isolated":$iso,"sf":"$sfDir"}"""
+    val builds = Json.obj(graft.queries.IndexBuilds.buildSecs.toSeq.sortBy(_._1)
+      .map { case (k, v) => k -> s3(v) }: _*)
+    val head = Seq("metric" -> Json.str("total"), "value" -> s3(total),
+      "unit" -> Json.str("sec"), "n_queries" -> results.size,
+      "timing" -> Json.str("min2_over_1s")) ++
+      (if (min2Skipped > 0) Seq("min2_deadline_skipped" -> min2Skipped) else Nil) ++
+      Seq("pass1_total_s" -> s3(pass1Total))
+    val line = Json.obj(head ++ Seq(
+      "queries" -> Json.obj(timings.filter(t => headline(t._1)): _*),
+      "samples_per_sec" -> tp, "batch_entropy" -> ent,
+      "headliners_isolated" -> iso,
+      "queries_full" -> Json.str("BENCH_FULL.json"), "sf" -> Json.str(sfDir)): _*)
+    val fullLine = Json.obj(head ++ Seq("queries" -> Json.obj(timings: _*),
+      "samples_per_sec" -> tp, "index_build_s" -> builds,
+      "batch_entropy" -> ent, "headliners_isolated" -> iso,
+      "sf" -> Json.str(sfDir)): _*)
     // The driver captures only a stdout tail, which has truncated the
     // per-query map mid-key in past rounds (BENCH_r10/r11 "parsed": null).
     // Persist the full payload to a committed repo file so bench artifacts

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The query registry and its flagship entry — see SURVEY.md §7. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The full sampling pipeline: block shuffle → fetch windows → within-fetch
@@ -9,20 +9,38 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.queries("pipeline_block")(spark, "/root/testdata/sf0.001")
 
+  /** Every query set, each name defined in exactly one of them. */
+  private lazy val sets: Seq[QuerySet] = Seq(
+    CoreQueries, WeightedQueries, ExtQueries, CoverageQueries,
+    PipelineQueries, R9Queries, R10Queries, R10bQueries, R10cQueries,
+    R11Queries, R12Queries, R12bQueries, R12cQueries, R12dQueries,
+    R12eQueries, R12fQueries, R12gQueries, R12hQueries, R12iQueries,
+    R12jQueries, R12kQueries, R12lQueries, R12mQueries, R12nQueries,
+    R12oQueries, R12pQueries, R12qQueries, R12rQueries, R12sQueries,
+    R12tQueries, R12uQueries, R12vQueries, R12wQueries, R12xQueries,
+    R12yQueries, R12zQueries, R12aaQueries, R12abQueries, R12acQueries,
+    R12adQueries, R12aeQueries, R12afQueries, R12agQueries, R12ahQueries,
+    R12aiQueries, R12ajQueries, R12akQueries, R12alQueries, R12amQueries,
+    R12aoQueries, R12apQueries, R12aqQueries, R12arQueries, R12asQueries,
+    R12atQueries, R12auQueries, R12avQueries, R12axQueries, R13Queries,
+    R13bQueries, R13cQueries, R13dQueries, R13eQueries, R13fQueries,
+    R13gQueries, R13hQueries, R14Queries, R15Queries, R15bQueries,
+    R15cQueries, R16Queries, R16bQueries, R16cQueries, R16dQueries,
+    R16eQueries, R16fQueries, R16gQueries, R16hQueries, R16iQueries,
+    R16jQueries, R16kQueries, R16lQueries, R16mQueries, R17Queries,
+    R17bQueries, R18Queries, R19Queries, R20Queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ WeightedQueries.queries ++ ExtQueries.queries ++
-      CoverageQueries.queries ++ PipelineQueries.queries ++
-      R9Queries.queries ++ R10Queries.queries ++ R10bQueries.queries ++
-      R10cQueries.queries ++ R11Queries.queries ++ R12Queries.queries ++
-      R12bQueries.queries ++ R12cQueries.queries ++ R12dQueries.queries ++ R12eQueries.queries ++ R12fQueries.queries ++ R12gQueries.queries ++ R12hQueries.queries ++ R12iQueries.queries ++ R12jQueries.queries ++ R12kQueries.queries ++ R12lQueries.queries ++ R12mQueries.queries ++ R12nQueries.queries ++ R12oQueries.queries ++ R12pQueries.queries ++ R12qQueries.queries ++ R12rQueries.queries ++ R12sQueries.queries ++ R12tQueries.queries ++ R12uQueries.queries ++ R12vQueries.queries ++ R12wQueries.queries ++ R12xQueries.queries ++ R12yQueries.queries ++ R12zQueries.queries ++ R12aaQueries.queries ++ R12abQueries.queries ++ R12acQueries.queries ++ R12adQueries.queries ++ R12aeQueries.queries ++ R12afQueries.queries ++ R12agQueries.queries ++ R12ahQueries.queries ++ R12aiQueries.queries ++ R12ajQueries.queries ++ R12akQueries.queries ++ R12alQueries.queries ++ R12amQueries.queries ++ R12aoQueries.queries ++ R12apQueries.queries ++ R12aqQueries.queries ++ R12arQueries.queries ++ R12asQueries.queries ++ R12atQueries.queries ++ R12auQueries.queries ++ R12avQueries.queries ++ R12axQueries.queries ++ R13Queries.queries ++ R13bQueries.queries ++ R13cQueries.queries ++ R13dQueries.queries ++ R13eQueries.queries ++ R13fQueries.queries ++ R13gQueries.queries ++ R13hQueries.queries ++ R14Queries.queries ++ R15Queries.queries ++ R15bQueries.queries ++ R15cQueries.queries ++ R16Queries.queries ++ R16bQueries.queries ++ R16cQueries.queries ++ R16dQueries.queries ++ R16eQueries.queries ++ R16fQueries.queries ++ R16gQueries.queries ++ R16hQueries.queries ++ R16iQueries.queries ++ R16jQueries.queries ++ R16kQueries.queries ++ R16lQueries.queries ++ R16mQueries.queries ++ R17Queries.queries ++ R17bQueries.queries ++ R18Queries.queries ++ R19Queries.queries ++ R20Queries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QuerySet.merge("query", sets.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ WeightedQueries.oracles ++ ExtQueries.oracles ++
-      CoverageQueries.oracles ++ PipelineQueries.oracles ++
-      R9Queries.oracles ++ R10Queries.oracles ++ R10bQueries.oracles ++
-      R10cQueries.oracles ++ R11Queries.oracles ++ R12Queries.oracles ++
-      R12bQueries.oracles ++ R12cQueries.oracles ++ R12dQueries.oracles ++ R12eQueries.oracles ++ R12fQueries.oracles ++ R12gQueries.oracles ++ R12hQueries.oracles ++ R12iQueries.oracles ++ R12jQueries.oracles ++ R12kQueries.oracles ++ R12lQueries.oracles ++ R12mQueries.oracles ++ R12nQueries.oracles ++ R12oQueries.oracles ++ R12pQueries.oracles ++ R12qQueries.oracles ++ R12rQueries.oracles ++ R12sQueries.oracles ++ R12tQueries.oracles ++ R12uQueries.oracles ++ R12vQueries.oracles ++ R12wQueries.oracles ++ R12xQueries.oracles ++ R12yQueries.oracles ++ R12zQueries.oracles ++ R12aaQueries.oracles ++ R12abQueries.oracles ++ R12acQueries.oracles ++ R12adQueries.oracles ++ R12aeQueries.oracles ++ R12afQueries.oracles ++ R12agQueries.oracles ++ R12ahQueries.oracles ++ R12aiQueries.oracles ++ R12ajQueries.oracles ++ R12akQueries.oracles ++ R12alQueries.oracles ++ R12amQueries.oracles ++ R12aoQueries.oracles ++ R12apQueries.oracles ++ R12aqQueries.oracles ++ R12arQueries.oracles ++ R12asQueries.oracles ++ R12atQueries.oracles ++ R12auQueries.oracles ++ R12avQueries.oracles ++ R12axQueries.oracles ++ R13Queries.oracles ++ R13bQueries.oracles ++ R13cQueries.oracles ++ R13dQueries.oracles ++ R13eQueries.oracles ++ R13fQueries.oracles ++ R13gQueries.oracles ++ R13hQueries.oracles ++ R14Queries.oracles ++ R15Queries.oracles ++ R15bQueries.oracles ++ R15cQueries.oracles ++ R16Queries.oracles ++ R16bQueries.oracles ++ R16cQueries.oracles ++ R16dQueries.oracles ++ R16eQueries.oracles ++ R16fQueries.oracles ++ R16gQueries.oracles ++ R16hQueries.oracles ++ R16iQueries.oracles ++ R16jQueries.oracles ++ R16kQueries.oracles ++ R16lQueries.oracles ++ R16mQueries.oracles ++ R17Queries.oracles ++ R17bQueries.oracles ++ R18Queries.oracles ++ R19Queries.oracles ++ R20Queries.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    QuerySet.merge("oracle", sets.map(_.oracles))
+
+  /** The named entries in the given order; an unknown name throws. */
+  def pick(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    names.map(n => n -> queries.getOrElse(n,
+      throw new IllegalArgumentException(s"unknown query: $n")))
 }

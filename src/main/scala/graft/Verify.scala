@@ -1,32 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (`tools/oracle_check.py`).
+  *
+  * `graft.Verify <sfDir> <outDir> [q1,q2,...]`: with the third argument
+  * only the named queries run and only their oracles are written, so
+  * `tools/oracle_check.py` checks exactly that subset; an unknown name
+  * fails the run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name filter for fast local
-    // iteration (the driver always passes exactly 2 args → full run)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 2 args → full run
+    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct)
+    val entries = only.fold(SparkEntry.queries.toSeq)(SparkEntry.pick)
+    val oracles = only.fold(SparkEntry.oracleSql)(ns => SparkEntry.oracleSql.filter(o => ns.contains(o._1)))
+    val spark = LocalSession(LocalSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // A throwing query must leave a visible artifact — otherwise the
     // driver's correctness JSON silently shrinks and a regression reads as
     // "less surface" (this nearly hid the r11 events-reader break).
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    entries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
       catch { case e: Throwable =>
@@ -35,26 +29,12 @@ object Verify {
       }
       finally graft.core.CacheScope.release()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Keys must equal the output dir basenames ("<name>.parquet") — the
     // driver's correctness gate looks oracles up by dir basename; a bare
     // "<name>" key matches nothing and the whole round goes unverified.
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(s"$k.parquet")}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Json.obj(oracles.toSeq.map { case (k, v) => s"$k.parquet" -> Json.str(v) }: _*)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val failJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(500))}" }.mkString("{", ",", "}")
+    val failJson = Json.obj(failed.toSeq.map { case (k, v) => k -> Json.str(v.take(500)) }: _*)
     Files.writeString(Paths.get(s"$outDir/verify_failed.json"), failJson)
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} FAILED: ${failed.keys.mkString(", ")}")

@@ -48,24 +48,19 @@ object SamplingStrategy {
   /** Column holding the copy index for with-replacement duplicates. */
   val Copy = "__copy"
 
-  /** Process-default for [[Caps.reservoir]] — see [[Caps]].  Mutable only
-    * as a global override knob (scale harnesses); specs should pass
-    * per-call [[Caps]] instead of mutating this. */
-  @volatile private[graft] var ReservoirCap: Long = 1000000L
+  /** Default for [[Caps.reservoir]] — see [[Caps]]. */
+  private[graft] val ReservoirCap: Long = 1000000L
 
-  /** Process-default for [[Caps.blockTable]] — see [[Caps]]. */
-  @volatile private[graft] var BlockTableCap: Long = 1000000L
+  /** Default for [[Caps.blockTable]] — see [[Caps]]. */
+  private[graft] val BlockTableCap: Long = 1000000L
 
-  /** Process-default for [[Caps.indexBroadcast]] — see [[Caps]]. */
-  @volatile private[graft] var IndexBroadcastCap: Long = 2000000L
+  /** Default for [[Caps.indexBroadcast]] — see [[Caps]]. */
+  private[graft] val IndexBroadcastCap: Long = 2000000L
 
   /** Per-call plan-selection gates for the dual-plan strategies.  Each gate
     * switches between a driver-bounded fast path and the distributed
-    * fallback (crossovers measured in BENCH_SCALE.md); the defaults read
-    * the process-global knobs at CONSTRUCTION time, so a strategy built
-    * with `Caps()` is pinned to the defaults in force when it was built.
-    * Pass explicit values to force a path for a single strategy instance —
-    * no global mutation, safe under parallel suites.
+    * fallback (crossovers measured in BENCH_SCALE.md).  Pass explicit
+    * values to force a path for a single strategy instance.
     *
     *  - `reservoir`: no-replace draws at or below this size use the
     *    single-pass bounded reservoir + broadcast semi join; larger draws

@@ -1635,7 +1635,7 @@ object DedupOps {
   def semanticDedup(df: DataFrame, vec: Column, id: Column, k: Int,
       minCosine: Double, seed: Long = 42L, maxIter: Int = 10,
       maxDriverRows: Long = 200000L,
-      // default = the measured flat↔two-level crossover (XR15Scale:
+      // default = the measured flat↔two-level crossover (PERF_NOTES_r15.md §1:
       // n·k = 1e8 flat 1.7 s vs two 2.2 s; 1.6e9 flat 28 s vs two 6.5 s;
       // 6.4e9 flat 91 s vs two 4 s — 22×)
       maxFlatAssignCost: Long = 200000000L, probe: Int = 3): DataFrame = {

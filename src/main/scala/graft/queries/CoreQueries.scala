@@ -11,7 +11,7 @@ import graft.core._
   * DuckDB.  Column names are aliased identically on both sides (the driver
   * compare sorts columns by name before hashing).
   */
-object CoreQueries {
+object CoreQueries extends QuerySet {
 
   /** lineitem as an indexable collection: contiguous row_id ranked by a
     * TOTAL order — (l_orderkey, l_linenumber) alone is NOT unique in the

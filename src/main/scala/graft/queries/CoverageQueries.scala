@@ -15,7 +15,7 @@ import graft.streaming.StreamingOps
   * windows, the multimodal stub decoder (full feature surface), and the
   * auto-config advisor (A4–A6, rows-only: SizeEstimator is JVM-specific).
   */
-object CoverageQueries {
+object CoverageQueries extends QuerySet {
   import CoreQueries.li
 
   import Tables.{docs, emb, events}

@@ -10,7 +10,7 @@ import graft.streaming.StreamingOps
   * deduplication, similarity search, text analysis, multimodal plumbing,
   * and streaming analytics (SURVEY §2.7 north-star set).
   */
-object ExtQueries {
+object ExtQueries extends QuerySet {
 
   import Tables.{docs, emb, events}
 

@@ -12,7 +12,7 @@ import graft.streaming.StreamingOps
   * exact class centroids over embeddings, and first-occurrence event dedup
   * (the batch semantics of streaming dropDuplicates).  All oracle-checked.
   */
-object PipelineQueries {
+object PipelineQueries extends QuerySet {
 
   import Tables.{docs, emb, events}
 

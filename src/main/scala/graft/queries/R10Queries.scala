@@ -16,7 +16,7 @@ import graft.ops.{DedupOps, SimilarityOps, TextOps}
   * ([[DedupOps.semanticDedup]]) is spec-covered (OpsSpec), since an
   * iterative seeded kmeans++ is not SQL-expressible.
   */
-object R10Queries {
+object R10Queries extends QuerySet {
 
   import Tables.emb
 

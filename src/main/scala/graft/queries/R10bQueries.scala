@@ -14,7 +14,7 @@ import graft.ops.PiiOps
   * construction in the Spark plan and the oracle SQL — so the detectors do
   * real pattern work and the redacted output is doc-specific.
   */
-object R10bQueries {
+object R10bQueries extends QuerySet {
 
   /** documents with planted PII: email on doc_id%2=0, IPv4 on %3=0,
     * phone on %5=0 (mirrored verbatim in [[PiiAugSql]]). */

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * resampling (Xie et al., NeurIPS 2023) over the documents corpus, with
   * `source = 'src0'` standing in for the curated target sample.
   */
-object R10cQueries {
+object R10cQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import graft.ops.{DedupOps, MultimodalOps, SimilarityOps, SplitOps, TextOps}
   * rule), trigram Stupid-Backoff fluency, deterministic weighted source
   * interleaving, and media near-dup pairs by perceptual aHash.
   */
-object R11Queries {
+object R11Queries extends QuerySet {
 
   /** Interleave mixture used by `o3_interleave` (sources outside the map
     * are excluded from the stream — the mixture IS the selection). */

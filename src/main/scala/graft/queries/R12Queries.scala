@@ -14,7 +14,7 @@ import graft.streaming.StreamingOps
   * cross-source duplication provenance, OOV-rate vocabulary coverage,
   * PMI collocations, and the exact-count split.
   */
-object R12Queries {
+object R12Queries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -40,7 +40,7 @@ object R12Queries {
     // CTEs).  Registered separately from the flat form: at k=32 routing
     // has nothing to win (its fixed extra stages cost ~0.5 s), so the
     // flat plan stays the right default at this scale while the routed
-    // plan is the one that survives k ∝ corpus (XR15Scale) — both are
+    // plan is the one that survives k ∝ corpus (PERF_NOTES_r15.md §1) — both are
     // oracle-gated, neither changes semantics with data size.
     "sim_knn_join_routed" -> ((s, dir) => {
       val e = Tables.emb(s, dir)

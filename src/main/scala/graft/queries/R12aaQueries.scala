@@ -9,7 +9,7 @@ import graft.functions.TopKAgg
 /** Round-12aa queries: trailing-window features, content-addressed audit
   * manifest, and bounded-state top-k per group.
   */
-object R12aaQueries {
+object R12aaQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

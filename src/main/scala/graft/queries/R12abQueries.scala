@@ -8,7 +8,7 @@ import graft.ops.{EmbedOps, EventOps}
 /** Round-12ab queries: exact Gram sufficient statistics, OLS trend slope,
   * and distribution-shape moments.
   */
-object R12abQueries {
+object R12abQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

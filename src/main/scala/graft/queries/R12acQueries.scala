@@ -8,7 +8,7 @@ import graft.ops.{EventOps, TextOps}
 /** Round-12ac queries: vocabulary-coverage curve, two-sample experiment
   * card, and functional-dependency profiling.
   */
-object R12acQueries {
+object R12acQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

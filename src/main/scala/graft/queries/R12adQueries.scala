@@ -8,7 +8,7 @@ import graft.ops.LayoutOps
 /** Round-12ad queries: in-flight observed metrics, lake snapshot diff,
   * and a CSV source round-trip.
   */
-object R12adQueries {
+object R12adQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

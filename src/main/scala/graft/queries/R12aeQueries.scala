@@ -8,7 +8,7 @@ import graft.ops.{EventOps, TextOps}
 /** Round-12ae queries: item co-occurrence/lift, Gini concentration, and
   * the character-class profile.
   */
-object R12aeQueries {
+object R12aeQueries extends QuerySet {
 
   // anchored regex, not a full JSON parse — ~20× cheaper per row on the
   // fixed machine format (same rationale as ev_item_trend)

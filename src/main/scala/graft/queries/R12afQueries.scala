@@ -7,7 +7,7 @@ import graft.ops.{EventOps, TextOps}
 
 /** Round-12af queries: lagged cross-correlation and chi-square keyness.
   */
-object R12afQueries {
+object R12afQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.ops.MlOps
   * label-propagation classifier (the binning stage of isotonic
   * calibration — the PAV fit itself is spec-proven in MlOps).
   */
-object R12agQueries {
+object R12agQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.PiiOps
 
 /** Round-12ah queries: differentially-private count release. */
-object R12ahQueries {
+object R12ahQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

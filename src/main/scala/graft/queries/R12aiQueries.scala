@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Round-12ai queries: expectation suite (constraint checks) and the
   * ingestion-lag card.
   */
-object R12aiQueries {
+object R12aiQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.GraphOps
 
 /** Round-12aj queries: integer PageRank over the item co-click graph. */
-object R12ajQueries {
+object R12ajQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

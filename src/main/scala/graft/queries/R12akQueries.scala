@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Round-12ak queries: audience-overlap matrix and the Benford
   * first-digit forensic.
   */
-object R12akQueries {
+object R12akQueries extends QuerySet {
 
   private val BenfordP: Seq[(Int, Double)] = Seq(
     1 -> 0.3010299956639812, 2 -> 0.17609125905568124,

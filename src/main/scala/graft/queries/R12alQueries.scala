@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.LayoutOps
 
 /** Round-12al queries: manifest-based versioned lake (time travel). */
-object R12alQueries {
+object R12alQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-12am queries: the DataSource V2 generator source, checked
   * against a SQL regeneration of the same table. */
-object R12amQueries {
+object R12amQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.MlOps
 
 /** Round-12ao queries: exact AUC of the kNN confidence score. */
-object R12aoQueries {
+object R12aoQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.MlOps
 
 /** Round-12ap queries: exact PR curve of the kNN confidence score. */
-object R12apQueries {
+object R12apQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

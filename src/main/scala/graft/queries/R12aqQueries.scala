@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Round-12aq queries: nested (array-of-struct) and map column
   * round-trip through parquet.
   */
-object R12aqQueries {
+object R12aqQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

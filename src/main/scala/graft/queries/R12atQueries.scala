@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.EventOps
 
 /** Round-12at queries: Markov next-event backtest. */
-object R12atQueries {
+object R12atQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

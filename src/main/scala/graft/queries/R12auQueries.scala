@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.EventOps
 
 /** Round-12au queries: entropy rate of the event stream. */
-object R12auQueries {
+object R12auQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

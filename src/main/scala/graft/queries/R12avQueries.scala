@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.DedupOps
 
 /** Round-12av queries: near-dup cluster label purity. */
-object R12avQueries {
+object R12avQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

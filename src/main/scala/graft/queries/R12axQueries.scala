@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.EventOps
 
 /** Round-12ax queries: per-item growth trends. */
-object R12axQueries {
+object R12axQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import graft.ops.{DedupOps, EmbedOps, EventOps, LayoutOps, SplitOps, TextOps}
   * normalization, the lexical-diversity card, the Zipf-fit corpus
   * diagnostic, and embedding-space benchmark decontamination.
   */
-object R12bQueries {
+object R12bQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import graft.ops.{DedupOps, EventOps, SimilarityOps, SkewOps, TextOps}
   * dedup confirm, the Flesch readability card, and the two-stage
   * coarse-then-rerank ANN serving shape.
   */
-object R12cQueries {
+object R12cQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

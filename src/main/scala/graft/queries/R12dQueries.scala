@@ -9,7 +9,7 @@ import graft.ops.{EventOps, SplitOps}
   * outlier flagging, per-class weighted (A-Res) sampling, and the
   * equi-width length histogram.
   */
-object R12dQueries {
+object R12dQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.ops.{DedupOps, MlOps, TextOps}
   * the incremental (persisted) embedding index — the semantic tier of the
   * incremental-dedup ladder — and the equi-depth histogram.
   */
-object R12eQueries {
+object R12eQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import graft.ops.{LayoutOps, SplitOps, TextOps}
   * surface (§2.7 gap), window ranking (§2.7 gap), Poisson bootstrap
   * resampling, and the language-ID confusion report.
   */
-object R12fQueries {
+object R12fQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -10,7 +10,7 @@ import graft.ops.EventOps
   * exact-moment value/hour correlation, and the schema-evolution and
   * multi-format source reads.
   */
-object R12gQueries {
+object R12gQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.ops.{LayoutOps, TextOps}
   * mergeable-sketch distinct count (HLL union across groups), and the
   * small-files compaction contract.
   */
-object R12hQueries {
+object R12hQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

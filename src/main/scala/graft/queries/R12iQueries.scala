@@ -8,7 +8,7 @@ import graft.ops.MultimodalOps
 /** Round-12i queries: the TPC-H q5 star join and frame-level multimodal
   * near-dup pairs.
   */
-object R12iQueries {
+object R12iQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.ops.{LayoutOps, SimilarityOps, TextOps}
   * reconstruction-error report, and the sorted (zone-map) layout with a
   * range-pruned read.
   */
-object R12jQueries {
+object R12jQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{EventOps, TextOps}
 /** Round-12k queries: the event-type Markov transition matrix and the
   * exact percentile-rank normalization.
   */
-object R12kQueries {
+object R12kQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.MlOps
 /** Round-12l queries: TPC-H q6, the cube census, the JSON source
   * round-trip, and the NB-classifier confusion report.
   */
-object R12lQueries {
+object R12lQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{EmbedOps, TextOps}
 /** Round-12m queries: curriculum ordering, frequent-token downsampling,
   * and embedding-snapshot centroid drift.
   */
-object R12mQueries {
+object R12mQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

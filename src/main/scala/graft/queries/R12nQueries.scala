@@ -8,7 +8,7 @@ import graft.ops.TextOps
 /** Round-12n queries: the broadcast interval-lookup join, the
   * corrupt-file-tolerant read, and the MAD robust outlier gate.
   */
-object R12nQueries {
+object R12nQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

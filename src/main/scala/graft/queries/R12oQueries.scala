@@ -9,7 +9,7 @@ import graft.ops.{DedupOps, EventOps, TextOps}
   * normalized-text exact dedup tier, and the funnel conversion-rate
   * report.
   */
-object R12oQueries {
+object R12oQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{SimilarityOps, TextOps}
 /** Round-12p queries: contrastive-training data prep — uniform and hard
   * negative sampling over embeddings, and preference-pair extraction.
   */
-object R12pQueries {
+object R12pQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{DedupOps, SimilarityOps, SplitOps}
 /** Round-12q queries: triplet assembly for contrastive training, the
   * split manifest card, and the nearest-duplicate distance histogram.
   */
-object R12qQueries {
+object R12qQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

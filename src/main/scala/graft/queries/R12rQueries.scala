@@ -8,7 +8,7 @@ import graft.ops.{EventOps, LayoutOps}
 /** Round-12r queries: the parquet-lake upsert (MERGE-INTO shape) and
   * seasonal traffic-anomaly detection.
   */
-object R12rQueries {
+object R12rQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.streaming.StreamingOps
 /** Round-12s queries: the session-duration histogram and the DAU/WAU
   * stickiness card.
   */
-object R12sQueries {
+object R12sQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

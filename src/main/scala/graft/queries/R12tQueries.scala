@@ -8,7 +8,7 @@ import graft.ops.{DedupOps, TextOps}
 /** Round-12t queries: the dedup-ladder reduction funnel — survivor counts
   * at every curation tier in one long-form table.
   */
-object R12tQueries {
+object R12tQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

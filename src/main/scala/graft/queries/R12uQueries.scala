@@ -8,7 +8,7 @@ import graft.ops.SimilarityOps
 /** Round-12u queries: the rerank-recall gauge — does the two-stage
   * coarse-then-rerank pipeline recover the exact top-k?
   */
-object R12uQueries {
+object R12uQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{SimilarityOps, TextOps}
 /** Round-12v queries: pipeline QA metrics — tokenizer fertility, the
   * embedding-norm histogram, and the packing-efficiency report.
   */
-object R12vQueries {
+object R12vQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

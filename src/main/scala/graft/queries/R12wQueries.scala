@@ -8,7 +8,7 @@ import graft.ops.{EventOps, TextOps}
 /** Round-12w queries: attribution-window conversions and n-gram head
   * coverage.
   */
-object R12wQueries {
+object R12wQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

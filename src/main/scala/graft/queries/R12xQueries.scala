@@ -8,7 +8,7 @@ import graft.ops.EventOps
 /** Round-12x queries: conversion-lag distribution and per-document
   * character entropy.
   */
-object R12xQueries {
+object R12xQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{EventOps, JoinOps}
 /** Round-12y queries: join pre-flight census, Bloom-filter semi-join
   * pruning, and gap-filled linear interpolation.
   */
-object R12yQueries {
+object R12yQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -8,7 +8,7 @@ import graft.ops.{EventOps, LayoutOps, TextOps}
 /** Round-12z queries: SCD-2 intervalization, path n-grams, BM25 retrieval,
   * incremental rollup merge, and Z-order layout.
   */
-object R12zQueries {
+object R12zQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

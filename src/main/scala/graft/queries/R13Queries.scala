@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * single-row thresholds); part/supplier/customer joins stay shuffle-able
   * because those tables scale with the corpus.
   */
-object R13Queries {
+object R13Queries extends QuerySet {
 
   /** cents(col): exact integer cents of a money double. */
   private def cents(c: Column): Column = round(c * 100).cast("long")

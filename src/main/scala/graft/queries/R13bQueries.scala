@@ -11,7 +11,7 @@ import graft.ops.EventOps
   * the composed `ev_asof_join`; what changes is the physical plan — one
   * co-partitioned shuffle + sort per side and O(1) merge state instead
   * of the union + keyed-window buffer. */
-object R13bQueries {
+object R13bQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "ev_asof_native" -> ((s, dir) => {

@@ -10,7 +10,7 @@ import graft.ops.GraphOps
   * entry path (ONE SQL string executed by both spark.sql and the DuckDB
   * oracle).
   */
-object R13cQueries {
+object R13cQueries extends QuerySet {
 
   /** Shared SQL for the spark.sql-surface query — parses identically in
     * Spark SQL and DuckDB, so the engine runs the very string the oracle

@@ -7,7 +7,7 @@ import graft.ops.GraphOps
 
 /** Round-13d queries: k-hop reachability census and the unpivot/melt
   * reshape surface. */
-object R13dQueries {
+object R13dQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -7,7 +7,7 @@ import graft.ops.EventOps
 
 /** Round-13e queries: the windowed funnel (each stage must convert within
   * a time budget of the previous stage). */
-object R13eQueries {
+object R13eQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // signup → view → purchase, each later stage within 1 h of the prior

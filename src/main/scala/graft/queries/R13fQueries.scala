@@ -9,7 +9,7 @@ import graft.ops.MlOps
   * gradient-descent iterations replayed BIT-EXACTLY by a generated-CTE
   * oracle (rational sigmoid, micro-unit integer gradients; the PageRank
   * unrolled-superstep discipline applied to iterative ML). */
-object R13fQueries {
+object R13fQueries extends QuerySet {
 
   private val Iters = 3
 

@@ -9,7 +9,7 @@ import graft.ops.MlOps
 /** Round-13g queries: deterministic k-fold cross-validation of the NB
   * domain classifier — the train/eval loop a data pipeline runs to
   * qualify a quality/domain model before gating a corpus with it. */
-object R13gQueries {
+object R13gQueries extends QuerySet {
 
   private val Folds = 3
   private val Seed = 11L

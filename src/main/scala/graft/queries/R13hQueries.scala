@@ -8,7 +8,7 @@ import graft.ops.MlOps
 /** Round-13h queries: fully distributed engine-reproducible Lloyd
   * k-means — the third iterative operator (after PageRank and the GD
   * logreg) whose exact trajectory replays in a generated-CTE oracle. */
-object R13hQueries {
+object R13hQueries extends QuerySet {
 
   private val K = 4
   private val Iters = 2

@@ -12,7 +12,7 @@ import graft.ops.SimilarityOps
   * Both assignments are fully deterministic (6-dp cosine, max-cos/min-id
   * tie-breaks), so the ORACLE replays the two paths and the agreement
   * count EXACTLY — no tolerance, a hash-equal gate. */
-object R14Queries {
+object R14Queries extends QuerySet {
 
   /** k = ⌈n/64⌉ floor 8 — same convention as R10Queries.ivfClusters. */
   private def kOf(n: Long): Long =

@@ -24,7 +24,7 @@ import graft.ops.{MlOps, SimilarityOps}
   * as tight as its true one.  This keeps the gate meaningful at every
   * scale: growing data cannot silently swap semantics, it can only push
   * distortion over the bar and fail loudly. */
-object R15Queries {
+object R15Queries extends QuerySet {
 
   /** k = ⌈n/64⌉ floor 8 — the corpus-proportional cell convention of
     * R10Queries.ivfClusters. */

@@ -23,7 +23,7 @@ import graft.ops.LayoutOps
   * `o5_version_delta` — the structural append-delta (CDC read) between
   * two snapshots, O(delta) from the manifests alone.
   */
-object R15bQueries {
+object R15bQueries extends QuerySet {
 
   private def dayEvents(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =

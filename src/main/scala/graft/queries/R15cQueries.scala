@@ -8,7 +8,7 @@ import graft.ops.{GraphOps, TextOps}
   * tier-shared co-engagement graph — two synchronous rounds, most-
   * frequent neighbor label, min-label ties; the oracle replays the
   * identical rounds in SQL. */
-object R15cQueries {
+object R15cQueries extends QuerySet {
 
   private val unigramModels =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Double)]]

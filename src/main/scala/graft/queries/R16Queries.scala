@@ -16,7 +16,7 @@ import graft.ops.{LayoutOps, SimilarityOps, SketchOps, TextOps}
   * arithmetic, so all oracles here are hash-exact SQL replays — no
   * tolerance rows.
   */
-object R16Queries {
+object R16Queries extends QuerySet {
 
   /** Shared token stream for the CMS queries: one whitespace token per
     * row, the "approximate token frequency" use case. */

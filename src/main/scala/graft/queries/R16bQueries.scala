@@ -15,7 +15,7 @@ import graft.ops.{ImageCodec, MultimodalOps}
   * The oracle never sees the image bytes: it recomputes the block means
   * straight from the text, so a decoder misreading any pixel fails the
   * hash compare. */
-object R16bQueries {
+object R16bQueries extends QuerySet {
 
   /** docs → (doc_id, byte_len, width, height, features) through REAL
     * encode→decode.  BMP for even ids, PPM for odd. */

@@ -10,7 +10,7 @@ import graft.ops.MlOps
   * string executes in Spark (over temp views) and in the DuckDB oracle,
   * proving the tpch_q6_sql path generalizes beyond TPC-H to the dedup and
   * quality tiers. */
-object R16cQueries {
+object R16cQueries extends QuerySet {
 
   /** Shared-string SQL: exact-dedup tier — content-hash groups with the
     * min-id keeper policy and copy counts.  Every function (md5, lower,

@@ -14,7 +14,7 @@ import graft.ops.{LayoutOps, SketchOps}
   * and the exact distinct count; NOTE the merged and direct estimates
   * are not asserted equal — Datasketches' direct path uses the HIP
   * estimator, which is lost on union by design). */
-object R16dQueries {
+object R16dQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -12,7 +12,7 @@ import graft.ops.{AudioCodec, MultimodalOps}
   * feed the SAME near-dup stage as the image tier.  The oracle never
   * sees the WAV bytes: it recomputes the envelope from the text, so a
   * decoder misreading any sample fails the hash compare. */
-object R16eQueries {
+object R16eQueries extends QuerySet {
 
   private def wavDecodedAt(s: SparkSession, dir: String,
       frames: Int): DataFrame = {

@@ -9,7 +9,7 @@ import graft.ops.{SimilarityOps, SketchOps, TextOps}
   * (p5/p95 length clipping, the outlier-trim every corpus pipeline
   * runs); retrieval grows 3-way RRF (lexical ⊕ exact-dense ⊕ LSH).
   * All integer/6-dp arithmetic — hash-exact oracles throughout. */
-object R16fQueries {
+object R16fQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

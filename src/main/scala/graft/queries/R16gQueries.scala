@@ -21,7 +21,7 @@ import graft.ops.GraphOps
   * its fixpoint, and the oracle replays a FIXED 16 rounds — peeling is
   * monotone, so post-fixpoint rounds are no-ops and the two agree
   * hash-exactly (the generated-CTE discipline of ml_kmeans_lloyd). */
-object R16gQueries {
+object R16gQueries extends QuerySet {
 
   private val MaxRounds = 16
   private val K = 2

@@ -9,7 +9,7 @@ import graft.ops.SketchOps
   * the HDR sketch, exact-dup mass).  One plan: three tiny aggregates
   * broadcast-joined; every number integer or bucket-exact, so the card
   * replays hash-exactly. */
-object R16hQueries {
+object R16hQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "pipeline_corpus_card" -> ((s, dir) => {

@@ -11,7 +11,7 @@ import graft.ops.{SimilarityOps, TextOps}
   * truncation-free SFT packing: shelf variant exactly SQL-replayable,
   * first-fit-decreasing variant gauge-checked against its packing
   * invariants). */
-object R16iQueries {
+object R16iQueries extends QuerySet {
 
   private val Cap = 128L // context window; every sf doc fits whole (max 99)
 

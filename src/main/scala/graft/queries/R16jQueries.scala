@@ -13,7 +13,7 @@ import graft.ops.{ImageCodec, MultimodalOps}
   * oracle-gated corpus sweep exercises every decode path.  The oracle
   * recomputes block means straight from the text: any inflate, unfilter,
   * or chunk-walk slip fails the hash compare. */
-object R16jQueries {
+object R16jQueries extends QuerySet {
 
   private def pngDecodedAt(s: SparkSession, dir: String,
       grid: Int): DataFrame = {

@@ -9,7 +9,7 @@ import graft.ops.{DedupOps, EmbedOps, SplitOps, TextOps}
   * oracle gate for the PCA/whitening tier (fit invariants + whitened
   * variance asserted in-plan; the fixed-point-exact covariance trace
   * replayed by SQL). */
-object R16kQueries {
+object R16kQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.ops.{EmbedOps, SimilarityOps, SplitOps, TextOps}
   * what makes incremental PCA possible without ever re-scanning history)
   * and per-group shelf packing (multilingual SFT: bins never mix
   * languages). */
-object R16lQueries {
+object R16lQueries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -11,7 +11,7 @@ import graft.ops.{ImageCodec, MultimodalOps}
   * hits (the synthetic docs repeat tokens, so back-references fire),
   * variable code widths, and sub-block reassembly.  Lossless, so the
   * oracle replays features hash-exactly from the text. */
-object R16mQueries {
+object R16mQueries extends QuerySet {
 
   private def gifDecodedAt(s: SparkSession, dir: String,
       grid: Int): DataFrame = {

@@ -28,7 +28,7 @@ import graft.ops.{ImageCodec, JpegCodec, MultimodalOps}
   *    is a missing row (red), and any hamming ≠ 0 mismatches the oracle's
   *    constant.
   */
-object R17Queries {
+object R17Queries extends QuerySet {
 
   /** per-pixel gauge bound at quality 90 (see scaladoc above). */
   private val ErrBound = 32.0

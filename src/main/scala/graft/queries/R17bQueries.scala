@@ -31,7 +31,7 @@ import graft.ops.{AudioCodec, FlacCodec, ImageCodec, JpegCodec,
   * every reconstructed sample against the oracle-recomputable source
   * envelope |(src[(i·7+3) mod len] − 76) · 256|.
   */
-object R17bQueries {
+object R17bQueries extends QuerySet {
 
   private val Err422Bound = 150.0
   private val Err411Bound = 176.0

@@ -98,7 +98,7 @@ import graft.ops.{AudioCodec, FlacCodec, ImageCodec, MultimodalOps,
   *    Both decoders are ALSO conformance-anchored against stdlib
   *    sunau/aifc bytes in R18ConformanceSpec.
   */
-object R18Queries {
+object R18Queries extends QuerySet {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

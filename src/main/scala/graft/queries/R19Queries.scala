@@ -70,7 +70,7 @@ import graft.ops.{ImageCodec, LayoutOps, MultimodalOps, VideoCodec}
   *    hash-exactly against the same all-pairs SQL as
   *    `mm_y4m_frame_dedup`.
   */
-object R19Queries {
+object R19Queries extends QuerySet {
 
   /** Per-(doc, frame) luma strings + md5 bucket keys for the standard
     * 3-frame/C420 Y4M fixture (frame f walks the text at offset 29f) —

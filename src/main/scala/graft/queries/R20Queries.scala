@@ -42,7 +42,7 @@ import graft.ops.{ImageCodec, JpegCodec, MultimodalOps, VideoCodec}
   *    the result must equal the luma-keyed `mm_video_clip_dedup`
   *    oracle row-for-row.
   */
-object R20Queries {
+object R20Queries extends QuerySet {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -9,7 +9,7 @@ import graft.ops._
   * SimHash Hamming confirm stage, and incremental dedup of a new shard
   * against a persisted MinHash band index.  All oracle-checked.
   */
-object R9Queries {
+object R9Queries extends QuerySet {
 
   import Tables.{docs, emb}
 

@@ -14,7 +14,7 @@ import graft.core._
   * reductions in a defined order.  Outputs with genuine float aggregates are
   * rounded to 6 decimals on both sides.
   */
-object WeightedQueries {
+object WeightedQueries extends QuerySet {
   import CoreQueries.li
 
   private val RankedCte =

@@ -20,15 +20,6 @@ class OpsSpec extends AnyFunSuite {
     (3L, "the quick brown fox jumps over the lazy dog"), // exact dup of 0
   ).toDF("doc_id", "text")
 
-  test("every oracle key has a query; no orphaned oracles") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracles without queries: ${o -- q}")
-    // every query is oracle-checked — no rows-only rows left (r9: the two
-    // former exceptions carry invariant oracles now)
-    assert((q -- o).isEmpty, s"unexpected rows-only: ${q -- o}")
-  }
-
   test("exact dedup keeps the lowest-id row per distinct text") {
     val kept = DedupOps.exactDedup(docs, col("text"), col("doc_id"))
       .select("doc_id").as[Long].collect().sorted

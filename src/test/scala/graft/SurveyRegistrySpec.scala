@@ -69,6 +69,12 @@ class SurveyRegistrySpec extends AnyFunSuite {
       s"registered queries uncited in SURVEY §2.8: ${uncited.toSeq.sorted}")
   }
 
+  test("a name defined in two query sets fails the registry build") {
+    val e = intercept[IllegalArgumentException](graft.queries.QuerySet.merge(
+      "query", Seq(Map("a" -> 1, "b" -> 2), Map("c" -> 3), Map("b" -> 4))))
+    assert(e.getMessage.contains("query defined in two query sets: b"))
+  }
+
   test("oracleSql keys equal queries keys") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet
