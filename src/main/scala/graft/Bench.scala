@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 object Bench {
@@ -60,17 +60,27 @@ object Bench {
     * across queries.  User-level persists (the session-scoped collection
     * handles) are deliberately KEPT — reuse across queries mirrors the
     * reference's open-once benchmark methodology.  A failed query must be
-    * VISIBLE: it is logged and reads as rows = -1. */
+    * VISIBLE: it is logged and reads as rows = -1.  Whether the plan reads
+    * a landed layout ([[graft.queries.Layout.reads]]) is checked after the
+    * clock stops. */
   private def countOnce(spark: SparkSession, sfDir: String,
       name: String): (Double, Long) = {
     val t0 = System.nanoTime()
-    val rows = try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e"); -1L }
+    var built: Option[DataFrame] = None
+    val rows = try {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      built = Some(df)
+      df.count()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name FAILED: $e"); -1L }
     val sec = (System.nanoTime() - t0) / 1e9
+    if (rows >= 0 && built.exists(graft.queries.Layout.reads)) layoutReaders += name
     try CacheScope.release() catch { case _: Throwable => () }
     (sec, rows)
   }
+
+  /** Queries whose plan scanned a landed layout, in this JVM's runs. */
+  private val layoutReaders = scala.collection.mutable.SortedSet.empty[String]
 
   /** `reps` timed runs of each named query (an unknown name throws before
     * anything runs): name -> (seconds, rows) per run. */
@@ -358,14 +368,17 @@ object Bench {
       "queries_full" -> Json.str("BENCH_FULL.json"), "sf" -> Json.str(sfDir)): _*)
     val fullLine = Json.obj(head ++ Seq("queries" -> Json.obj(timings: _*),
       "samples_per_sec" -> tp, "index_build_s" -> builds,
+      "layout_readers" -> Json.arr(layoutReaders.toSeq.map(Json.str)),
       "batch_entropy" -> ent, "headliners_isolated" -> iso,
       "sf" -> Json.str(sfDir)): _*)
     // The driver captures only a stdout tail, which has truncated the
     // per-query map mid-key in past rounds (BENCH_r10/r11 "parsed": null).
-    // Persist the full payload to a committed repo file so bench artifacts
+    // Persist the full payload next to the run (the forked JVM's working
+    // directory, which sbt sets to the project base) so bench artifacts
     // stay machine-comparable across rounds regardless of tail size.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), fullLine + "\n")
+      java.nio.file.Paths.get(System.getProperty("user.dir"), "BENCH_FULL.json"),
+      fullLine + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_FULL.json write failed: $e") }
     // Print the result line LAST, after the Spark context is down: the

@@ -2,14 +2,72 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
 import graft.ops.GraphOps
 
-/** Round-13d queries: k-hop reachability census and the unpivot/melt
-  * reshape surface. */
-object R13dQueries extends QuerySet {
+/** Graph algorithms over the co-engagement item graph and the near-dup
+  * pair graph: reach, degrees, components, triangles, PageRank, k-core.
+  * Names: `graph`. */
+object GraphQueries extends QuerySet {
+
+
+  // The oracle unrolls the 10 supersteps as generated CTEs (aggregates
+  // are not allowed in a recursive CTE's recursive term) — every step is
+  // integer arithmetic, so the mirror is exact, not approximate.
+  private val PageRankSql: String = {
+    val prelude =
+      """WITH ui AS (SELECT DISTINCT user_id AS u,
+        |    json_extract_string(props, '$.k')::INT AS item
+        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
+        |p AS (SELECT DISTINCT a.item AS src, b.item AS dst
+        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+        |edges AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
+        |deg AS (SELECT src AS item, count(*)::BIGINT AS deg
+        |  FROM edges GROUP BY 1),
+        |nodes AS (SELECT item FROM deg),
+        |iv AS (SELECT (1000000000000 // count(*))::BIGINT AS init FROM nodes),
+        |r0 AS (SELECT item, init AS r FROM nodes CROSS JOIN iv)""".stripMargin
+    val steps = (1 to 10).map { k =>
+      s"""c$k AS (SELECT e.dst AS item, sum(r.r // d.deg)::BIGINT AS s
+         |  FROM edges e JOIN r${k - 1} r ON r.item = e.src
+         |  JOIN deg d ON d.item = e.src GROUP BY 1),
+         |r$k AS (SELECT n.item,
+         |    ((15 * iv.init + 85 * coalesce(c.s, 0)) // 100)::BIGINT AS r
+         |  FROM nodes n CROSS JOIN iv LEFT JOIN c$k c USING (item))"""
+        .stripMargin
+    }
+    (prelude +: steps).mkString(",\n") + "\nSELECT item, r FROM r10"
+  }
+
+  private val MaxRounds = 16
+
+  private val K = 2
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+
+    // Item centrality on the co-click graph (distinct co-engaged item
+    // pairs), 10 integer supersteps — which catalog items sit at the
+    // center of cross-engagement.
+    "graph_pagerank" -> ((s, dir) => {
+      val item =
+        nullif(regexp_extract(col("props"), "\"k\": ([0-9]+)", 1), lit(""))
+          .cast("int")
+      val ui = Tables.events(s, dir)
+        .select(col("user_id").as("u"), item.as("item"))
+        .where(col("item").isNotNull).distinct()
+      val b = ui.select(col("u"), col("item").as("item_b"))
+      val pairs = ui.join(b, ui("u") === b("u") && col("item") < col("item_b"))
+        .select(col("item").as("src"), col("item_b").as("dst")).distinct()
+      GraphOps.pageRank(pairs, col("src"), col("dst"), iters = 10)
+    }),
+
+    // Triangle census of the co-engaged item graph: closed triangles,
+    // wedges, global clustering coefficient — two self-joins on the
+    // ordered edge list, degree-bounded fan-out
+    "graph_triangles" -> ((s, dir) =>
+      // reads the tier-shared bucketed co-engagement layout (Tables
+      // .coEdges) — derived once per session, scanned by every graph query
+      GraphOps.triangleCensus(Tables.coEdges(s, dir),
+        col("src"), col("dst"))),
 
     // Audience-expansion radius: per item, the ≤1/≤2/≤3-hop neighborhood
     // sizes on the co-engaged item graph — BFS-by-joins, one join +
@@ -66,16 +124,6 @@ object R13dQueries extends QuerySet {
         .groupBy("d").agg(count(lit(1)).as("n_vertices"))
     }),
 
-    // Within-session item co-occurrence: the co-visitation table at the
-    // browsing-intent granularity (30-min gap sessions)
-    "ev_item_session_cooc" -> ((s, dir) => {
-      val item =
-        nullif(regexp_extract(col("props"), "\"k\": ([0-9]+)", 1), lit(""))
-          .cast("int")
-      graft.ops.EventOps.sessionItemCooc(Tables.events(s, dir), item,
-        gapMs = 1800000L)
-    }),
-
     // Connected components of the co-engaged item graph (dedupClusters'
     // dual-path min-label machinery) → component-size histogram — the
     // "is the catalog one giant blob or many islands" card
@@ -88,25 +136,36 @@ object R13dQueries extends QuerySet {
         .agg(count(lit(1)).as("n_components"))
     }),
 
-    // RFM segmentation of purchasers: exact quintiles via the
-    // range-partitioned Ranker, (R, F, M) cell census
-    "ev_rfm" -> ((s, dir) =>
-      graft.ops.EventOps.rfmSegments(
-        Tables.events(s, dir).where(col("event_type") === "purchase"),
-        col("user_id"), col("ts"), col("value"))),
+    "graph_lpa" -> ((s, dir) =>
+      GraphOps.labelPropagation(Tables.coEdges(s, dir),
+        col("src"), col("dst"), iters = 2)),
 
-    // Wide→long reshape: the per-language documents census melted into
-    // (lang, metric, value) rows with Spark's native unpivot
-    "a1_unpivot" -> ((s, dir) => {
-      val census = Tables.docs(s, dir).groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"))
-      census.unpivot(Array(col("lang")),
-        Array(col("n_docs").cast("long"), col("chars").cast("long")),
-        "metric", "value")
-    })
+    "graph_kcore" -> ((s, dir) =>
+      GraphOps.kCore(Tables.nearDupPairs(s, dir), col("doc_a"),
+        col("doc_b"), K, maxRounds = MaxRounds))
   )
 
   def oracles: Map[String, String] = Map(
+
+    "graph_pagerank" -> PageRankSql,
+
+    "graph_triangles" ->
+      """WITH ui AS (SELECT DISTINCT user_id AS u,
+        |    json_extract_string(props, '$.k')::INT AS item
+        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
+        |e AS (SELECT DISTINCT a.item AS a, b.item AS b
+        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+        |tri AS (SELECT count(*)::BIGINT AS n_triangles
+        |  FROM e e1 JOIN e e2 ON e1.b = e2.a
+        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
+        |deg AS (SELECT v, count(*) AS d
+        |  FROM (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
+        |  GROUP BY 1),
+        |w AS (SELECT CAST(sum(d*(d-1)/2) AS BIGINT) AS n_wedges FROM deg)
+        |SELECT n_triangles, n_wedges,
+        |  CASE WHEN n_wedges = 0 THEN 0.0
+        |       ELSE round(3.0 * n_triangles / n_wedges, 9) END AS clustering
+        |FROM tri, w""".stripMargin,
 
     "graph_reach" ->
       """WITH ui AS (SELECT DISTINCT user_id AS u,
@@ -167,29 +226,6 @@ object R13dQueries extends QuerySet {
         |  GROUP BY 1)
         |SELECT d, count(*)::BIGINT AS n_vertices FROM deg GROUP BY 1""".stripMargin,
 
-    "ev_item_session_cooc" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_ms(ts) AS ts_ms,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events),
-        |s AS (
-        |  SELECT *, CASE
-        |    WHEN lag(ts_ms) OVER w IS NULL THEN 1
-        |    WHEN ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1
-        |    ELSE 0 END AS is_start
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
-        |),
-        |sid AS (
-        |  SELECT *, sum(is_start) OVER (PARTITION BY user_id
-        |    ORDER BY ts_ms, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM s),
-        |si AS (SELECT DISTINCT user_id, session_id, item FROM sid
-        |  WHERE item IS NOT NULL)
-        |SELECT a.item AS i, b.item AS j, count(*)::BIGINT AS n_co
-        |FROM si a JOIN si b ON a.user_id = b.user_id
-        |  AND a.session_id = b.session_id AND a.item < b.item
-        |GROUP BY 1, 2""".stripMargin,
-
     "graph_components" ->
       """WITH RECURSIVE ui AS (SELECT DISTINCT user_id AS u,
         |    json_extract_string(props, '$.k')::INT AS item
@@ -208,31 +244,46 @@ object R13dQueries extends QuerySet {
         |SELECT sz::BIGINT AS component_size, count(*)::BIGINT AS n_components
         |FROM sizes GROUP BY 1""".stripMargin,
 
-    "ev_rfm" ->
-      """WITH p AS (
-        |  SELECT user_id, epoch_us(ts) AS us,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS vmi
-        |  FROM events WHERE event_type = 'purchase'),
-        |u AS (SELECT user_id, max(us) AS last_us, count(*) AS f,
-        |  sum(vmi) AS m FROM p GROUP BY 1),
-        |ref AS (SELECT max(last_us) AS ref_us, count(*) AS n FROM u),
-        |x AS (SELECT u.*, (ref.ref_us - u.last_us) // 86400000000 AS r_days,
-        |  ref.n FROM u, ref),
-        |rr AS (SELECT *,
-        |  row_number() OVER (ORDER BY r_days ASC, user_id ASC) - 1 AS rk_r,
-        |  row_number() OVER (ORDER BY f DESC, user_id ASC) - 1 AS rk_f,
-        |  row_number() OVER (ORDER BY m DESC, user_id ASC) - 1 AS rk_m
-        |  FROM x)
-        |SELECT 1 + (5*rk_r)//n AS r_q, 1 + (5*rk_f)//n AS f_q,
-        |  1 + (5*rk_m)//n AS m_q, count(*)::BIGINT AS n_users
-        |FROM rr GROUP BY 1, 2, 3""".stripMargin,
+    "graph_lpa" ->
+      """WITH ui AS (SELECT DISTINCT user_id AS u,
+        |    json_extract_string(props, '$.k')::INT AS item
+        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
+        |e0 AS (SELECT DISTINCT a.item AS a, b.item AS b
+        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+        |und AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
+        |l0 AS (SELECT DISTINCT a AS v, a::BIGINT AS label FROM und),
+        |c1 AS (SELECT u.a, l.label, count(*) AS cnt
+        |  FROM und u JOIN l0 l ON l.v = u.b GROUP BY 1, 2),
+        |l1 AS (SELECT a AS v, label FROM (
+        |  SELECT a, label, row_number() OVER (PARTITION BY a
+        |    ORDER BY cnt DESC, label ASC) AS rn FROM c1) WHERE rn = 1),
+        |c2 AS (SELECT u.a, l.label, count(*) AS cnt
+        |  FROM und u JOIN l1 l ON l.v = u.b GROUP BY 1, 2),
+        |l2 AS (SELECT a AS v, label FROM (
+        |  SELECT a, label, row_number() OVER (PARTITION BY a
+        |    ORDER BY cnt DESC, label ASC) AS rn FROM c2) WHERE rn = 1)
+        |SELECT v::BIGINT AS v, label FROM l2""".stripMargin,
 
-    "a1_unpivot" ->
-      """WITH census AS (
-        |  SELECT lang, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS chars
-        |  FROM documents GROUP BY 1)
-        |SELECT lang, 'n_docs' AS metric, n_docs AS value FROM census
-        |UNION ALL
-        |SELECT lang, 'chars' AS metric, chars AS value FROM census""".stripMargin
+    "graph_kcore" -> {
+      // every e_i is referenced 3× by round i+1: AS MATERIALIZED stops
+      // DuckDB from inlining the chain (3^16 expansions otherwise)
+      val rounds = (1 to MaxRounds).map { i =>
+        s"""k$i AS MATERIALIZED (SELECT a FROM e${i - 1} GROUP BY a
+           |  HAVING count(*) >= (SELECT kk FROM kv)),
+           |e$i AS MATERIALIZED (SELECT e.a, e.b FROM e${i - 1} e
+           |  JOIN k$i x ON e.a = x.a JOIN k$i y ON e.b = y.a)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${MediaQueries.RealAHash64Sql},
+         |p AS MATERIALIZED (
+         |  SELECT x.doc_id AS da, y.doc_id AS db
+         |  FROM a x JOIN a y ON x.doc_id < y.doc_id
+         |  WHERE bit_count(xor(x.ahash, y.ahash)) <= 3),
+         |kv AS MATERIALIZED (SELECT $K AS kk),
+         |e0 AS MATERIALIZED (SELECT da AS a, db AS b FROM p
+         |       UNION SELECT db, da FROM p),
+         |$rounds
+         |SELECT a AS v, count(*)::BIGINT AS degree
+         |FROM e$MaxRounds GROUP BY 1""".stripMargin
+    }
   )
 }

@@ -13,6 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dir. */
 private[graft] object Layout {
 
+  /** Every table name [[land]] has returned in this JVM. */
+  private val landed = scala.collection.concurrent.TrieMap.empty[String, Unit]
+
   /** Land `build` as layout `name` of `dir`, bucketed (8 buckets) and
     * sorted on `bucketCol`, and return the committed table.  Table name =
     * `graft_<name>_` + a sanitized dir suffix for readability + an md5
@@ -25,7 +28,7 @@ private[graft] object Layout {
       .digest(dir.getBytes("UTF-8")).take(6)
       .map(b => f"$b%02x").mkString
     val tbl = s"graft_${name}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40).toLowerCase +
+      Tables.dirTag(dir).takeRight(40).toLowerCase +
       "_" + digest
     IndexBuilds.once(s"layout_$name@$dir") {
       // under the warehouse dir, NOT java.io.tmpdir: the warehouse is
@@ -38,6 +41,14 @@ private[graft] object Layout {
       graft.ops.LayoutOps.writeBucketed(build, bucketCol, 8, tbl,
         s"$wh/graft_layout/$tbl")
     }
+    landed(tbl) = ()
     s.table(tbl)
   }
+
+  /** Whether `df`'s analyzed plan, subqueries included, scans a table
+    * [[land]] returned. */
+  def reads(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.catalogTable
+    }.flatten.exists(t => landed.contains(t.identifier.table))
 }

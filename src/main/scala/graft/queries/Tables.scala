@@ -9,6 +9,33 @@ import org.apache.spark.sql.functions._
   * (build seconds booked as `index_build_s`). */
 private[queries] object Tables {
 
+  /** Per-PROCESS scratch root for the persisted-index and rewritten-table
+    * queries.  `createTempDirectory` makes the path unique per run, so two
+    * concurrent harness runs over the same data dir can never race on the
+    * mode(overwrite) writes; the shutdown hook removes the artifacts when
+    * the JVM exits (the files must outlive the lazy query plan that reads
+    * them, so deletion inside the query builder is not an option). */
+  private lazy val runTmp: String = {
+    val p = java.nio.file.Files.createTempDirectory("graft_run_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        val kids = f.listFiles()
+        if (kids != null) kids.foreach(rm)
+        f.delete(); ()
+      }
+      rm(p.toFile)
+    }))
+    p.toString
+  }
+
+  /** `dir` with every non-alphanumeric character replaced by `_`: a path
+    * and catalog-identifier safe tag of the data dir. */
+  def dirTag(dir: String): String = dir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** The per-run scratch path `name` for data dir `dir`. */
+  def scratch(dir: String, name: String): String =
+    s"$runTmp/${name}_${dirTag(dir)}"
+
   def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
@@ -57,11 +84,9 @@ private[queries] object Tables {
       val toImg = udf((id: Long, text: String) =>
         graft.ops.ImageCodec.grayFromBytes(8, 8,
           graft.ops.MultimodalOps.asciiBytes(text), id % 2 == 1))
-      val decoded = graft.ops.MultimodalOps.decodeWith(
-        docs(s, dir).withColumn("payload",
-          toImg(col("doc_id"), col("text"))),
-        col("payload"), col("doc_id"),
-        graft.ops.ImageCodec.kernel(8, 8)).toDF()
+      val decoded = MediaQueries.decoded(docs(s, dir),
+        toImg(col("doc_id"), col("text")),
+        Left(graft.ops.ImageCodec.kernel(8, 8)))
       graft.ops.MultimodalOps.aHashBandedPairs(decoded,
         col("doc_id"), bits = 64, bands = 4, maxHamming = 3)
     }

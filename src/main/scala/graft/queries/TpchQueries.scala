@@ -2,51 +2,42 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.LayoutOps
 
-/** Round-13 queries: the remaining TPC-H suite (q2–q22), adapted to the
-  * driver testdata's reduced star schema.  The canonical plan shapes are
-  * preserved — correlated-min subquery (q2), EXISTS semi-join (q4),
-  * bilateral nation pairs (q7), market-share conditional aggregation (q8),
-  * profit roll-up (q9), scalar-subquery threshold (q11), outer-join
-  * histogram (q13), max-subquery join (q15), anti-join supplier exclusion
-  * (q16), correlated-average filter (q17), having-subquery join (q18),
-  * disjunctive predicate pushdown (q19), nested-aggregate semi-join (q20),
-  * exists/not-exists census (q21), dormant-customer anti-join (q22) —
-  * while columns the testdata lacks (partsupp, commit/receipt dates,
-  * shipmode, container, phone) are substituted by documented proxies:
-  * the part↔supplier link derives from distinct lineitem pairs, lateness
-  * is shipdate vs order date + 90 days, supply cost is 50% of
-  * p_retailprice, and the country code is `c_nationkey % 5`.
-  *
-  * All money/discount terms are integerized (cents / milli) and the wide
-  * sums are DECIMAL(38,0) so every aggregate is exact at any scale — a
-  * long sum that is safe at sf0.1 would wrap at 100 TB.  Dimension
-  * broadcasts are limited to genuinely bounded tables (region, nation,
-  * single-row thresholds); part/supplier/customer joins stay shuffle-able
-  * because those tables scale with the corpus.
-  */
-object R13Queries extends QuerySet {
+/** TPC-H queries over the lineitem/orders/customer/supplier/part/nation/
+  * region tables, with exact integer-cent money arithmetic, plus the
+  * bucketed and spark.sql-surface variants.  Names: `tpch`. */
+object TpchQueries extends QuerySet {
+
 
   /** cents(col): exact integer cents of a money double. */
   private def cents(c: Column): Column = round(c * 100).cast("long")
+
   /** milli(col): exact integer thousandths of a rate double. */
   private def milli(c: Column): Column = round(c * 1000).cast("long")
+
   /** Revenue in cent-milli units: price_c * (1000 - disc_m). */
   private def revCm(price: Column, disc: Column): Column =
     cents(price) * (lit(1000L) - milli(disc))
 
   private def li(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
+
   private def ord(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/orders.parquet")
+
   private def cust(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/customer.parquet")
+
   private def supp(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/supplier.parquet")
+
   private def part(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/part.parquet")
+
   private def nat(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/nation.parquet")
+
   private def reg(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/region.parquet")
 
@@ -59,7 +50,147 @@ object R13Queries extends QuerySet {
       .join(broadcast(reg(s, dir).where(col("r_name") === region)),
         col("n_regionkey") === col("r_regionkey"))
 
+  /** Shared SQL for the spark.sql-surface query — parses identically in
+    * Spark SQL and DuckDB, so the engine runs the very string the oracle
+    * replays. */
+  private val Q6SqlShared: String =
+    """SELECT CAST(sum(CAST(CAST(round(l_extendedprice*100) AS BIGINT) *
+      |  CAST(round(l_discount*1000) AS BIGINT) AS DECIMAL(38,0))) AS DOUBLE)
+      |  / 1e5 AS revenue
+      |FROM lineitem
+      |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+      |  AND l_shipdate < TIMESTAMP '1997-01-01'
+      |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+
+    // Co-located fact-fact join: lineitem ⋈ orders, both bucketed+sorted
+    // on the order key — the join itself plans with NO exchange; the only
+    // shuffle is the final 3-group aggregate
+    "tpch_bucketed_join" -> ((s, dir) => {
+      val safe = Tables.dirTag(dir)
+      val tmp = Tables.scratch(dir, "bucketed")
+      // the bucketed layout is the amortized cost (written once, joined
+      // forever) — build it once per JVM and report the build separately,
+      // same discipline as the persisted ANN/dedup indexes
+      IndexBuilds.once(s"tpch_bucketed_join:$dir") {
+        LayoutOps.writeBucketed(s.read.parquet(s"$dir/lineitem.parquet"),
+          "l_orderkey", 8, s"graft_li_$safe", s"$tmp/li")
+        LayoutOps.writeBucketed(s.read.parquet(s"$dir/orders.parquet")
+            .withColumnRenamed("o_orderkey", "l_orderkey"),
+          "l_orderkey", 8, s"graft_ord_$safe", s"$tmp/ord")
+      }
+      LayoutOps.bucketedJoin(s, s"graft_li_$safe", s"graft_ord_$safe",
+          "l_orderkey")
+        .groupBy("o_orderstatus")
+        .agg(countDistinct("l_orderkey").as("n_orders"),
+          count(lit(1)).as("n_lines"),
+          (sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+            * 100).cast("long")).cast("double") / 100.0).as("revenue"))
+    }),
+
+    // TPC-H Q1 pricing summary: the canonical scan-heavy aggregate.
+    // All money/discount terms are integerized (cents / milli) so every
+    // sum is exact; sum_charge's per-row product needs DECIMAL(38,0)
+    "tpch_q1" -> ((s, dir) => {
+      val li = s.read.parquet(s"$dir/lineitem.parquet")
+        .where(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
+      val qc = round(col("l_quantity") * 100).cast("long")
+      val pc = round(col("l_extendedprice") * 100).cast("long")
+      val d3 = round(col("l_discount") * 1000).cast("long")
+      val t3 = round(col("l_tax") * 1000).cast("long")
+      li.select(col("l_returnflag"), col("l_linestatus"), qc.as("qc"),
+          pc.as("pc"), d3.as("d3"), t3.as("t3"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+          (sum("qc").cast("double") / 100.0).as("sum_qty"),
+          (sum("pc").cast("double") / 100.0).as("sum_base_price"),
+          (sum(col("pc") * (lit(1000L) - col("d3"))).cast("double") / 1e5)
+            .as("sum_disc_price"),
+          (sum((col("pc") * (lit(1000L) - col("d3")) *
+            (lit(1000L) + col("t3"))).cast("decimal(38,0)")).cast("double")
+            / 1e8).as("sum_charge"),
+          round(sum("qc").cast("double") / 100.0 / count(lit(1)), 6)
+            .as("avg_qty"),
+          round(sum("pc").cast("double") / 100.0 / count(lit(1)), 6)
+            .as("avg_price"),
+          round(sum("d3").cast("double") / 1000.0 / count(lit(1)), 6)
+            .as("avg_disc"),
+          count(lit(1)).as("count_order"))
+    }),
+
+    // TPC-H Q3 shipping priority: filtered 3-way join (customer broadcast,
+    // orders⋈lineitem shuffled on the order key), exact cent-milli
+    // revenue, deterministic top-10 via TakeOrdered
+    "tpch_q3" -> ((s, dir) => {
+      val cutoff = lit("1998-06-01").cast("timestamp")
+      val c = s.read.parquet(s"$dir/customer.parquet")
+        .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
+      val o = s.read.parquet(s"$dir/orders.parquet")
+        .where(col("o_orderdate") < cutoff)
+        .select("o_orderkey", "o_custkey", "o_orderdate")
+      val l = s.read.parquet(s"$dir/lineitem.parquet")
+        .where(col("l_shipdate") > cutoff)
+        .select(col("l_orderkey"),
+          (round(col("l_extendedprice") * 100).cast("long") *
+            (lit(1000L) - round(col("l_discount") * 1000).cast("long")))
+            .as("rev_cm"))
+      l.join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
+        .groupBy("l_orderkey", "o_orderdate")
+        .agg((sum("rev_cm").cast("double") / 1e5).as("revenue"))
+        .orderBy(col("revenue").desc, col("l_orderkey"))
+        .limit(10)
+    }),
+
+    // TPC-H Q5 local-supplier revenue: the canonical star join — region →
+    // nation → supplier broadcast down the dimension chain, lineitem ⋈
+    // orders shuffled on the order key, customer shuffled on custkey,
+    // exact cent-milli revenue per nation
+    "tpch_q5" -> ((s, dir) => {
+      val lo = lit("1996-01-01").cast("timestamp")
+      val hi = lit("1997-01-01").cast("timestamp")
+      val r = s.read.parquet(s"$dir/region.parquet")
+        .where(col("r_name") === "ASIA")
+      val n = s.read.parquet(s"$dir/nation.parquet")
+        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+        .select("n_nationkey", "n_name")
+      val sup = s.read.parquet(s"$dir/supplier.parquet")
+        .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
+        .select("s_suppkey", "s_nationkey", "n_name")
+      val c = s.read.parquet(s"$dir/customer.parquet")
+        .select("c_custkey", "c_nationkey")
+      val o = s.read.parquet(s"$dir/orders.parquet")
+        .where(col("o_orderdate") >= lo && col("o_orderdate") < hi)
+        .select("o_orderkey", "o_custkey")
+      val l = s.read.parquet(s"$dir/lineitem.parquet")
+        .select(col("l_orderkey"), col("l_suppkey"),
+          (round(col("l_extendedprice") * 100).cast("long") *
+            (lit(1000L) - round(col("l_discount") * 1000).cast("long")))
+            .as("rev_cm"))
+      l.join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+        .join(c, col("o_custkey") === col("c_custkey"))
+        .where(col("c_nationkey") === col("s_nationkey"))
+        .groupBy("n_name")
+        .agg((sum("rev_cm").cast("double") / 1e5).as("revenue"))
+        .orderBy(col("revenue").desc, col("n_name"))
+    }),
+
+    // TPC-H Q6 forecast-revenue change: pure scan + pushdown predicate,
+    // all-integer money terms (discount band compared in exact milli)
+    "tpch_q6" -> ((s, dir) => {
+      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val qc = round(col("l_quantity") * 100).cast("long")
+      val pc = round(col("l_extendedprice") * 100).cast("long")
+      val d3 = round(col("l_discount") * 1000).cast("long")
+      li.where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
+          col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
+        .select(qc.as("qc"), pc.as("pc"), d3.as("d3"))
+        .where(col("d3") >= 50 && col("d3") <= 70 && col("qc") < 2400)
+        .agg((sum(col("pc") * col("d3")).cast("double") / 1e5).as("revenue"),
+          count(lit(1)).as("n_lines"))
+    }),
 
     // q2: min-acctbal EUROPE supplier per mid-size LARGE part.  The
     // part↔supplier link is the distinct (l_partkey, l_suppkey) pair set;
@@ -462,10 +593,98 @@ object R13Queries extends QuerySet {
         .agg(count(lit(1)).as("numcust"),
           (sum(col("bal_c").cast("decimal(38,0)")).cast("double") / 100.0)
             .as("totacctbal"))
+    }),
+
+    // Pure-SQL surface: the engine executes the SAME dialect-neutral SQL
+    // string the oracle replays — spark.sql over a temp view
+    "tpch_q6_sql" -> ((s, dir) => {
+      s.read.parquet(s"$dir/lineitem.parquet")
+        .createOrReplaceTempView("lineitem")
+      s.sql(Q6SqlShared)
     })
   )
 
   def oracles: Map[String, String] = Map(
+
+    // the bucketed layout is invisible to results: plain join + aggregate;
+    // cent-integerized revenue so the sum is order-free
+    "tpch_bucketed_join" ->
+      """SELECT o.o_orderstatus,
+        |  count(DISTINCT l.l_orderkey) AS n_orders,
+        |  count(*) AS n_lines,
+        |  sum(CAST(floor(l.l_extendedprice * (1.0 - l.l_discount) * 100)
+        |    AS BIGINT))::DOUBLE / 100.0 AS revenue
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |GROUP BY 1""".stripMargin,
+
+    "tpch_q1" ->
+      """WITH li AS (
+        |  SELECT l_returnflag, l_linestatus,
+        |    CAST(round(l_quantity * 100) AS BIGINT) AS qc,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
+        |    CAST(round(l_discount * 1000) AS BIGINT) AS d3,
+        |    CAST(round(l_tax * 1000) AS BIGINT) AS t3
+        |  FROM lineitem
+        |  WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00')
+        |SELECT l_returnflag, l_linestatus,
+        |  sum(qc)::DOUBLE / 100.0 AS sum_qty,
+        |  sum(pc)::DOUBLE / 100.0 AS sum_base_price,
+        |  sum(pc * (1000 - d3))::DOUBLE / 1e5 AS sum_disc_price,
+        |  sum((pc * (1000 - d3) * (1000 + t3))::DECIMAL(38,0))::DOUBLE / 1e8 AS sum_charge,
+        |  round(sum(qc)::DOUBLE / 100.0 / count(*), 6) AS avg_qty,
+        |  round(sum(pc)::DOUBLE / 100.0 / count(*), 6) AS avg_price,
+        |  round(sum(d3)::DOUBLE / 1000.0 / count(*), 6) AS avg_disc,
+        |  count(*)::BIGINT AS count_order
+        |FROM li GROUP BY 1, 2""".stripMargin,
+
+    "tpch_q3" ->
+      """WITH l AS (
+        |  SELECT l_orderkey,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |      (1000 - CAST(round(l_discount * 1000) AS BIGINT)) AS rev_cm
+        |  FROM lineitem WHERE l_shipdate > TIMESTAMP '1998-06-01 00:00:00')
+        |SELECT l.l_orderkey, o.o_orderdate,
+        |  sum(l.rev_cm)::DOUBLE / 1e5 AS revenue
+        |FROM l
+        |JOIN orders o ON o.o_orderkey = l.l_orderkey
+        |JOIN customer c ON c.c_custkey = o.o_custkey
+        |WHERE o.o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
+        |  AND c.c_mktsegment = 'BUILDING'
+        |GROUP BY 1, 2
+        |ORDER BY revenue DESC, l.l_orderkey LIMIT 10""".stripMargin,
+
+    "tpch_q5" ->
+      """WITH l AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) *
+        |      (1000 - CAST(round(l_discount * 1000) AS BIGINT)) AS rev_cm
+        |  FROM lineitem)
+        |SELECT n.n_name,
+        |  sum(l.rev_cm)::DOUBLE / 1e5 AS revenue
+        |FROM l
+        |JOIN orders o ON o.o_orderkey = l.l_orderkey
+        |JOIN supplier s ON s.s_suppkey = l.l_suppkey
+        |JOIN customer c ON c.c_custkey = o.o_custkey
+        |JOIN nation n ON n.n_nationkey = s.s_nationkey
+        |JOIN region r ON r.r_regionkey = n.n_regionkey
+        |WHERE r.r_name = 'ASIA'
+        |  AND c.c_nationkey = s.s_nationkey
+        |  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY n.n_name
+        |ORDER BY revenue DESC, n.n_name""".stripMargin,
+
+    "tpch_q6" ->
+      """WITH li AS (
+        |  SELECT CAST(round(l_quantity * 100) AS BIGINT) AS qc,
+        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
+        |    CAST(round(l_discount * 1000) AS BIGINT) AS d3
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00')
+        |SELECT sum(pc * d3)::DOUBLE / 1e5 AS revenue,
+        |  count(*)::BIGINT AS n_lines
+        |FROM li WHERE d3 >= 50 AND d3 <= 70 AND qc < 2400""".stripMargin,
 
     "tpch_q2" ->
       """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
@@ -714,6 +933,8 @@ object R13Queries extends QuerySet {
         |                    AND o.o_orderdate >= TIMESTAMP '2000-01-01'))
         |SELECT cntrycode::BIGINT AS cntrycode, count(*)::BIGINT AS numcust,
         |  sum(bal_c::DECIMAL(38,0))::DOUBLE / 100.0 AS totacctbal
-        |FROM dormant GROUP BY 1""".stripMargin
+        |FROM dormant GROUP BY 1""".stripMargin,
+
+    "tpch_q6_sql" -> Q6SqlShared
   )
 }

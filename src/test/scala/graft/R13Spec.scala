@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.R13Queries
+import graft.queries.TpchQueries
 
 /** Planted-fixture checks for the round-13 TPC-H tier's nontrivial
   * rewrites: q21's exists/not-exists pair collapsed into per-order
@@ -73,13 +73,13 @@ class R13Spec extends AnyFunSuite {
 
   test("q21 census rewrite: only sole-late suppliers on multi-supplier " +
       "finalized orders, one count per late line") {
-    val out = R13Queries.queries("tpch_q21")(spark, dir)
+    val out = TpchQueries.queries("tpch_q21")(spark, dir)
       .as[(String, Long)].collect().toMap
     assert(out == Map("S1" -> 2L))
   }
 
   test("q2 correlated-min join keeps ties and respects the region filter") {
-    val out = R13Queries.queries("tpch_q2")(spark, dir)
+    val out = TpchQueries.queries("tpch_q2")(spark, dir)
       .select("s_name", "p_partkey")
       .as[(String, Long)].collect().toSet
     // s3's lower balance is outside EUROPE and must not win; s1 and s2

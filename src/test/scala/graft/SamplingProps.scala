@@ -86,6 +86,42 @@ object SamplingProps extends Properties("sampling") {
         rows.map(_._3).sorted.toSeq == (0L until n.toLong)
     }
 
+  // reference tests/conftest.py assert_batches_cover_data /
+  // assert_all_indices_unique, over the driver-side batch stream
+  property("toBatches: batchCount batches, unique ids, all but dropLast's") =
+    Prop.forAll(for {
+      n <- Gen.choose(1, 300)
+      bs <- Gen.choose(1, 48)
+      ff <- Gen.choose(1, 4)
+      dropLast <- Gen.oneOf(false, true)
+      strategy <- Gen.oneOf("streaming", "streaming-shuffle", "block")
+      seed <- Gen.choose(0L, 100000L)
+    } yield (n, bs, ff, dropLast, strategy, seed)) {
+      case (n, bs, ff, dropLast, strategy, seed) =>
+        val st = strategy match {
+          case "streaming" => Streaming()
+          case "streaming-shuffle" => Streaming(shuffle = true)
+          case _ => BlockShuffling(blockSize = 1 + (seed % 16).toInt)
+        }
+        val ds = ScDataset(collection(n), st, batchSize = bs, fetchFactor = ff,
+          dropLast = dropLast, seed = seed)
+        val batches = ds.toBatches(0, Seq("k")).toSeq
+        val ids = batches.flatMap(_.getSeq[org.apache.spark.sql.Row](2)
+          .map(_.getAs[Long]("k")))
+        val kept = if (dropLast) n / bs * bs else n
+        val dropped = (0L until n.toLong).toSet -- ids
+        // order-preserving streaming drops exactly the tail; a shuffled
+        // stream drops only rows of the last kept position's fetch window
+        val dropOk = strategy match {
+          case "streaming" => dropped == (kept.toLong until n.toLong).toSet
+          case "streaming-shuffle" =>
+            dropped.forall(_ / ds.fetchSize == kept / ds.fetchSize)
+          case _ => true
+        }
+        batches.size == ds.batchCount && ids.distinct.size == ids.size &&
+          ids.size == kept && ids.forall(k => k >= 0 && k < n) && dropOk
+    }
+
   property("mixture sampling realizes the target domain shares") =
     Prop.forAll(for {
       seed <- Gen.choose(0L, 1000000L)

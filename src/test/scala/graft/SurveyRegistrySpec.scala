@@ -75,6 +75,32 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(e.getMessage.contains("query defined in two query sets: b"))
   }
 
+  test("every registered name belongs to exactly one domain set, by prefix") {
+    import graft.queries._
+    val domains: Seq[(QuerySet, Set[String])] = Seq(
+      SamplingQueries -> Set("o1", "o2", "o3", "o4", "a2", "a6", "b2", "b3",
+        "b6", "u2", "u5", "u6", "u8", "u9", "p3", "p5", "pipeline", "pack", "mix"),
+      DedupQueries -> Set("dd", "pipe"),
+      TextQueries -> Set("text", "pii", "rlhf", "set"),
+      SimilarityQueries -> Set("sim", "emb", "sketch"),
+      MediaQueries -> Set("mm"),
+      EventQueries -> Set("ev", "join", "skew"),
+      TpchQueries -> Set("tpch"),
+      MlQueries -> Set("ml"),
+      GraphQueries -> Set("graph"),
+      LakeQueries -> Set("o5", "s1", "s2", "s3", "stream", "a1"))
+    val prefixes = domains.flatMap(_._2)
+    assert(prefixes.distinct.size == prefixes.size, "a prefix mapped to two sets")
+    val misplaced = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val owners = domains.collect { case (set, ps) if ps(name.takeWhile(_ != '_')) => set }
+      val holders = domains.collect { case (set, _) if set.queries.contains(name) => set }
+      if (owners.size == 1 && holders == owners && owners.head.oracles.contains(name)) None
+      else Some(s"$name: prefix set ${owners.map(_.getClass.getSimpleName)}, " +
+        s"defined in ${holders.map(_.getClass.getSimpleName)}")
+    }
+    assert(misplaced.isEmpty, misplaced.mkString("\n"))
+  }
+
   test("oracleSql keys equal queries keys") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet

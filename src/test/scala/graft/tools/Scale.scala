@@ -90,10 +90,12 @@ object Scale {
     }
 
     // 2. No-replace top-k: bounded reservoir + broadcast semi join vs
-    //    data-wide rank.  k chosen above the default reservoir cap.
-    val kDraw = 2000000L
+    //    data-wide rank.  k = 2 M (above the default reservoir cap) when
+    //    the gate rows allow it, else half of them; a cap one below k
+    //    forces the data-wide side at any k.
+    val kDraw = math.min(2000000L, n / 2)
     gate(s"noReplace topK (k=$kDraw of $n)", "reservoir+bcast", "data-wide rank",
-      Caps(reservoir = kDraw + 1), Caps(reservoir = 1000000L)) { caps =>
+      Caps(reservoir = kDraw + 1), Caps(reservoir = kDraw - 1)) { caps =>
       sums(BlockWeightedSampling(col("label") + 1, totalSize = kDraw,
         blockSize = 1024, replace = false, caps = caps).plan(sc, 17), col("k") % 1000003L)
     }
