@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core._
 object Bench {
@@ -60,26 +60,23 @@ object Bench {
     * across queries.  User-level persists (the session-scoped collection
     * handles) are deliberately KEPT — reuse across queries mirrors the
     * reference's open-once benchmark methodology.  A failed query must be
-    * VISIBLE: it is logged and reads as rows = -1.  Whether the plan reads
-    * a landed layout ([[graft.queries.Layout.reads]]) is checked after the
-    * clock stops. */
+    * VISIBLE: it is logged and reads as rows = -1.  The query reads a
+    * landed layout when [[graft.queries.Layout.land]] returned one to it
+    * while it was built or counted. */
   private def countOnce(spark: SparkSession, sfDir: String,
       name: String): (Double, Long) = {
+    graft.queries.Layout.drainReads()
     val t0 = System.nanoTime()
-    var built: Option[DataFrame] = None
-    val rows = try {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      built = Some(df)
-      df.count()
-    } catch { case e: Throwable =>
+    val rows = try SparkEntry.queries(name)(spark, sfDir).count()
+    catch { case e: Throwable =>
       System.err.println(s"[bench] $name FAILED: $e"); -1L }
     val sec = (System.nanoTime() - t0) / 1e9
-    if (rows >= 0 && built.exists(graft.queries.Layout.reads)) layoutReaders += name
+    if (graft.queries.Layout.drainReads().nonEmpty && rows >= 0) layoutReaders += name
     try CacheScope.release() catch { case _: Throwable => () }
     (sec, rows)
   }
 
-  /** Queries whose plan scanned a landed layout, in this JVM's runs. */
+  /** Queries that read a landed layout, in this JVM's runs. */
   private val layoutReaders = scala.collection.mutable.SortedSet.empty[String]
 
   /** `reps` timed runs of each named query (an unknown name throws before

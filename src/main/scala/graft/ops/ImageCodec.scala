@@ -982,7 +982,7 @@ object ImageCodec {
         (bytes(0) == 'M'.toByte && bytes(1) == 'M'.toByte))
       TiffCodec.decode(bytes)
     else if ((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8)
-      JpegCodec.decode(bytes) // the LOSSY tier (baseline sequential)
+      JpegCodec.decode(bytes) // the LOSSY tier (baseline and progressive)
     else throw new IllegalArgumentException(
       f"unknown image magic 0x${bytes(0)}%02x${bytes(1)}%02x " +
         "(BMP, binary PPM, PNG, GIF, TIFF, and baseline JPEG supported)")

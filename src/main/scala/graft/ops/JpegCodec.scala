@@ -1,28 +1,42 @@
 package graft.ops
 
-/** Dependency-free BASELINE SEQUENTIAL JPEG codec, written from the
-  * public JPEG specification (ITU-T T.81: marker grammar, Annex K
-  * example quantization/Huffman tables, the DECODE/RECEIVE/EXTEND
-  * procedures of §F.2.2) and the JFIF container note (BT.601 full-range
-  * YCbCr).  This is the tier's first LOSSY codec: encode→decode is
-  * exact for DC-only content but inexact in general (quantized DCT), so
-  * its oracle queries are TOLERANCE/INVARIANT gauges rather than the
-  * hash-exact text replays the five lossless codecs use — per-pixel
-  * |error| bounded by a quality-derived constant, and exact-duplicate
-  * inputs (identical bytes ⇒ identical decode) must still pair at
-  * hamming 0 through the banded-aHash stage.
+import scala.collection.mutable
+
+/** Dependency-free JPEG codec, written from the public JPEG
+  * specification (ITU-T T.81: marker grammar, Annex K example
+  * quantization/Huffman tables, the DECODE/RECEIVE/EXTEND procedures of
+  * §F.2.2, the progressive procedures of Annex G) and the JFIF container
+  * note (BT.601 full-range YCbCr).  This is the tier's first LOSSY
+  * codec: encode→decode is exact for DC-only content but inexact in
+  * general (quantized DCT), so its oracle queries are TOLERANCE/INVARIANT
+  * gauges rather than the hash-exact text replays the five lossless
+  * codecs use — per-pixel |error| bounded by a quality-derived constant,
+  * and exact-duplicate inputs (identical bytes ⇒ identical decode) must
+  * still pair at hamming 0 through the banded-aHash stage.
   *
-  * Supported: baseline DCT (SOF0), 8-bit, GRAYSCALE (1 component),
-  * COLOR 4:4:4 (3-component interleaved YCbCr, every component 1×1),
-  * COLOR 4:2:0 / 4:2:2 / 4:1:1 (luma 2×2, 2×1 or 4×1 + chroma 1×1,
-  * box downsampling on encode and nearest upsampling on decode — the
-  * default, broadcast, and NTSC-DV shapes respectively), and restart
-  * intervals (DRI + RSTn cycling, with the marker-sequence check).
-  * Everything else — arithmetic coding, exotic sampling geometries,
-  * 12-bit precision — fails loudly with a descriptive message: a
-  * decoder silently misreading entropy-coded data would poison every
-  * downstream fingerprint (the ImageCodec fail-loud contract).
-  * Progressive (SOF2) is handled by its own multi-scan walker below.
+  * Supported: baseline sequential (SOF0) and progressive (SOF2) DCT,
+  * 8-bit, GRAYSCALE (1 component), COLOR 4:4:4 (3-component YCbCr, every
+  * component 1×1), COLOR 4:2:0 / 4:2:2 / 4:1:1 (luma 2×2, 2×1 or 4×1 +
+  * chroma 1×1, box downsampling on encode and nearest upsampling on
+  * decode — the default, broadcast, and NTSC-DV shapes respectively),
+  * restart intervals in sequential frames (DRI + RSTn cycling, with the
+  * marker-sequence check), and progressive spectral selection and
+  * successive approximation.  Everything else — arithmetic coding,
+  * exotic sampling geometries, 12-bit precision — fails loudly with a
+  * descriptive message: a decoder silently misreading entropy-coded data
+  * would poison every downstream fingerprint (the ImageCodec fail-loud
+  * contract).
+  *
+  * One pipeline per direction.  DECODE: one marker walk parses the
+  * headers and entropy-decodes every scan into per-component coefficient
+  * buffers over the padded block grid (a sequential frame is the special
+  * case of one interleaved scan over the full spectrum, Ss..Se = 0..63,
+  * Ah = Al = 0, with restart segments); one back end then dequantizes,
+  * inverse-transforms, upsamples and converts colour, so progressive
+  * decode equals sequential decode bit-exactly by construction.  ENCODE:
+  * [[quantizedGrid]] is the one FDCT + quantize loop; every container is
+  * one header followed by scans written by one DC coder and one AC band
+  * coder (plus the successive-approximation refinement coder).
   */
 object JpegCodec {
 
@@ -131,6 +145,31 @@ object JpegCodec {
     0xea, 0xf2, 0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8,
     0xf9, 0xfa).map(_.toByte)
 
+  /** Annex-K (BITS, HUFFVAL) pairs by table id: 0 luma, 1 chroma. */
+  private val DcSpecs: Array[(Array[Int], Array[Byte])] =
+    Array((DcLumaBits, DcLumaVals), (DcChromaBits, DcChromaVals))
+  private val AcSpecs: Array[(Array[Int], Array[Byte])] =
+    Array((AcLumaBits, AcLumaVals), (AcChromaBits, AcChromaVals))
+
+  /** AC Huffman table for progressive scans: the Annex-K SEQUENTIAL AC
+    * table defines no EOBn symbols (its 0x10/0x20/… slots are (run,
+    * size) pairs with size ≥ 1), so a progressive encoder must carry
+    * its own table — real encoders optimize one per image; this fixed
+    * one assigns a uniform 8-bit code to every progressive-legal AC
+    * symbol: EOB1 + EOBn (r = 1..14) + ZRL + all (run 0..15 ×
+    * size 1..10).  176 codes of length 8 is a valid canonical table
+    * (176 < 256; the all-ones code stays unused). */
+  private val AcProgSyms: Array[Byte] = {
+    val b = mutable.ArrayBuffer.empty[Byte]
+    b += 0x00
+    for (r <- 1 to 14) b += (r << 4).toByte
+    b += 0xf0.toByte
+    for (run <- 0 to 15; sz <- 1 to 10) b += ((run << 4) | sz).toByte
+    b.toArray
+  }
+  private val AcProgBits: Array[Int] =
+    Array(0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0, 0)
+
   /** Canonical Huffman code assignment (spec §C.2): codes of each length
     * in symbol order, doubling between lengths.  Returns symbol →
     * (code, length). */
@@ -149,6 +188,11 @@ object JpegCodec {
     }
     out.result()
   }
+
+  // encoder tables by id (0 luma, 1 chroma), and the progressive AC table
+  private lazy val DcEnc = DcSpecs.map { case (b, v) => buildEncodeTable(b, v) }
+  private lazy val AcEnc = AcSpecs.map { case (b, v) => buildEncodeTable(b, v) }
+  private lazy val AcProgEnc = buildEncodeTable(AcProgBits, AcProgSyms)
 
   /** Decoder-side tables for the spec's DECODE procedure (§F.2.2.3):
     * per-length (mincode, maxcode, valptr) over the same canonical
@@ -283,6 +327,19 @@ object JpegCodec {
       while (i < n) { v = (v << 1) | bit(); i += 1 }
       v
     }
+    /** DECODE (spec §F.2.2.3): one Huffman symbol, code bit by code bit
+      * against the table's per-length maxcode. */
+    def decode(t: DecodeTable): Int = {
+      var code = bit()
+      var l = 1
+      while (l < 16 && (t.maxCode(l) == -1 || code > t.maxCode(l))) {
+        code = (code << 1) | bit()
+        l += 1
+      }
+      require(t.maxCode(l) != -1 && code <= t.maxCode(l),
+        "invalid JPEG Huffman code")
+      t.value(l, code)
+    }
   }
 
   /** EXTEND (spec §F.2.2.1): map an s-bit magnitude to its signed value. */
@@ -306,179 +363,438 @@ object JpegCodec {
     clamp255(y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)),
     clamp255(y + 1.772 * (cb - 128)))
 
+  /** A frame's block geometry (spec §A.2), shared by encoder and decoder:
+    * per component, the MCU-PADDED grid (mcus × sampling factors — what an
+    * interleaved scan covers, and the extent of the component's plane)
+    * and the CEIL grid over the component's own dims (what a
+    * single-component scan covers, §A.2.2).  Blocks are indexed row-major
+    * in the padded grid. */
+  private final class Grid(val w: Int, val h: Int, val hs: Array[Int],
+      val vs: Array[Int]) {
+    val hMax: Int = hs.max
+    val vMax: Int = vs.max
+    val mcusX: Int = (w + 8 * hMax - 1) / (8 * hMax)
+    val mcusY: Int = (h + 8 * vMax - 1) / (8 * vMax)
+    // component-plane dims (ceil scaling of the image dims)
+    val compW: Array[Int] = hs.map(s => (w * s + hMax - 1) / hMax)
+    val compH: Array[Int] = vs.map(s => (h * s + vMax - 1) / vMax)
+    val padW: Array[Int] = hs.map(mcusX * _)
+    val padH: Array[Int] = vs.map(mcusY * _)
+
+    /** the restart-counted units of a scan over components `cis`: MCUs
+      * when interleaved, else the component's ceil-grid blocks */
+    def units(cis: Array[Int]): Int =
+      if (cis.length > 1) mcusX * mcusY
+      else ((compW(cis(0)) + 7) / 8) * ((compH(cis(0)) + 7) / 8)
+
+    /** Visit a scan's blocks in coding order.  An interleaved scan walks
+      * MCUs, each component contributing its hs×vs padded-grid blocks; a
+      * single-component scan walks the component's ceil grid in raster
+      * order (padded-only blocks are not coded there — never sampled by
+      * the assembly, so only an interleaved DC scan touches them).
+      * `unit(u)` opens each unit (see [[units]]); `block(j, bi)` gets the
+      * scan-component index and the padded-grid block index. */
+    def visit(cis: Array[Int], unit: Int => Unit)(
+        block: (Int, Int) => Unit): Unit =
+      if (cis.length > 1) {
+        var my = 0
+        while (my < mcusY) {
+          var mx = 0
+          while (mx < mcusX) {
+            unit(my * mcusX + mx)
+            var j = 0
+            while (j < cis.length) {
+              val ci = cis(j)
+              var vy = 0
+              while (vy < vs(ci)) {
+                var vx = 0
+                while (vx < hs(ci)) {
+                  block(j, (my * vs(ci) + vy) * padW(ci) + mx * hs(ci) + vx)
+                  vx += 1
+                }
+                vy += 1
+              }
+              j += 1
+            }
+            mx += 1
+          }
+          my += 1
+        }
+      } else {
+        val ci = cis(0)
+        val bw = (compW(ci) + 7) / 8
+        var by = 0
+        while (by < (compH(ci) + 7) / 8) {
+          var bx = 0
+          while (bx < bw) {
+            unit(by * bw + bx)
+            block(0, by * padW(ci) + bx)
+            bx += 1
+          }
+          by += 1
+        }
+      }
+  }
+
   // ---- encoder --------------------------------------------------------
 
-  /** One component's encoding setup: a plane in COMPONENT coordinates
-    * (already downsampled for subsampled chroma), its sampling factors,
-    * and its table ids. */
-  private final case class EncComp(plane: (Int, Int) => Int,
-      hSamp: Int, vSamp: Int, quantId: Int,
-      dcTable: Map[Int, (Int, Int)], acTable: Map[Int, (Int, Int)])
-
-  /** Shared interleaved-scan engine: 1 component (gray), 3 × 1×1
-    * (YCbCr 4:4:4), or Y 2×2 + chroma 1×1 (4:2:0 — one MCU is four Y
-    * blocks plus one Cb and one Cr).  `restartInterval` > 0 emits DRI
-    * and a cycling RSTn every that-many MCUs (DC predictors reset, bit
-    * stream byte-aligned) — the error-resilience machinery real
-    * encoders use. */
-  private def encodeInterleaved(w: Int, h: Int, comps: Seq[EncComp],
-      quality: Int, restartInterval: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
-    require(restartInterval >= 0 && restartInterval <= 65535,
-      "bad restart interval")
-    val nc = comps.length
-    require(nc == 1 || nc == 3, s"unsupported component count $nc")
-    val hMax = comps.map(_.hSamp).max
-    val vMax = comps.map(_.vSamp).max
-    val quants = Array(scaledQuant(quality, BaseQuantLuma),
-      scaledQuant(quality, BaseQuantChroma))
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
+  /** A JPEG stream under construction: the one marker/segment writer. */
+  private final class JpegOut extends java.io.ByteArrayOutputStream {
+    def marker(m: Int): Unit = { write(0xff); write(m) }
     def seg(m: Int, payload: Array[Byte]): Unit = {
       marker(m)
       val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
-      out.write(payload, 0, payload.length)
+      write((len >> 8) & 0xff); write(len & 0xff)
+      write(payload, 0, payload.length)
     }
-    marker(0xd8) // SOI
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0)) // v1.1, no density/thumb
-    // DQT: table 0 always; table 1 only when a component references it
-    val usedQ = comps.map(_.quantId).distinct.sorted
-    seg(0xdb, usedQ.toArray.flatMap(qid =>
-      Array(qid.toByte) ++ ZigZag.map(n => quants(qid)(n).toByte)))
-    seg(0xc0, Array[Byte](8, // precision
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      nc.toByte) ++
-      comps.zipWithIndex.flatMap { case (c, i) =>
-        Array((i + 1).toByte, ((c.hSamp << 4) | c.vSamp).toByte,
-          c.quantId.toByte) })
-    // DHT: luma pair always; chroma pair only for color
-    seg(0xc4, Array[Byte](0x00) ++ DcLumaBits.map(_.toByte) ++ DcLumaVals)
-    seg(0xc4, Array[Byte](0x10) ++ AcLumaBits.map(_.toByte) ++ AcLumaVals)
-    if (nc == 3) {
-      seg(0xc4, Array[Byte](0x01) ++ DcChromaBits.map(_.toByte) ++
-        DcChromaVals)
-      seg(0xc4, Array[Byte](0x11) ++ AcChromaBits.map(_.toByte) ++
-        AcChromaVals)
-    }
-    if (restartInterval > 0)
-      seg(0xdd, Array[Byte](((restartInterval >> 8) & 0xff).toByte,
-        (restartInterval & 0xff).toByte))
-    seg(0xda, Array[Byte](nc.toByte) ++
-      comps.zipWithIndex.flatMap { case (c, i) =>
-        // DC/AC table id = quant id by construction (0 luma, 1 chroma)
-        Array((i + 1).toByte, ((c.quantId << 4) | c.quantId).toByte) } ++
-      Array[Byte](0, 63, 0))
-    val bw = new BitWriter(out)
-    val prevDc = new Array[Int](nc)
-    // MCU grid is (8·hMax)×(8·vMax) image pixels; each component
-    // contributes hSamp×vSamp blocks per MCU from its OWN plane
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    // component-plane dims (ceil scaling of the image dims)
-    val compW = comps.map(c => (w * c.hSamp + hMax - 1) / hMax)
-    val compH = comps.map(c => (h * c.vSamp + vMax - 1) / vMax)
+  }
+
+  /** One component to encode: its plane in COMPONENT coordinates (already
+    * downsampled for subsampled chroma), its sampling factors, and its
+    * table id (0 luma, 1 chroma: quantization, DC and sequential AC). */
+  private final case class EncComp(plane: (Int, Int) => Int,
+      hSamp: Int, vSamp: Int, tableId: Int)
+
+  /** The encoder's front half, shared by every container: the frame
+    * geometry and each component's quantized zigzag blocks over its
+    * padded grid. */
+  private final class EncFrame(w: Int, h: Int, val comps: Seq[EncComp],
+      quality: Int) {
+    val grid = new Grid(w, h, comps.map(_.hSamp).toArray,
+      comps.map(_.vSamp).toArray)
+    val quants: Array[Array[Int]] = Array(
+      scaledQuant(quality, BaseQuantLuma), scaledQuant(quality, BaseQuantChroma))
+    val all: Array[Int] = comps.indices.toArray
+    val blocks: Array[Array[Array[Int]]] = all.map(ci =>
+      quantizedGrid(grid.compW(ci), grid.compH(ci), grid.padW(ci),
+        grid.padH(ci), comps(ci).plane, quants(comps(ci).tableId)))
+    def tableId(ci: Int): Int = comps(ci).tableId
+  }
+
+  private def checkDims(w: Int, h: Int): Unit =
+    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
+
+  /** Quantized zigzag blocks of a plane over an EXPLICIT block grid (the
+    * padded grid, possibly past the ceil grid), edge-extending by clamp —
+    * the ONE clamp-extend + FDCT + zigzag-quantize loop, so every
+    * container codes the same coefficients and progressive decode equals
+    * sequential decode bit-exactly. */
+  private def quantizedGrid(compW: Int, compH: Int, bW: Int, bH: Int,
+      pix: (Int, Int) => Int, quant: Array[Int]): Array[Array[Int]] = {
+    val out = new Array[Array[Int]](bW * bH)
     val block = new Array[Double](64)
-    var mcu = 0
-    var rst = 0
-    for (by <- 0 until mcusY; bx <- 0 until mcusX) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bw.finish()
-        marker(0xd0 + rst)
-        rst = (rst + 1) % 8
-        java.util.Arrays.fill(prevDc, 0)
-      }
-      var ci = 0
-      while (ci < nc) {
-        val comp = comps(ci)
-        val quant = quants(comp.quantId)
-        var vy = 0
-        while (vy < comp.vSamp) {
-          var vx = 0
-          while (vx < comp.hSamp) {
-            val x0 = (bx * comp.hSamp + vx) * 8
-            val y0 = (by * comp.vSamp + vy) * 8
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) {
-                val px = math.min(compW(ci) - 1, x0 + x)
-                val py = math.min(compH(ci) - 1, y0 + y)
-                val v = comp.plane(px, py)
-                require(v >= 0 && v <= 255,
-                  s"sample($px,$py)=$v out of [0,255]")
-                block(y * 8 + x) = v - 128.0
-                x += 1
-              }
-              y += 1
-            }
-            val coef = fdct(block)
-            // quantize in zigzag order; round half away from zero
-            val q = new Array[Int](64)
-            var i = 0
-            while (i < 64) {
-              val n = ZigZag(i)
-              q(i) = math.round(coef(n) / quant(n)).toInt
-              i += 1
-            }
-            // DC
-            val diff = q(0) - prevDc(ci)
-            prevDc(ci) = q(0)
-            val s = bitSize(diff)
-            val (dcCode, dcLen) = comp.dcTable(s)
-            bw.put(dcCode, dcLen)
-            if (s > 0)
-              bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-            // AC with run-length
-            var run = 0
-            var k = 1
-            while (k < 64) {
-              if (q(k) == 0) run += 1
-              else {
-                while (run >= 16) {
-                  val (zc, zl) = comp.acTable(0xf0)
-                  bw.put(zc, zl); run -= 16
-                }
-                val sz = bitSize(q(k))
-                val (ac, al) = comp.acTable((run << 4) | sz)
-                bw.put(ac, al)
-                bw.put(if (q(k) < 0) q(k) + (1 << sz) - 1 else q(k), sz)
-                run = 0
-              }
-              k += 1
-            }
-            if (run > 0) {
-              val (ec, el) = comp.acTable(0x00); bw.put(ec, el)
-            }
-            vx += 1
+    var bi = 0
+    var by = 0
+    while (by < bH) {
+      var bx = 0
+      while (bx < bW) {
+        var y = 0
+        while (y < 8) {
+          var x = 0
+          while (x < 8) {
+            val px = math.min(compW - 1, bx * 8 + x)
+            val py = math.min(compH - 1, by * 8 + y)
+            val v = pix(px, py)
+            require(v >= 0 && v <= 255, s"sample($px,$py)=$v out of [0,255]")
+            block(y * 8 + x) = v - 128.0
+            x += 1
           }
-          vy += 1
+          y += 1
         }
-        ci += 1
+        val coef = fdct(block)
+        // quantize in zigzag order; round half away from zero
+        val q = new Array[Int](64)
+        var i = 0
+        while (i < 64) {
+          q(i) = math.round(coef(ZigZag(i)) / quant(ZigZag(i))).toInt
+          i += 1
+        }
+        out(bi) = q
+        bi += 1
+        bx += 1
       }
-      mcu += 1
+      by += 1
     }
+    out
+  }
+
+  /** SOI, JFIF APP0, one DQT of the used tables, SOF0 or SOF2, the DHTs
+    * (sequential: each used id's Annex-K DC + AC pair; progressive: each
+    * used id's DC table, then the one progressive AC table), and DRI when
+    * `restartInterval` > 0. */
+  private def header(f: EncFrame, progressive: Boolean,
+      restartInterval: Int = 0): JpegOut = {
+    val out = new JpegOut
+    out.marker(0xd8) // SOI
+    out.seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
+      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0)) // v1.1, no density/thumb
+    val ids = f.comps.map(_.tableId).distinct.sorted
+    out.seg(0xdb, ids.toArray.flatMap(id =>
+      Array(id.toByte) ++ ZigZag.map(n => f.quants(id)(n).toByte)))
+    out.seg(if (progressive) 0xc2 else 0xc0, Array[Byte](8, // precision
+      ((f.grid.h >> 8) & 0xff).toByte, (f.grid.h & 0xff).toByte,
+      ((f.grid.w >> 8) & 0xff).toByte, (f.grid.w & 0xff).toByte,
+      f.comps.length.toByte) ++
+      f.comps.zipWithIndex.flatMap { case (c, i) =>
+        Array((i + 1).toByte, ((c.hSamp << 4) | c.vSamp).toByte,
+          c.tableId.toByte) })
+    val dhts =
+      if (progressive)
+        ids.map(id => (id, DcSpecs(id))) :+ ((0x10, (AcProgBits, AcProgSyms)))
+      else ids.flatMap(id => Seq((id, DcSpecs(id)), (0x10 | id, AcSpecs(id))))
+    dhts.foreach { case (tcth, (bits, vals)) =>
+      out.seg(0xc4, Array(tcth.toByte) ++ bits.map(_.toByte) ++ vals) }
+    if (restartInterval > 0)
+      out.seg(0xdd, Array[Byte](((restartInterval >> 8) & 0xff).toByte,
+        (restartInterval & 0xff).toByte))
+    out
+  }
+
+  /** One scan: the SOS header over `sel` (frame component index, table
+    * selector byte) with Ss, Se and Ah/Al, then the entropy-coded data
+    * `body` writes, padded to a byte. */
+  private def scan(out: JpegOut, sel: Array[(Int, Int)], ss: Int, se: Int,
+      ahal: Int)(body: BitWriter => Unit): Unit = {
+    out.seg(0xda, Array(sel.length.toByte) ++
+      sel.flatMap { case (ci, t) => Array((ci + 1).toByte, t.toByte) } ++
+      Array(ss.toByte, se.toByte, ahal.toByte))
+    val bw = new BitWriter(out)
+    body(bw)
     bw.finish()
-    marker(0xd9) // EOI
+  }
+
+  /** DC difference coding (spec §F.1.2.1): the SSSS symbol, then the
+    * difference's low bits (one's complement for negatives). */
+  private def putDc(bw: BitWriter, enc: Map[Int, (Int, Int)],
+      diff: Int): Unit = {
+    val s = bitSize(diff)
+    val (c, l) = enc(s)
+    bw.put(c, l)
+    if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+  }
+
+  /** The AC band coder (spec §F.1.2.2 / §G.1.2.2): codes zigzag band
+    * ss..se of each block under the point transform `al` (sign·(|v| >>
+    * al) — the identity at al = 0) as (run, size) symbols with ZRL, and
+    * counts blocks whose band ends in zeros into an EOB run that `flush`
+    * emits as EOBn (symbol r<<4: a run of 2^r + RECEIVE(r) blocks; capped
+    * at 32767).  Sequential scans have no EOB runs: they flush after every
+    * block, so each EOB is a run of one — the plain EOB symbol 0x00. */
+  private final class AcBandCoder(bw: BitWriter, enc: Map[Int, (Int, Int)],
+      ss: Int, se: Int, al: Int) {
+    private var eobrun = 0
+    def flush(): Unit = if (eobrun > 0) {
+      val r = 31 - Integer.numberOfLeadingZeros(eobrun)
+      val (c, l) = enc(r << 4)
+      bw.put(c, l)
+      if (r > 0) bw.put(eobrun - (1 << r), r)
+      eobrun = 0
+    }
+    def code(q: Array[Int]): Unit = {
+      def pt(k: Int): Int = { // AC point transform: toward zero
+        val m = math.abs(q(k)) >> al
+        if (q(k) < 0) -m else m
+      }
+      // last nonzero position in the band, or ss-1 if none
+      var last = se
+      while (last >= ss && pt(last) == 0) last -= 1
+      if (last < ss) {
+        eobrun += 1
+        if (eobrun == 0x7fff) flush() // spec cap: 32767
+      } else {
+        flush()
+        var run = 0
+        var k = ss
+        while (k <= last) {
+          val v = pt(k)
+          if (v == 0) run += 1
+          else {
+            while (run >= 16) {
+              val (zc, zl) = enc(0xf0); bw.put(zc, zl); run -= 16
+            }
+            val sz = bitSize(v)
+            val (c, l) = enc((run << 4) | sz)
+            bw.put(c, l)
+            bw.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
+            run = 0
+          }
+          k += 1
+        }
+        if (last < se) eobrun += 1 // this block's own EOB joins the run
+      }
+    }
+  }
+
+  /** AC refinement scan of component `ci`, band ss..se, delivering bit
+    * plane a−1 (spec §G.1.2.3): newly-significant coefficients as
+    * (run, 1) + sign, one correction bit per already-significant
+    * coefficient buffered behind the next symbol (the spec's BR buffer),
+    * and EOB runs carrying the skipped blocks' correction bits. */
+  private def acRefine(bw: BitWriter, f: EncFrame, ci: Int, ss: Int,
+      se: Int, a: Int): Unit = {
+    val lo = a - 1
+    var eobrun = 0
+    val pendingBits = new mutable.ArrayBuffer[Int]()
+    // correction bits only ever accumulate together with an EOB entry,
+    // so a flush always has a symbol to hang them on
+    def flushEob(): Unit = {
+      if (eobrun == 0) require(pendingBits.isEmpty,
+        "internal: correction bits without an EOB run")
+      else {
+        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
+        val (c, l) = AcProgEnc(r << 4)
+        bw.put(c, l)
+        if (r > 0) bw.put(eobrun - (1 << r), r)
+        eobrun = 0
+        pendingBits.foreach(bit => bw.put(bit, 1))
+        pendingBits.clear()
+      }
+    }
+    f.grid.visit(Array(ci), _ => ()) { (_, bi) =>
+      val q = f.blocks(ci)(bi)
+      def hi(k: Int): Int = math.abs(q(k)) >> a // already-significant?
+      def bitAt(k: Int): Int = (math.abs(q(k)) >> lo) & 1
+      // EOB position: last NEWLY significant coefficient in the band
+      var eobPos = ss - 1
+      var k = ss
+      while (k <= se) {
+        if (hi(k) == 0 && (math.abs(q(k)) >> lo) == 1) eobPos = k
+        k += 1
+      }
+      if (eobPos < ss) {
+        // no new coefficients: block joins the EOB run; its
+        // already-significant coefficients' correction bits ride along
+        var j = ss
+        while (j <= se) {
+          if (hi(j) != 0) pendingBits += bitAt(j)
+          j += 1
+        }
+        eobrun += 1
+        if (eobrun == 0x7fff) flushEob()
+      } else {
+        flushEob()
+        var run = 0
+        val br = new mutable.ArrayBuffer[Int]()
+        k = ss
+        while (k <= eobPos) {
+          if (hi(k) != 0) br += bitAt(k) // correction bit, buffered
+          else if ((math.abs(q(k)) >> lo) == 0) {
+            run += 1
+            if (run == 16) { // ZRL before 16 insignificant zeros pass
+              val (zc, zl) = AcProgEnc(0xf0)
+              bw.put(zc, zl)
+              br.foreach(bit => bw.put(bit, 1))
+              br.clear()
+              run = 0
+            }
+          } else { // newly significant (magnitude bit == 1)
+            val (c, l) = AcProgEnc((run << 4) | 1)
+            bw.put(c, l)
+            bw.put(if (q(k) < 0) 0 else 1, 1) // sign
+            br.foreach(bit => bw.put(bit, 1))
+            br.clear()
+            run = 0
+          }
+          k += 1
+        }
+        // tail beyond the last new coefficient: the decoder keeps
+        // reading symbols until k > Se OR an EOB arrives, so ANY
+        // remaining positions (trailing zeros or correction-only)
+        // force this block to contribute an EOB entry, carrying its
+        // trailing correction bits
+        while (k <= se) {
+          if (hi(k) != 0) br += bitAt(k)
+          k += 1
+        }
+        if (eobPos < se) {
+          pendingBits ++= br
+          eobrun += 1
+          if (eobrun == 0x7fff) flushEob()
+        }
+      }
+    }
+    flushEob()
+  }
+
+  /** Sequential (SOF0) body: one interleaved scan, each block coded as
+    * its DC difference then its 1..63 band.  `restartInterval` > 0 emits
+    * DRI and a cycling RSTn every that-many MCUs (DC predictors reset,
+    * bit stream byte-aligned) — the error-resilience machinery real
+    * encoders use. */
+  private def encodeSequential(f: EncFrame,
+      restartInterval: Int): Array[Byte] = {
+    require(restartInterval >= 0 && restartInterval <= 65535,
+      "bad restart interval")
+    val out = header(f, progressive = false, restartInterval)
+    // DC/AC table id = quant id (0 luma, 1 chroma)
+    scan(out, f.all.map(ci => (ci, f.tableId(ci) * 0x11)), 0, 63, 0) { bw =>
+      val prevDc = new Array[Int](f.all.length)
+      val acs = f.all.map(ci =>
+        new AcBandCoder(bw, AcEnc(f.tableId(ci)), 1, 63, 0))
+      var rst = 0
+      f.grid.visit(f.all, u =>
+        if (restartInterval > 0 && u > 0 && u % restartInterval == 0) {
+          bw.finish()
+          out.marker(0xd0 + rst)
+          rst = (rst + 1) % 8
+          java.util.Arrays.fill(prevDc, 0)
+        }) { (ci, bi) =>
+        val q = f.blocks(ci)(bi)
+        putDc(bw, DcEnc(f.tableId(ci)), q(0) - prevDc(ci))
+        prevDc(ci) = q(0)
+        acs(ci).code(q)
+        acs(ci).flush()
+      }
+    }
+    out.marker(0xd9) // EOI
     out.toByteArray
   }
 
-  /** Baseline GRAYSCALE JPEG (SOF0, one component).  `gray(x, y)` is
-    * top-down row-major 0..255; edge blocks replicate the last
-    * row/column (the standard edge-extension). */
-  def encode(w: Int, h: Int, gray: (Int, Int) => Int, quality: Int = 90,
-      restartInterval: Int = 0): Array[Byte] = {
-    val dcL = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val acL = buildEncodeTable(AcLumaBits, AcLumaVals)
-    encodeInterleaved(w, h, Seq(EncComp(gray, 1, 1, 0, dcL, acL)), quality,
-      restartInterval)
+  /** Progressive (SOF2) body over a component list (spec §G.1.1): an
+    * interleaved DC first scan of DC >> al (arithmetic shift, §G.1.2.1),
+    * DC refinement scans of one bit per block down to Al = 0, one
+    * single-component AC first scan per (component × band) — the spec
+    * forbids interleaved AC scans — then the AC refinement scans.  At
+    * al = 0 this is plain spectral selection.  The coefficients are the
+    * sequential encoder's, so decoding all scans reproduces them. */
+  private def encodeProgressiveBody(f: EncFrame, bands: Seq[(Int, Int)],
+      al: Int): Array[Byte] = {
+    val out = header(f, progressive = true)
+    val dcSel = f.all.map(ci => (ci, f.tableId(ci) << 4))
+    scan(out, dcSel, 0, 0, al) { bw =>
+      val prevDc = new Array[Int](f.all.length)
+      f.grid.visit(f.all, _ => ()) { (ci, bi) =>
+        val v = f.blocks(ci)(bi)(0) >> al
+        putDc(bw, DcEnc(f.tableId(ci)), v - prevDc(ci))
+        prevDc(ci) = v
+      }
+    }
+    for (a <- al to 1 by -1)
+      scan(out, dcSel, 0, 0, (a << 4) | (a - 1)) { bw =>
+        f.grid.visit(f.all, _ => ())((ci, bi) =>
+          bw.put((f.blocks(ci)(bi)(0) >> (a - 1)) & 1, 1))
+      }
+    // AC scans use table 0 for every component (the shared progressive
+    // table)
+    for (ci <- f.all; (ss, se) <- bands)
+      scan(out, Array((ci, 0)), ss, se, al) { bw =>
+        val coder = new AcBandCoder(bw, AcProgEnc, ss, se, al)
+        f.grid.visit(Array(ci), _ => ())((_, bi) => coder.code(f.blocks(ci)(bi)))
+        coder.flush()
+      }
+    for (a <- al to 1 by -1; ci <- f.all; (ss, se) <- bands)
+      scan(out, Array((ci, 0)), ss, se, (a << 4) | (a - 1))(bw =>
+        acRefine(bw, f, ci, ss, se, a))
+    out.marker(0xd9)
+    out.toByteArray
   }
 
-  /** Baseline COLOR JPEG: BT.601 YCbCr, 4:4:4 (no subsampling), Annex K
-    * luma tables for Y and chroma tables for Cb/Cr — the shape real
-    * encoders emit at `-sample 1x1`.  `rgb(x, y)` channels 0..255. */
+  private def grayFrame(w: Int, h: Int, gray: (Int, Int) => Int,
+      quality: Int): EncFrame = {
+    checkDims(w, h)
+    new EncFrame(w, h, Seq(EncComp(gray, 1, 1, 0)), quality)
+  }
+
   /** Materialized YCbCr planes of an RGB image (full resolution). */
   private def yccPlanes(w: Int, h: Int,
       rgb: (Int, Int) => (Int, Int, Int))
@@ -496,24 +812,10 @@ object JpegCodec {
     (yP, cbP, crP)
   }
 
-  def encodeColor(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
-      quality: Int = 90, restartInterval: Int = 0): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
-    val (yP, cbP, crP) = yccPlanes(w, h, rgb)
-    val dcL = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val acL = buildEncodeTable(AcLumaBits, AcLumaVals)
-    val dcC = buildEncodeTable(DcChromaBits, DcChromaVals)
-    val acC = buildEncodeTable(AcChromaBits, AcChromaVals)
-    encodeInterleaved(w, h, Seq(
-      EncComp((x, y) => yP(y * w + x), 1, 1, 0, dcL, acL),
-      EncComp((x, y) => cbP(y * w + x), 1, 1, 1, dcC, acC),
-      EncComp((x, y) => crP(y * w + x), 1, 1, 1, dcC, acC)), quality,
-      restartInterval)
-  }
-
   /** Box-downsample a plane by (fx, fy) — rounded mean over each
     * fx×fy cell, partial cells averaging only in-image samples (the
-    * standard chroma decimation for every subsampled geometry). */
+    * standard chroma decimation for every subsampled geometry; the
+    * identity at 1×1). */
   private def downPlane(src: Array[Int], w: Int, h: Int, fx: Int,
       fy: Int): Array[Int] = {
     val cw = (w + fx - 1) / fx
@@ -530,26 +832,45 @@ object JpegCodec {
     out
   }
 
-  /** Shared builder for the subsampled-chroma color geometries: luma at
-    * (hs, vs), chroma box-downsampled by the same factors. */
-  private def encodeColorSubsampled(w: Int, h: Int,
-      rgb: (Int, Int) => (Int, Int, Int), hs: Int, vs: Int, quality: Int,
-      restartInterval: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
+  /** BT.601 YCbCr frame: Y at (hs, vs) sampling with the Annex-K luma
+    * tables, Cb/Cr box-downsampled by the same factors at 1×1 with the
+    * chroma tables — 4:4:4 at (1, 1). */
+  private def colorFrame(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
+      hs: Int, vs: Int, quality: Int): EncFrame = {
+    checkDims(w, h)
     val (yP, cbP, crP) = yccPlanes(w, h, rgb)
     val cw = (w + hs - 1) / hs
     val cbD = downPlane(cbP, w, h, hs, vs)
     val crD = downPlane(crP, w, h, hs, vs)
-    val dcL = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val acL = buildEncodeTable(AcLumaBits, AcLumaVals)
-    val dcC = buildEncodeTable(DcChromaBits, DcChromaVals)
-    val acC = buildEncodeTable(AcChromaBits, AcChromaVals)
-    encodeInterleaved(w, h, Seq(
-      EncComp((x, y) => yP(y * w + x), hs, vs, 0, dcL, acL),
-      EncComp((x, y) => cbD(y * cw + x), 1, 1, 1, dcC, acC),
-      EncComp((x, y) => crD(y * cw + x), 1, 1, 1, dcC, acC)), quality,
-      restartInterval)
+    new EncFrame(w, h, Seq(
+      EncComp((x, y) => yP(y * w + x), hs, vs, 0),
+      EncComp((x, y) => cbD(y * cw + x), 1, 1, 1),
+      EncComp((x, y) => crD(y * cw + x), 1, 1, 1)), quality)
   }
+
+  private def checkBands(bands: Seq[(Int, Int)]): Unit = {
+    require(bands.nonEmpty, "need at least one AC band")
+    bands.foldLeft(1) { case (next, (a, b)) =>
+      require(a == next && b >= a && b <= 63,
+        s"bands must tile 1..63 in order, got ($a,$b) expecting start $next")
+      b + 1
+    }
+    require(bands.last._2 == 63, "bands must end at 63")
+  }
+
+  /** Baseline GRAYSCALE JPEG (SOF0, one component).  `gray(x, y)` is
+    * top-down row-major 0..255; edge blocks replicate the last
+    * row/column (the standard edge-extension). */
+  def encode(w: Int, h: Int, gray: (Int, Int) => Int, quality: Int = 90,
+      restartInterval: Int = 0): Array[Byte] =
+    encodeSequential(grayFrame(w, h, gray, quality), restartInterval)
+
+  /** Baseline COLOR JPEG: BT.601 YCbCr, 4:4:4 (no subsampling), Annex K
+    * luma tables for Y and chroma tables for Cb/Cr — the shape real
+    * encoders emit at `-sample 1x1`.  `rgb(x, y)` channels 0..255. */
+  def encodeColor(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
+      quality: Int = 90, restartInterval: Int = 0): Array[Byte] =
+    encodeSequential(colorFrame(w, h, rgb, 1, 1, quality), restartInterval)
 
   /** 4:2:0 color JPEG — the shape virtually every real-world encoder
     * emits by default: Y at full resolution (2×2 sampling), Cb/Cr
@@ -557,96 +878,178 @@ object JpegCodec {
     * quad), MCU = four Y blocks + one Cb + one Cr. */
   def encodeColor420(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
       quality: Int = 90, restartInterval: Int = 0): Array[Byte] =
-    encodeColorSubsampled(w, h, rgb, 2, 2, quality, restartInterval)
+    encodeSequential(colorFrame(w, h, rgb, 2, 2, quality), restartInterval)
 
   /** 4:2:2 color JPEG — the broadcast/video-interchange shape (DV, many
     * camera pipelines): Y at 2×1 sampling, Cb/Cr halved HORIZONTALLY
     * only; MCU = two Y blocks + one Cb + one Cr over a 16×8 tile. */
   def encodeColor422(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
       quality: Int = 90, restartInterval: Int = 0): Array[Byte] =
-    encodeColorSubsampled(w, h, rgb, 2, 1, quality, restartInterval)
+    encodeSequential(colorFrame(w, h, rgb, 2, 1, quality), restartInterval)
 
   /** 4:1:1 color JPEG — the legacy NTSC-DV shape: Y at 4×1 sampling,
     * Cb/Cr quartered horizontally; MCU = four Y blocks + one Cb + one
     * Cr over a 32×8 tile. */
   def encodeColor411(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
       quality: Int = 90, restartInterval: Int = 0): Array[Byte] =
-    encodeColorSubsampled(w, h, rgb, 4, 1, quality, restartInterval)
+    encodeSequential(colorFrame(w, h, rgb, 4, 1, quality), restartInterval)
 
-  /** Gray JPEG whose pixel map is the shared text→raster fixture formula
-    * (pixel (x, y) = src[(y·w + x) mod len] — [[ImageCodec.grayFromBytes]]'s
-    * map in a lossy container). */
-  def grayJpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encode(w, h, (x, y) => src((y * w + x) % src.length) & 0xff, quality)
+  /** Progressive grayscale JPEG: SOF2, a DC scan, then one AC scan per
+    * `bands` entry (inclusive zigzag ranges covering 1..63 in order). */
+  def encodeProgressive(w: Int, h: Int, gray: (Int, Int) => Int,
+      quality: Int = 90,
+      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
+    checkBands(bands)
+    encodeProgressiveBody(grayFrame(w, h, gray, quality), bands, 0)
   }
 
-  /** Color JPEG from the shared text fixture: channel c of pixel (x, y)
-    * is src[(y·w + x + offs_c) mod len] with offsets (0, 13, 29) — three
-    * phase-shifted reads of the SAME byte stream, so the SQL oracle can
-    * recompute every channel from the text. */
-  def colorJpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
+  /** Progressive grayscale JPEG WITH SUCCESSIVE APPROXIMATION (spec
+    * §G.1.2): first scans deliver each coefficient's top bits (point
+    * transform at Al = `al`), refinement scans deliver one bit plane at
+    * a time down to Al = 0 — the mode real progressive encoders use.
+    * DC: first scan codes diffs of (DC >> al) (arithmetic shift), each
+    * refinement scan is one raw bit per block.  AC: first scans code
+    * sign·(|v| >> al) with EOBRUN; refinement scans code newly-
+    * significant coefficients as (run, 1) + sign and append one
+    * correction bit per already-significant coefficient, with the
+    * correction bits buffered behind the next symbol (the spec's BR
+    * buffer) and EOB runs carrying the skipped blocks' correction bits.
+    * Decoding all scans reconstructs the EXACT sequential coefficients,
+    * so decode stays bit-equal to the sequential container. */
+  def encodeProgressiveSA(w: Int, h: Int, gray: (Int, Int) => Int,
+      quality: Int = 90, bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63)),
+      al: Int = 1): Array[Byte] = {
+    require(al >= 1 && al <= 10, s"al=$al out of [1,10]")
+    checkBands(bands)
+    encodeProgressiveBody(grayFrame(w, h, gray, quality), bands, al)
+  }
+
+  /** PROGRESSIVE COLOR (SOF2, 3-component YCbCr 4:4:4, spectral
+    * selection): per spec §G the DC first scan may be INTERLEAVED
+    * (Ns = 3, MCU = one block per component at 1×1 sampling) but every
+    * AC scan must be single-component — so the container is one
+    * 3-component DC scan followed by one scan per (component × band).
+    * Quantization is the exact pipeline of the sequential 4:4:4 encoder
+    * (same planes, FDCT, tables, rounding), so decode must equal the
+    * sequential color decode BIT-EXACTLY — the oracle invariant. */
+  def encodeProgressiveColor(w: Int, h: Int,
+      rgb: (Int, Int) => (Int, Int, Int), quality: Int = 90,
+      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
+    checkBands(bands)
+    encodeProgressiveBody(colorFrame(w, h, rgb, 1, 1, quality), bands, 0)
+  }
+
+  /** PROGRESSIVE SUBSAMPLED COLOR (SOF2 + chroma subsampling composed —
+    * the modern web default: mozjpeg/libjpeg `-progressive` emit
+    * progressive 4:2:0): luma at (hs, vs) sampling, chroma
+    * box-downsampled by the same factors through the EXACT pipeline of
+    * the sequential subsampled encoder, so decode must equal the
+    * sequential subsampled decode BIT-EXACTLY — the oracle invariant.
+    * Scan structure per spec §G.1.1: one INTERLEAVED DC scan (MCU =
+    * hs·vs luma blocks + one Cb + one Cr, covering the MCU-padded grids)
+    * followed by one single-component AC scan per (component × band),
+    * each walking its component's ceil grid (§A.2.2). */
+  def encodeProgressiveColorSub(w: Int, h: Int,
+      rgb: (Int, Int) => (Int, Int, Int), hs: Int, vs: Int,
+      quality: Int = 90,
+      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
+    require(Set((2, 2), (2, 1), (4, 1)).contains((hs, vs)),
+      s"unsupported sampling ${hs}x$vs (4:2:0 / 4:2:2 / 4:1:1)")
+    checkBands(bands)
+    encodeProgressiveBody(colorFrame(w, h, rgb, hs, vs, quality), bands, 0)
+  }
+
+  /** Progressive 4:2:0 color — the composition real web encoders emit
+    * by default. */
+  def encodeProgressiveColor420(w: Int, h: Int,
+      rgb: (Int, Int) => (Int, Int, Int), quality: Int = 90,
+      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] =
+    encodeProgressiveColorSub(w, h, rgb, 2, 2, quality, bands)
+
+  // ---- text-fixture wrappers ------------------------------------------
+
+  /** the shared text→raster fixture formula: pixel (x, y) =
+    * src[(y·w + x) mod len] — [[ImageCodec.grayFromBytes]]'s map in a
+    * lossy container */
+  private def textGray(w: Int, src: Array[Byte]): (Int, Int) => Int = {
     require(src.nonEmpty, "empty source bytes")
-    encodeColor(w, h, (x, y) => {
+    (x, y) => src((y * w + x) % src.length) & 0xff
+  }
+
+  /** the shared three-phase text→RGB pixel map of the color fixtures:
+    * channel c of pixel (x, y) is src[(y·w + x + offs_c) mod len] with
+    * offsets (0, 13, 29) — three phase-shifted reads of the SAME byte
+    * stream, so the SQL oracle can recompute every channel from the
+    * text. */
+  private def textRgb(w: Int, src: Array[Byte])
+      : (Int, Int) => (Int, Int, Int) = {
+    require(src.nonEmpty, "empty source bytes")
+    (x, y) => {
       val j = y * w + x
       (src(j % src.length) & 0xff,
         src((j + 13) % src.length) & 0xff,
         src((j + 29) % src.length) & 0xff)
-    }, quality)
+    }
   }
 
-  /** the shared three-phase text→RGB pixel map of the color fixtures
-    * (offsets 0/13/29 — every channel oracle-recomputable from the
-    * text). */
-  private def textRgb(w: Int, src: Array[Byte])
-      : (Int, Int) => (Int, Int, Int) = (x, y) => {
-    val j = y * w + x
-    (src(j % src.length) & 0xff,
-      src((j + 13) % src.length) & 0xff,
-      src((j + 29) % src.length) & 0xff)
-  }
+  /** Gray JPEG of the text fixture map. */
+  def grayJpeg(w: Int, h: Int, src: Array[Byte],
+      quality: Int = 90): Array[Byte] =
+    encode(w, h, textGray(w, src), quality)
+
+  /** Color JPEG of the three-phase text fixture map. */
+  def colorJpeg(w: Int, h: Int, src: Array[Byte],
+      quality: Int = 90): Array[Byte] =
+    encodeColor(w, h, textRgb(w, src), quality)
 
   /** [[colorJpeg]] in the 4:2:0 container — the same text-derived pixel
     * map through chroma downsampling (the real-world default shape). */
   def color420Jpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
+      quality: Int = 90): Array[Byte] =
     encodeColor420(w, h, textRgb(w, src), quality)
-  }
 
   /** [[colorJpeg]] in the 4:2:2 container (horizontal-only chroma
     * halving — the broadcast shape). */
   def color422Jpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
+      quality: Int = 90): Array[Byte] =
     encodeColor422(w, h, textRgb(w, src), quality)
-  }
 
   /** [[colorJpeg]] in the 4:1:1 container (horizontal chroma
     * quartering — the legacy NTSC-DV shape). */
   def color411Jpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
+      quality: Int = 90): Array[Byte] =
     encodeColor411(w, h, textRgb(w, src), quality)
-  }
+
+  /** [[grayJpeg]] in the progressive container. */
+  def progJpeg(w: Int, h: Int, src: Array[Byte], quality: Int = 90,
+      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] =
+    encodeProgressive(w, h, textGray(w, src), quality, bands)
+
+  /** [[colorJpeg]] in the progressive container — the three-phase text
+    * pixel map through the interleaved-DC + per-component-AC scan
+    * sequence. */
+  def progColorJpeg(w: Int, h: Int, src: Array[Byte],
+      quality: Int = 90): Array[Byte] =
+    encodeProgressiveColor(w, h, textRgb(w, src), quality)
+
+  /** [[colorJpeg]] in the progressive 4:2:0 container — the three-phase
+    * text pixel map through subsampled progressive scans. */
+  def prog420Jpeg(w: Int, h: Int, src: Array[Byte],
+      quality: Int = 90): Array[Byte] =
+    encodeProgressiveColorSub(w, h, textRgb(w, src), 2, 2, quality)
 
   // ---- decoder --------------------------------------------------------
-
-  private final case class SofComp(id: Int, hSamp: Int, vSamp: Int,
-      quantId: Int)
 
   /** The T.81 Annex-K "typical" Huffman tables as DECODER tables, keyed
     * (class, id) the way a DHT segment would install them — the tables
     * the MJPEG-in-AVI convention says a decoder must supply when a
     * frame omits its DHT segments (ids 0 = luma pair, 1 = chroma pair,
     * matching the table assignment every MJPG encoder uses). */
-  private lazy val AnnexKDecodeTables: Map[(Int, Int), DecodeTable] = Map(
-    (0, 0) -> new DecodeTable(DcLumaBits, DcLumaVals),
-    (1, 0) -> new DecodeTable(AcLumaBits, AcLumaVals),
-    (0, 1) -> new DecodeTable(DcChromaBits, DcChromaVals),
-    (1, 1) -> new DecodeTable(AcChromaBits, AcChromaVals))
+  private lazy val AnnexKDecodeTables: Map[(Int, Int), DecodeTable] =
+    (for (cls <- 0 to 1; id <- 0 to 1) yield {
+      val (bits, vals) = (if (cls == 0) DcSpecs else AcSpecs)(id)
+      (cls, id) -> new DecodeTable(bits, vals)
+    }).toMap
 
   /** Remove every DHT segment from a JPEG's header — the MJPEG-in-AVI
     * table-less frame shape (capture hardware omits the tables from
@@ -689,72 +1092,91 @@ object JpegCodec {
     * MJPG encoder uses).  ONLY the AVI container path sets this flag; a
     * bare JPEG with missing tables keeps failing loudly, because
     * outside the MJPG context a missing table means a truncated or
-    * corrupt file, not a convention. */
+    * corrupt file, not a convention.  The convention is a BASELINE one:
+    * the Annex-K defaults are the sequential interchange tables, and no
+    * MJPEG producer emits progressive frames, so a progressive frame
+    * that also omits its tables is corruption — rejected by NAME instead
+    * of silently decoded with tables the encoder never meant. */
   def decode(b: Array[Byte], mjpegDefaultTables: Boolean)
-      : ImageCodec.Raster =
-    decodeImpl(b, mjpegDefaultTables)
-
-  def decode(b: Array[Byte]): ImageCodec.Raster = decodeImpl(b, false)
-
-  private def decodeImpl(b: Array[Byte],
-      mjpegDefaultTables: Boolean): ImageCodec.Raster = {
+      : ImageCodec.Raster = {
     require(b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8,
       "bad JPEG signature")
     var p = 2
-    var w = 0; var h = 0
-    var sofComps: Array[SofComp] = null
+    var progressive = false
+    var compIds: Array[Int] = null // frame component ids, in order
+    var quantIds: Array[Int] = null
+    var grid: Grid = null
+    // per component: 64 coefficients (natural order) per block of its
+    // padded grid, filled by the scans
+    var coefs: Array[Array[Int]] = null
     val quant = new Array[Array[Int]](4)
-    val huff = scala.collection.mutable.Map.empty[(Int, Int), DecodeTable]
+    val huff = mutable.Map.empty[(Int, Int), DecodeTable]
     var restartInterval = 0
-    var scanStart = -1
-    var scanTables: Array[(Int, Int)] = null // per component (dc id, ac id)
+    var scans = 0
     def u16(off: Int): Int = {
       require(off + 1 < b.length, "truncated JPEG segment")
       ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
     }
-    while (scanStart < 0) {
-      require(p + 1 < b.length, "truncated JPEG (no SOS)")
+    def table(cls: Int, id: Int): DecodeTable = huff.getOrElse((cls, id), {
+      val what = if (cls == 0) "DC" else "AC"
+      if (mjpegDefaultTables && !progressive && id <= 1)
+        AnnexKDecodeTables((cls, id))
+      else throw new IllegalArgumentException(
+        if (mjpegDefaultTables && progressive)
+          s"missing $what Huffman table in a PROGRESSIVE MJPG frame — " +
+            "the Annex-K default-table convention is baseline-only"
+        else s"JPEG missing $what Huffman table $id")
+    })
+    var done = false
+    while (!done) {
+      require(p + 1 < b.length, "truncated JPEG (no EOI)")
       require((b(p) & 0xff) == 0xff, f"expected marker, got 0x${b(p)}%02x")
       val m = b(p + 1) & 0xff
       p += 2
       m match {
-        case 0xd9 => throw new IllegalArgumentException("JPEG EOI before SOS")
+        case 0xd9 =>
+          require(scans > 0, "JPEG EOI before SOS")
+          done = true
         case 0x01 => () // TEM, standalone
         case x if x >= 0xd0 && x <= 0xd7 => () // RSTn, standalone
-        case 0xc0 => // SOF0 baseline
+        case 0xc0 | 0xc2 => // SOF0 baseline, SOF2 progressive
+          require(grid == null, "JPEG with more than one SOF")
+          progressive = m == 0xc2
+          val sof = s"SOF${m - 0xc0}"
           val len = u16(p)
-          require(len >= 11 && p + len <= b.length, "truncated SOF0")
+          require(len >= 11 && p + len <= b.length, s"truncated $sof")
           require((b(p + 2) & 0xff) == 8, "only 8-bit JPEG supported")
-          h = u16(p + 3); w = u16(p + 5)
+          val h = u16(p + 3); val w = u16(p + 5)
           require(w > 0 && h > 0, s"bad JPEG dims ${w}x$h")
           val nComp = b(p + 7) & 0xff
           require(nComp == 1 || nComp == 3,
             s"only 1- or 3-component JPEG supported, got $nComp")
-          require(len >= 8 + 3 * nComp, "truncated SOF0 components")
-          sofComps = Array.tabulate(nComp) { i =>
-            val off = p + 8 + 3 * i
-            val hv = b(off + 1) & 0xff
-            val tq = b(off + 2) & 0xff
+          require(len >= 8 + 3 * nComp, s"truncated $sof components")
+          compIds = Array.tabulate(nComp)(i => b(p + 8 + 3 * i) & 0xff)
+          val hv = Array.tabulate(nComp)(i => b(p + 9 + 3 * i) & 0xff)
+          quantIds = Array.tabulate(nComp) { i =>
+            val tq = b(p + 10 + 3 * i) & 0xff
             require(tq <= 3, s"bad quant table id $tq")
-            SofComp(b(off) & 0xff, hv >> 4, hv & 0x0f, tq)
+            tq
           }
           // supported sampling geometries: all 1×1 (gray / 4:4:4), or
           // luma (2,2)/(2,1)/(4,1) + chroma 1×1 (4:2:0 — the real-world
           // default — plus the 4:2:2 broadcast and 4:1:1 NTSC-DV shapes)
-          val hv = sofComps.map(c => (c.hSamp, c.vSamp)).toSeq
-          val ok444 = hv.forall(_ == ((1, 1)))
-          val okSub = nComp == 3 && hv.tail.forall(_ == ((1, 1))) &&
-            Set((2, 2), (2, 1), (4, 1)).contains(hv.head)
+          val hvs = hv.toSeq.map(s => (s >> 4, s & 0x0f))
+          val ok444 = hvs.forall(_ == ((1, 1)))
+          val okSub = nComp == 3 && hvs.tail.forall(_ == ((1, 1))) &&
+            Set((2, 2), (2, 1), (4, 1)).contains(hvs.head)
           require(ok444 || okSub,
-            s"unsupported chroma subsampling $hv — " +
-              "4:4:4 / 4:2:0 / 4:2:2 / 4:1:1 only")
+            s"unsupported ${if (progressive) "progressive " else ""}" +
+              s"chroma subsampling $hvs — 4:4:4 / 4:2:0 / 4:2:2 / 4:1:1 only")
+          grid = new Grid(w, h, hv.map(_ >> 4), hv.map(_ & 0x0f))
+          coefs = Array.tabulate(nComp)(i =>
+            new Array[Int](grid.padW(i) * grid.padH(i) * 64))
           p += len
-        case 0xc2 => // progressive: its own multi-scan walker
-          return decodeProgressive(b, mjpegDefaultTables)
         case x if (x >= 0xc1 && x <= 0xcf) && x != 0xc4 && x != 0xc8 &&
             x != 0xcc =>
-          throw new IllegalArgumentException(
-            f"JPEG SOF 0x$x%02x unsupported (baseline SOF0 only)")
+          throw new IllegalArgumentException(f"JPEG SOF 0x$x%02x " +
+            "unsupported (baseline SOF0 and progressive SOF2 only)")
         case 0xc8 | 0xcc => throw new IllegalArgumentException(
           "arithmetic-coded JPEG unsupported")
         case 0xdb => // DQT (possibly several tables in one segment)
@@ -787,1063 +1209,6 @@ object JpegCodec {
             val bits = Array.tabulate(16)(i => b(q + 1 + i) & 0xff)
             val n = bits.sum
             require(q + 17 + n <= p + len, "truncated DHT values")
-            val vals = java.util.Arrays.copyOfRange(b, q + 17, q + 17 + n)
-            huff((tcth >> 4, tcth & 0x0f)) = new DecodeTable(bits, vals)
-            q += 17 + n
-          }
-          p += len
-        case 0xdd =>
-          val len = u16(p)
-          require(len == 4 && p + len <= b.length, "truncated DRI")
-          restartInterval = u16(p + 2)
-          p += len
-        case 0xda => // SOS
-          val len = u16(p)
-          require(len >= 8 && p + len <= b.length, "truncated SOS")
-          val ns = b(p + 2) & 0xff
-          require(sofComps != null, "JPEG SOS before SOF0")
-          require(ns == sofComps.length,
-            s"scan components ($ns) must match frame (${sofComps.length})" +
-              " — non-interleaved multi-scan unsupported")
-          require(len >= 6 + 2 * ns, "truncated SOS components")
-          scanTables = Array.tabulate(ns) { i =>
-            val cs = b(p + 3 + 2 * i) & 0xff
-            require(cs == sofComps(i).id,
-              "scan component order must match the frame")
-            val tt = b(p + 4 + 2 * i) & 0xff
-            require((tt >> 4) <= 3 && (tt & 0x0f) <= 3, "bad scan table id")
-            (tt >> 4, tt & 0x0f)
-          }
-          val so = p + 3 + 2 * ns
-          require((b(so) & 0xff) == 0 && (b(so + 1) & 0xff) == 63,
-            "partial spectral selection unsupported")
-          scanStart = p + len
-        case _ => // APPn, COM, others with a length field: skip
-          val len = u16(p)
-          require(len >= 2 && p + len <= b.length, "truncated JPEG segment")
-          p += len
-      }
-    }
-    require(sofComps != null, "JPEG SOS before SOF0")
-    val nc = sofComps.length
-    sofComps.foreach(c => require(quant(c.quantId) != null,
-      s"JPEG missing quant table ${c.quantId}"))
-    scanTables.foreach { case (dc, ac) =>
-      if (mjpegDefaultTables) { // MJPEG-in-AVI: supply Annex-K defaults
-        if (!huff.contains((0, dc)) && dc <= 1)
-          huff((0, dc)) = AnnexKDecodeTables((0, dc))
-        if (!huff.contains((1, ac)) && ac <= 1)
-          huff((1, ac)) = AnnexKDecodeTables((1, ac))
-      }
-      require(huff.contains((0, dc)), s"JPEG missing DC Huffman table $dc")
-      require(huff.contains((1, ac)), s"JPEG missing AC Huffman table $ac")
-    }
-    // unstuff entropy-coded bytes; RSTn markers split the stream into
-    // restart segments (recorded with their marker index for the
-    // cycle check)
-    val segments = scala.collection.mutable.ArrayBuffer
-      .empty[(Array[Byte], Int)] // (bytes, rst marker index or -1 for first)
-    var ent = new java.io.ByteArrayOutputStream()
-    var segMarker = -1
-    var q = scanStart
-    var done = false
-    while (!done) {
-      require(q < b.length, "truncated JPEG scan (no EOI)")
-      val v = b(q) & 0xff
-      if (v != 0xff) { ent.write(v); q += 1 }
-      else {
-        require(q + 1 < b.length, "truncated JPEG scan (dangling FF)")
-        val nxt = b(q + 1) & 0xff
-        if (nxt == 0x00) { ent.write(0xff); q += 2 } // stuffed data byte
-        else if (nxt == 0xd9) done = true // EOI
-        else if (nxt >= 0xd0 && nxt <= 0xd7) { // RSTn: close the segment
-          segments += ((ent.toByteArray, segMarker))
-          ent = new java.io.ByteArrayOutputStream()
-          segMarker = nxt - 0xd0
-          q += 2
-        } else throw new IllegalArgumentException(
-          f"unexpected marker 0x$nxt%02x inside JPEG scan")
-      }
-    }
-    segments += ((ent.toByteArray, segMarker))
-    val hMax = sofComps.map(_.hSamp).max
-    val vMax = sofComps.map(_.vSamp).max
-    val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-    val totalMcus = mcusX * mcusY
-    if (restartInterval == 0)
-      require(segments.length == 1,
-        "restart markers present but DRI said none")
-    else {
-      val expected = (totalMcus + restartInterval - 1) / restartInterval
-      require(segments.length == expected,
-        s"restart segment count ${segments.length} != expected $expected")
-      // markers must cycle D0..D7 in order (spec §B.2.1.2)
-      segments.zipWithIndex.drop(1).foreach { case ((_, mk), i) =>
-        require(mk == (i - 1) % 8,
-          s"restart marker out of sequence at segment $i")
-      }
-    }
-    // per-component PADDED planes (whole MCUs); sampled down to image
-    // coordinates at assembly
-    val planeW = sofComps.map(c => mcusX * 8 * c.hSamp)
-    val planeH = sofComps.map(c => mcusY * 8 * c.vSamp)
-    val planes = Array.tabulate(nc)(ci =>
-      new Array[Int](planeW(ci) * planeH(ci)))
-    var br: BitReader = null
-    val prevDc = new Array[Int](nc)
-    def huffDecode(t: DecodeTable): Int = {
-      var code = br.bit()
-      var l = 1
-      while (l < 16 && (t.maxCode(l) == -1 || code > t.maxCode(l))) {
-        code = (code << 1) | br.bit()
-        l += 1
-      }
-      require(t.maxCode(l) != -1 && code <= t.maxCode(l),
-        "invalid JPEG Huffman code")
-      t.value(l, code)
-    }
-    val qcoef = new Array[Double](64)
-    var mcu = 0
-    for (by <- 0 until mcusY; bx <- 0 until mcusX) {
-      if (restartInterval == 0) {
-        if (br == null) br = new BitReader(segments(0)._1)
-      } else if (mcu % restartInterval == 0) {
-        br = new BitReader(segments(mcu / restartInterval)._1)
-        java.util.Arrays.fill(prevDc, 0)
-      }
-      var ci = 0
-      while (ci < nc) {
-        val comp = sofComps(ci)
-        val qt = quant(comp.quantId)
-        val dcT = huff((0, scanTables(ci)._1))
-        val acT = huff((1, scanTables(ci)._2))
-        var vy = 0
-        while (vy < comp.vSamp) {
-          var vx = 0
-          while (vx < comp.hSamp) {
-            java.util.Arrays.fill(qcoef, 0.0)
-            val s = huffDecode(dcT)
-            require(s <= 11, s"DC size $s out of baseline range")
-            prevDc(ci) += extend(br.receive(s), s)
-            qcoef(0) = prevDc(ci).toDouble * qt(0)
-            var k = 1
-            while (k < 64) {
-              val rs = huffDecode(acT)
-              val r = rs >> 4
-              val sz = rs & 0x0f
-              if (sz == 0) {
-                if (rs == 0x00) k = 64 // EOB
-                else if (rs == 0xf0) k += 16 // ZRL
-                else throw new IllegalArgumentException(
-                  f"invalid JPEG AC symbol 0x$rs%02x")
-              } else {
-                k += r
-                require(k < 64, "JPEG AC run past block end")
-                val n = ZigZag(k)
-                qcoef(n) = extend(br.receive(sz), sz).toDouble * qt(n)
-                k += 1
-              }
-            }
-            val px = idct(qcoef)
-            val x0 = (bx * comp.hSamp + vx) * 8
-            val y0 = (by * comp.vSamp + vy) * 8
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) {
-                planes(ci)((y0 + y) * planeW(ci) + (x0 + x)) =
-                  clamp255(px(y * 8 + x) + 128.0)
-                x += 1
-              }
-              y += 1
-            }
-            vx += 1
-          }
-          vy += 1
-        }
-        ci += 1
-      }
-      mcu += 1
-    }
-    // assemble image pixels: component sample (x·h/hMax, y·v/vMax) —
-    // nearest-neighbour chroma upsampling for 4:2:0 (the JFIF default)
-    val luma = new Array[Int](w * h)
-    def sample(ci: Int, x: Int, y: Int): Int = {
-      val c = sofComps(ci)
-      val sx = x * c.hSamp / hMax
-      val sy = y * c.vSamp / vMax
-      planes(ci)(sy * planeW(ci) + sx)
-    }
-    if (nc == 1) {
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { luma(y * w + x) = 3 * sample(0, x, y); x += 1 }
-        y += 1
-      }
-    } else {
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val (r, g, bb) = yccToRgb(sample(0, x, y), sample(1, x, y),
-            sample(2, x, y))
-          luma(y * w + x) = r + g + bb
-          x += 1
-        }
-        y += 1
-      }
-    }
-    ImageCodec.Raster(w, h, luma)
-  }
-
-  // ---- progressive (SOF2), spectral selection ------------------------
-  //
-  // Spec §G: the frame's quantized coefficients are delivered over
-  // MULTIPLE scans — a DC scan (Ss=Se=0) then AC band scans (Ss..Se,
-  // single-component).  AC scans use the EOBRUN code (symbol r<<4|0,
-  // r<15: a run of 2^r + RECEIVE(r) blocks that are all-zero in the
-  // band from the current position on).  Entropy coding is LOSSLESS
-  // over the same quantized coefficients as the sequential mode, so
-  // progressive decode must equal baseline decode BIT-EXACTLY — the
-  // invariant the oracle query asserts.  Scope: grayscale + color
-  // (4:4:4 and the subsampled 4:2:0/4:2:2/4:1:1 geometries — the
-  // modern web default is progressive 4:2:0), spectral selection and
-  // successive-approximation refinement (gray); no restart intervals.
-
-  /** AC Huffman table for progressive scans: the Annex-K SEQUENTIAL AC
-    * table defines no EOBn symbols (its 0x10/0x20/… slots are (run,
-    * size) pairs with size ≥ 1), so a progressive encoder must carry
-    * its own table — real encoders optimize one per image; this fixed
-    * one assigns a uniform 8-bit code to every progressive-legal AC
-    * symbol: EOB1 + EOBn (r = 1..14) + ZRL + all (run 0..15 ×
-    * size 1..10).  176 codes of length 8 is a valid canonical table
-    * (176 < 256; the all-ones code stays unused). */
-  private val AcProgSyms: Array[Byte] = {
-    val b = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    b += 0x00
-    for (r <- 1 to 14) b += (r << 4).toByte
-    b += 0xf0.toByte
-    for (run <- 0 to 15; sz <- 1 to 10) b += ((run << 4) | sz).toByte
-    b.toArray
-  }
-  private val AcProgBits: Array[Int] =
-    Array(0, 0, 0, 0, 0, 0, 0, 176, 0, 0, 0, 0, 0, 0, 0, 0)
-
-  /** quantized zigzag-ordered coefficient blocks of a grayscale image
-    * (the shared front half of both sequential and progressive
-    * encoding). */
-  private def quantizedBlocks(w: Int, h: Int, gray: (Int, Int) => Int,
-      quant: Array[Int]): Array[Array[Int]] =
-    quantizedGrid(w, h, (w + 7) / 8, (h + 7) / 8, gray, quant)
-
-  /** Progressive grayscale JPEG: SOF2, a DC scan, then one AC scan per
-    * `bands` entry (inclusive zigzag ranges covering 1..63 in order). */
-  def encodeProgressive(w: Int, h: Int, gray: (Int, Int) => Int,
-      quality: Int = 90,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
-    require(bands.nonEmpty, "need at least one AC band")
-    bands.foldLeft(1) { case (next, (a, b)) =>
-      require(a == next && b >= a && b <= 63,
-        s"bands must tile 1..63 in order, got ($a,$b) expecting start $next")
-      b + 1
-    }
-    require(bands.last._2 == 63, "bands must end at 63")
-    val quant = scaledQuant(quality, BaseQuantLuma)
-    val qb = quantizedBlocks(w, h, gray, quant)
-    val dcEnc = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val acEnc = buildEncodeTable(AcProgBits, AcProgSyms)
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, payload: Array[Byte]): Unit = {
-      marker(m)
-      val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
-      out.write(payload, 0, payload.length)
-    }
-    marker(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    seg(0xdb, Array[Byte](0) ++ ZigZag.map(n => quant(n).toByte))
-    seg(0xc2, Array[Byte](8,
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      1, 1, 0x11, 0))
-    seg(0xc4, Array[Byte](0x00) ++ DcLumaBits.map(_.toByte) ++ DcLumaVals)
-    seg(0xc4, Array[Byte](0x10) ++ AcProgBits.map(_.toByte) ++ AcProgSyms)
-    // ---- DC scan (Ss=0, Se=0, Ah=0, Al=0): sequential-style diffs ----
-    seg(0xda, Array[Byte](1, 1, 0x00, 0, 0, 0))
-    var bw = new BitWriter(out)
-    var prevDc = 0
-    qb.foreach { q =>
-      val diff = q(0) - prevDc
-      prevDc = q(0)
-      val s = bitSize(diff)
-      val (c, l) = dcEnc(s)
-      bw.put(c, l)
-      if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-    }
-    bw.finish()
-    // ---- AC band scans (Ah=0, Al=0) with EOBRUN coding ----
-    bands.foreach { case (ss, se) =>
-      seg(0xda, Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, 0))
-      bw = new BitWriter(out)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c, l) = acEnc(r << 4)
-        bw.put(c, l)
-        if (r > 0) bw.put(eobrun - (1 << r), r)
-        eobrun = 0
-      }
-      qb.foreach { q =>
-        // last nonzero position in the band, or ss-1 if none
-        var last = se
-        while (last >= ss && q(last) == 0) last -= 1
-        if (last < ss) {
-          eobrun += 1
-          if (eobrun == 0x7fff) flushEob() // spec cap: 32767
-        } else {
-          flushEob()
-          var run = 0
-          var k = ss
-          while (k <= last) {
-            if (q(k) == 0) run += 1
-            else {
-              while (run >= 16) {
-                val (zc, zl) = acEnc(0xf0); bw.put(zc, zl); run -= 16
-              }
-              val sz = bitSize(q(k))
-              val (c, l) = acEnc((run << 4) | sz)
-              bw.put(c, l)
-              bw.put(if (q(k) < 0) q(k) + (1 << sz) - 1 else q(k), sz)
-              run = 0
-            }
-            k += 1
-          }
-          if (last < se) eobrun += 1 // this block's own EOB joins the run
-        }
-      }
-      flushEob()
-      bw.finish()
-    }
-    marker(0xd9)
-    out.toByteArray
-  }
-
-  /** Progressive grayscale JPEG WITH SUCCESSIVE APPROXIMATION (spec
-    * §G.1.2): first scans deliver each coefficient's top bits (point
-    * transform at Al = `al`), refinement scans deliver one bit plane at
-    * a time down to Al = 0 — the mode real progressive encoders use.
-    * DC: first scan codes diffs of (DC >> al) (arithmetic shift), each
-    * refinement scan is one raw bit per block.  AC: first scans code
-    * sign·(|v| >> al) with EOBRUN; refinement scans code newly-
-    * significant coefficients as (run, 1) + sign and append one
-    * correction bit per already-significant coefficient, with the
-    * correction bits buffered behind the next symbol (the spec's BR
-    * buffer) and EOB runs carrying the skipped blocks' correction bits.
-    * Decoding all scans reconstructs the EXACT sequential coefficients,
-    * so decode stays bit-equal to the sequential container. */
-  def encodeProgressiveSA(w: Int, h: Int, gray: (Int, Int) => Int,
-      quality: Int = 90, bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63)),
-      al: Int = 1): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
-    require(al >= 1 && al <= 10, s"al=$al out of [1,10]")
-    require(bands.nonEmpty, "need at least one AC band")
-    bands.foldLeft(1) { case (next, (a, b)) =>
-      require(a == next && b >= a && b <= 63,
-        s"bands must tile 1..63 in order, got ($a,$b) expecting start $next")
-      b + 1
-    }
-    require(bands.last._2 == 63, "bands must end at 63")
-    val quant = scaledQuant(quality, BaseQuantLuma)
-    val qb = quantizedBlocks(w, h, gray, quant)
-    val dcEnc = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val acEnc = buildEncodeTable(AcProgBits, AcProgSyms)
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, payload: Array[Byte]): Unit = {
-      marker(m)
-      val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
-      out.write(payload, 0, payload.length)
-    }
-    marker(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    seg(0xdb, Array[Byte](0) ++ ZigZag.map(n => quant(n).toByte))
-    seg(0xc2, Array[Byte](8,
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      1, 1, 0x11, 0))
-    seg(0xc4, Array[Byte](0x00) ++ DcLumaBits.map(_.toByte) ++ DcLumaVals)
-    seg(0xc4, Array[Byte](0x10) ++ AcProgBits.map(_.toByte) ++ AcProgSyms)
-    // ---- DC first scan (Ah=0, Al=al): diffs of DC >> al ----
-    seg(0xda, Array[Byte](1, 1, 0x00, 0, 0, al.toByte))
-    var bw = new BitWriter(out)
-    var prevDc = 0
-    qb.foreach { q =>
-      val v = q(0) >> al // arithmetic shift (spec G.1.2.1)
-      val diff = v - prevDc
-      prevDc = v
-      val s = bitSize(diff)
-      val (c, l) = dcEnc(s)
-      bw.put(c, l)
-      if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-    }
-    bw.finish()
-    // ---- DC refinement scans (Ah = a, Al = a−1): one bit per block ----
-    for (a <- al to 1 by -1) {
-      seg(0xda, Array[Byte](1, 1, 0x00, 0, 0, ((a << 4) | (a - 1)).toByte))
-      bw = new BitWriter(out)
-      qb.foreach(q => bw.put((q(0) >> (a - 1)) & 1, 1))
-      bw.finish()
-    }
-    // ---- AC first scans (Ah=0, Al=al) per band ----
-    bands.foreach { case (ss, se) =>
-      seg(0xda, Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, al.toByte))
-      bw = new BitWriter(out)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c, l) = acEnc(r << 4)
-        bw.put(c, l)
-        if (r > 0) bw.put(eobrun - (1 << r), r)
-        eobrun = 0
-      }
-      qb.foreach { q =>
-        def pt(k: Int): Int = { // AC point transform: toward zero
-          val m = math.abs(q(k)) >> al
-          if (q(k) < 0) -m else m
-        }
-        var last = se
-        while (last >= ss && pt(last) == 0) last -= 1
-        if (last < ss) {
-          eobrun += 1
-          if (eobrun == 0x7fff) flushEob()
-        } else {
-          flushEob()
-          var run = 0
-          var k = ss
-          while (k <= last) {
-            val v = pt(k)
-            if (v == 0) run += 1
-            else {
-              while (run >= 16) {
-                val (zc, zl) = acEnc(0xf0); bw.put(zc, zl); run -= 16
-              }
-              val sz = bitSize(v)
-              val (c, l) = acEnc((run << 4) | sz)
-              bw.put(c, l)
-              bw.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
-              run = 0
-            }
-            k += 1
-          }
-          if (last < se) eobrun += 1
-        }
-      }
-      flushEob()
-      bw.finish()
-    }
-    // ---- AC refinement scans (Ah = a, Al = a−1) per band ----
-    for (a <- al to 1 by -1; (ss, se) <- bands) {
-      val lo = a - 1
-      seg(0xda, Array[Byte](1, 1, 0x00, ss.toByte, se.toByte,
-        ((a << 4) | lo).toByte))
-      bw = new BitWriter(out)
-      var eobrun = 0
-      val pendingBits = new scala.collection.mutable.ArrayBuffer[Int]()
-      // correction bits only ever accumulate together with an EOB entry,
-      // so a flush always has a symbol to hang them on
-      def flushEob(): Unit = {
-        if (eobrun == 0) require(pendingBits.isEmpty,
-          "internal: correction bits without an EOB run")
-        else {
-          val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-          val (c, l) = acEnc(r << 4)
-          bw.put(c, l)
-          if (r > 0) bw.put(eobrun - (1 << r), r)
-          eobrun = 0
-          pendingBits.foreach(bit => bw.put(bit, 1))
-          pendingBits.clear()
-        }
-      }
-      qb.foreach { q =>
-        def hi(k: Int): Int = math.abs(q(k)) >> a // already-significant?
-        def bitAt(k: Int): Int = (math.abs(q(k)) >> lo) & 1
-        // EOB position: last NEWLY significant coefficient in the band
-        var eobPos = ss - 1
-        var k = ss
-        while (k <= se) {
-          if (hi(k) == 0 && (math.abs(q(k)) >> lo) == 1) eobPos = k
-          k += 1
-        }
-        if (eobPos < ss) {
-          // no new coefficients: block joins the EOB run; its
-          // already-significant coefficients' correction bits ride along
-          var j = ss
-          while (j <= se) {
-            if (hi(j) != 0) pendingBits += bitAt(j)
-            j += 1
-          }
-          eobrun += 1
-          if (eobrun == 0x7fff) flushEob()
-        } else {
-          flushEob()
-          var run = 0
-          val br = new scala.collection.mutable.ArrayBuffer[Int]()
-          k = ss
-          while (k <= eobPos) {
-            if (hi(k) != 0) br += bitAt(k) // correction bit, buffered
-            else if ((math.abs(q(k)) >> lo) == 0) {
-              run += 1
-              if (run == 16) { // ZRL before 16 insignificant zeros pass
-                val (zc, zl) = acEnc(0xf0)
-                bw.put(zc, zl)
-                br.foreach(bit => bw.put(bit, 1))
-                br.clear()
-                run = 0
-              }
-            } else { // newly significant (magnitude bit == 1)
-              val (c, l) = acEnc((run << 4) | 1)
-              bw.put(c, l)
-              bw.put(if (q(k) < 0) 0 else 1, 1) // sign
-              br.foreach(bit => bw.put(bit, 1))
-              br.clear()
-              run = 0
-            }
-            k += 1
-          }
-          // tail beyond the last new coefficient: the decoder keeps
-          // reading symbols until k > Se OR an EOB arrives, so ANY
-          // remaining positions (trailing zeros or correction-only)
-          // force this block to contribute an EOB entry, carrying its
-          // trailing correction bits
-          while (k <= se) {
-            if (hi(k) != 0) br += bitAt(k)
-            k += 1
-          }
-          if (eobPos < se) {
-            pendingBits ++= br
-            eobrun += 1
-            if (eobrun == 0x7fff) flushEob()
-          }
-        }
-      }
-      flushEob()
-      bw.finish()
-    }
-    marker(0xd9)
-    out.toByteArray
-  }
-
-  /** [[grayJpeg]] in the progressive container. */
-  def progJpeg(w: Int, h: Int, src: Array[Byte], quality: Int = 90,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encodeProgressive(w, h,
-      (x, y) => src((y * w + x) % src.length) & 0xff, quality, bands)
-  }
-
-  /** PROGRESSIVE COLOR (SOF2, 3-component YCbCr 4:4:4, spectral
-    * selection): per spec §G the DC first scan may be INTERLEAVED
-    * (Ns = 3, MCU = one block per component at 1×1 sampling) but every
-    * AC scan must be single-component — so the container is one
-    * 3-component DC scan followed by one scan per (component × band).
-    * Quantization is the exact pipeline of the sequential 4:4:4 encoder
-    * (same planes, FDCT, tables, rounding), so decode must equal the
-    * sequential color decode BIT-EXACTLY — the oracle invariant. */
-  def encodeProgressiveColor(w: Int, h: Int,
-      rgb: (Int, Int) => (Int, Int, Int), quality: Int = 90,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
-    require(bands.nonEmpty, "need at least one AC band")
-    bands.foldLeft(1) { case (next, (a, b)) =>
-      require(a == next && b >= a && b <= 63,
-        s"bands must tile 1..63 in order, got ($a,$b) expecting start $next")
-      b + 1
-    }
-    require(bands.last._2 == 63, "bands must end at 63")
-    val quantL = scaledQuant(quality, BaseQuantLuma)
-    val quantC = scaledQuant(quality, BaseQuantChroma)
-    val (yP, cbP, crP) = yccPlanes(w, h, rgb)
-    def planeBlocks(pl: Array[Int], q: Array[Int]): Array[Array[Int]] =
-      quantizedBlocks(w, h, (x, y) => pl(y * w + x), q)
-    // per-component quantized blocks, raster block order (== MCU order
-    // at 1×1 sampling — the sequential scan order, so coefficients are
-    // bit-identical to the SOF0 container's)
-    val qbs = Array(planeBlocks(yP, quantL), planeBlocks(cbP, quantC),
-      planeBlocks(crP, quantC))
-    val dcEncL = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val dcEncC = buildEncodeTable(DcChromaBits, DcChromaVals)
-    val acEnc = buildEncodeTable(AcProgBits, AcProgSyms)
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, payload: Array[Byte]): Unit = {
-      marker(m)
-      val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
-      out.write(payload, 0, payload.length)
-    }
-    marker(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    seg(0xdb, Array[Byte](0) ++ ZigZag.map(n => quantL(n).toByte) ++
-      Array[Byte](1) ++ ZigZag.map(n => quantC(n).toByte))
-    seg(0xc2, Array[Byte](8,
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1))
-    seg(0xc4, Array[Byte](0x00) ++ DcLumaBits.map(_.toByte) ++ DcLumaVals)
-    seg(0xc4, Array[Byte](0x01) ++ DcChromaBits.map(_.toByte) ++
-      DcChromaVals)
-    seg(0xc4, Array[Byte](0x10) ++ AcProgBits.map(_.toByte) ++ AcProgSyms)
-    // ---- interleaved DC scan (Ns=3, Ss=Se=0, Ah=Al=0) ----
-    seg(0xda, Array[Byte](3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0))
-    var bw = new BitWriter(out)
-    val prevDc = new Array[Int](3)
-    val nBlocks = qbs(0).length
-    var bi = 0
-    while (bi < nBlocks) {
-      var ci = 0
-      while (ci < 3) {
-        val q = qbs(ci)(bi)
-        val diff = q(0) - prevDc(ci)
-        prevDc(ci) = q(0)
-        val s = bitSize(diff)
-        val (c, l) = (if (ci == 0) dcEncL else dcEncC)(s)
-        bw.put(c, l)
-        if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        ci += 1
-      }
-      bi += 1
-    }
-    bw.finish()
-    // ---- per-component AC band scans (Ns=1, Ah=Al=0, EOBRUN) ----
-    for (ci <- 0 until 3; (ss, se) <- bands) {
-      seg(0xda, Array[Byte]((1).toByte, (ci + 1).toByte,
-        // AC table 0 for every component (the shared progressive table)
-        0x00, ss.toByte, se.toByte, 0))
-      bw = new BitWriter(out)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c, l) = acEnc(r << 4)
-        bw.put(c, l)
-        if (r > 0) bw.put(eobrun - (1 << r), r)
-        eobrun = 0
-      }
-      qbs(ci).foreach { q =>
-        var last = se
-        while (last >= ss && q(last) == 0) last -= 1
-        if (last < ss) {
-          eobrun += 1
-          if (eobrun == 0x7fff) flushEob()
-        } else {
-          flushEob()
-          var run = 0
-          var k = ss
-          while (k <= last) {
-            if (q(k) == 0) run += 1
-            else {
-              while (run >= 16) {
-                val (zc, zl) = acEnc(0xf0); bw.put(zc, zl); run -= 16
-              }
-              val sz = bitSize(q(k))
-              val (c, l) = acEnc((run << 4) | sz)
-              bw.put(c, l)
-              bw.put(if (q(k) < 0) q(k) + (1 << sz) - 1 else q(k), sz)
-              run = 0
-            }
-            k += 1
-          }
-          if (last < se) eobrun += 1
-        }
-      }
-      flushEob()
-      bw.finish()
-    }
-    marker(0xd9)
-    out.toByteArray
-  }
-
-  /** [[colorJpeg]] in the progressive container — the three-phase text
-    * pixel map through the interleaved-DC + per-component-AC scan
-    * sequence. */
-  def progColorJpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encodeProgressiveColor(w, h, textRgb(w, src), quality)
-  }
-
-  /** Quantized zigzag blocks of a plane over an EXPLICIT block grid
-    * (possibly padded past the ceil grid), edge-extending by clamp —
-    * the ONE copy of the clamp-extend + FDCT + zigzag-quantize loop
-    * ([[quantizedBlocks]] delegates here with the ceil grid; the
-    * progressive-equals-sequential bit-exactness oracles depend on the
-    * two paths quantizing identically).  Subsampled progressive needs
-    * the explicit grid: the interleaved DC scan covers the MCU-padded
-    * grid but AC scans cover only the ceil grid. */
-  private def quantizedGrid(compW: Int, compH: Int, bW: Int, bH: Int,
-      pix: (Int, Int) => Int, quant: Array[Int]): Array[Array[Int]] = {
-    val out = new Array[Array[Int]](bW * bH)
-    val block = new Array[Double](64)
-    var bi = 0
-    var by = 0
-    while (by < bH) {
-      var bx = 0
-      while (bx < bW) {
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            val px = math.min(compW - 1, bx * 8 + x)
-            val py = math.min(compH - 1, by * 8 + y)
-            val v = pix(px, py)
-            require(v >= 0 && v <= 255, s"sample($px,$py)=$v out of [0,255]")
-            block(y * 8 + x) = v - 128.0
-            x += 1
-          }
-          y += 1
-        }
-        val coef = fdct(block)
-        val q = new Array[Int](64)
-        var i = 0
-        while (i < 64) {
-          q(i) = math.round(coef(ZigZag(i)) / quant(ZigZag(i))).toInt
-          i += 1
-        }
-        out(bi) = q
-        bi += 1
-        bx += 1
-      }
-      by += 1
-    }
-    out
-  }
-
-  /** PROGRESSIVE SUBSAMPLED COLOR (SOF2 + chroma subsampling composed —
-    * the modern web default: mozjpeg/libjpeg `-progressive` emit
-    * progressive 4:2:0): luma at (hs, vs) sampling, chroma
-    * box-downsampled by the same factors through the EXACT pipeline of
-    * the sequential subsampled encoder (same [[downPlane]], FDCT,
-    * tables, rounding), so decode must equal the sequential subsampled
-    * decode BIT-EXACTLY — the oracle invariant.  Scan structure per
-    * spec §G.1.1: one INTERLEAVED DC scan (MCU = hs·vs luma blocks +
-    * one Cb + one Cr, covering the MCU-padded grids) followed by one
-    * single-component AC scan per (component × band), each walking its
-    * component's ceil grid (§A.2.2). */
-  def encodeProgressiveColorSub(w: Int, h: Int,
-      rgb: (Int, Int) => (Int, Int, Int), hs: Int, vs: Int,
-      quality: Int = 90,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 65535 && h <= 65535, "bad dims")
-    require(Set((2, 2), (2, 1), (4, 1)).contains((hs, vs)),
-      s"unsupported sampling ${hs}x$vs (4:2:0 / 4:2:2 / 4:1:1)")
-    require(bands.nonEmpty, "need at least one AC band")
-    bands.foldLeft(1) { case (next, (a, b)) =>
-      require(a == next && b >= a && b <= 63,
-        s"bands must tile 1..63 in order, got ($a,$b) expecting start $next")
-      b + 1
-    }
-    require(bands.last._2 == 63, "bands must end at 63")
-    val quantL = scaledQuant(quality, BaseQuantLuma)
-    val quantC = scaledQuant(quality, BaseQuantChroma)
-    val (yP, cbP, crP) = yccPlanes(w, h, rgb)
-    val cw = (w + hs - 1) / hs
-    val ch = (h + vs - 1) / vs
-    val cbD = downPlane(cbP, w, h, hs, vs)
-    val crD = downPlane(crP, w, h, hs, vs)
-    val mcusX = (w + 8 * hs - 1) / (8 * hs)
-    val mcusY = (h + 8 * vs - 1) / (8 * vs)
-    // luma: padded grid for the DC scan; chroma ceil grid == padded
-    // grid (ceil(ceil(w/hs)/8) == mcusX exactly)
-    val padWY = mcusX * hs; val padHY = mcusY * vs
-    val qbY = quantizedGrid(w, h, padWY, padHY,
-      (x, y) => yP(y * w + x), quantL)
-    val qbCb = quantizedGrid(cw, ch, mcusX, mcusY,
-      (x, y) => cbD(y * cw + x), quantC)
-    val qbCr = quantizedGrid(cw, ch, mcusX, mcusY,
-      (x, y) => crD(y * cw + x), quantC)
-    val qbs = Array(qbY, qbCb, qbCr)
-    val dcEncL = buildEncodeTable(DcLumaBits, DcLumaVals)
-    val dcEncC = buildEncodeTable(DcChromaBits, DcChromaVals)
-    val acEnc = buildEncodeTable(AcProgBits, AcProgSyms)
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, payload: Array[Byte]): Unit = {
-      marker(m)
-      val len = payload.length + 2
-      out.write((len >> 8) & 0xff); out.write(len & 0xff)
-      out.write(payload, 0, payload.length)
-    }
-    marker(0xd8)
-    seg(0xe0, "JFIF ".getBytes("US-ASCII") ++
-      Array[Byte](1, 1, 0, 0, 1, 0, 1, 0, 0))
-    seg(0xdb, Array[Byte](0) ++ ZigZag.map(n => quantL(n).toByte) ++
-      Array[Byte](1) ++ ZigZag.map(n => quantC(n).toByte))
-    seg(0xc2, Array[Byte](8,
-      ((h >> 8) & 0xff).toByte, (h & 0xff).toByte,
-      ((w >> 8) & 0xff).toByte, (w & 0xff).toByte,
-      3, 1, ((hs << 4) | vs).toByte, 0, 2, 0x11, 1, 3, 0x11, 1))
-    seg(0xc4, Array[Byte](0x00) ++ DcLumaBits.map(_.toByte) ++ DcLumaVals)
-    seg(0xc4, Array[Byte](0x01) ++ DcChromaBits.map(_.toByte) ++
-      DcChromaVals)
-    seg(0xc4, Array[Byte](0x10) ++ AcProgBits.map(_.toByte) ++ AcProgSyms)
-    // ---- interleaved DC scan (Ns=3, MCU walk over padded grids) ----
-    seg(0xda, Array[Byte](3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0))
-    var bw = new BitWriter(out)
-    val prevDc = new Array[Int](3)
-    def putDc(ci: Int, q: Array[Int]): Unit = {
-      val diff = q(0) - prevDc(ci)
-      prevDc(ci) = q(0)
-      val s = bitSize(diff)
-      val (c, l) = (if (ci == 0) dcEncL else dcEncC)(s)
-      bw.put(c, l)
-      if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-    }
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        var vy = 0
-        while (vy < vs) {
-          var vx = 0
-          while (vx < hs) {
-            putDc(0, qbY((my * vs + vy) * padWY + (mx * hs + vx)))
-            vx += 1
-          }
-          vy += 1
-        }
-        putDc(1, qbCb(my * mcusX + mx))
-        putDc(2, qbCr(my * mcusX + mx))
-        mx += 1
-      }
-      my += 1
-    }
-    bw.finish()
-    // ---- per-component AC band scans over the CEIL grids ----
-    val acGrids = Array( // (blocksW, blocksH, padded stride) per comp
-      (((w + 7) / 8), ((h + 7) / 8), padWY),
-      (((cw + 7) / 8), ((ch + 7) / 8), mcusX),
-      (((cw + 7) / 8), ((ch + 7) / 8), mcusX))
-    for (ci <- 0 until 3; (ss, se) <- bands) {
-      seg(0xda, Array[Byte]((1).toByte, (ci + 1).toByte,
-        0x00, ss.toByte, se.toByte, 0))
-      bw = new BitWriter(out)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c, l) = acEnc(r << 4)
-        bw.put(c, l)
-        if (r > 0) bw.put(eobrun - (1 << r), r)
-        eobrun = 0
-      }
-      val (bWc, bHc, stride) = acGrids(ci)
-      var by = 0
-      while (by < bHc) {
-        var bx = 0
-        while (bx < bWc) {
-          val q = qbs(ci)(by * stride + bx)
-          var last = se
-          while (last >= ss && q(last) == 0) last -= 1
-          if (last < ss) {
-            eobrun += 1
-            if (eobrun == 0x7fff) flushEob()
-          } else {
-            flushEob()
-            var run = 0
-            var k = ss
-            while (k <= last) {
-              if (q(k) == 0) run += 1
-              else {
-                while (run >= 16) {
-                  val (zc, zl) = acEnc(0xf0); bw.put(zc, zl); run -= 16
-                }
-                val sz = bitSize(q(k))
-                val (c, l) = acEnc((run << 4) | sz)
-                bw.put(c, l)
-                bw.put(if (q(k) < 0) q(k) + (1 << sz) - 1 else q(k), sz)
-                run = 0
-              }
-              k += 1
-            }
-            if (last < se) eobrun += 1
-          }
-          bx += 1
-        }
-        by += 1
-      }
-      flushEob()
-      bw.finish()
-    }
-    marker(0xd9)
-    out.toByteArray
-  }
-
-  /** Progressive 4:2:0 color — the composition real web encoders emit
-    * by default. */
-  def encodeProgressiveColor420(w: Int, h: Int,
-      rgb: (Int, Int) => (Int, Int, Int), quality: Int = 90,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] =
-    encodeProgressiveColorSub(w, h, rgb, 2, 2, quality, bands)
-
-  /** [[colorJpeg]] in the progressive 4:2:0 container — the three-phase
-    * text pixel map through subsampled progressive scans. */
-  def prog420Jpeg(w: Int, h: Int, src: Array[Byte],
-      quality: Int = 90): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encodeProgressiveColorSub(w, h, textRgb(w, src), 2, 2, quality)
-  }
-
-  /** unstuff entropy bytes from `start` until the next marker; returns
-    * (data, markerByte, position AFTER the marker). */
-  private def unstuffToMarker(b: Array[Byte],
-      start: Int): (Array[Byte], Int, Int) = {
-    val ent = new java.io.ByteArrayOutputStream()
-    var q = start
-    while (true) {
-      require(q < b.length, "truncated JPEG scan (no terminating marker)")
-      val v = b(q) & 0xff
-      if (v != 0xff) { ent.write(v); q += 1 }
-      else {
-        require(q + 1 < b.length, "truncated JPEG scan (dangling FF)")
-        val nxt = b(q + 1) & 0xff
-        if (nxt == 0x00) { ent.write(0xff); q += 2 }
-        else return (ent.toByteArray, nxt, q + 2)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def decodeProgressive(b: Array[Byte],
-      mjpegDefaultTables: Boolean = false): ImageCodec.Raster = {
-    // The table-less-MJPEG convention is a BASELINE convention: the
-    // T.81 Annex-K defaults are the sequential interchange tables, and
-    // no MJPEG producer emits progressive frames (hardware MJPEG is a
-    // sequence of baseline JPEGs).  A progressive frame inside an AVI
-    // that ALSO omits its Huffman tables is therefore corruption, not
-    // the convention — rejected by NAME below instead of silently
-    // decoding with tables the encoder never meant.
-    def missingTable(what: String): Nothing = throw
-      new IllegalArgumentException(
-        if (mjpegDefaultTables)
-          s"missing $what Huffman table in a PROGRESSIVE MJPG frame — " +
-            "the Annex-K default-table convention is baseline-only"
-        else s"missing $what Huffman table")
-    var p = 2 // caller verified the SOI
-    var w = 0; var h = 0
-    var sawSof = false
-    val quant = new Array[Array[Int]](4)
-    var compIds: Array[Int] = null    // frame component ids, in order
-    var quantIds: Array[Int] = null   // per component
-    var hSamps: Array[Int] = null     // per component sampling factors
-    var vSamps: Array[Int] = null
-    var hMax = 1; var vMax = 1
-    var mcusX = 0; var mcusY = 0
-    var padW: Array[Int] = null       // per-comp PADDED grid (blocks):
-    var padH: Array[Int] = null       //   mcus × sampling — what an
-                                      //   interleaved DC scan covers
-    var acW: Array[Int] = null        // per-comp ceil grid (blocks):
-    var acH: Array[Int] = null        //   what non-interleaved scans
-                                      //   cover (spec §A.2.2)
-    val huff = scala.collection.mutable.Map.empty[(Int, Int), DecodeTable]
-    // per component × per block of the PADDED grid (blocks in NATURAL
-    // raster order within each component's own grid)
-    var coefs: Array[Array[Array[Int]]] = null
-    def u16(off: Int): Int = {
-      require(off + 1 < b.length, "truncated JPEG segment")
-      ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-    }
-    var done = false
-    while (!done) {
-      require(p + 1 < b.length, "truncated progressive JPEG (no EOI)")
-      require((b(p) & 0xff) == 0xff, f"expected marker, got 0x${b(p)}%02x")
-      val m = b(p + 1) & 0xff
-      p += 2
-      m match {
-        case 0xd9 =>
-          require(coefs != null, "progressive JPEG with no scans")
-          done = true
-        case 0x01 => ()
-        case 0xc2 =>
-          val len = u16(p)
-          require(len >= 11 && p + len <= b.length, "truncated SOF2")
-          require((b(p + 2) & 0xff) == 8, "only 8-bit JPEG supported")
-          h = u16(p + 3); w = u16(p + 5)
-          require(w > 0 && h > 0, s"bad JPEG dims ${w}x$h")
-          val nComp = b(p + 7) & 0xff
-          require(nComp == 1 || nComp == 3,
-            s"progressive JPEG supports 1 or 3 components, got $nComp")
-          require(len >= 8 + 3 * nComp, "truncated SOF2 components")
-          compIds = new Array[Int](nComp)
-          quantIds = new Array[Int](nComp)
-          hSamps = new Array[Int](nComp)
-          vSamps = new Array[Int](nComp)
-          for (i <- 0 until nComp) {
-            val off = p + 8 + 3 * i
-            compIds(i) = b(off) & 0xff
-            val hv = b(off + 1) & 0xff
-            hSamps(i) = hv >> 4; vSamps(i) = hv & 0x0f
-            quantIds(i) = b(off + 2) & 0xff
-            require(quantIds(i) <= 3, s"bad quant table id ${quantIds(i)}")
-          }
-          // same geometry set as the baseline decoder: all 1×1, or
-          // luma (2,2)/(2,1)/(4,1) + chroma 1×1 (4:2:0 / 4:2:2 / 4:1:1)
-          val hv = (0 until nComp).map(i => (hSamps(i), vSamps(i)))
-          val ok444 = hv.forall(_ == ((1, 1)))
-          val okSub = nComp == 3 && hv.tail.forall(_ == ((1, 1))) &&
-            Set((2, 2), (2, 1), (4, 1)).contains(hv.head)
-          require(ok444 || okSub,
-            s"unsupported progressive chroma subsampling $hv — " +
-              "4:4:4 / 4:2:0 / 4:2:2 / 4:1:1 only")
-          sawSof = true
-          hMax = hSamps.max; vMax = vSamps.max
-          mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-          mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-          padW = Array.tabulate(nComp)(i => mcusX * hSamps(i))
-          padH = Array.tabulate(nComp)(i => mcusY * vSamps(i))
-          // non-interleaved grids ceil over the COMPONENT dims
-          acW = Array.tabulate(nComp)(i =>
-            ((w * hSamps(i) + hMax - 1) / hMax + 7) / 8)
-          acH = Array.tabulate(nComp)(i =>
-            ((h * vSamps(i) + vMax - 1) / vMax + 7) / 8)
-          coefs = Array.tabulate(nComp)(i =>
-            Array.fill(padW(i) * padH(i))(new Array[Int](64)))
-          p += len
-        case 0xc0 => throw new IllegalArgumentException(
-          "mixed SOF0 after SOF2")
-        case 0xdb =>
-          val len = u16(p)
-          require(len >= 2 && p + len <= b.length, "truncated DQT")
-          var q = p + 2
-          while (q < p + len) {
-            val pqtq = b(q) & 0xff
-            require((pqtq >> 4) == 0, "16-bit quant tables unsupported")
-            require((pqtq & 0x0f) <= 3, "bad quant table id")
-            require(q + 65 <= p + len, "truncated DQT table")
-            val t = new Array[Int](64)
-            var i = 0
-            while (i < 64) { t(ZigZag(i)) = b(q + 1 + i) & 0xff; i += 1 }
-            quant(pqtq & 0x0f) = t
-            q += 65
-          }
-          p += len
-        case 0xc4 =>
-          val len = u16(p)
-          require(len >= 2 && p + len <= b.length, "truncated DHT")
-          var q = p + 2
-          while (q < p + len) {
-            val tcth = b(q) & 0xff
-            require((tcth >> 4) <= 1 && (tcth & 0x0f) <= 3,
-              "bad Huffman table class/id")
-            require(q + 17 <= p + len, "truncated DHT header")
-            val bits = Array.tabulate(16)(i => b(q + 1 + i) & 0xff)
-            val n = bits.sum
-            require(q + 17 + n <= p + len, "truncated DHT values")
             huff((tcth >> 4, tcth & 0x0f)) = new DecodeTable(bits,
               java.util.Arrays.copyOfRange(b, q + 17, q + 17 + n))
             q += 17 + n
@@ -1852,249 +1217,258 @@ object JpegCodec {
         case 0xdd =>
           val len = u16(p)
           require(len == 4 && p + len <= b.length, "truncated DRI")
-          require(u16(p + 2) == 0,
-            "restart intervals in progressive JPEG unsupported")
+          restartInterval = u16(p + 2)
           p += len
-        case 0xda =>
-          require(sawSof, "progressive SOS before SOF2")
+        case 0xda => // SOS, then its entropy-coded data
+          require(grid != null, "JPEG SOS before SOF")
           val len = u16(p)
           require(len >= 8 && p + len <= b.length, "truncated SOS")
           val ns = b(p + 2) & 0xff
           require(ns >= 1 && ns <= compIds.length,
             s"bad scan component count $ns")
           require(len >= 6 + 2 * ns, "truncated SOS components")
-          val scanCs = Array.tabulate(ns)(i => b(p + 3 + 2 * i) & 0xff)
-          val scanTt = Array.tabulate(ns)(i => b(p + 4 + 2 * i) & 0xff)
-          // map each scan component to its frame index
-          val scanIdx = scanCs.map { cs =>
-            val i = compIds.indexOf(cs)
-            require(i >= 0, s"scan component $cs not in the frame")
-            i
+          val cis = Array.tabulate(ns) { i =>
+            val cs = b(p + 3 + 2 * i) & 0xff
+            val ci = compIds.indexOf(cs)
+            require(ci >= 0, s"scan component $cs not in the frame")
+            ci
           }
+          val tt = Array.tabulate(ns)(i => b(p + 4 + 2 * i) & 0xff)
           val so = p + 3 + 2 * ns
           val ss = b(so) & 0xff
           val se = b(so + 1) & 0xff
-          val ahal = b(so + 2) & 0xff
-          val ah = ahal >> 4
-          val al = ahal & 0x0f
+          // successive approximation exists only in progressive scans
+          val ah = if (progressive) (b(so + 2) & 0xff) >> 4 else 0
+          val al = if (progressive) b(so + 2) & 0x0f else 0
           require(ah == 0 || ah == al + 1,
             s"non-contiguous successive approximation (Ah=$ah, Al=$al)")
           require(ss <= se && se <= 63, s"bad spectral range $ss..$se")
-          val (data, nextMarker, after) = unstuffToMarker(b, p + len)
-          require(nextMarker == 0xd9 || nextMarker == 0xda ||
-            nextMarker == 0xc4 || nextMarker == 0xdb,
-            f"unexpected marker 0x$nextMarker%02x after progressive scan")
-          val br = new BitReader(data)
-          def huffDecode(t: DecodeTable): Int = {
-            var code = br.bit()
-            var l = 1
-            while (l < 16 && (t.maxCode(l) == -1 || code > t.maxCode(l))) {
-              code = (code << 1) | br.bit()
-              l += 1
-            }
-            require(t.maxCode(l) != -1 && code <= t.maxCode(l),
-              "invalid JPEG Huffman code")
-            t.value(l, code)
+          val inFrameOrder = cis.sameElements(compIds.indices)
+          if (progressive) {
+            require(restartInterval == 0,
+              "restart intervals in progressive JPEG unsupported")
+            if (ss == 0) { // DC scan — the only kind the spec allows to
+              // interleave (§G.1.1)
+              require(se == 0, "DC scan must have Se = 0")
+              require(ns == 1 || inFrameOrder,
+                "interleaved DC scan must cover all components in frame order")
+            } else require(ns == 1,
+              "progressive AC scans must be single-component (spec G.1.1)")
+          } else {
+            require(ns == compIds.length,
+              s"scan components ($ns) must match frame (${compIds.length})" +
+                " — non-interleaved multi-scan unsupported")
+            require(inFrameOrder, "scan component order must match the frame")
+            require(ss == 0 && se == 63,
+              "partial spectral selection unsupported")
           }
-          // scan block-visit orders (spec §G.1.1 / §A.2): an
-          // INTERLEAVED scan walks MCUs, each component contributing
-          // hSamp×vSamp blocks per MCU from its PADDED grid; a
-          // single-component scan walks that component's own ceil
-          // grid in raster order (padded-only blocks are NOT coded —
-          // they are never sampled by the assembly, so their AC stays
-          // zero and only the interleaved DC scan touches them)
-          def visitInterleaved(f: (Int, Int) => Unit): Unit = {
-            var my = 0
-            while (my < mcusY) {
-              var mx = 0
-              while (mx < mcusX) {
-                var j = 0
-                while (j < ns) {
-                  val ci = scanIdx(j)
-                  var vy = 0
-                  while (vy < vSamps(ci)) {
-                    var vx = 0
-                    while (vx < hSamps(ci)) {
-                      f(j, (my * vSamps(ci) + vy) * padW(ci) +
-                        (mx * hSamps(ci) + vx))
-                      vx += 1
-                    }
-                    vy += 1
-                  }
-                  j += 1
-                }
-                mx += 1
-              }
-              my += 1
-            }
-          }
-          def visitSingle(ci: Int)(f: Int => Unit): Unit = {
-            var by = 0
-            while (by < acH(ci)) {
-              var bx = 0
-              while (bx < acW(ci)) { f(by * padW(ci) + bx); bx += 1 }
-              by += 1
-            }
-          }
-          if (ss == 0) { // DC scan — the only kind the spec allows to
-            // interleave (§G.1.1)
-            require(se == 0, "DC scan must have Se = 0")
-            if (ns > 1) require(scanIdx.toSeq == compIds.indices.toSeq,
-              "interleaved DC scan must cover all components in frame order")
-            val dcTs = if (ah == 0)
-              scanTt.map(tt => huff.getOrElse((0, tt >> 4),
-                missingTable("DC")))
+          val dcTs = if (ss == 0 && ah == 0) tt.map(t => table(0, t >> 4))
             else null
-            val prevDc = new Array[Int](ns)
-            // refinement (ah > 0) is one raw bit per block: x ==
-            // (x >> k << k) | low bits, so OR-ing each delivered bit
-            // reconstructs the two's-complement DC exactly
-            def dcOne(j: Int, bi: Int): Unit = {
-              val c = coefs(scanIdx(j))(bi)
-              if (ah == 0) {
-                val s = huffDecode(dcTs(j))
-                require(s <= 11, s"DC size $s out of baseline range")
-                prevDc(j) += extend(br.receive(s), s)
-                c(0) = prevDc(j) << al
-              } else c(0) |= br.bit() << al
-            }
-            if (ns > 1) visitInterleaved(dcOne)
-            else visitSingle(scanIdx(0))(bi => dcOne(0, bi))
-          } else if (ah == 0) { // AC first scan with EOBRUN
-            require(ns == 1,
-              "progressive AC scans must be single-component (spec G.1.1)")
-            val tt = scanTt(0)
-            val acT = huff.getOrElse((1, tt & 0x0f),
-              missingTable("AC"))
-            var eobrun = 0
-            visitSingle(scanIdx(0)) { bi =>
-              val c = coefs(scanIdx(0))(bi)
-              if (eobrun > 0) eobrun -= 1
-              else {
-                var k = ss
-                var eob = false
-                while (k <= se && !eob) {
-                  val rs = huffDecode(acT)
-                  val r = rs >> 4
-                  val sz = rs & 0x0f
-                  if (sz == 0) {
-                    if (r == 15) k += 16 // ZRL
-                    else { // EOBRUN: 2^r + receive(r) blocks incl. this
-                      eobrun = (1 << r) + br.receive(r) - 1
-                      eob = true
-                    }
-                  } else {
-                    k += r
-                    require(k <= se, "AC coefficient past the scan band")
-                    c(ZigZag(k)) = extend(br.receive(sz), sz) << al
-                    k += 1
-                  }
-                }
-              }
-            }
-            require(eobrun == 0, "EOBRUN past the last block")
-          } else { // AC refinement (spec G.1.2.3)
-            require(ns == 1,
-              "progressive AC scans must be single-component (spec G.1.1)")
-            val tt = scanTt(0)
-            val acT = huff.getOrElse((1, tt & 0x0f),
-              missingTable("AC"))
-            val p1 = 1 << al
-            val n1 = -(1 << al)
-            // refine one already-significant coefficient: bit 1 adds the
-            // p1 magnitude bit (negatives are stored as −magnitude, so
-            // (coef & p1) tests the magnitude bit directly — low bits
-            // are zero until delivered)
-            def refine(c: Array[Int], n: Int): Unit =
-              if (br.bit() == 1 && (c(n) & p1) == 0)
-                c(n) += (if (c(n) >= 0) p1 else n1)
-            var eobrun = 0
-            visitSingle(scanIdx(0)) { bi =>
-              val c = coefs(scanIdx(0))(bi)
-              var k = ss
-              if (eobrun == 0) {
-                var eob = false
-                while (k <= se && !eob) {
-                  val rs = huffDecode(acT)
-                  var r = rs >> 4
-                  val sz = rs & 0x0f
-                  var newVal = 0
-                  if (sz == 0) {
-                    if (r != 15) { // EOBn: this block + (run−1) more
-                      eobrun = (1 << r) + br.receive(r)
-                      eob = true
-                    } // r == 15: ZRL — skip 16 zero-history positions
-                  } else {
-                    require(sz == 1,
-                      "AC refinement coefficient size must be 1")
-                    newVal = if (br.bit() == 1) p1 else n1
-                  }
-                  if (!eob) {
-                    // walk: refine nonzero-history coefficients en
-                    // route; count r down over zero-history ones; land
-                    // on the (r+1)-th zero-history position
-                    var placed = false
-                    while (k <= se && !placed) {
-                      val n = ZigZag(k)
-                      if (c(n) != 0) refine(c, n)
-                      else if (r == 0) {
-                        if (sz != 0) c(n) = newVal
-                        placed = true
-                      } else r -= 1
-                      k += 1
-                    }
-                    require(placed || sz == 0,
-                      "AC refinement run past the band")
-                  }
-                }
-              }
-              if (eobrun > 0) {
-                // the EOB run covers the REST of this block's band …
-                while (k <= se) {
-                  val n = ZigZag(k)
-                  if (c(n) != 0) refine(c, n)
-                  k += 1
-                }
-                eobrun -= 1 // … and (eobrun−1) full blocks after it
-              }
-            }
-            require(eobrun == 0, "EOBRUN past the last block")
-          }
+          val acTs = if (se > 0) tt.map(t => table(1, t & 0x0f)) else null
+          val (segs, next, after) = unstuffScan(b, p + len)
+          require(next == 0xd9 || (progressive &&
+            (next == 0xda || next == 0xc4 || next == 0xdb)),
+            f"unexpected marker 0x$next%02x after a JPEG scan")
+          decodeScan(segs, grid, coefs, cis, dcTs, acTs, ss, se, ah, al,
+            restartInterval, progressive)
+          scans += 1
           p = after - 2 // hand the terminating marker back to the walk
-        case _ =>
+        case _ => // APPn, COM, others with a length field: skip
           val len = u16(p)
           require(len >= 2 && p + len <= b.length, "truncated JPEG segment")
           p += len
       }
     }
-    val nComp = compIds.length
-    for (ci <- 0 until nComp)
-      require(quant(quantIds(ci)) != null,
-        s"JPEG missing quant table ${quantIds(ci)}")
-    // per-component dequantize + IDCT into PADDED planes, then nearest
-    // upsampling at assembly — the baseline decoder's exact map, so
-    // progressive decode stays bit-equal to the sequential container
-    // at every supported geometry
+    quantIds.foreach(t => require(quant(t) != null,
+      s"JPEG missing quant table $t"))
+    raster(grid, coefs, quantIds.map(quant))
+  }
+
+  def decode(b: Array[Byte]): ImageCodec.Raster = decode(b, false)
+
+  /** The entropy unstuffer (spec §B.1.1.5): the bytes from `start` to
+    * the next marker other than RSTn, FF00 → FF, split at each RSTn into
+    * restart segments whose markers must cycle D0..D7 in order
+    * (§B.2.1.2).  Returns (segments, the marker, position after it). */
+  private def unstuffScan(b: Array[Byte],
+      start: Int): (Array[Array[Byte]], Int, Int) = {
+    val segs = mutable.ArrayBuffer.empty[Array[Byte]]
+    var ent = new java.io.ByteArrayOutputStream()
+    var q = start
+    while (true) {
+      require(q < b.length, "truncated JPEG scan (no terminating marker)")
+      val v = b(q) & 0xff
+      if (v != 0xff) { ent.write(v); q += 1 }
+      else {
+        require(q + 1 < b.length, "truncated JPEG scan (dangling FF)")
+        val nxt = b(q + 1) & 0xff
+        if (nxt == 0x00) { ent.write(0xff); q += 2 } // stuffed data byte
+        else {
+          segs += ent.toByteArray
+          if (nxt < 0xd0 || nxt > 0xd7) return (segs.toArray, nxt, q + 2)
+          require(nxt - 0xd0 == (segs.length - 1) % 8,
+            s"restart marker out of sequence at segment ${segs.length}")
+          ent = new java.io.ByteArrayOutputStream()
+          q += 2
+        }
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Entropy-decode one scan into the frame's coefficient buffers: per
+    * block, the DC (a difference in a first scan, one raw bit in a
+    * refinement) when Ss = 0, then the band max(Ss, 1)..Se — (run, size)
+    * symbols with ZRL and EOB runs in a first scan (a sequential scan
+    * allows only the plain EOB), correction bits and newly-significant
+    * coefficients in a refinement (spec §F.2.2, §G.1.2).  First scans
+    * store coefficients scaled by 2^Al. */
+  private def decodeScan(segs: Array[Array[Byte]], grid: Grid,
+      coefs: Array[Array[Int]], cis: Array[Int], dcTs: Array[DecodeTable],
+      acTs: Array[DecodeTable], ss: Int, se: Int, ah: Int, al: Int,
+      restartInterval: Int, progressive: Boolean): Unit = {
+    if (restartInterval == 0)
+      require(segs.length == 1, "restart markers present but DRI said none")
+    else {
+      val expected = (grid.units(cis) + restartInterval - 1) / restartInterval
+      require(segs.length == expected,
+        s"restart segment count ${segs.length} != expected $expected")
+    }
+    var br: BitReader = null
+    val prevDc = new Array[Int](cis.length)
+    var eobrun = 0
+    val p1 = 1 << al
+    val n1 = -(1 << al)
+    // refine one already-significant coefficient: bit 1 adds the p1
+    // magnitude bit (negatives are stored as −magnitude, so (coef & p1)
+    // tests the magnitude bit directly — low bits are zero until
+    // delivered)
+    def refine(c: Array[Int], i: Int): Unit =
+      if (br.bit() == 1 && (c(i) & p1) == 0) c(i) += (if (c(i) >= 0) p1 else n1)
+    grid.visit(cis, u =>
+      if (u == 0 || (restartInterval > 0 && u % restartInterval == 0)) {
+        // a restart segment: fresh bit stream, DC predictors reset
+        br = new BitReader(segs(if (restartInterval == 0) 0
+          else u / restartInterval))
+        java.util.Arrays.fill(prevDc, 0)
+      }) { (j, bi) =>
+      val c = coefs(cis(j))
+      val base = bi * 64
+      if (ss == 0) {
+        // refinement is one raw bit per block: x == (x >> k << k) | low
+        // bits, so OR-ing each delivered bit reconstructs the
+        // two's-complement DC exactly
+        if (ah == 0) {
+          val s = br.decode(dcTs(j))
+          require(s <= 11, s"DC size $s out of baseline range")
+          prevDc(j) += extend(br.receive(s), s)
+          c(base) = prevDc(j) << al
+        } else c(base) |= br.bit() << al
+      }
+      if (se > 0) {
+        var k = math.max(ss, 1)
+        if (ah == 0) {
+          if (eobrun > 0) eobrun -= 1
+          else {
+            var eob = false
+            while (k <= se && !eob) {
+              val rs = br.decode(acTs(j))
+              val r = rs >> 4
+              val sz = rs & 0x0f
+              if (sz == 0) {
+                if (r == 15) k += 16 // ZRL
+                else { // EOBRUN: 2^r + receive(r) blocks incl. this one
+                  require(progressive || r == 0,
+                    f"invalid JPEG AC symbol 0x$rs%02x")
+                  eobrun = (1 << r) + br.receive(r) - 1
+                  eob = true
+                }
+              } else {
+                k += r
+                require(k <= se, "AC coefficient past the scan band")
+                c(base + ZigZag(k)) = extend(br.receive(sz), sz) << al
+                k += 1
+              }
+            }
+          }
+        } else {
+          if (eobrun == 0) {
+            var eob = false
+            while (k <= se && !eob) {
+              val rs = br.decode(acTs(j))
+              var r = rs >> 4
+              val sz = rs & 0x0f
+              var newVal = 0
+              if (sz == 0) {
+                if (r != 15) { // EOBn: this block + (run−1) more
+                  eobrun = (1 << r) + br.receive(r)
+                  eob = true
+                } // r == 15: ZRL — skip 16 zero-history positions
+              } else {
+                require(sz == 1, "AC refinement coefficient size must be 1")
+                newVal = if (br.bit() == 1) p1 else n1
+              }
+              if (!eob) {
+                // walk: refine nonzero-history coefficients en route;
+                // count r down over zero-history ones; land on the
+                // (r+1)-th zero-history position
+                var placed = false
+                while (k <= se && !placed) {
+                  val i = base + ZigZag(k)
+                  if (c(i) != 0) refine(c, i)
+                  else if (r == 0) {
+                    if (sz != 0) c(i) = newVal
+                    placed = true
+                  } else r -= 1
+                  k += 1
+                }
+                require(placed || sz == 0, "AC refinement run past the band")
+              }
+            }
+          }
+          if (eobrun > 0) {
+            // the EOB run covers the REST of this block's band …
+            while (k <= se) {
+              val i = base + ZigZag(k)
+              if (c(i) != 0) refine(c, i)
+              k += 1
+            }
+            eobrun -= 1 // … and (eobrun−1) full blocks after it
+          }
+        }
+      }
+    }
+    require(eobrun == 0, "EOBRUN past the last block")
+  }
+
+  /** The coefficient→raster back end, once per image: per component
+    * dequantize + [[idct]] + level shift into its PADDED plane, then
+    * nearest upsampling at assembly (component sample (x·h/hMax,
+    * y·v/vMax) — the JFIF default for subsampled chroma) and BT.601
+    * colour conversion. */
+  private def raster(grid: Grid, coefs: Array[Array[Int]],
+      qts: Array[Array[Int]]): ImageCodec.Raster = {
+    val nComp = coefs.length
+    val planeW = grid.padW.map(_ * 8)
     val planes = Array.tabulate(nComp)(ci =>
-      new Array[Int](padW(ci) * 8 * padH(ci) * 8))
+      new Array[Int](planeW(ci) * grid.padH(ci) * 8))
     val qcoef = new Array[Double](64)
-    for (ci <- 0 until nComp) {
-      val qt = quant(quantIds(ci))
-      val pw = padW(ci) * 8
+    var ci = 0
+    while (ci < nComp) {
+      val c = coefs(ci)
+      val qt = qts(ci)
       var bi = 0
-      while (bi < coefs(ci).length) {
-        val c = coefs(ci)(bi)
+      while (bi < grid.padW(ci) * grid.padH(ci)) {
         var i = 0
-        while (i < 64) { qcoef(i) = c(i).toDouble * qt(i); i += 1 }
+        while (i < 64) { qcoef(i) = c(bi * 64 + i).toDouble * qt(i); i += 1 }
         val px = idct(qcoef)
-        val bx = bi % padW(ci)
-        val by = bi / padW(ci)
+        val x0 = bi % grid.padW(ci) * 8
+        val y0 = bi / grid.padW(ci) * 8
         var y = 0
         while (y < 8) {
-          val iy = by * 8 + y
           var x = 0
           while (x < 8) {
-            planes(ci)(iy * pw + (bx * 8 + x)) =
+            planes(ci)((y0 + y) * planeW(ci) + (x0 + x)) =
               clamp255(px(y * 8 + x) + 128.0)
             x += 1
           }
@@ -2102,15 +1476,15 @@ object JpegCodec {
         }
         bi += 1
       }
+      ci += 1
     }
-    val luma = new Array[Int](w * h)
-    def sample(ci: Int, x: Int, y: Int): Int = {
-      val sx = x * hSamps(ci) / hMax
-      val sy = y * vSamps(ci) / vMax
-      planes(ci)(sy * padW(ci) * 8 + sx)
-    }
+    def sample(ci: Int, x: Int, y: Int): Int =
+      planes(ci)(y * grid.vs(ci) / grid.vMax * planeW(ci) +
+        x * grid.hs(ci) / grid.hMax)
+    val w = grid.w
+    val luma = new Array[Int](w * grid.h)
     var y = 0
-    while (y < h) {
+    while (y < grid.h) {
       var x = 0
       while (x < w) {
         luma(y * w + x) =
@@ -2124,7 +1498,7 @@ object JpegCodec {
       }
       y += 1
     }
-    ImageCodec.Raster(w, h, luma)
+    ImageCodec.Raster(w, grid.h, luma)
   }
 
   /** Worst-case per-pixel reconstruction error bound for [[encode]] at

@@ -879,7 +879,7 @@ object DedupQueries extends QuerySet {
          |SELECT * FROM j WHERE jaccard >= 0.5""".stripMargin,
 
     "dd_embed_lsh" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT vec_id, embedding,
         |    list_reduce(list_transform(generate_series(0, 7), j ->
         |      CASE WHEN
@@ -894,12 +894,7 @@ object DedupQueries extends QuerySet {
         |),
         |s AS (
         |  SELECT x.vec_id AS vec_a, y.vec_id AS vec_b,
-        |    round(
-        |      list_reduce(list_transform(list_zip(x.embedding, y.embedding),
-        |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (a, b) -> a + b) /
-        |      (sqrt(list_reduce(list_transform(x.embedding, e -> e::DOUBLE * e::DOUBLE), (a, b) -> a + b)) *
-        |       sqrt(list_reduce(list_transform(y.embedding, e -> e::DOUBLE * e::DOUBLE), (a, b) -> a + b))),
-        |      6) AS cos
+        |    ${cosSql("x.embedding", "y.embedding")} AS cos
         |  FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
         |)
         |SELECT vec_a, vec_b, cos FROM s WHERE cos >= 0.4""".stripMargin,
@@ -1297,7 +1292,7 @@ object DedupQueries extends QuerySet {
         |WHERE md5(s.text) NOT IN (SELECT h FROM idx)""".stripMargin,
 
     "dd_embed_banded" ->
-      """WITH bs AS (SELECT unnest(generate_series(0, 3)) AS band),
+      s"""WITH bs AS (SELECT unnest(generate_series(0, 3)) AS band),
         |b AS (
         |  SELECT e.vec_id, e.embedding, bs.band,
         |    list_reduce(list_transform(generate_series(0, 3), j ->
@@ -1315,12 +1310,7 @@ object DedupQueries extends QuerySet {
         |  FROM b x JOIN b y ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id),
         |s AS (
         |  SELECT c.vec_a, c.vec_b,
-        |    round(
-        |      list_reduce(list_transform(list_zip(ea.embedding, eb.embedding),
-        |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (a, b) -> a + b) /
-        |      (sqrt(list_reduce(list_transform(ea.embedding, x -> x::DOUBLE * x::DOUBLE), (a, b) -> a + b)) *
-        |       sqrt(list_reduce(list_transform(eb.embedding, x -> x::DOUBLE * x::DOUBLE), (a, b) -> a + b))),
-        |      6) AS cos
+        |    ${cosSql("ea.embedding", "eb.embedding")} AS cos
         |  FROM cand c
         |  JOIN embeddings ea ON ea.vec_id = c.vec_a
         |  JOIN embeddings eb ON eb.vec_id = c.vec_b)
@@ -1498,12 +1488,7 @@ object DedupQueries extends QuerySet {
       s"""WITH ${EmbBandSql},
          |sc AS (
          |  SELECT c.vec_a, c.vec_b,
-         |    round(
-         |      list_reduce(list_transform(list_zip(ea.embedding, eb.embedding),
-         |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (a, b) -> a + b) /
-         |      (sqrt(list_reduce(list_transform(ea.embedding, x -> x::DOUBLE * x::DOUBLE), (a, b) -> a + b)) *
-         |       sqrt(list_reduce(list_transform(eb.embedding, x -> x::DOUBLE * x::DOUBLE), (a, b) -> a + b))),
-         |      6) AS cos
+         |    ${cosSql("ea.embedding", "eb.embedding")} AS cos
          |  FROM cand c
          |  JOIN embeddings ea ON ea.vec_id = c.vec_a
          |  JOIN embeddings eb ON eb.vec_id = c.vec_b),

@@ -13,8 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dir. */
 private[graft] object Layout {
 
-  /** Every table name [[land]] has returned in this JVM. */
-  private val landed = scala.collection.concurrent.TrieMap.empty[String, Unit]
+  /** Per thread, the tables [[land]] has returned since the last
+    * [[drainReads]]: the layouts the query under construction reads,
+    * including those its builder reads only in an eager job. */
+  private val reads = ThreadLocal.withInitial[scala.collection.mutable.Set[String]](
+    () => scala.collection.mutable.Set.empty[String])
 
   /** Land `build` as layout `name` of `dir`, bucketed (8 buckets) and
     * sorted on `bucketCol`, and return the committed table.  Table name =
@@ -41,14 +44,13 @@ private[graft] object Layout {
       graft.ops.LayoutOps.writeBucketed(build, bucketCol, 8, tbl,
         s"$wh/graft_layout/$tbl")
     }
-    landed(tbl) = ()
+    reads.get += tbl
     s.table(tbl)
   }
 
-  /** Whether `df`'s analyzed plan, subqueries included, scans a table
-    * [[land]] returned. */
-  def reads(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectWithSubqueries {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.catalogTable
-    }.flatten.exists(t => landed.contains(t.identifier.table))
+  /** The tables [[land]] returned on this thread since the last call. */
+  def drainReads(): Set[String] = {
+    val r = reads.get
+    try r.toSet finally r.clear()
+  }
 }

@@ -65,9 +65,9 @@ object SamplingQueries extends QuerySet {
 
   /** The `pack_plan` oracle, shared with the queries that wrap it. */
   private lazy val PackPlanSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |         len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')) AS n_tokens
+      |         len(${toksSql("text")}) AS n_tokens
       |  FROM documents
       |),
       |c AS (
@@ -1186,7 +1186,7 @@ object SamplingQueries extends QuerySet {
       val sk = graft.core.Rng.Md5.sortKeySql(5L, "shard", Seq("doc_id"))
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |         list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks
+         |         ${toksSql("text")} AS toks
          |  FROM documents
          |),
          |f AS (
@@ -1352,8 +1352,7 @@ object SamplingQueries extends QuerySet {
       val gate = TextQueries.oracles("text_filter_pipeline")
       s"""WITH surv AS (
          |  SELECT doc_id,
-         |    len(list_filter(string_split_regex(lower(text), '\\s+'),
-         |      x -> x <> ''))::BIGINT AS n_tokens
+         |    len(${toksSql("text")})::BIGINT AS n_tokens
          |  FROM documents
          |  WHERE doc_id IN (SELECT doc_id FROM ($gate))
          |    AND doc_id IN (

@@ -12,6 +12,7 @@ import graft.ops._
 object SimilarityQueries extends QuerySet {
 
   import Tables.emb
+  import TextQueries.toksSql
 
   /** The `sim_ivf_topk` oracle, shared with the queries that wrap it. */
   private lazy val SimIvfTopkSql: String =
@@ -306,13 +307,9 @@ object SimilarityQueries extends QuerySet {
     * for. */
   private val CmsProbes = Seq("join", "scan", "the", "zz_unseen")
 
-  // Shared bucket expression fragments for the oracle replays.
-  private val TokList =
-    "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
-
   private def cmsGridSql(src: String): String =
     s"""WITH toks AS (
-       |  SELECT unnest($TokList) AS tok FROM $src
+       |  SELECT unnest(${toksSql("text")}) AS tok FROM $src
        |),
        |h AS (SELECT unnest(generate_series(0, 3)) AS row, tok FROM toks)
        |SELECT row,
@@ -334,11 +331,11 @@ object SimilarityQueries extends QuerySet {
 
   private[queries] val OverlapTopkSql =
     s"""WITH ct AS (
-       |  SELECT doc_id AS neighbor_id, unnest(list_distinct($TokList)) AS tok
+       |  SELECT doc_id AS neighbor_id, unnest(list_distinct(${toksSql("text")})) AS tok
        |  FROM documents
        |),
        |qt AS (
-       |  SELECT doc_id AS query_id, unnest(list_distinct($TokList)) AS tok
+       |  SELECT doc_id AS query_id, unnest(list_distinct(${toksSql("text")})) AS tok
        |  FROM documents WHERE doc_id < 5
        |),
        |ov AS (
@@ -1554,7 +1551,7 @@ object SimilarityQueries extends QuerySet {
          |),
          |ex AS (
          |  SELECT tok AS item, count(*)::BIGINT AS n_exact
-         |  FROM (SELECT unnest($TokList) AS tok FROM documents)
+         |  FROM (SELECT unnest(${toksSql("text")}) AS tok FROM documents)
          |  GROUP BY 1
          |)
          |SELECT est.item, est.n_est,

@@ -17,9 +17,9 @@ object TextQueries extends QuerySet {
 
   /** The `text_quality` oracle, shared with the queries that wrap it. */
   private lazy val TextQualitySql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, text,
-      |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+      |         ${toksSql("text")} AS toks
       |  FROM documents
       |),
       |f AS (
@@ -170,7 +170,7 @@ object TextQueries extends QuerySet {
   }
 
   private def langVocabSql(lang: String): String =
-    s"""SELECT DISTINCT unnest(list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')) AS tok
+    s"""SELECT DISTINCT unnest(${toksSql("text")}) AS tok
        |FROM documents WHERE lang = '$lang'""".stripMargin
 
   private val unigramModels =
@@ -769,9 +769,9 @@ object TextQueries extends QuerySet {
     "text_quality" -> TextQualitySql,
 
     "text_langid" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, lang,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents
         |),
         |sc AS (
@@ -791,9 +791,9 @@ object TextQueries extends QuerySet {
         |FROM sc""".stripMargin,
 
     "text_fingerprint" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents
         |),
         |shg AS (
@@ -807,9 +807,9 @@ object TextQueries extends QuerySet {
         |FROM shg""".stripMargin,
 
     "text_filter_pipeline" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents
         |),
         |f AS (
@@ -884,10 +884,9 @@ object TextQueries extends QuerySet {
         |FROM sels s JOIN h ON h.doc_id = s.doc_id AND h.pos = s.pos""".stripMargin,
 
     "text_token_freq" ->
-      """WITH tk AS (
+      s"""WITH tk AS (
         |  SELECT doc_id,
-        |         unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |           x -> x <> '')) AS token
+        |         unnest(${toksSql("text")}) AS token
         |  FROM documents
         |),
         |f AS (SELECT token, count(*) AS tf FROM tk GROUP BY 1)
@@ -899,9 +898,9 @@ object TextQueries extends QuerySet {
     // quality formula identical to text_quality's oracle; tiers by exact
     // rank over (quality DESC, doc_id)
     "text_quality_tiers" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents
         |),
         |f AS (
@@ -929,9 +928,9 @@ object TextQueries extends QuerySet {
         |FROM r""".stripMargin,
 
     "text_repetition" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks,
+        |         ${toksSql("text")} AS toks,
         |         list_filter(list_transform(string_split(text, ' table '),
         |           x -> trim(x)), x -> x <> '') AS ps
         |  FROM documents
@@ -1021,7 +1020,7 @@ object TextQueries extends QuerySet {
          |mp AS (SELECT map(list(l || chr(9) || r), list(rnk)) AS mp FROM m),
          |wl AS (
          |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS ws
+         |    ${toksSql("text")} AS ws
          |  FROM documents
          |),
          |w0 AS (SELECT doc_id, unnest(generate_series(1, len(ws))) AS wid, ws FROM wl),
@@ -1095,9 +1094,9 @@ object TextQueries extends QuerySet {
 
     // chunkTokens = 16, overlap = 4, stride = 12
     "text_chunks" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |    ${toksSql("text")} AS toks
         |  FROM documents),
         |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
         |c AS (
@@ -1141,9 +1140,9 @@ object TextQueries extends QuerySet {
         |FROM r WHERE rn <= 5""".stripMargin,
 
     "text_quality_tiers_by" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, lang, text,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents
         |),
         |f AS (
@@ -1212,9 +1211,9 @@ object TextQueries extends QuerySet {
          |SELECT doc_id, n_tokens, log_w FROM w WHERE doc_id % 2 = 1""".stripMargin,
 
     "text_bigram_lm" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, source,
-        |    list_filter(string_split_regex(lower(text), '\s+'), s -> s <> '') AS toks
+        |    ${toksSql("text")} AS toks
         |  FROM documents),
         |x AS (
         |  SELECT doc_id, source, unnest(generate_series(1, len(toks) - 1)) AS i, toks
@@ -1223,7 +1222,7 @@ object TextQueries extends QuerySet {
         |c12 AS (SELECT w1, w2, count(*)::BIGINT AS c12 FROM bg WHERE source = 'src0' GROUP BY 1, 2),
         |c1 AS (SELECT w1, count(*)::BIGINT AS c1 FROM bg WHERE source = 'src0' GROUP BY 1),
         |v AS (SELECT count(DISTINCT tok)::DOUBLE AS v FROM (
-        |  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'), s -> s <> '')) AS tok
+        |  SELECT unnest(${toksSql("text")}) AS tok
         |  FROM documents WHERE source = 'src0')),
         |lp AS (
         |  SELECT bg.doc_id,
@@ -1450,9 +1449,9 @@ object TextQueries extends QuerySet {
         |FROM r GROUP BY cls""".stripMargin,
 
     "text_readability" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(lower(coalesce(text, '')), '\s+'), t -> t <> ''))::BIGINT AS n_words,
+        |    len(${toksSql("coalesce(text, '')")})::BIGINT AS n_words,
         |    greatest(1, len(regexp_extract_all(lower(coalesce(text, '')), '[.!?]+')))::BIGINT AS n_sentences,
         |    len(regexp_extract_all(lower(coalesce(text, '')), '[aeiouy]+'))::BIGINT AS n_syllables
         |  FROM documents
@@ -1502,9 +1501,9 @@ object TextQueries extends QuerySet {
         |WHERE source NOT IN ('src0', 'src1', 'src2')""".stripMargin,
 
     "text_langid_acc" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang,
-        |         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents
         |),
         |sc AS (
@@ -1692,8 +1691,7 @@ object TextQueries extends QuerySet {
         |ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
 
     "text_vocab_coverage" ->
-      """WITH t AS (SELECT unnest(list_filter(
-        |    string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok
+      s"""WITH t AS (SELECT unnest(${toksSql("text")}) AS tok
         |  FROM documents),
         |c AS (SELECT tok, count(*)::BIGINT AS cnt FROM t GROUP BY 1),
         |r AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, tok) AS rn
@@ -1730,9 +1728,8 @@ object TextQueries extends QuerySet {
         |FROM g""".stripMargin,
 
     "text_keyness" ->
-      """WITH toks AS (SELECT (source = 'src0') AS f,
-        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> '')) AS tok
+      s"""WITH toks AS (SELECT (source = 'src0') AS f,
+        |    unnest(${toksSql("text")}) AS tok
         |  FROM documents),
         |c AS (SELECT tok,
         |    sum(CASE WHEN f THEN 1 ELSE 0 END)::BIGINT AS a,
@@ -1775,10 +1772,9 @@ object TextQueries extends QuerySet {
         |WHERE src_rank <= 10""".stripMargin,
 
     "text_unigram_tokens" ->
-      """SELECT doc_id,
+      s"""SELECT doc_id,
         |  md5(array_to_string(
-        |    list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> ''), '')) AS tok_hash
+        |    ${toksSql("text")}, '')) AS tok_hash
         |FROM documents""".stripMargin,
 
     "text_overlap_topk" ->
@@ -1789,10 +1785,9 @@ object TextQueries extends QuerySet {
     "text_quality_sql" -> QualityGateSqlShared,
 
     "text_pack_shelf" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> ''))::BIGINT AS n_tokens
+        |    len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents),
         |c AS (
         |  SELECT doc_id, n_tokens, (128 // n_tokens)::BIGINT AS size_class
@@ -1807,10 +1802,9 @@ object TextQueries extends QuerySet {
         |FROM r""".stripMargin,
 
     "text_pack_ffd" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> ''))::BIGINT AS n_tokens
+        |    len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents)
         |SELECT count(*)::BIGINT AS n_docs,
         |  sum(n_tokens)::BIGINT AS total_tokens,
@@ -1835,10 +1829,9 @@ object TextQueries extends QuerySet {
         |FROM b""".stripMargin,
 
     "text_pack_shelf_lang" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang AS grp, doc_id,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> ''))::BIGINT AS n_tokens
+        |    len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents),
         |c AS (
         |  SELECT grp, doc_id, n_tokens,
@@ -1854,10 +1847,9 @@ object TextQueries extends QuerySet {
         |FROM r""".stripMargin,
 
     "text_pack_ffd_lang" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT lang, doc_id,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      x -> x <> ''))::BIGINT AS n_tokens
+        |    len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents)
         |SELECT lang, count(*)::BIGINT AS n_docs,
         |  sum(n_tokens)::BIGINT AS total_tokens,

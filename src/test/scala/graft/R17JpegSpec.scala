@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.ByteBuffer
+import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ImageCodec, JpegCodec, MultimodalOps}
 
@@ -490,5 +492,233 @@ class R17JpegSpec extends AnyFunSuite {
       JpegCodec.encodeColor420(48, 16, f, 90, restartInterval = 2))
     val plain = JpegCodec.decode(JpegCodec.encodeColor420(48, 16, f, 90))
     assert(withRst.lumaSum3.toSeq == plain.lumaSum3.toSeq)
+  }
+
+  // ---- byte and raster pins ---------------------------------------------
+  // sha256 per public encoder (and per decode of its output) over every
+  // (dims, quality) of the pin corpus — length-prefixed concatenation, so
+  // a single changed byte or pixel anywhere changes the digest, so a
+  // literal may change only with an intended change of the container
+  // bytes or of the decoder's arithmetic.
+  private val PinDims = Seq((8, 8), (13, 11), (17, 9), (32, 24), (96, 96))
+  private val PinQualities = Seq(50, 85, 90)
+  private val pinGray = (x: Int, y: Int) => (x * 37 + y * 91 + x * y * 13) % 256
+  private val pinRgb = (x: Int, y: Int) =>
+    ((x * 37 + y * 11) % 256, (x * 5 + y * 73 + x * y) % 256, (x * 91 + y * 3) % 256)
+  private val pinText = MultimodalOps.asciiBytes(
+    "pin every JPEG container byte: the quick brown fox 0123456789")
+  private val pinBands = Seq((1, 2), (3, 9), (10, 63))
+
+  /** name → encoder at (w, h, quality) */
+  private val pinEncoders: Seq[(String, (Int, Int, Int) => Array[Byte])] = Seq(
+    "encode" -> ((w, h, q) => JpegCodec.encode(w, h, pinGray, q)),
+    "encode/rst3" -> ((w, h, q) => JpegCodec.encode(w, h, pinGray, q, 3)),
+    "encodeColor" -> ((w, h, q) => JpegCodec.encodeColor(w, h, pinRgb, q)),
+    "encodeColor/rst3" -> ((w, h, q) =>
+      JpegCodec.encodeColor(w, h, pinRgb, q, 3)),
+    "encodeColor420" -> ((w, h, q) => JpegCodec.encodeColor420(w, h, pinRgb, q)),
+    "encodeColor420/rst3" -> ((w, h, q) =>
+      JpegCodec.encodeColor420(w, h, pinRgb, q, 3)),
+    "encodeColor422" -> ((w, h, q) => JpegCodec.encodeColor422(w, h, pinRgb, q)),
+    "encodeColor422/rst3" -> ((w, h, q) =>
+      JpegCodec.encodeColor422(w, h, pinRgb, q, 3)),
+    "encodeColor411" -> ((w, h, q) => JpegCodec.encodeColor411(w, h, pinRgb, q)),
+    "encodeColor411/rst3" -> ((w, h, q) =>
+      JpegCodec.encodeColor411(w, h, pinRgb, q, 3)),
+    "encodeProgressive" -> ((w, h, q) =>
+      JpegCodec.encodeProgressive(w, h, pinGray, q)),
+    "encodeProgressive/bands" -> ((w, h, q) =>
+      JpegCodec.encodeProgressive(w, h, pinGray, q, pinBands)),
+    "encodeProgressiveSA/al1" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveSA(w, h, pinGray, q, al = 1)),
+    "encodeProgressiveSA/al2" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveSA(w, h, pinGray, q, pinBands, al = 2)),
+    "encodeProgressiveColor" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveColor(w, h, pinRgb, q)),
+    "encodeProgressiveColorSub/2x2" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveColorSub(w, h, pinRgb, 2, 2, q)),
+    "encodeProgressiveColorSub/2x1" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveColorSub(w, h, pinRgb, 2, 1, q, pinBands)),
+    "encodeProgressiveColorSub/4x1" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveColorSub(w, h, pinRgb, 4, 1, q)),
+    "encodeProgressiveColor420" -> ((w, h, q) =>
+      JpegCodec.encodeProgressiveColor420(w, h, pinRgb, q)),
+    "grayJpeg" -> ((w, h, q) => JpegCodec.grayJpeg(w, h, pinText, q)),
+    "colorJpeg" -> ((w, h, q) => JpegCodec.colorJpeg(w, h, pinText, q)),
+    "color420Jpeg" -> ((w, h, q) => JpegCodec.color420Jpeg(w, h, pinText, q)),
+    "color422Jpeg" -> ((w, h, q) => JpegCodec.color422Jpeg(w, h, pinText, q)),
+    "color411Jpeg" -> ((w, h, q) => JpegCodec.color411Jpeg(w, h, pinText, q)),
+    "progJpeg" -> ((w, h, q) => JpegCodec.progJpeg(w, h, pinText, q)),
+    "progColorJpeg" -> ((w, h, q) => JpegCodec.progColorJpeg(w, h, pinText, q)),
+    "prog420Jpeg" -> ((w, h, q) => JpegCodec.prog420Jpeg(w, h, pinText, q)),
+    "stripDht/encode" -> ((w, h, q) =>
+      JpegCodec.stripDht(JpegCodec.encode(w, h, pinGray, q))),
+    "stripDht/encodeColor" -> ((w, h, q) =>
+      JpegCodec.stripDht(JpegCodec.encodeColor(w, h, pinRgb, q))),
+    "stripDht/encodeColor420" -> ((w, h, q) =>
+      JpegCodec.stripDht(JpegCodec.encodeColor420(w, h, pinRgb, q))))
+
+  private def sha256(parts: Seq[Array[Byte]]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    parts.foreach { p =>
+      md.update(ByteBuffer.allocate(4).putInt(p.length).array)
+      md.update(p)
+    }
+    md.digest.map(b => f"$b%02x").mkString
+  }
+
+  private def rasterBytes(r: ImageCodec.Raster): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 + 4 * r.lumaSum3.length)
+    bb.putInt(r.width).putInt(r.height)
+    r.lumaSum3.foreach(v => bb.putInt(v))
+    bb.array
+  }
+
+  private def pinOutputs(enc: (Int, Int, Int) => Array[Byte]): Seq[Array[Byte]] =
+    for ((w, h) <- PinDims; q <- PinQualities) yield enc(w, h, q)
+
+  private def checkPins(kind: String, expected: Map[String, String],
+      actual: Seq[(String, String)]): Unit = {
+    assert(actual.map(_._1).toSet == expected.keySet)
+    val drift = actual.filter { case (n, d) => expected(n) != d }
+    assert(drift.isEmpty, s"$kind drift: " +
+      drift.map { case (n, d) => s"$n -> $d" }.mkString(", "))
+  }
+
+  private val PinnedBytes: Map[String, String] = Map(
+    "encode" ->
+      "3166c7e3edddd304987c5ddfdd53c62ea6e1a2c7d01b2a6c7c0f713d1027994c",
+    "encode/rst3" ->
+      "28baad5d756726ca386c80759eb7fff5f78e7eccdf14b4702629a54940677bec",
+    "encodeColor" ->
+      "ad727642a52577fac08f7e95719eabb591baa20df789d3cf665ccfeb02362e35",
+    "encodeColor/rst3" ->
+      "49d3d4741e27717327f834002bbd03b91870630e20deef29c39cdebc2f58e0be",
+    "encodeColor420" ->
+      "fbb4d7c49d979e1ac53b3154a1737bd7fd228720fba3a209ca94f84943979b9d",
+    "encodeColor420/rst3" ->
+      "55f82913508156da46c86645847481379d58ece705339e4524b385e154cc4f4e",
+    "encodeColor422" ->
+      "903d15b376256904bac1db79dd1969e7a729ef2f414bcc39616503a235f0e8a7",
+    "encodeColor422/rst3" ->
+      "b13717b2f6c8a8fd93707f1a60a3623a2744cf64f99a76d5c22f9aca259bebcd",
+    "encodeColor411" ->
+      "457c2852c012cac7e24507243f7e3fd9caec7f77ad8b349ea543d6c2668fb564",
+    "encodeColor411/rst3" ->
+      "a4063e17ceffe88b424aff4fc87dde7c45ec6ab9bc39952697ff1018ab1ab3cc",
+    "encodeProgressive" ->
+      "5842f9556badbdc00ad91cd00d1456cafa3856cd09ab4f7833411ef7a72bbd0d",
+    "encodeProgressive/bands" ->
+      "21c3c40be0095aa8362d12c551ee291f6c405451892e5ad04ef947e86424a451",
+    "encodeProgressiveSA/al1" ->
+      "5479666c157ad2154458e9f5638a41dd82d3c6aa903b477c7058835244a8058d",
+    "encodeProgressiveSA/al2" ->
+      "97256e8b422ac2012a0846bad5ff32901eaef03390ad5a0e7594d7dfb355486a",
+    "encodeProgressiveColor" ->
+      "a8ce1e066eb06543c7d861b6903b990ab6138944dabb246cf2b3971674dcbd24",
+    "encodeProgressiveColorSub/2x2" ->
+      "1ce91580f2ee97f895cde7419a7f496715297012df7bfbc337146362d7adc170",
+    "encodeProgressiveColorSub/2x1" ->
+      "46380c2d57d67d12534d28dfd213d5abf1dc1d595615e34287d08f8ad304dfda",
+    "encodeProgressiveColorSub/4x1" ->
+      "7b05c09b7ddc17e0db15f39ab591967498c714e29f3b58cd3aa9a533a88b2399",
+    "encodeProgressiveColor420" ->
+      "1ce91580f2ee97f895cde7419a7f496715297012df7bfbc337146362d7adc170",
+    "grayJpeg" ->
+      "aa5763247274ef70073d12a54dd859f1a6e2678bacbe031e3c7d61e0bd479021",
+    "colorJpeg" ->
+      "fd687d5e58dff61ed9f05f503eeafc74792e47661d50cf03736152398459c5f5",
+    "color420Jpeg" ->
+      "9f9e17f180840018e07236356b6eb5b58acf459cf24307faf8ff52f236495f52",
+    "color422Jpeg" ->
+      "179ec4c23c15c20122e73fce9b583e338ed262fb5788c5da3abc6c549392fdc1",
+    "color411Jpeg" ->
+      "1dea8632f6bc15e1692a3deaad17671b2bac8f0abb63f55dd13098c1ec0fabb1",
+    "progJpeg" ->
+      "42d92e27fee3c81c5cd06b79a604c8a8d1f1d2b373106f349715688e0152f478",
+    "progColorJpeg" ->
+      "f4763b289e5bdf4d00b2c00055d5fe1442f47f89a6312ec9036d6ca504c75bd3",
+    "prog420Jpeg" ->
+      "7368bf50b5b032e70aab8c66de9aec3f08115336ac5f78b59e15bdb7a474ea94",
+    "stripDht/encode" ->
+      "765257a8439adb15caebbeb2d15503f4ddaf24c924a5b0fee424cdc9af51c77a",
+    "stripDht/encodeColor" ->
+      "472ee99ab6ee8fe13828ec1dee58a079974b69d32fcbdc29615ca6e198485e9a",
+    "stripDht/encodeColor420" ->
+      "f4d92c6e9041d0cb5ec07f58de268782d22cc488c46906df7c70503aa19dade0")
+
+  private val PinnedRasters: Map[String, String] = Map(
+    "encode" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "encode/rst3" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "encodeColor" ->
+      "13a0e57acfb638386fd5565e1b66e7576761b57337edabb01c30fd7d34a4bd62",
+    "encodeColor/rst3" ->
+      "13a0e57acfb638386fd5565e1b66e7576761b57337edabb01c30fd7d34a4bd62",
+    "encodeColor420" ->
+      "206928c2270e6ffd7d270b84312fea855d6c22853652174a721843c9b93b485c",
+    "encodeColor420/rst3" ->
+      "206928c2270e6ffd7d270b84312fea855d6c22853652174a721843c9b93b485c",
+    "encodeColor422" ->
+      "ca4dfac8b14524bba800caa5cd0953f761f166645bfe13e890c0c24067b3a440",
+    "encodeColor422/rst3" ->
+      "ca4dfac8b14524bba800caa5cd0953f761f166645bfe13e890c0c24067b3a440",
+    "encodeColor411" ->
+      "2f1fe0d7a8f35c91df81d3444d1c13c2c76f4d74b21fe7eb66bf66d1b4dee4a3",
+    "encodeColor411/rst3" ->
+      "2f1fe0d7a8f35c91df81d3444d1c13c2c76f4d74b21fe7eb66bf66d1b4dee4a3",
+    "encodeProgressive" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "encodeProgressive/bands" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "encodeProgressiveSA/al1" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "encodeProgressiveSA/al2" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "encodeProgressiveColor" ->
+      "13a0e57acfb638386fd5565e1b66e7576761b57337edabb01c30fd7d34a4bd62",
+    "encodeProgressiveColorSub/2x2" ->
+      "206928c2270e6ffd7d270b84312fea855d6c22853652174a721843c9b93b485c",
+    "encodeProgressiveColorSub/2x1" ->
+      "ca4dfac8b14524bba800caa5cd0953f761f166645bfe13e890c0c24067b3a440",
+    "encodeProgressiveColorSub/4x1" ->
+      "2f1fe0d7a8f35c91df81d3444d1c13c2c76f4d74b21fe7eb66bf66d1b4dee4a3",
+    "encodeProgressiveColor420" ->
+      "206928c2270e6ffd7d270b84312fea855d6c22853652174a721843c9b93b485c",
+    "grayJpeg" ->
+      "8211411fd725dc695053ea9737e9be815de976c4751932f17b4385c9ed0224ed",
+    "colorJpeg" ->
+      "75bbf651626ed7999fd23fb8648b35a0e015b564792f97303b91dd9963104057",
+    "color420Jpeg" ->
+      "8f1007ebb049b222974a74d036cef2e9c350c99ad2b9a74e7c3fc897a401c7fd",
+    "color422Jpeg" ->
+      "50b599daf1e5f5d5c51fc0051b042fae7e4fbb9a29e426dacb5d1f14e8355489",
+    "color411Jpeg" ->
+      "20b49c7ad36e9c0d0fdb7d613eb840dc07c00a8795056073def5e10201b7502a",
+    "progJpeg" ->
+      "8211411fd725dc695053ea9737e9be815de976c4751932f17b4385c9ed0224ed",
+    "progColorJpeg" ->
+      "75bbf651626ed7999fd23fb8648b35a0e015b564792f97303b91dd9963104057",
+    "prog420Jpeg" ->
+      "8f1007ebb049b222974a74d036cef2e9c350c99ad2b9a74e7c3fc897a401c7fd",
+    "stripDht/encode" ->
+      "8746a0a550d0180c0d05e432aeebc6848ba13d08a5b33e327b0d2c329bed0b55",
+    "stripDht/encodeColor" ->
+      "13a0e57acfb638386fd5565e1b66e7576761b57337edabb01c30fd7d34a4bd62",
+    "stripDht/encodeColor420" ->
+      "206928c2270e6ffd7d270b84312fea855d6c22853652174a721843c9b93b485c")
+
+  test("every public encoder's bytes are pinned over the corpus") {
+    checkPins("encoder byte", PinnedBytes,
+      pinEncoders.map { case (n, enc) => n -> sha256(pinOutputs(enc)) })
+  }
+
+  test("decoded rasters are pinned, incl. table-less MJPEG frames") {
+    checkPins("raster", PinnedRasters, pinEncoders.map { case (n, enc) =>
+      val strip = n.startsWith("stripDht/")
+      n -> sha256(pinOutputs(enc).map(b => rasterBytes(
+        JpegCodec.decode(b, mjpegDefaultTables = strip))))
+    })
   }
 }
