@@ -196,7 +196,11 @@ object JpegCodec {
 
   /** Decoder-side tables for the spec's DECODE procedure (§F.2.2.3):
     * per-length (mincode, maxcode, valptr) over the same canonical
-    * assignment. */
+    * assignment, plus a 9-bit lookahead table (libjpeg's jdhuff):
+    * `look(p)` is (length << 8) | value when the 9 bits `p` begin with a
+    * code of at most 9 bits, else 0.  The checks below make the code
+    * prefix-free, so DECODE stops at exactly that code and a hit returns
+    * what DECODE returns. */
   private final class DecodeTable(bits: Array[Int], vals: Array[Byte]) {
     val minCode = new Array[Int](17)
     val maxCode = new Array[Int](17)
@@ -222,14 +226,41 @@ object JpegCodec {
     }
     def value(l: Int, code: Int): Int =
       vals(valPtr(l) + code - minCode(l)) & 0xff
+    val look = new Array[Int](1 << LookBits)
+    locally {
+      var l = 1
+      while (l <= LookBits) {
+        var code = minCode(l)
+        while (code <= maxCode(l)) { // every code of length l
+          val from = code << (LookBits - l)
+          java.util.Arrays.fill(look, from, from + (1 << (LookBits - l)),
+            (l << 8) | value(l, code))
+          code += 1
+        }
+        l += 1
+      }
+    }
   }
 
-  // ---- DCT (double-precision reference transform; 8×8 blocks only, so
-  //      the O(64²) direct form is fine and unambiguous) ----
-  private val CosT: Array[Array[Double]] =
-    Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16))
+  /** Bits of Huffman lookahead: codes up to this long decode in one
+    * table read. */
+  private final val LookBits = 9
+
+  // ---- DCT (double-precision reference transform, spec A.3.3; 8×8
+  //      blocks).  The encoder's FDCT is the direct O(64²) form; the
+  //      decoder's IDCT ([[raster]]) visits only the nonzero
+  //      coefficients, coefficient-major, and still adds every pixel's
+  //      products in the direct form's order, so it is bit-exact. ----
+  /** Cos(x·8 + u) = cos((2x + 1)uπ/16) */
+  private val Cos: Array[Double] = Array.tabulate(64) { i =>
+    val x = i / 8
+    val u = i % 8
+    math.cos((2 * x + 1) * u * math.Pi / 16)
+  }
   private val C: Array[Double] =
     Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
+  /** CC(v·8 + u) = C(u)·C(v), the direct form's leading product */
+  private val CC: Array[Double] = Array.tabulate(64)(i => C(i % 8) * C(i / 8))
 
   /** Forward DCT of a level-shifted 8×8 block (spec A.3.3). */
   private def fdct(block: Array[Double]): Array[Double] = {
@@ -243,7 +274,7 @@ object JpegCodec {
         while (y < 8) {
           var x = 0
           while (x < 8) {
-            s += block(y * 8 + x) * CosT(x)(u) * CosT(y)(v)
+            s += block(y * 8 + x) * Cos(x * 8 + u) * Cos(y * 8 + v)
             x += 1
           }
           y += 1
@@ -252,31 +283,6 @@ object JpegCodec {
         v += 1
       }
       u += 1
-    }
-    out
-  }
-
-  /** Inverse DCT (spec A.3.3). */
-  private def idct(coef: Array[Double]): Array[Double] = {
-    val out = new Array[Double](64)
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var s = 0.0
-        var v = 0
-        while (v < 8) {
-          var u = 0
-          while (u < 8) {
-            s += C(u) * C(v) * coef(v * 8 + u) * CosT(x)(u) * CosT(y)(v)
-            u += 1
-          }
-          v += 1
-        }
-        out(y * 8 + x) = 0.25 * s
-        x += 1
-      }
-      y += 1
     }
     out
   }
@@ -307,38 +313,67 @@ object JpegCodec {
       if (nBits > 0) { acc = (acc << (8 - nBits)) | ((1 << (8 - nBits)) - 1); nBits = 8; flushByte() }
   }
 
+  /** Reads one restart segment, `data(from until until)`, through a
+    * 64-bit buffer whose low `nBits` bits are the unread ones. */
   private final class BitReader(data: Array[Byte]) {
     private var pos = 0
-    private var acc = 0
+    private var end = 0
+    private var acc = 0L
     private var nBits = 0
+    def reset(from: Int, until: Int): Unit = {
+      pos = from; end = until; acc = 0L; nBits = 0
+    }
+    /** top the buffer up to more than 56 bits, or to the segment's end */
+    private def fill(): Unit =
+      while (nBits <= 56 && pos < end) {
+        acc = (acc << 8) | (data(pos) & 0xff)
+        pos += 1
+        nBits += 8
+      }
     def bit(): Int = {
       if (nBits == 0) {
-        require(pos < data.length, "truncated JPEG scan data")
-        acc = data(pos) & 0xff
-        pos += 1
-        nBits = 8
+        require(pos < end, "truncated JPEG scan data")
+        fill()
       }
       nBits -= 1
-      (acc >> nBits) & 1
+      ((acc >>> nBits) & 1).toInt
     }
     def receive(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** DECODE (spec §F.2.2.3): one Huffman symbol, code bit by code bit
-      * against the table's per-length maxcode. */
-    def decode(t: DecodeTable): Int = {
-      var code = bit()
-      var l = 1
-      while (l < 16 && (t.maxCode(l) == -1 || code > t.maxCode(l))) {
-        code = (code << 1) | bit()
-        l += 1
+      if (nBits < n) {
+        fill()
+        require(nBits >= n, "truncated JPEG scan data")
       }
-      require(t.maxCode(l) != -1 && code <= t.maxCode(l),
-        "invalid JPEG Huffman code")
-      t.value(l, code)
+      nBits -= n
+      ((acc >>> nBits) & ((1L << n) - 1)).toInt
+    }
+    /** DECODE (spec §F.2.2.3): one Huffman symbol, read from a peek at
+      * the next 16 bits (zero-padded past the segment's end).  With at
+      * least [[LookBits]] real bits, a code that short is one
+      * lookahead-table read; otherwise DECODE's per-length maxcode search
+      * runs over the peek, and a code that needs bits the segment does not
+      * have is truncated — the same outcome, and the same message, as
+      * reading the code bit by bit. */
+    def decode(t: DecodeTable): Int = {
+      if (nBits < 16) fill()
+      val real = math.min(nBits, 16)
+      val peek = (if (nBits >= 16) acc >>> (nBits - 16)
+        else acc << (16 - nBits)).toInt & 0xffff
+      val hit = if (real >= LookBits) t.look(peek >>> (16 - LookBits)) else 0
+      if (hit != 0) {
+        nBits -= hit >> 8
+        hit & 0xff
+      } else {
+        var l = 1
+        while (l < 16 &&
+            (t.maxCode(l) == -1 || (peek >>> (16 - l)) > t.maxCode(l)))
+          l += 1
+        require(l <= real, "truncated JPEG scan data")
+        val code = peek >>> (16 - l)
+        require(t.maxCode(l) != -1 && code <= t.maxCode(l),
+          "invalid JPEG Huffman code")
+        nBits -= l
+        t.value(l, code)
+      }
     }
   }
 
@@ -351,17 +386,21 @@ object JpegCodec {
 
   // ---- BT.601 full-range YCbCr (the JFIF convention) ----
   private def clamp255(v: Double): Int =
-    math.max(0, math.min(255, math.round(v).toInt))
+    if (v >= 0.5 && v < 254.5) {
+      // Math.round(v) = ⌊v + ½⌋ (exact), here in 1..254.  For v ≥ ½ the
+      // double sum v + 0.5 rounds only when it reaches the next binade,
+      // which it overshoots by less than ½, so it never rounds onto an
+      // integer and truncating it gives the same ⌊v + ½⌋.
+      (v + 0.5).toInt
+    } else {
+      val r = java.lang.Math.round(v).toInt
+      if (r < 0) 0 else if (r > 255) 255 else r
+    }
 
   private def rgbToYcc(r: Int, g: Int, b: Int): (Int, Int, Int) = (
     clamp255(0.299 * r + 0.587 * g + 0.114 * b),
     clamp255(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0),
     clamp255(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0))
-
-  private def yccToRgb(y: Int, cb: Int, cr: Int): (Int, Int, Int) = (
-    clamp255(y + 1.402 * (cr - 128)),
-    clamp255(y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)),
-    clamp255(y + 1.772 * (cb - 128)))
 
   /** A frame's block geometry (spec §A.2), shared by encoder and decoder:
     * per component, the MCU-PADDED grid (mcus × sampling factors — what an
@@ -1111,6 +1150,7 @@ object JpegCodec {
     var coefs: Array[Array[Int]] = null
     val quant = new Array[Array[Int]](4)
     val huff = mutable.Map.empty[(Int, Int), DecodeTable]
+    var scanData: ScanData = null
     var restartInterval = 0
     var scans = 0
     def u16(off: Int): Int = {
@@ -1265,11 +1305,13 @@ object JpegCodec {
           val dcTs = if (ss == 0 && ah == 0) tt.map(t => table(0, t >> 4))
             else null
           val acTs = if (se > 0) tt.map(t => table(1, t & 0x0f)) else null
-          val (segs, next, after) = unstuffScan(b, p + len)
+          if (scanData == null) scanData = new ScanData(b.length)
+          val after = scanData.unstuff(b, p + len)
+          val next = scanData.marker
           require(next == 0xd9 || (progressive &&
             (next == 0xda || next == 0xc4 || next == 0xdb)),
             f"unexpected marker 0x$next%02x after a JPEG scan")
-          decodeScan(segs, grid, coefs, cis, dcTs, acTs, ss, se, ah, al,
+          decodeScan(scanData, grid, coefs, cis, dcTs, acTs, ss, se, ah, al,
             restartInterval, progressive)
           scans += 1
           p = after - 2 // hand the terminating marker back to the walk
@@ -1286,34 +1328,49 @@ object JpegCodec {
 
   def decode(b: Array[Byte]): ImageCodec.Raster = decode(b, false)
 
-  /** The entropy unstuffer (spec §B.1.1.5): the bytes from `start` to
-    * the next marker other than RSTn, FF00 → FF, split at each RSTn into
-    * restart segments whose markers must cycle D0..D7 in order
-    * (§B.2.1.2).  Returns (segments, the marker, position after it). */
-  private def unstuffScan(b: Array[Byte],
-      start: Int): (Array[Array[Byte]], Int, Int) = {
-    val segs = mutable.ArrayBuffer.empty[Array[Byte]]
-    var ent = new java.io.ByteArrayOutputStream()
-    var q = start
-    while (true) {
-      require(q < b.length, "truncated JPEG scan (no terminating marker)")
-      val v = b(q) & 0xff
-      if (v != 0xff) { ent.write(v); q += 1 }
-      else {
-        require(q + 1 < b.length, "truncated JPEG scan (dangling FF)")
-        val nxt = b(q + 1) & 0xff
-        if (nxt == 0x00) { ent.write(0xff); q += 2 } // stuffed data byte
+  /** One scan's entropy-coded data, unstuffed into one buffer that every
+    * scan of a decode reuses (a scan's data never outgrows the stream
+    * that holds it).  Restart segment `i` is `bytes(segStart(i) until
+    * segEnd(i))`. */
+  private final class ScanData(capacity: Int) {
+    val bytes = new Array[Byte](capacity)
+    private var ends = new Array[Int](8)
+    /** restart segments in the last scan */
+    var segs = 0
+    /** the marker that ended the last scan */
+    var marker = 0
+    def segStart(i: Int): Int = if (i == 0) 0 else ends(i - 1)
+    def segEnd(i: Int): Int = ends(i)
+
+    /** The entropy unstuffer (spec §B.1.1.5): the bytes from `start` to
+      * the next marker other than RSTn, FF00 → FF, split at each RSTn
+      * into restart segments whose markers must cycle D0..D7 in order
+      * (§B.2.1.2).  Returns the position after the terminating marker. */
+    def unstuff(b: Array[Byte], start: Int): Int = {
+      segs = 0
+      var n = 0
+      var q = start
+      while (true) {
+        require(q < b.length, "truncated JPEG scan (no terminating marker)")
+        val v = b(q)
+        if (v != -1) { bytes(n) = v; n += 1; q += 1 } // not 0xFF
         else {
-          segs += ent.toByteArray
-          if (nxt < 0xd0 || nxt > 0xd7) return (segs.toArray, nxt, q + 2)
-          require(nxt - 0xd0 == (segs.length - 1) % 8,
-            s"restart marker out of sequence at segment ${segs.length}")
-          ent = new java.io.ByteArrayOutputStream()
-          q += 2
+          require(q + 1 < b.length, "truncated JPEG scan (dangling FF)")
+          val nxt = b(q + 1) & 0xff
+          if (nxt == 0x00) { bytes(n) = v; n += 1; q += 2 } // stuffed data byte
+          else {
+            if (segs == ends.length) ends = java.util.Arrays.copyOf(ends, 2 * segs)
+            ends(segs) = n
+            segs += 1
+            if (nxt < 0xd0 || nxt > 0xd7) { marker = nxt; return q + 2 }
+            require(nxt - 0xd0 == (segs - 1) % 8,
+              s"restart marker out of sequence at segment $segs")
+            q += 2
+          }
         }
       }
+      throw new IllegalStateException("unreachable")
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Entropy-decode one scan into the frame's coefficient buffers: per
@@ -1323,18 +1380,18 @@ object JpegCodec {
     * allows only the plain EOB), correction bits and newly-significant
     * coefficients in a refinement (spec §F.2.2, §G.1.2).  First scans
     * store coefficients scaled by 2^Al. */
-  private def decodeScan(segs: Array[Array[Byte]], grid: Grid,
+  private def decodeScan(sd: ScanData, grid: Grid,
       coefs: Array[Array[Int]], cis: Array[Int], dcTs: Array[DecodeTable],
       acTs: Array[DecodeTable], ss: Int, se: Int, ah: Int, al: Int,
       restartInterval: Int, progressive: Boolean): Unit = {
     if (restartInterval == 0)
-      require(segs.length == 1, "restart markers present but DRI said none")
+      require(sd.segs == 1, "restart markers present but DRI said none")
     else {
       val expected = (grid.units(cis) + restartInterval - 1) / restartInterval
-      require(segs.length == expected,
-        s"restart segment count ${segs.length} != expected $expected")
+      require(sd.segs == expected,
+        s"restart segment count ${sd.segs} != expected $expected")
     }
-    var br: BitReader = null
+    val br = new BitReader(sd.bytes)
     val prevDc = new Array[Int](cis.length)
     var eobrun = 0
     val p1 = 1 << al
@@ -1348,8 +1405,8 @@ object JpegCodec {
     grid.visit(cis, u =>
       if (u == 0 || (restartInterval > 0 && u % restartInterval == 0)) {
         // a restart segment: fresh bit stream, DC predictors reset
-        br = new BitReader(segs(if (restartInterval == 0) 0
-          else u / restartInterval))
+        val seg = if (restartInterval == 0) 0 else u / restartInterval
+        br.reset(sd.segStart(seg), sd.segEnd(seg))
         java.util.Arrays.fill(prevDc, 0)
       }) { (j, bi) =>
       val c = coefs(cis(j))
@@ -1441,64 +1498,139 @@ object JpegCodec {
     require(eobrun == 0, "EOBRUN past the last block")
   }
 
-  /** The coefficient→raster back end, once per image: per component
-    * dequantize + [[idct]] + level shift into its PADDED plane, then
-    * nearest upsampling at assembly (component sample (x·h/hMax,
-    * y·v/vMax) — the JFIF default for subsampled chroma) and BT.601
-    * colour conversion. */
+  /** The coefficient→raster back end, once per image.
+    *
+    * Per block: dequantize, inverse-transform, level shift and clamp into
+    * the component's PADDED plane.  The IDCT is the direct form of spec
+    * A.3.3 — pixel (x, y) is 0.25 · Σ over v, then u, of
+    * C(u)·C(v)·q(v, u)·Cos(x, u)·Cos(y, v), evaluated left to right — made
+    * sparse and coefficient-major: the block's nonzero coefficients are
+    * gathered in ascending natural order (v·8 + u), each as its row
+    * amp·Cos(x, u) for x = 0..7 with amp = C(u)·C(v)·q, and each pixel
+    * then sums row(x)·Cos(y, v) over the gathered terms in that order.
+    * So every pixel adds the same nonzero products in the same order as
+    * the direct form.  A skipped term is a product with a zero
+    * coefficient, a signed zero, and adding one to a sum that is nonzero
+    * or +0.0 (a sum that starts at +0.0 never becomes −0.0) leaves it as
+    * it was, so every pixel is bit-identical to the direct form's.
+    *
+    * Then nearest upsampling at assembly (component sample (x·h/hMax,
+    * y·v/vMax), through per-component column and row offsets computed
+    * once — the JFIF default for subsampled chroma) and BT.601 colour
+    * conversion straight into the raster. */
   private def raster(grid: Grid, coefs: Array[Array[Int]],
       qts: Array[Array[Int]]): ImageCodec.Raster = {
     val nComp = coefs.length
+    val idct = new SparseIdct
     val planeW = grid.padW.map(_ * 8)
-    val planes = Array.tabulate(nComp)(ci =>
-      new Array[Int](planeW(ci) * grid.padH(ci) * 8))
-    val qcoef = new Array[Double](64)
-    var ci = 0
-    while (ci < nComp) {
-      val c = coefs(ci)
-      val qt = qts(ci)
+    val planes = Array.tabulate(nComp) { ci =>
+      val pw = planeW(ci)
+      val plane = new Array[Int](pw * grid.padH(ci) * 8)
       var bi = 0
       while (bi < grid.padW(ci) * grid.padH(ci)) {
-        var i = 0
-        while (i < 64) { qcoef(i) = c(bi * 64 + i).toDouble * qt(i); i += 1 }
-        val px = idct(qcoef)
-        val x0 = bi % grid.padW(ci) * 8
-        val y0 = bi / grid.padW(ci) * 8
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            planes(ci)((y0 + y) * planeW(ci) + (x0 + x)) =
-              clamp255(px(y * 8 + x) + 128.0)
-            x += 1
-          }
-          y += 1
-        }
+        idct.block(coefs(ci), bi * 64, qts(ci), plane,
+          bi / grid.padW(ci) * 8 * pw + bi % grid.padW(ci) * 8, pw)
         bi += 1
       }
-      ci += 1
+      plane
     }
-    def sample(ci: Int, x: Int, y: Int): Int =
-      planes(ci)(y * grid.vs(ci) / grid.vMax * planeW(ci) +
-        x * grid.hs(ci) / grid.hMax)
     val w = grid.w
-    val luma = new Array[Int](w * grid.h)
+    val h = grid.h
+    def offsets(n: Int)(f: Int => Int): Array[Int] = {
+      val a = new Array[Int](n)
+      var i = 0
+      while (i < n) { a(i) = f(i); i += 1 }
+      a
+    }
+    val colOff = Array.tabulate(nComp)(ci =>
+      offsets(w)(x => x * grid.hs(ci) / grid.hMax))
+    val rowOff = Array.tabulate(nComp)(ci =>
+      offsets(h)(y => y * grid.vs(ci) / grid.vMax * planeW(ci)))
+    val luma = new Array[Int](w * h)
     var y = 0
-    while (y < grid.h) {
-      var x = 0
-      while (x < w) {
-        luma(y * w + x) =
-          if (nComp == 1) 3 * sample(0, x, y)
-          else {
-            val (r, g, bb) = yccToRgb(sample(0, x, y), sample(1, x, y),
-              sample(2, x, y))
-            r + g + bb
-          }
-        x += 1
+    while (y < h) {
+      val o = y * w
+      if (nComp == 1) {
+        val p0 = planes(0); val r0 = rowOff(0)(y); val c0 = colOff(0)
+        var x = 0
+        while (x < w) { luma(o + x) = 3 * p0(r0 + c0(x)); x += 1 }
+      } else {
+        val p0 = planes(0); val r0 = rowOff(0)(y); val c0 = colOff(0)
+        val p1 = planes(1); val r1 = rowOff(1)(y); val c1 = colOff(1)
+        val p2 = planes(2); val r2 = rowOff(2)(y); val c2 = colOff(2)
+        var x = 0
+        while (x < w) {
+          val yy = p0(r0 + c0(x))
+          val cb = p1(r1 + c1(x))
+          val cr = p2(r2 + c2(x))
+          luma(o + x) = clamp255(yy + 1.402 * (cr - 128)) +
+            clamp255(yy - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)) +
+            clamp255(yy + 1.772 * (cb - 128))
+          x += 1
+        }
       }
       y += 1
     }
-    ImageCodec.Raster(w, grid.h, luma)
+    ImageCodec.Raster(w, h, luma)
+  }
+
+  /** The IDCT of [[raster]], one block at a time over reused buffers:
+    * term j of the block's gathered nonzero coefficients has its row
+    * amp·Cos(x, u) at rows(j·8 + x) and its v at vOf(j). */
+  private final class SparseIdct {
+    private val rows = new Array[Double](64 * 8)
+    private val vOf = new Array[Int](64)
+
+    /** Dequantize and inverse-transform the block at `c(base until base +
+      * 64)` with quantization table `qt`, then level shift and clamp it
+      * into `plane` at offset `p0`, row stride `pw`. */
+    def block(c: Array[Int], base: Int, qt: Array[Int], plane: Array[Int],
+        p0: Int, pw: Int): Unit = {
+      val cos = Cos
+      var n = 0
+      var i = 0
+      while (i < 64) {
+        val k = c(base + i)
+        if (k != 0) {
+          val u = i & 7
+          val amp = CC(i) * (k.toDouble * qt(i))
+          val t = n * 8
+          rows(t) = amp * cos(u); rows(t + 1) = amp * cos(8 + u)
+          rows(t + 2) = amp * cos(16 + u); rows(t + 3) = amp * cos(24 + u)
+          rows(t + 4) = amp * cos(32 + u); rows(t + 5) = amp * cos(40 + u)
+          rows(t + 6) = amp * cos(48 + u); rows(t + 7) = amp * cos(56 + u)
+          vOf(n) = i >> 3
+          n += 1
+        }
+        i += 1
+      }
+      var p = p0
+      var o = 0
+      while (o < 64) { // o = y·8
+        var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+        var s4 = 0.0; var s5 = 0.0; var s6 = 0.0; var s7 = 0.0
+        var j = 0
+        while (j < n) {
+          val cy = cos(o + vOf(j))
+          val t = j * 8
+          s0 += rows(t) * cy; s1 += rows(t + 1) * cy
+          s2 += rows(t + 2) * cy; s3 += rows(t + 3) * cy
+          s4 += rows(t + 4) * cy; s5 += rows(t + 5) * cy
+          s6 += rows(t + 6) * cy; s7 += rows(t + 7) * cy
+          j += 1
+        }
+        plane(p) = clamp255(0.25 * s0 + 128.0)
+        plane(p + 1) = clamp255(0.25 * s1 + 128.0)
+        plane(p + 2) = clamp255(0.25 * s2 + 128.0)
+        plane(p + 3) = clamp255(0.25 * s3 + 128.0)
+        plane(p + 4) = clamp255(0.25 * s4 + 128.0)
+        plane(p + 5) = clamp255(0.25 * s5 + 128.0)
+        plane(p + 6) = clamp255(0.25 * s6 + 128.0)
+        plane(p + 7) = clamp255(0.25 * s7 + 128.0)
+        p += pw
+        o += 8
+      }
+    }
   }
 
   /** Worst-case per-pixel reconstruction error bound for [[encode]] at

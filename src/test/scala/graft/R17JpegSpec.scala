@@ -721,4 +721,104 @@ class R17JpegSpec extends AnyFunSuite {
         JpegCodec.decode(b, mjpegDefaultTables = strip))))
     })
   }
+
+  // ---- dense-AC raster pins ---------------------------------------------
+  // The corpus above is smooth gradients at quality ≤ 90.  These pins add
+  // the `media_neardup` shape (textured 96×96 at quality 85) and
+  // JpegCorpus.noise at quality 100, which codes Huffman symbols longer
+  // than the decoder's 9-bit lookahead and magnitudes of 10–11 bits, with
+  // restart intervals 1 and 7 so that the lookahead meets many segment
+  // ends.  Digests are sha256 over the decoded rasters, as above.
+  private val DenseDims = Seq((96, 96), (37, 29))
+  private val denseEncoders: Seq[(String, Seq[Array[Byte]])] = {
+    val tex = (1 to 3).map(s => JpegCorpus.textured(s))
+    def noisy(enc: (Int, Int, Long) => Array[Byte]): Seq[Array[Byte]] =
+      for ((w, h) <- DenseDims; s <- Seq(11L, 12L)) yield enc(w, h, s)
+    Seq(
+      "textured/encodeColor420/q85" ->
+        tex.map(JpegCodec.encodeColor420(96, 96, _, 85)),
+      "textured/encodeProgressiveColor420/q85" ->
+        tex.map(JpegCodec.encodeProgressiveColor420(96, 96, _, 85)),
+      "noise/encode/q100" -> noisy((w, h, s) =>
+        JpegCodec.encode(w, h, JpegCorpus.noiseGray(s, w, h), 100)),
+      "noise/encodeColor/q100" -> noisy((w, h, s) =>
+        JpegCodec.encodeColor(w, h, JpegCorpus.noise(s, w, h), 100)),
+      "noise/encodeColor420/q100" -> noisy((w, h, s) =>
+        JpegCodec.encodeColor420(w, h, JpegCorpus.noise(s, w, h), 100))) ++
+    (for (rst <- Seq(1, 7)) yield Seq(
+      s"noise/encode/q100/rst$rst" -> noisy((w, h, s) =>
+        JpegCodec.encode(w, h, JpegCorpus.noiseGray(s, w, h), 100, rst)),
+      s"noise/encodeColor/q100/rst$rst" -> noisy((w, h, s) =>
+        JpegCodec.encodeColor(w, h, JpegCorpus.noise(s, w, h), 100, rst)),
+      s"noise/encodeColor420/q100/rst$rst" -> noisy((w, h, s) =>
+        JpegCodec.encodeColor420(w, h, JpegCorpus.noise(s, w, h), 100, rst))))
+      .flatten :+
+    ("stripDht/noise/encodeColor420/q100" -> noisy((w, h, s) =>
+      JpegCodec.stripDht(
+        JpegCodec.encodeColor420(w, h, JpegCorpus.noise(s, w, h), 100))))
+  }
+
+  private val PinnedDenseRasters: Map[String, String] = Map(
+    "textured/encodeColor420/q85" ->
+      "f4ba8ea0ac580112b387420845adbdaec5c6e2cb4b406607cacfceaec1569b85",
+    "textured/encodeProgressiveColor420/q85" ->
+      "f4ba8ea0ac580112b387420845adbdaec5c6e2cb4b406607cacfceaec1569b85",
+    "noise/encode/q100" ->
+      "a0c67548fa692ef13658c2cee00eb922cac8d6083d1636ef887d348ce762c8df",
+    "noise/encodeColor/q100" ->
+      "e713966c6ca7c815afaecf9698d7a46431e76bb7e13ba74e4bf5cdc11aefe534",
+    "noise/encodeColor420/q100" ->
+      "880bbdf58fbce3ef4241ed32aab782c61686cc45ed0b2eb670e55ddbace2d4c9",
+    "noise/encode/q100/rst1" ->
+      "a0c67548fa692ef13658c2cee00eb922cac8d6083d1636ef887d348ce762c8df",
+    "noise/encodeColor/q100/rst1" ->
+      "e713966c6ca7c815afaecf9698d7a46431e76bb7e13ba74e4bf5cdc11aefe534",
+    "noise/encodeColor420/q100/rst1" ->
+      "880bbdf58fbce3ef4241ed32aab782c61686cc45ed0b2eb670e55ddbace2d4c9",
+    "noise/encode/q100/rst7" ->
+      "a0c67548fa692ef13658c2cee00eb922cac8d6083d1636ef887d348ce762c8df",
+    "noise/encodeColor/q100/rst7" ->
+      "e713966c6ca7c815afaecf9698d7a46431e76bb7e13ba74e4bf5cdc11aefe534",
+    "noise/encodeColor420/q100/rst7" ->
+      "880bbdf58fbce3ef4241ed32aab782c61686cc45ed0b2eb670e55ddbace2d4c9",
+    "stripDht/noise/encodeColor420/q100" ->
+      "880bbdf58fbce3ef4241ed32aab782c61686cc45ed0b2eb670e55ddbace2d4c9")
+
+  test("dense-AC rasters are pinned: texture, q100 noise, restarts, no tables") {
+    checkPins("dense raster", PinnedDenseRasters, denseEncoders.map {
+      case (n, frames) =>
+        val strip = n.startsWith("stripDht/")
+        n -> sha256(frames.map(b => rasterBytes(
+          JpegCodec.decode(b, mjpegDefaultTables = strip))))
+    })
+    // truncation at every prefix of a noise frame with a restart marker
+    // after every MCU stays loud
+    val ok = JpegCodec.encodeColor420(16, 16, JpegCorpus.noise(13, 16, 16),
+      100, restartInterval = 1)
+    for (n <- 2 until ok.length) {
+      val ex = intercept[IllegalArgumentException] {
+        JpegCodec.decode(java.util.Arrays.copyOf(ok, n))
+      }
+      assert(ex.getMessage != null)
+    }
+  }
+
+  test("a 96×96 decode allocates at most 400 KB (4:2:0 and progressive)") {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val rgb = JpegCorpus.textured(5)
+    for ((kind, frame) <- Seq(
+        "4:2:0" -> JpegCodec.encodeColor420(96, 96, rgb, 85),
+        "progressive 4:2:0" -> JpegCodec.encodeProgressiveColor420(96, 96, rgb, 85))) {
+      for (_ <- 1 to 50) JpegCodec.decode(frame)
+      val perDecode = (1 to 5).map { _ =>
+        val a0 = mx.getThreadAllocatedBytes(tid)
+        JpegCodec.decode(frame)
+        mx.getThreadAllocatedBytes(tid) - a0
+      }
+      assert(perDecode.forall(_ <= 400 * 1024),
+        s"$kind decode allocated ${perDecode.mkString(", ")} bytes")
+    }
+  }
 }
