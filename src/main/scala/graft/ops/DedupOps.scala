@@ -2192,10 +2192,15 @@ object DedupOps {
       .select(col("vec_id"), col("pos").as("band"), col("col").as("key"))
   }
 
+  /** The stored index parameters.  The seed is stored as an `Int`, so a
+    * seed outside `Int` range fails: truncated, it would match a different
+    * seed on read while the band keys hash the full `Long`. */
   private def embParams(dims: Int, bands: Int, planesPerBand: Int,
-      seed: Long): Seq[(String, Int)] =
+      seed: Long): Seq[(String, Int)] = {
+    require(seed.isValidInt, s"embedding index seed $seed is outside Int range")
     Seq("dims" -> dims, "bands" -> bands, "planes" -> planesPerBand,
       "seed" -> seed.toInt)
+  }
 
   /** Persist an embedding corpus as the SEMANTIC tier of the incremental-
     * dedup ladder: `dir/bands` holds the SRP band table (the candidate

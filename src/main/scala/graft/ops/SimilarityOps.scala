@@ -33,6 +33,52 @@ object SimilarityOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(norm2(a)) * sqrt(norm2(b)))
 
+  /** The `k` first rows of each `query_id` of `scored` in `order` (by
+    * default 6-dp cosine descending, neighbor id ascending), with their
+    * 0-based position as `rankCol` — the rank tail of every top-k search. */
+  private[ops] def topKPerQuery(scored: DataFrame, k: Int,
+      order: Seq[Column] = Seq(col("cos").desc, col("neighbor_id")),
+      rankCol: String = "rank"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id")
+      .orderBy(order: _*)
+    scored.withColumn(rankCol, row_number().over(w) - 1)
+      .where(col(rankCol) < k)
+  }
+
+  /** Each query's `nprobe` nearest centroids as a window over the queries
+    * × broadcast centroids: 6-dp cosine descending, lowest id on ties.
+    * `q` is (query_id, qv), `ct` (centroid_id, ctv); output (query_id, qv,
+    * centroid_id). */
+  private def windowProbes(q: DataFrame, ct: DataFrame,
+      nprobe: Int): DataFrame = {
+    val wq = org.apache.spark.sql.expressions.Window
+      .partitionBy("query_id")
+      .orderBy(col("ccos").desc, col("centroid_id"))
+    q.crossJoin(broadcast(ct))
+      .select(col("query_id"), col("qv"), col("centroid_id"),
+        round(cosine(col("qv"), col("ctv")), 6).as("ccos"))
+      .withColumn("rn", row_number().over(wq))
+      .where(col("rn") <= nprobe)
+      .select("query_id", "qv", "centroid_id")
+  }
+
+  /** Each vec_id's best centroid in `scored` (vec_id, centroid_id, score):
+    * the highest `score` when `highest`, else the lowest, ties to the
+    * lowest centroid id.  An argmax as a hash aggregate, not a window:
+    * max_by over the lexicographic (±score, −centroid_id) key equals rank
+    * 1 of (score, centroid_id ASC), with map-side combine and no sort
+    * exchange.  Output: (vec_id, centroid_id, score). */
+  private def bestCentroid(scored: DataFrame, score: String,
+      highest: Boolean): DataFrame = {
+    val key = if (highest) col(score) else negate(col(score))
+    scored.groupBy("vec_id")
+      .agg(max_by(struct(col("centroid_id"), col(score)),
+        struct(key, negate(col("centroid_id")))).as("best"))
+      .select(col("vec_id"), col("best.centroid_id").as("centroid_id"),
+        col(s"best.$score").as(score))
+  }
+
   /** Exact top-k cosine neighbours for each query vector.
     * Output: (query_id, neighbor_id, cos, rank).  Ranking is by cosine
     * rounded to 6 decimals with id tiebreak — deterministic under ties. */
@@ -43,12 +89,17 @@ object SimilarityOps {
     val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
   }
+
+  /** NULL-label guard shared by both hard-negative miners: `=!=` on a
+    * NULL label evaluates to NULL and the join would silently DROP the
+    * row — the repo's fail-loud contract (hdrHistogram, packBins*) says
+    * raise instead.  `raise_error` is NullType, so the `when` keeps the
+    * label's own type. */
+  private def guardedLabel(label: Column, who: String): Column =
+    when(label.isNull, raise_error(lit(s"$who: NULL label")))
+      .otherwise(label)
 
   /** Hard-negative mining for contrastive / embedding training: for each
     * query, the top-k highest-cosine corpus vectors whose `label` DIFFERS
@@ -66,15 +117,6 @@ object SimilarityOps {
     * side, one corpus scan, window keyed by query_id.  For corpus-sized
     * query sets compose the same filter-then-rank with [[knnJoinIvf]]'s
     * candidate generation instead (probe the index, filter label, rank). */
-  /** NULL-label guard shared by both hard-negative miners: `=!=` on a
-    * NULL label evaluates to NULL and the join would silently DROP the
-    * row — the repo's fail-loud contract (hdrHistogram, packBins*) says
-    * raise instead.  `raise_error` is NullType, so the `when` keeps the
-    * label's own type. */
-  private def guardedLabel(label: Column, who: String): Column =
-    when(label.isNull, raise_error(lit(s"$who: NULL label")))
-      .otherwise(label)
-
   def hardNegatives(corpus: DataFrame, vec: Column, id: Column,
       label: Column, queries: DataFrame, qvec: Column, qid: Column,
       qlabel: Column, k: Int): DataFrame = {
@@ -88,11 +130,7 @@ object SimilarityOps {
           col("__nl") =!= col("__ql"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
       // rank as long: schema parity with [[hardNegativesIvf]], so the
       // exact and IVF paths union/substitute without implicit coercion
       .select(col("query_id"), col("neighbor_id"), col("cos"),
@@ -129,11 +167,7 @@ object SimilarityOps {
         col("__nl") =!= col("__ql"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("cos"),
         col("rank").cast("long").as("rank"))
   }
@@ -167,23 +201,23 @@ object SimilarityOps {
     }
   }
 
-  /** Random-hyperplane LSH bucket id in [0, 2^planes): bit j is the sign of
-    * the projection of the vector onto md5-derived hyperplane j.  The
-    * hyperplanes are literal constant arrays (computed once on the driver,
-    * not per row) and each projection is the codegen'd
-    * [[graft.functions.DotProduct]] — same fold order as the SQL oracle. */
   /** Signed projection of `vec` onto md5-derived hyperplane `j` — the
-    * shared SRP primitive behind [[lshBucket]] and the banded variant
-    * ([[DedupOps.embeddingPairsBanded]]). */
+    * shared SRP primitive behind [[lshBucket]], the random projections
+    * ([[rpProject]], [[rpProjected]]) and the banded variant
+    * ([[DedupOps.embeddingPairsBanded]]).  The hyperplane is a literal
+    * constant array (computed once on the driver, not per row) and the
+    * projection is the codegen'd [[graft.functions.DotProduct]] — same
+    * fold order as the SQL oracle. */
   private[ops] def planeProjection(vec: Column, dims: Int, j: Int,
       seed: Long): Column =
     graft.functions.VecKernels.dot(vec, typedLit(planeSigns(seed, j, dims)))
 
+  /** Random-hyperplane LSH bucket id in [0, 2^planes): bit j is the sign of
+    * the projection of the vector onto md5-derived hyperplane j
+    * ([[planeProjection]]). */
   def lshBucket(vec: Column, dims: Int, planes: Int, seed: Long): Column =
     (0 until planes).map { j =>
-      val proj = graft.functions.VecKernels.dot(vec,
-        typedLit(planeSigns(seed, j, dims)))
-      when(proj > 0.0, lit(1 << j)).otherwise(0)
+      when(planeProjection(vec, dims, j, seed) > 0.0, lit(1 << j)).otherwise(0)
     }.reduce(_ + _)
 
   /** (id, bucket) for the whole corpus. */
@@ -203,16 +237,7 @@ object SimilarityOps {
     val scored = c.crossJoin(broadcast(ct))
       .select(col("vec_id"), col("centroid_id"),
         round(cosine(col("v"), col("cv")), 6).as("cos"))
-    // argmax as a hash aggregate, not a window: max_by over the
-    // lexicographic (cos, -centroid_id) key = highest cosine, lowest id on
-    // ties — identical to rank-1 of (cos DESC, centroid_id ASC), but with
-    // map-side combine and no sort exchange.
-    scored
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("cos")),
-        struct(col("cos"), negate(col("centroid_id")))).as("best"))
-      .select(col("vec_id"), col("best.centroid_id").as("centroid_id"),
-        col("best.cos").as("cos"))
+    bestCentroid(scored, "cos", highest = true)
   }
 
   /** Two-level (coarse → fine) centroid assignment — the O(n·√k) scale
@@ -264,16 +289,11 @@ object SimilarityOps {
     val v2c = ivfAssign(corpus, vec, id, coarseC, cvec, cid)
       .select(col("vec_id"), col("centroid_id").as("coarse_id"))
     // fine scoring against the routed candidates only
-    corpus.select(id.as("vec_id"), vec.as("v"))
+    bestCentroid(corpus.select(id.as("vec_id"), vec.as("v"))
       .join(v2c, "vec_id")
       .join(broadcast(routes), "coarse_id")
       .select(col("vec_id"), col("centroid_id"),
-        round(cosine(col("v"), col("cv")), 6).as("cos"))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("cos")),
-        struct(col("cos"), negate(col("centroid_id")))).as("best"))
-      .select(col("vec_id"), col("best.centroid_id").as("centroid_id"),
-        col("best.cos").as("cos"))
+        round(cosine(col("v"), col("cv")), 6).as("cos")), "cos", highest = true)
   }
 
   /** Euclidean (L2) flat assignment — the metric twin of [[ivfAssign]],
@@ -287,14 +307,10 @@ object SimilarityOps {
     val c = corpus.select(id.as("vec_id"), vec.as("v"))
     val ct = centroids.select(cid.cast("long").as("centroid_id"),
       cvec.as("cv"))
-    c.crossJoin(broadcast(ct))
+    bestCentroid(c.crossJoin(broadcast(ct))
       .select(col("vec_id"), col("centroid_id"),
-        graft.functions.VecKernels.dist2(col("v"), col("cv")).as("d2"))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("d2")),
-        struct(negate(col("d2")), negate(col("centroid_id")))).as("best"))
-      .select(col("vec_id"), col("best.centroid_id").as("centroid_id"),
-        col("best.d2").as("d2"))
+        graft.functions.VecKernels.dist2(col("v"), col("cv")).as("d2")),
+      "d2", highest = false)
   }
 
   /** Learned coarse level for a two-level quantizer: a seeded k-means over
@@ -384,16 +400,11 @@ object SimilarityOps {
     val v2c = l2Assign(corpus, vec, id, co, col("gv"), col("coarse_id"))
       .select(col("vec_id"), col("centroid_id").as("coarse_id"))
     // fine scoring against the routed candidates only (n × ~probe·√k)
-    corpus.select(id.as("vec_id"), vec.as("v"))
+    bestCentroid(corpus.select(id.as("vec_id"), vec.as("v"))
       .join(v2c, "vec_id")
       .join(if (broadcastRoutes) broadcast(routes) else routes, "coarse_id")
       .select(col("vec_id"), col("centroid_id"),
-        d2(col("v"), col("cv")).as("d2"))
-      .groupBy("vec_id")
-      .agg(max_by(struct(col("centroid_id"), col("d2")),
-        struct(negate(col("d2")), negate(col("centroid_id")))).as("best"))
-      .select(col("vec_id"), col("best.centroid_id").as("centroid_id"),
-        col("best.d2").as("d2"))
+        d2(col("v"), col("cv")).as("d2")), "d2", highest = false)
   }
 
   /** Stateless form of [[ivfAssign]]: the centroid set is a driver-held
@@ -438,24 +449,12 @@ object SimilarityOps {
       .join(cells, Seq("neighbor_id"))
     val q = queries.select(qid.as("query_id"), qvec.as("qv"))
     val ct = centroids.select(cid.as("centroid_id"), cvec.as("ctv"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = q.crossJoin(broadcast(ct))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        round(cosine(col("qv"), col("ctv")), 6).as("ccos"))
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
+    val probes = windowProbes(q, ct, nprobe)
     val scored = corpusCells.join(probes, Seq("centroid_id"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
   }
 
   /** Persist an IVF index: the corpus with its coarse-cell assignment,
@@ -506,24 +505,12 @@ object SimilarityOps {
     val corpusCells = spark.read.parquet(indexDir)
     val q = queries.select(qid.as("query_id"), qvec.as("qv"))
     val ct = centroids.select(cid.as("centroid_id"), cvec.as("ctv"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = q.crossJoin(broadcast(ct))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        round(cosine(col("qv"), col("ctv")), 6).as("ccos"))
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
+    val probes = windowProbes(q, ct, nprobe)
     val scored = corpusCells.join(broadcast(probes), Seq("centroid_id"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
   }
 
   /** Squared L2 distance via the codegen'd kernels:
@@ -583,11 +570,7 @@ object SimilarityOps {
       .where(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(round(sum(col("ld")), 6).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adist"), col("vec_id"))
-    appx.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(appx, k, Seq(col("adist"), col("vec_id")))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("adist"), col("rank").cast("long").as("rank"))
   }
@@ -642,11 +625,7 @@ object SimilarityOps {
           .cast("long").as("t6"))
     val appx = terms.groupBy("query_id", "vec_id")
       .agg((sum("t6").cast("double") / lit(1e6)).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adist"), col("vec_id"))
-    appx.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(appx, k, Seq(col("adist"), col("vec_id")))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("adist"), col("rank").cast("long").as("rank"))
   }
@@ -678,15 +657,7 @@ object SimilarityOps {
       k: Int, m: Int, subDim: Int, nprobe: Int = 1): DataFrame = {
     val q = queries.select(qid.as("query_id"), qvec.as("qv"))
     val ct = centroids.select(cid.as("centroid_id"), cvec.as("ctv"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = q.crossJoin(broadcast(ct))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        round(cosine(col("qv"), col("ctv")), 6).as("ccos"))
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
+    val probes = windowProbes(q, ct, nprobe)
     val cb = codebooks.select(col("sub"), col("code_id"), col("cv"))
     val lut = probes.select("query_id", "qv").distinct()
       .crossJoin(broadcast(cb))
@@ -702,11 +673,7 @@ object SimilarityOps {
       .where(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(round(sum(col("ld")), 6).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adist"), col("vec_id"))
-    appx.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(appx, k, Seq(col("adist"), col("vec_id")))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("adist"), col("rank").cast("long").as("rank"))
   }
@@ -751,15 +718,7 @@ object SimilarityOps {
     val cb = spark.read.parquet(s"$indexDir/_graft_codebooks")
     val corpus = spark.read.parquet(indexDir)
     val q = queries.select(qid.as("query_id"), qvec.as("qv"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("ccos").desc, col("centroid_id"))
-    val probes = q.crossJoin(broadcast(ct))
-      .select(col("query_id"), col("qv"), col("centroid_id"),
-        round(cosine(col("qv"), col("ctv")), 6).as("ccos"))
-      .withColumn("rn", row_number().over(wq))
-      .where(col("rn") <= nprobe)
-      .select("query_id", "qv", "centroid_id")
+    val probes = windowProbes(q, ct, nprobe)
     val lut = probes.select("query_id", "qv").distinct()
       .crossJoin(broadcast(cb))
       .select(col("query_id"), col("sub"),
@@ -772,11 +731,7 @@ object SimilarityOps {
       .where(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(round(sum(col("ld")), 6).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adist"), col("vec_id"))
-    appx.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(appx, k, Seq(col("adist"), col("vec_id")))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("adist"), col("rank").cast("long").as("rank"))
   }
@@ -828,10 +783,12 @@ object SimilarityOps {
         col("p.centroid_id").as("centroid_id"))
   }
 
-  /** FLAT IVF probe selection — the shared primitive behind
-    * [[knnJoinIvf]], [[knnJoinIvfIndex]] and [[hardNegativesIvf]] (one
-    * grammar, one oracle mirror: a tie-breaking or rounding change here
-    * changes all three together).  `leftProj` must carry `query_id` and
+  /** FLAT IVF probe selection in per-row form — the shared primitive
+    * behind [[knnJoinIvf]], [[knnJoinIvfIndex]] and [[hardNegativesIvf]]
+    * (a tie-breaking or rounding change here changes all three together);
+    * [[ivfTopK]], [[ivfSearchIndex]], [[ivfPqTopK]] and [[ivfPqSearchIndex]]
+    * select the same probes in window form ([[windowProbes]]), whose plans
+    * and NaN ordering differ.  `leftProj` must carry `query_id` and
     * `qv` (any extra columns ride along); the centroid table collapses to
     * ONE array row and broadcasts, each left row sorts its (0.0 − cos,
     * id) entries locally and keeps `nprobe` — no window, no shuffle on
@@ -917,11 +874,7 @@ object SimilarityOps {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("nv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("cos"),
         col("rank").cast("long").as("rank"))
   }
@@ -959,11 +912,7 @@ object SimilarityOps {
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("cos"),
         col("rank").cast("long").as("rank"))
   }
@@ -983,26 +932,27 @@ object SimilarityOps {
   def rpProject(df: DataFrame, vec: Column, id: Column, dims: Int,
       outDims: Int, seed: Long = 42L): DataFrame = {
     require(outDims > 0 && dims > 0, "dims and outDims must be positive")
-    val scale = 1.0 / math.sqrt(outDims.toDouble)
-    val proj = array((0 until outDims).map { j =>
-      round(graft.functions.VecKernels.dot(vec,
-        typedLit(planeSigns(seed, j, dims))) * lit(scale), 6)
-    }: _*)
+    val proj = rpArray(vec, dims, outDims, seed)
     df.select(id.as("vec_id"), posexplode(proj))
       .select(col("vec_id"), col("pos").cast("long").as("j"),
         col("col").as("val"))
+  }
+
+  /** The `outDims` projections of `vec` onto planes 0 until `outDims`,
+    * each scaled by 1/√outDims and rounded to 6 dp, as one array. */
+  private def rpArray(vec: Column, dims: Int, outDims: Int,
+      seed: Long): Column = {
+    val scale = 1.0 / math.sqrt(outDims.toDouble)
+    array((0 until outDims).map { j =>
+      round(planeProjection(vec, dims, j, seed) * lit(scale), 6)
+    }: _*)
   }
 
   /** [[rpProject]] in packed form: (vec_id, rvec) with `rvec` the
     * projected array — the frame downstream ANN stages consume. */
   def rpProjected(df: DataFrame, vec: Column, id: Column, dims: Int,
       outDims: Int, seed: Long = 42L): DataFrame = {
-    val scale = 1.0 / math.sqrt(outDims.toDouble)
-    val proj = array((0 until outDims).map { j =>
-      round(graft.functions.VecKernels.dot(vec,
-        typedLit(planeSigns(seed, j, dims))) * lit(scale), 6)
-    }: _*)
-    df.select(id.as("vec_id"), proj.as("rvec"))
+    df.select(id.as("vec_id"), rpArray(vec, dims, outDims, seed).as("rvec"))
   }
 
   /** Two-stage coarse-then-rerank ANN: stage 1 ranks in the JL-projected
@@ -1033,11 +983,7 @@ object SimilarityOps {
     val scored = coarse.join(cv, "neighbor_id").join(broadcast(qv), "query_id")
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("__qv"), col("__cv")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
   }
 
   /** Reciprocal-rank fusion (Cormack/Clarke/Buettcher SIGIR'09) of two
@@ -1054,25 +1000,8 @@ object SimilarityOps {
     * deterministic across engines, so the oracle replays fused scores
     * exactly at 6 dp.
     */
-  def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Int = 60): DataFrame = {
-    require(k > 0 && c >= 0, s"k must be > 0 and c >= 0, got k=$k c=$c")
-    val la = a.select(col("query_id"), col("neighbor_id"),
-      col("rank").cast("long").as("rank_a"))
-    val lb = b.select(col("query_id"), col("neighbor_id"),
-      col("rank").cast("long").as("rank_b"))
-    val fused = la.join(lb, Seq("query_id", "neighbor_id"), "full_outer")
-      .select(col("query_id"), col("neighbor_id"),
-        round(
-          coalesce(lit(1.0) / (lit(c.toDouble) + col("rank_a") + lit(1.0)),
-            lit(0.0)) +
-          coalesce(lit(1.0) / (lit(c.toDouble) + col("rank_b") + lit(1.0)),
-            lit(0.0)), 6).as("fused"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("fused").desc, col("neighbor_id"))
-    fused.withColumn("fused_rank", row_number().over(w) - 1)
-      .where(col("fused_rank") < k)
-  }
+  def rrfFuse(a: DataFrame, b: DataFrame, k: Int, c: Int = 60): DataFrame =
+    rrfFuseMany(Seq(a, b), k, c)
 
   /** N-way reciprocal-rank fusion — [[rrfFuse]] generalized to any number
     * of rankers (lexical ⊕ dense ⊕ approximate ⊕ recency…): iterated
@@ -1095,11 +1024,7 @@ object SimilarityOps {
           coalesce(lit(1.0) / (lit(c.toDouble) + col(s"rank_$i") + lit(1.0)),
             lit(0.0)))
         .reduce(_ + _), 6).as("fused"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("fused").desc, col("neighbor_id"))
-    fused.withColumn("fused_rank", row_number().over(w) - 1)
-      .where(col("fused_rank") < k)
+    topKPerQuery(fused, k, Seq(col("fused").desc, col("neighbor_id")), rankCol = "fused_rank")
   }
 
   /** Approximate top-k: exact cosine ranking restricted to each query's LSH
@@ -1112,10 +1037,6 @@ object SimilarityOps {
         col("q.bucket") === col("c.bucket") && col("q.vid") =!= col("c.vid"))
       .select(col("q.vid").as("query_id"), col("c.vid").as("neighbor_id"),
         round(cosine(col("q.v"), col("c.v")), 6).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    topKPerQuery(scored, k)
   }
 }

@@ -785,30 +785,8 @@ object TextOps {
     * Fails loudly on n_tokens NULL, < 1, or > capacity (an oversize doc
     * cannot be packed whole — truncate or route it explicitly upstream). */
   def packBinsShelf(df: DataFrame, nTokens: Column, idCol: Column,
-      capacity: Long): DataFrame = {
-    require(capacity > 0, "capacity must be positive")
-    val n = nTokens.cast("long")
-    val guarded = when(n.isNull,
-        raise_error(lit("packBinsShelf: NULL n_tokens")).cast("long"))
-      .when(n < 1L || n > capacity,
-        raise_error(concat(lit("packBinsShelf: n_tokens out of [1, "),
-          lit(capacity), lit("]: "), n)).cast("long"))
-      .otherwise(n)
-    val base = df.select(idCol.as("doc_id"), guarded.as("n_tokens"))
-      .withColumn("size_class",
-        floor(lit(capacity) / col("n_tokens")).cast("long"))
-    val ranked = graft.core.Ranker.withRank(base, "__gr",
-      col("size_class"), col("doc_id"))
-    // per-class first global rank: ≤ capacity rows — broadcast join
-    val starts = ranked.groupBy("size_class")
-      .agg(min(col("__gr")).as("__start"))
-    ranked.join(broadcast(starts), "size_class")
-      .withColumn("__cr", col("__gr") - col("__start"))
-      .select(col("doc_id"), col("n_tokens"), col("size_class"),
-        floor(col("__cr") / col("size_class")).cast("long")
-          .as("bin_in_class"),
-        pmod(col("__cr"), col("size_class")).cast("long").as("slot"))
-  }
+      capacity: Long): DataFrame =
+    shelfPack(df, None, nTokens, idCol, capacity, "packBinsShelf")
 
   /** [[packBinsShelf]] within groups: packing never mixes documents from
     * different groups into one bin — the per-language / per-source packing
@@ -818,29 +796,69 @@ object TextOps {
     * (|groups| · capacity rows).  Output adds the group column; the global
     * bin key is (grp, size_class, bin_in_class). */
   def packBinsShelfBy(df: DataFrame, group: Column, nTokens: Column,
-      idCol: Column, capacity: Long): DataFrame = {
+      idCol: Column, capacity: Long): DataFrame =
+    shelfPack(df, Some(group), nTokens, idCol, capacity, "packBinsShelfBy")
+
+  /** The one body of [[packBinsShelf]] and, with a `group` (column
+    * `grp`), [[packBinsShelfBy]]: size classes ranked by (grp, class, id),
+    * per-class start ranks broadcast back. */
+  private def shelfPack(df: DataFrame, group: Option[Column],
+      nTokens: Column, idCol: Column, capacity: Long,
+      who: String): DataFrame = {
     require(capacity > 0, "capacity must be positive")
-    val n = nTokens.cast("long")
-    val guarded = when(n.isNull,
-        raise_error(lit("packBinsShelfBy: NULL n_tokens")).cast("long"))
-      .when(n < 1L || n > capacity,
-        raise_error(concat(lit("packBinsShelfBy: n_tokens out of [1, "),
-          lit(capacity), lit("]: "), n)).cast("long"))
-      .otherwise(n)
-    val base = df.select(group.as("grp"), idCol.as("doc_id"),
-        guarded.as("n_tokens"))
+    val classKey = group.map(_ => "grp").toSeq :+ "size_class"
+    val base = df.select(group.map(_.as("grp")).toSeq ++ Seq(
+        idCol.as("doc_id"), packedTokens(nTokens, capacity, who).as("n_tokens")): _*)
       .withColumn("size_class",
         floor(lit(capacity) / col("n_tokens")).cast("long"))
     val ranked = graft.core.Ranker.withRank(base, "__gr",
-      col("grp"), col("size_class"), col("doc_id"))
-    val starts = ranked.groupBy("grp", "size_class")
+      (classKey :+ "doc_id").map(col): _*)
+    // per-class first global rank: ≤ |groups| · capacity rows — broadcast join
+    val starts = ranked.groupBy(classKey.head, classKey.tail: _*)
       .agg(min(col("__gr")).as("__start"))
-    ranked.join(broadcast(starts), Seq("grp", "size_class"))
+    ranked.join(broadcast(starts), classKey)
       .withColumn("__cr", col("__gr") - col("__start"))
-      .select(col("grp"), col("doc_id"), col("n_tokens"), col("size_class"),
+      .select(group.map(_ => col("grp")).toSeq ++ Seq(col("doc_id"),
+        col("n_tokens"), col("size_class"),
         floor(col("__cr") / col("size_class")).cast("long")
           .as("bin_in_class"),
-        pmod(col("__cr"), col("size_class")).cast("long").as("slot"))
+        pmod(col("__cr"), col("size_class")).cast("long").as("slot")): _*)
+  }
+
+  /** `nTokens` as a long that fails loudly, naming `who`, when NULL or
+    * outside [1, capacity] — a document that cannot be packed whole. */
+  private def packedTokens(nTokens: Column, capacity: Long,
+      who: String): Column = {
+    val n = nTokens.cast("long")
+    when(n.isNull, raise_error(lit(s"$who: NULL n_tokens")).cast("long"))
+      .when(n < 1L || n > capacity,
+        raise_error(concat(lit(s"$who: n_tokens out of [1, "),
+          lit(capacity), lit("]: "), n)).cast("long"))
+      .otherwise(n)
+  }
+
+  /** `idCol` as a long that fails loudly, naming `who`, when NULL or
+    * non-numeric: a bad id would otherwise null out the group key and die
+    * as an opaque encoder NPE. */
+  private def packedId(idCol: Column, who: String): Column = {
+    val idL = idCol.cast("long")
+    when(idL.isNull,
+      raise_error(lit(s"$who: NULL or non-numeric doc_id")).cast("long"))
+      .otherwise(idL)
+  }
+
+  /** First-fit decreasing over one group's (id, n_tokens) docs: sorted by
+    * (n_tokens desc, id), each placed in the first bin it fits — (id,
+    * n_tokens, bin). */
+  private def firstFitDecreasing(docs: Array[(Long, Long)],
+      capacity: Long): Iterator[(Long, Long, Long)] = {
+    val fills = scala.collection.mutable.ArrayBuffer.empty[Long]
+    docs.sortBy { case (id, nt) => (-nt, id) }.iterator.map { case (id, nt) =>
+      var b = 0
+      while (b < fills.length && fills(b) + nt > capacity) b += 1
+      if (b == fills.length) fills += nt else fills(b) += nt
+      (id, nt, b.toLong)
+    }
   }
 
   /** Boundary-respecting sequence packing, first-fit-decreasing variant —
@@ -863,34 +881,15 @@ object TextOps {
     require(numGroups > 0, "numGroups must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    val n = nTokens.cast("long")
-    val guarded = when(n.isNull,
-        raise_error(lit("packBinsFfd: NULL n_tokens")).cast("long"))
-      .when(n < 1L || n > capacity,
-        raise_error(concat(lit("packBinsFfd: n_tokens out of [1, "),
-          lit(capacity), lit("]: "), n)).cast("long"))
-      .otherwise(n)
-    // the id cast must fail as loudly as the token guard: a non-numeric
-    // id would otherwise null out grp/doc_id and die as an opaque
-    // encoder NPE
-    val idL = idCol.cast("long")
-    val idG = when(idL.isNull,
-      raise_error(lit("packBinsFfd: NULL or non-numeric doc_id"))
-        .cast("long")).otherwise(idL)
+    val idG = packedId(idCol, "packBinsFfd")
     df.select(pmod(idG, lit(numGroups.toLong)).as("grp"),
-        idG.as("doc_id"), guarded.as("n_tokens"))
+        idG.as("doc_id"), packedTokens(nTokens, capacity, "packBinsFfd")
+          .as("n_tokens"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (g, it) =>
-        val docs = it.map { case (_, id, nt) => (id, nt) }.toArray
-          .sortBy { case (id, nt) => (-nt, id) }
-        val fills = scala.collection.mutable.ArrayBuffer.empty[Long]
-        docs.iterator.map { case (id, nt) =>
-          var b = 0
-          while (b < fills.length && fills(b) + nt > capacity) b += 1
-          if (b == fills.length) fills += nt else fills(b) += nt
-          (id, nt, g, b.toLong)
-        }
+        firstFitDecreasing(it.map { case (_, id, nt) => (id, nt) }.toArray,
+          capacity).map { case (id, nt, b) => (id, nt, g, b) }
       }
       .toDF("doc_id", "n_tokens", "grp", "bin_in_group")
   }
@@ -908,34 +907,18 @@ object TextOps {
     require(subGroups > 0, "subGroups must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    val n = nTokens.cast("long")
-    val guarded = when(n.isNull,
-        raise_error(lit("packBinsFfdBy: NULL n_tokens")).cast("long"))
-      .when(n < 1L || n > capacity,
-        raise_error(concat(lit("packBinsFfdBy: n_tokens out of [1, "),
-          lit(capacity), lit("]: "), n)).cast("long"))
-      .otherwise(n)
-    val idL = idCol.cast("long")
-    val idG = when(idL.isNull,
-      raise_error(lit("packBinsFfdBy: NULL or non-numeric doc_id"))
-        .cast("long")).otherwise(idL)
+    val idG = packedId(idCol, "packBinsFfdBy")
     df.select(group.cast("string").as("grp"),
         pmod(idG, lit(subGroups.toLong)).as("sub"),
-        idG.as("doc_id"), guarded.as("n_tokens"))
+        idG.as("doc_id"), packedTokens(nTokens, capacity, "packBinsFfdBy")
+          .as("n_tokens"))
       .as[(String, Long, Long, Long)]
       .groupByKey { case (g, s, _, _) => (g, s) }
       .flatMapGroups { (key: (String, Long),
           it: Iterator[(String, Long, Long, Long)]) =>
         val (g, s) = key
-        val docs = it.map { case (_, _, id, nt) => (id, nt) }.toArray
-          .sortBy { case (id, nt) => (-nt, id) }
-        val fills = scala.collection.mutable.ArrayBuffer.empty[Long]
-        docs.iterator.map { case (id, nt) =>
-          var b = 0
-          while (b < fills.length && fills(b) + nt > capacity) b += 1
-          if (b == fills.length) fills += nt else fills(b) += nt
-          (g, s, id, nt, b.toLong)
-        }
+        firstFitDecreasing(it.map { case (_, _, id, nt) => (id, nt) }.toArray,
+          capacity).map { case (id, nt, b) => (g, s, id, nt, b) }
       }
       .toDF("grp", "sub", "doc_id", "n_tokens", "bin_in_group")
   }
@@ -1992,11 +1975,8 @@ object TextOps {
       .where(col("neighbor_id") =!= col("query_id"))
       .groupBy("query_id", "neighbor_id")
       .agg(count(lit(1)).as("overlap"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("overlap").desc, col("neighbor_id"))
-    ov.withColumn("rank", row_number().over(w) - 1)
-      .where(col("rank") < k)
+    SimilarityOps.topKPerQuery(ov, k,
+      Seq(col("overlap").desc, col("neighbor_id")))
   }
 
   /** BM25 retrieval scoring of the corpus against a fixed term set (the

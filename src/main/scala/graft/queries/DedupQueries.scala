@@ -11,27 +11,108 @@ import graft.ops._
 object DedupQueries extends QuerySet {
 
   import Tables.{docs, emb}
-  import MediaQueries.{framePairsAcross, framePairsWithin, y4mFrameHashes}
-  import SimilarityQueries.cosSql
+  import MediaQueries.{framePairsAcross, framePairsWithin, y4mFrameHashes,
+    y4mFramePairsSql}
+  import SimilarityQueries.{cosSql, srpKeySql}
   import TextQueries.toksSql
 
-  /** Shared oracle CTEs: tokens + word-3-shingle postings over documents. */
-  private val PostingsCte =
-    s"""WITH toks AS (
+  /** Oracle CTE body (no `WITH`): `toks(doc_id, t)`, each document's
+    * tokens, and `shg(doc_id, shs)`, its word-n shingles (the whole token
+    * string when it has fewer than n), de-duplicated when `distinct`. */
+  private[queries] def shingleCte(distinct: Boolean, n: Int = 3): String = {
+    val shs = s"""CASE WHEN len(t) >= $n
+      |              THEN list_transform(generate_series(1, len(t) - ${n - 1}), i -> array_to_string(t[i:i+${n - 1}], ' '))
+      |              ELSE [array_to_string(t, ' ')] END""".stripMargin
+    s"""toks AS (
       |  SELECT doc_id, ${toksSql("text")} AS t
       |  FROM documents
       |),
       |shg AS (
       |  SELECT doc_id,
-      |         CASE WHEN len(t) >= 3
-      |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-      |              ELSE [array_to_string(t, ' ')] END AS shs
+      |         ${if (distinct) s"list_distinct($shs)" else shs} AS shs
       |  FROM toks
-      |),
-      |p1 AS (SELECT doc_id, unnest(shs) AS s FROM shg),
+      |)""".stripMargin
+  }
+
+  /** Oracle CTE body over [[shingleCte]]'s `shg`: `post(doc_id, sh)`, the
+    * 60-bit shingle hashes held by at most 100 documents. */
+  private val PostCte =
+    """p1 AS (SELECT doc_id, unnest(shs) AS s FROM shg),
       |post0 AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS sh FROM p1),
       |rare AS (SELECT sh FROM post0 GROUP BY sh HAVING count(*) <= 100),
       |post AS (SELECT post0.* FROM post0 JOIN rare USING (sh))""".stripMargin
+
+  /** Shared oracle CTEs: tokens + word-3-shingle postings over documents. */
+  private val PostingsCte = s"WITH ${shingleCte(distinct = false)},\n$PostCte"
+
+  /** Oracle CTE body over `shg`: `sig(doc_id, sg)`, 16 MinHash values per
+    * document over `shingles` (an expression over `shs`). */
+  private def minhashSigCte(shingles: String): String =
+    s"""sig AS (
+      |  SELECT doc_id,
+      |         list_transform(generate_series(0, 15), j ->
+      |           list_min(list_transform($shingles, sgl ->
+      |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
+      |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
+      |             % 1152921504606846976))) AS sg
+      |  FROM shg
+      |)""".stripMargin
+
+  /** The band-key projection over a `(doc_id, sg, band)` table: 4 bands
+    * of 4 MinHash values each, keyed by the md5 of the band's values. */
+  private def bandKeySelect(bands: String): String =
+    s"""SELECT doc_id, band,
+      |       md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
+      |FROM $bands""".stripMargin
+
+  /** Oracle CTE body over `sig`: the band rows `bands(doc_id, sg, band)`
+    * and their keys `bk(doc_id, band, band_key)`. */
+  private def bandKeyCte(bands: String): String =
+    s"""$bands AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
+      |bk AS (
+      |${bandKeySelect(bands)}
+      |)""".stripMargin
+
+  /** The id-ordered candidate pairs: two documents sharing a band key. */
+  private val MinhashPairSelect =
+    """SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+      |FROM bk x JOIN bk y
+      |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id""".stripMargin
+
+  /** Oracle CTE body (no `WITH`): the MinHash band table over ALL
+    * documents, ending at `bk(doc_id, band, band_key)` — the dd_minhash_*
+    * signature construction. */
+  private val MinhashBandCte =
+    s"""${shingleCte(distinct = true)},
+      |${minhashSigCte("shs")},
+      |${bandKeyCte("b")}""".stripMargin
+
+  /** Oracle CTE body over [[shingleCte]]'s `shg`: `h(doc_id, hs)`, the
+    * shingles' 60-bit hashes. */
+  private val ShingleHashCte =
+    """h AS (
+      |  SELECT doc_id,
+      |         list_transform(shs, tk -> ('0x' || substr(md5(tk), 1, 15))::BIGINT) AS hs
+      |  FROM shg
+      |)""".stripMargin
+
+  /** The 60-bit SimHash of `h`'s hashes: bit i set when most hashes set it. */
+  private val SimhashExpr =
+    """CAST(list_reduce(list_transform(generate_series(0, 59), i ->
+      |         CASE WHEN list_reduce(list_transform(hs, hv ->
+      |                CASE WHEN ((hv >> i) & 1) = 1 THEN 1 ELSE -1 END), (a, b) -> a + b) > 0
+      |              THEN (1::BIGINT << i) ELSE 0::BIGINT END), (a, b) -> a + b) AS BIGINT)""".stripMargin
+
+  /** Oracle CTE body (no `WITH`): each document's SimHash,
+    * `sg(doc_id, sh)`, over its word-3 shingles. */
+  private val SimhashCte =
+    s"""${shingleCte(distinct = false)},
+      |$ShingleHashCte,
+      |sg AS (
+      |  SELECT doc_id,
+      |       $SimhashExpr AS sh
+      |  FROM h
+      |)""".stripMargin
 
   /** The `dd_exact_keep` oracle, shared with the queries that wrap it. */
   private lazy val DdExactKeepSql: String =
@@ -48,7 +129,7 @@ object DedupQueries extends QuerySet {
 
   /** Shared oracle CTE: documents exploded into normalized paragraphs with
     * 0-based indexes over the surviving (trimmed, non-empty) paragraphs. */
-  private val ParaCte =
+  private[queries] val ParaCte =
     """WITH p0 AS (
       |  SELECT doc_id,
       |         list_filter(list_transform(string_split(text, ' table '),
@@ -65,73 +146,15 @@ object DedupQueries extends QuerySet {
       |  FROM x
       |)""".stripMargin
 
-  /** Shared oracle CTE: the MinHash band table over ALL documents (same
-    * signature construction as the dd_minhash_* oracles). */
-  private val BandCte =
-    s"""WITH toks AS (
-      |  SELECT doc_id, ${toksSql("text")} AS t
-      |  FROM documents
-      |),
-      |shg AS (
-      |  SELECT doc_id,
-      |         list_distinct(CASE WHEN len(t) >= 3
-      |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-      |              ELSE [array_to_string(t, ' ')] END) AS shs
-      |  FROM toks
-      |),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(generate_series(0, 15), j ->
-      |           list_min(list_transform(shs, sgl ->
-      |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-      |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-      |             % 1152921504606846976))) AS sg
-      |  FROM shg
-      |),
-      |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-      |bk AS (
-      |  SELECT doc_id, band,
-      |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-      |  FROM b
-      |)""".stripMargin
-
   /** The `dd_fuzzy_keep` oracle, shared with the queries that wrap it. */
   private lazy val DdFuzzyKeepSql: String =
-    s"""WITH RECURSIVE toks AS (
-      |  SELECT doc_id, ${toksSql("text")} AS t
-      |  FROM documents
-      |),
-      |shg AS (
-      |  SELECT doc_id,
-      |         CASE WHEN len(t) >= 3
-      |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-      |              ELSE [array_to_string(t, ' ')] END AS shs
-      |  FROM toks
-      |),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(generate_series(0, 15), j ->
-      |           list_min(list_transform(list_distinct(shs), sgl ->
-      |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-      |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-      |             % 1152921504606846976))) AS sg
-      |  FROM shg
-      |),
-      |bb AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-      |bk AS (
-      |  SELECT doc_id, band,
-      |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-      |  FROM bb
-      |),
+    s"""WITH RECURSIVE ${shingleCte(distinct = false)},
+      |${minhashSigCte("list_distinct(shs)")},
+      |${bandKeyCte("bb")},
       |mp AS (
-      |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      |  FROM bk x JOIN bk y
-      |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
+      |$MinhashPairSelect
       |),
-      |p1 AS (SELECT doc_id, unnest(shs) AS s FROM shg),
-      |post0 AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS sh FROM p1),
-      |rare AS (SELECT sh FROM post0 GROUP BY sh HAVING count(*) <= 100),
-      |post AS (SELECT post0.* FROM post0 JOIN rare USING (sh)),
+      |$PostCte,
       |sizes AS (SELECT doc_id, count(*) AS sz FROM post GROUP BY doc_id),
       |cm AS (
       |  SELECT mp.doc_a, mp.doc_b, count(*) AS common
@@ -157,6 +180,39 @@ object DedupQueries extends QuerySet {
       |cl AS (SELECT node AS doc_id, min(r) AS keeper_id FROM reach GROUP BY node)
       |SELECT doc_id, source, lang FROM documents
       |WHERE doc_id NOT IN (SELECT doc_id FROM cl WHERE doc_id <> keeper_id)""".stripMargin
+
+  /** The video-ingest loop: the documents arrive as three lake commits;
+    * each lakeTail catch-up decodes ONLY the delta's frames, pairs them
+    * within the delta and against the persisted frame-hash index (which
+    * carries every earlier shard's hashes), appends them to the index and
+    * runs `retain(index dir)`.  Returns the distinct staged pairs; scratch
+    * paths are named `<tag>_lake` etc. */
+  private def videoIngestPairs(s: SparkSession, dir: String, tag: String)(
+      retain: String => Unit): DataFrame = {
+    val lake = Tables.scratch(dir, s"${tag}_lake")
+    val idx = Tables.scratch(dir, s"${tag}_idx")
+    val ckp = Tables.scratch(dir, s"${tag}_ckp")
+    val cand = Tables.scratch(dir, s"${tag}_cand")
+    if (LayoutOps.latestVersion(s, lake) < 0) {
+      val d = Tables.docs(s, dir).select(col("doc_id"), col("text"))
+      (0 until 3).foreach { k =>
+        LayoutOps.commitAppend(d.where(col("doc_id") % 3 === k), lake)
+        LayoutOps.lakeTail(s, lake, ckp) { (delta, _) =>
+          val fr = y4mFrameHashes(delta).persist()
+          graft.core.CacheScope.register(fr)
+          val seeded = new java.io.File(idx.stripPrefix("file:")).exists
+          val pairs =
+            if (!seeded) framePairsWithin(fr)
+            else framePairsAcross(s.read.parquet(idx), fr)
+              .unionByName(framePairsWithin(fr))
+          pairs.write.mode("append").parquet(cand)
+          fr.write.mode("append").parquet(idx)
+          retain(idx)
+        }
+      }
+    }
+    s.read.parquet(cand).distinct()
+  }
 
   /** Target in-cell population for the semantic-dedup quantizer: cells
     * grow ∝ corpus (k = ⌈n/TargetCell⌉, floor 8) so the in-cell pair
@@ -222,20 +278,25 @@ object DedupQueries extends QuerySet {
       |  JOIN embeddings b ON b.vec_id = bb.vec_id
       |)""".stripMargin
 
-  /** Winnow-selection CTE prefix (k=25, w=4): lowercased grams → selected
-    * fingerprints → df-capped postings `p` — the front half of the
-    * `dd_substr_pairs` oracle, shared by the span and incremental-winnow
-    * oracles. */
-  private[queries] val WinnowFpSql =
-    """d AS (SELECT doc_id, lower(text) AS t FROM documents WHERE text IS NOT NULL),
-      |g AS (SELECT doc_id, t, length(t) - 25 + 1 AS nh FROM d WHERE length(t) >= 25),
+  /** Oracle CTE body (no `WITH`): the lowercased texts `d`, their k-char
+    * gram positions `g`/`hx`, and `h(doc_id, nh, pos, hv)`, each gram's
+    * 60-bit hash (`gm`, the gram text, too when `withGram`). */
+  private[queries] def winnowGramCte(k: Int, withGram: Boolean): String =
+    s"""d AS (SELECT doc_id, lower(text) AS t FROM documents WHERE text IS NOT NULL),
+      |g AS (SELECT doc_id, t, length(t) - $k + 1 AS nh FROM d WHERE length(t) >= $k),
       |hx AS (SELECT doc_id, nh, unnest(generate_series(1, nh)) AS i, t FROM g),
       |h AS (
-      |  SELECT doc_id, nh, i - 1 AS pos, substr(t, i, 25) AS gm,
-      |         ('0x' || substr(md5(substr(t, i, 25)), 1, 15))::BIGINT AS hv
+      |  SELECT doc_id, nh, i - 1 AS pos,${if (withGram) s" substr(t, i, $k) AS gm," else ""}
+      |         ('0x' || substr(md5(substr(t, i, $k)), 1, 15))::BIGINT AS hv
       |  FROM hx
-      |),
-      |sf AS (
+      |)""".stripMargin
+
+  /** Oracle CTE body over `h`: the winnow selection (w = 4) — each full
+    * window's minimum by the composite key (hv, pos) in `sf`, the selected
+    * positions in `sels(doc_id, pos)`; a document of at most 4 grams keeps
+    * its single overall minimum. */
+  private[queries] val WinnowSelCte =
+    """sf AS (
       |  SELECT doc_id, nh, pos,
       |    arg_min(pos, hv::HUGEINT * 1048576 + pos) OVER
       |      (PARTITION BY doc_id ORDER BY pos
@@ -248,13 +309,26 @@ object DedupQueries extends QuerySet {
       |  UNION
       |  SELECT doc_id, arg_min(pos, hv::HUGEINT * 1048576 + pos) AS pos
       |  FROM h WHERE nh <= 4 GROUP BY doc_id
-      |),
-      |fps AS (
+      |)""".stripMargin
+
+  /** Oracle CTE body over `sels`: the selected fingerprints `fps` and their
+    * postings `p(doc_id, fp)`, capped at 100 documents per fingerprint. */
+  private val FpPostCte =
+    """fps AS (
       |  SELECT DISTINCT s.doc_id, h.hv AS fp
       |  FROM sels s JOIN h ON h.doc_id = s.doc_id AND h.pos = s.pos
       |),
       |rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 100),
       |p AS (SELECT fps.* FROM fps JOIN rare USING (fp))""".stripMargin
+
+  /** Winnow-selection CTE prefix (k=25, w=4): lowercased grams → selected
+    * fingerprints → df-capped postings `p` — the front half of the
+    * `dd_substr_pairs` oracle, shared by the span and incremental-winnow
+    * oracles. */
+  private[queries] val WinnowFpSql =
+    s"""${winnowGramCte(25, withGram = true)},
+      |$WinnowSelCte,
+      |$FpPostCte""".stripMargin
 
   /** Span-oracle CTE suffix: candidate pairs → full-gram match grid →
     * maximal runs per diagonal (gaps-and-islands) = maximal shared char
@@ -285,36 +359,9 @@ object DedupQueries extends QuerySet {
   /** MinHash band chain (the dd_minhash_pairs oracle) — ends at
     * `mp(doc_a, doc_b)`, the id-ordered candidate pairs. */
   private val MinhashPairsSql =
-    s"""toks AS (
-      |  SELECT doc_id, ${toksSql("text")} AS t
-      |  FROM documents
-      |),
-      |shg AS (
-      |  SELECT doc_id,
-      |         list_distinct(CASE WHEN len(t) >= 3
-      |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-      |              ELSE [array_to_string(t, ' ')] END) AS shs
-      |  FROM toks
-      |),
-      |sig AS (
-      |  SELECT doc_id,
-      |         list_transform(generate_series(0, 15), j ->
-      |           list_min(list_transform(shs, sgl ->
-      |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-      |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-      |             % 1152921504606846976))) AS sg
-      |  FROM shg
-      |),
-      |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-      |bk AS (
-      |  SELECT doc_id, band,
-      |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-      |  FROM b
-      |),
+    s"""$MinhashBandCte,
       |mp AS (
-      |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      |  FROM bk x JOIN bk y
-      |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
+      |$MinhashPairSelect
       |)""".stripMargin
 
   /** [[MinhashPairsSql]] + recursive connected components — ends at
@@ -346,10 +393,7 @@ object DedupQueries extends QuerySet {
     * minhash chain already built (`shg`) — ends at `truth(doc_a, doc_b)`.
     * Appended after [[MinhashPairsSql]]. */
   private val JaccardTruthSql =
-    """p1 AS (SELECT doc_id, unnest(shs) AS s FROM shg),
-      |post0 AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS sh FROM p1),
-      |rare AS (SELECT sh FROM post0 GROUP BY sh HAVING count(*) <= 100),
-      |post AS (SELECT post0.* FROM post0 JOIN rare USING (sh)),
+    s"""$PostCte,
       |sizes AS (SELECT doc_id, count(*) AS sz FROM post GROUP BY doc_id),
       |cm AS (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
@@ -366,18 +410,10 @@ object DedupQueries extends QuerySet {
     * `cand(vec_a, vec_b)` — the dd_embed_banded banding, restricted by the
     * caller's predicate downstream. */
   private val EmbBandSql =
-    """bs AS (SELECT unnest(generate_series(0, 3)) AS band),
+    s"""bs AS (SELECT unnest(generate_series(0, 3)) AS band),
       |b AS (
       |  SELECT e.vec_id, e.embedding, bs.band,
-      |    list_reduce(list_transform(generate_series(0, 3), j ->
-      |      CASE WHEN
-      |        list_reduce(list_transform(generate_series(0, 63), i ->
-      |          e.embedding[i + 1]::DOUBLE *
-      |          (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', (bs.band * 4 + j)::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-      |                      / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-      |                THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
-      |          (a, b) -> a + b) > 0.0
-      |      THEN (1 << j) ELSE 0 END), (a, b) -> a + b) AS key
+      |    ${srpKeySql("e.embedding", 4, "(bs.band * 4 + j)")} AS key
       |  FROM embeddings e CROSS JOIN bs),
       |cand AS (
       |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
@@ -788,32 +824,7 @@ object DedupQueries extends QuerySet {
       s.sql(DdExactSqlShared)
     }),
 
-    "pipe_video_dedup" -> ((s, dir) => {
-      val lake = Tables.scratch(dir, "pvd_lake")
-      val idx = Tables.scratch(dir, "pvd_idx")
-      val ckp = Tables.scratch(dir, "pvd_ckp")
-      val cand = Tables.scratch(dir, "pvd_cand")
-      if (LayoutOps.latestVersion(s, lake) < 0) {
-        val d = Tables.docs(s, dir).select(col("doc_id"), col("text"))
-        (0 until 3).foreach { k =>
-          LayoutOps.commitAppend(d.where(col("doc_id") % 3 === k), lake)
-          LayoutOps.lakeTail(s, lake, ckp) { (delta, _) =>
-            // decode ONLY the delta's frames; the persisted index
-            // carries every earlier shard's hashes
-            val fr = y4mFrameHashes(delta).persist()
-            graft.core.CacheScope.register(fr)
-            val seeded = new java.io.File(idx.stripPrefix("file:")).exists
-            val pairs =
-              if (!seeded) framePairsWithin(fr)
-              else framePairsAcross(s.read.parquet(idx), fr)
-                .unionByName(framePairsWithin(fr))
-            pairs.write.mode("append").parquet(cand)
-            fr.write.mode("append").parquet(idx)
-          }
-        }
-      }
-      s.read.parquet(cand).distinct()
-    }),
+    "pipe_video_dedup" -> ((s, dir) => videoIngestPairs(s, dir, "pvd")(_ => ())),
 
     // the r19 video-ingest loop + the r20 INDEX RETENTION policy: each
     // catch-up appends the delta's frame hashes and then lets
@@ -822,36 +833,14 @@ object DedupQueries extends QuerySet {
     // catch-ups otherwise leaves thousands) — and the staged pair union
     // must STILL equal the full-corpus oracle, proving compaction
     // changes layout only, never candidates
-    "pipe_video_dedup_compact" -> ((s, dir) => {
-      val lake = Tables.scratch(dir, "pvdc_lake")
-      val idx = Tables.scratch(dir, "pvdc_idx")
-      val ckp = Tables.scratch(dir, "pvdc_ckp")
-      val cand = Tables.scratch(dir, "pvdc_cand")
-      if (graft.ops.LayoutOps.latestVersion(s, lake) < 0) {
-        val d = Tables.docs(s, dir).select(col("doc_id"), col("text"))
-        (0 until 3).foreach { k =>
-          graft.ops.LayoutOps.commitAppend(d.where(col("doc_id") % 3 === k),
-            lake)
-          graft.ops.LayoutOps.lakeTail(s, lake, ckp) { (delta, _) =>
-            val fr = y4mFrameHashes(delta).persist()
-            graft.core.CacheScope.register(fr)
-            val seeded = new java.io.File(idx.stripPrefix("file:")).exists
-            val pairs =
-              if (!seeded) framePairsWithin(fr)
-              else framePairsAcross(s.read.parquet(idx), fr)
-                .unionByName(framePairsWithin(fr))
-            pairs.write.mode("append").parquet(cand)
-            fr.write.mode("append").parquet(idx)
-            // retention: maxFiles 8 forces a rewrite on every catch-up
-            // at the 32-partition test shape — the compacted index is
-            // what the NEXT catch-up joins against
-            graft.ops.PersistedIndex.maybeCompact(s, idx, maxFiles = 8,
-              targetFiles = 4)
-          }
-        }
-      }
-      s.read.parquet(cand).distinct()
-    })
+    "pipe_video_dedup_compact" -> ((s, dir) =>
+      videoIngestPairs(s, dir, "pvdc") { idx =>
+        // retention: maxFiles 8 forces a rewrite on every catch-up at the
+        // 32-partition test shape — the compacted index is what the NEXT
+        // catch-up joins against
+        graft.ops.PersistedIndex.maybeCompact(s, idx, maxFiles = 8,
+          targetFiles = 4)
+      })
   )
 
   def oracles: Map[String, String] = Map(
@@ -881,15 +870,7 @@ object DedupQueries extends QuerySet {
     "dd_embed_lsh" ->
       s"""WITH b AS (
         |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(generate_series(0, 7), j ->
-        |      CASE WHEN
-        |        list_reduce(list_transform(generate_series(0, 63), i ->
-        |          embedding[i + 1]::DOUBLE *
-        |          (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', j::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-        |                      / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-        |                THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
-        |          (a, b) -> a + b) > 0.0
-        |      THEN (1 << j) ELSE 0 END), (a, b) -> a + b) AS bucket
+        |    ${srpKeySql("embedding", 8)} AS bucket
         |  FROM embeddings
         |),
         |s AS (
@@ -900,84 +881,20 @@ object DedupQueries extends QuerySet {
         |SELECT vec_a, vec_b, cos FROM s WHERE cos >= 0.4""".stripMargin,
 
     "dd_minhash_bands" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END) AS shs
-        |  FROM toks
-        |),
-        |sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(0, 15), j ->
-        |           list_min(list_transform(shs, sgl ->
-        |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-        |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-        |             % 1152921504606846976))) AS sg
-        |  FROM shg
-        |),
+      s"""WITH ${shingleCte(distinct = true)},
+        |${minhashSigCte("shs")},
         |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig)
-        |SELECT doc_id, band,
-        |       md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-        |FROM b""".stripMargin,
+        |${bandKeySelect("b")}""".stripMargin,
 
     "dd_minhash_pairs" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END) AS shs
-        |  FROM toks
-        |),
-        |sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(0, 15), j ->
-        |           list_min(list_transform(shs, sgl ->
-        |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-        |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-        |             % 1152921504606846976))) AS sg
-        |  FROM shg
-        |),
-        |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-        |bk AS (
-        |  SELECT doc_id, band,
-        |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-        |  FROM b
-        |)
-        |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |FROM bk x JOIN bk y
-        |  ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id""".stripMargin,
+      s"""WITH $MinhashBandCte
+        |$MinhashPairSelect""".stripMargin,
 
     "dd_simhash" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END AS shs
-        |  FROM toks
-        |),
-        |h AS (
-        |  SELECT doc_id,
-        |         list_transform(shs, tk -> ('0x' || substr(md5(tk), 1, 15))::BIGINT) AS hs
-        |  FROM shg
-        |)
+      s"""WITH ${shingleCte(distinct = false)},
+        |$ShingleHashCte
         |SELECT doc_id,
-        |       CAST(list_reduce(list_transform(generate_series(0, 59), i ->
-        |         CASE WHEN list_reduce(list_transform(hs, hv ->
-        |                CASE WHEN ((hv >> i) & 1) = 1 THEN 1 ELSE -1 END), (a, b) -> a + b) > 0
-        |              THEN (1::BIGINT << i) ELSE 0::BIGINT END), (a, b) -> a + b) AS BIGINT) AS simhash
+        |       $SimhashExpr AS simhash
         |FROM h""".stripMargin,
 
     "dd_embed_pairs" ->
@@ -989,37 +906,7 @@ object DedupQueries extends QuerySet {
         |SELECT * FROM p WHERE cos >= 0.4""".stripMargin,
 
     "dd_clusters" ->
-      s"""WITH RECURSIVE toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END) AS shs
-        |  FROM toks
-        |),
-        |sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(0, 15), j ->
-        |           list_min(list_transform(shs, sgl ->
-        |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-        |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-        |             % 1152921504606846976))) AS sg
-        |  FROM shg
-        |),
-        |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-        |bk AS (
-        |  SELECT doc_id, band,
-        |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-        |  FROM b
-        |),
-        |mp AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bk x JOIN bk y
-        |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-        |),
+      s"""WITH RECURSIVE $MinhashPairsSql,
         |e AS (SELECT doc_a AS a, doc_b AS bb FROM mp UNION ALL SELECT doc_b, doc_a FROM mp),
         |n AS (SELECT DISTINCT a AS node FROM e),
         |reach(node, r) AS (
@@ -1032,30 +919,7 @@ object DedupQueries extends QuerySet {
     "dd_exact_keep" -> DdExactKeepSql,
 
     "dd_simhash_pairs" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END AS shs
-        |  FROM toks
-        |),
-        |h AS (
-        |  SELECT doc_id,
-        |         list_transform(shs, tk -> ('0x' || substr(md5(tk), 1, 15))::BIGINT) AS hs
-        |  FROM shg
-        |),
-        |sg AS (
-        |  SELECT doc_id,
-        |       CAST(list_reduce(list_transform(generate_series(0, 59), i ->
-        |         CASE WHEN list_reduce(list_transform(hs, hv ->
-        |                CASE WHEN ((hv >> i) & 1) = 1 THEN 1 ELSE -1 END), (a, b) -> a + b) > 0
-        |              THEN (1::BIGINT << i) ELSE 0::BIGINT END), (a, b) -> a + b) AS BIGINT) AS sh
-        |  FROM h
-        |),
+      s"""WITH $SimhashCte,
         |b AS (
         |  SELECT doc_id, band, (sh >> (15 * band)) & 32767 AS key
         |  FROM sg CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band)
@@ -1087,30 +951,7 @@ object DedupQueries extends QuerySet {
          |FROM documents d LEFT JOIN r USING (doc_id)""".stripMargin,
 
     "dd_simhash_ham" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END AS shs
-        |  FROM toks
-        |),
-        |h AS (
-        |  SELECT doc_id,
-        |         list_transform(shs, tk -> ('0x' || substr(md5(tk), 1, 15))::BIGINT) AS hs
-        |  FROM shg
-        |),
-        |sg AS (
-        |  SELECT doc_id,
-        |       CAST(list_reduce(list_transform(generate_series(0, 59), i ->
-        |         CASE WHEN list_reduce(list_transform(hs, hv ->
-        |                CASE WHEN ((hv >> i) & 1) = 1 THEN 1 ELSE -1 END), (a, b) -> a + b) > 0
-        |              THEN (1::BIGINT << i) ELSE 0::BIGINT END), (a, b) -> a + b) AS BIGINT) AS sh
-        |  FROM h
-        |),
+      s"""WITH $SimhashCte,
         |b AS (
         |  SELECT doc_id, sh, band, (sh >> (15 * band)) & 32767 AS key
         |  FROM sg CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band)
@@ -1127,42 +968,14 @@ object DedupQueries extends QuerySet {
         |WHERE bit_count(xor(sh_a, sh_b)) <= 20""".stripMargin,
 
     "dd_incremental" ->
-      s"""$BandCte
-         |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |FROM bk x JOIN bk y
-         |  ON x.band = y.band AND x.band_key = y.band_key
-         |  AND x.doc_id < y.doc_id
+      s"""WITH $MinhashBandCte
+         |$MinhashPairSelect
          |WHERE x.doc_id % 2 = 1 OR y.doc_id % 2 = 1""".stripMargin,
 
     "dd_substr_pairs" ->
-      """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents WHERE text IS NOT NULL),
-        |g AS (SELECT doc_id, t, length(t) - 25 + 1 AS nh FROM d WHERE length(t) >= 25),
-        |hx AS (SELECT doc_id, nh, unnest(generate_series(1, nh)) AS i, t FROM g),
-        |h AS (
-        |  SELECT doc_id, nh, i - 1 AS pos,
-        |         ('0x' || substr(md5(substr(t, i, 25)), 1, 15))::BIGINT AS hv
-        |  FROM hx
-        |),
-        |sf AS (
-        |  SELECT doc_id, nh, pos,
-        |    arg_min(pos, hv::HUGEINT * 1048576 + pos) OVER
-        |      (PARTITION BY doc_id ORDER BY pos
-        |       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM h
-        |),
-        |sels AS (
-        |  SELECT DISTINCT doc_id, sel AS pos FROM sf
-        |  WHERE nh > 4 AND pos <= nh - 4
-        |  UNION
-        |  SELECT doc_id, arg_min(pos, hv::HUGEINT * 1048576 + pos) AS pos
-        |  FROM h WHERE nh <= 4 GROUP BY doc_id
-        |),
-        |fps AS (
-        |  SELECT DISTINCT s.doc_id, h.hv AS fp
-        |  FROM sels s JOIN h ON h.doc_id = s.doc_id AND h.pos = s.pos
-        |),
-        |rare AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 100),
-        |p AS (SELECT fps.* FROM fps JOIN rare USING (fp))
+      s"""WITH ${winnowGramCte(25, withGram = false)},
+        |$WinnowSelCte,
+        |$FpPostCte
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared_fps
         |FROM p a JOIN p b ON a.fp = b.fp AND a.doc_id < b.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
@@ -1252,32 +1065,7 @@ object DedupQueries extends QuerySet {
          |SELECT * FROM pr WHERE doc_a % 2 = 1 OR doc_b % 2 = 1""".stripMargin,
 
     "dd_band_owners" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END) AS shs
-        |  FROM toks
-        |),
-        |sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(0, 15), j ->
-        |           list_min(list_transform(shs, sgl ->
-        |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-        |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-        |             % 1152921504606846976))) AS sg
-        |  FROM shg
-        |),
-        |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-        |bk AS (
-        |  SELECT doc_id, band,
-        |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-        |  FROM b
-        |)
+      s"""WITH $MinhashBandCte
         |SELECT band, band_key, min(doc_id) AS owner_id
         |FROM bk GROUP BY band, band_key""".stripMargin,
 
@@ -1292,22 +1080,7 @@ object DedupQueries extends QuerySet {
         |WHERE md5(s.text) NOT IN (SELECT h FROM idx)""".stripMargin,
 
     "dd_embed_banded" ->
-      s"""WITH bs AS (SELECT unnest(generate_series(0, 3)) AS band),
-        |b AS (
-        |  SELECT e.vec_id, e.embedding, bs.band,
-        |    list_reduce(list_transform(generate_series(0, 3), j ->
-        |      CASE WHEN
-        |        list_reduce(list_transform(generate_series(0, 63), i ->
-        |          e.embedding[i + 1]::DOUBLE *
-        |          (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', (bs.band * 4 + j)::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-        |                      / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-        |                THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
-        |          (a, b) -> a + b) > 0.0
-        |      THEN (1 << j) ELSE 0 END), (a, b) -> a + b) AS key
-        |  FROM embeddings e CROSS JOIN bs),
-        |cand AS (
-        |  SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
-        |  FROM b x JOIN b y ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id),
+      s"""WITH $EmbBandSql,
         |s AS (
         |  SELECT c.vec_a, c.vec_b,
         |    ${cosSql("ea.embedding", "eb.embedding")} AS cos
@@ -1534,77 +1307,17 @@ object DedupQueries extends QuerySet {
     // the full-corpus LSH pairs (same band construction as the
     // dd_minhash_* oracles) — the staged incremental union must equal it
     "pipe_lake_dedup" ->
-      s"""WITH toks AS (
-        |  SELECT doc_id, ${toksSql("text")} AS t
-        |  FROM documents
-        |),
-        |shg AS (
-        |  SELECT doc_id,
-        |         list_distinct(CASE WHEN len(t) >= 3
-        |              THEN list_transform(generate_series(1, len(t) - 2), i -> array_to_string(t[i:i+2], ' '))
-        |              ELSE [array_to_string(t, ' ')] END) AS shs
-        |  FROM toks
-        |),
-        |sig AS (
-        |  SELECT doc_id,
-        |         list_transform(generate_series(0, 15), j ->
-        |           list_min(list_transform(shs, sgl ->
-        |             (('0x' || substr(md5(sgl), 1, 15))::BIGINT
-        |              + j * ('0x' || substr(md5(sgl), 17, 14))::BIGINT)
-        |             % 1152921504606846976))) AS sg
-        |  FROM shg
-        |),
-        |b AS (SELECT doc_id, sg, unnest(generate_series(0, 3)) AS band FROM sig),
-        |bk AS (
-        |  SELECT doc_id, band,
-        |         md5(array_to_string(sg[band * 4 + 1 : band * 4 + 4], ',')) AS band_key
-        |  FROM b
-        |)
-        |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |FROM bk x JOIN bk y
-        |  ON x.band = y.band AND x.band_key = y.band_key
-        |  AND x.doc_id < y.doc_id""".stripMargin,
+      s"""WITH $MinhashBandCte
+        |$MinhashPairSelect""".stripMargin,
 
     "dd_exact_sql" -> DdExactSqlShared,
 
     // the staged incremental union must equal the FULL-corpus
     // frame-dedup pairs — the same all-pairs SQL as mm_y4m_frame_dedup
-    "pipe_video_dedup" ->
-      """WITH fda AS (SELECT doc_id,
-        |    regexp_replace(text, '[^ -~]', '?', 'g') AS text
-        |  FROM documents),
-        |fdf AS (SELECT doc_id, text,
-        |    unnest(generate_series(0, 2)) AS frame FROM fda),
-        |fdv AS (
-        |  SELECT doc_id, frame,
-        |    list_transform(generate_series(0, 63), j ->
-        |      ascii(substr(text,
-        |        (((j + 29 * frame) % length(text)) + 1)::INT, 1))) AS v
-        |  FROM fdf)
-        |SELECT x.doc_id AS doc_a, x.frame::BIGINT AS frame_a,
-        |  y.doc_id AS doc_b, y.frame::BIGINT AS frame_b
-        |FROM fdv x JOIN fdv y
-        |  ON x.v = y.v AND (x.doc_id < y.doc_id OR
-        |    (x.doc_id = y.doc_id AND x.frame < y.frame))""".stripMargin,
+    "pipe_video_dedup" -> y4mFramePairsSql("fd"),
 
     // compaction must be invisible to candidates: the same full-corpus
     // all-pairs SQL as pipe_video_dedup
-    "pipe_video_dedup_compact" ->
-      """WITH pca AS (SELECT doc_id,
-        |    regexp_replace(text, '[^ -~]', '?', 'g') AS text
-        |  FROM documents),
-        |pcf AS (SELECT doc_id, text,
-        |    unnest(generate_series(0, 2)) AS frame FROM pca),
-        |pcv AS (
-        |  SELECT doc_id, frame,
-        |    list_transform(generate_series(0, 63), j ->
-        |      ascii(substr(text,
-        |        (((j + 29 * frame) % length(text)) + 1)::INT, 1))) AS v
-        |  FROM pcf)
-        |SELECT x.doc_id AS doc_a, x.frame::BIGINT AS frame_a,
-        |  y.doc_id AS doc_b, y.frame::BIGINT AS frame_b
-        |FROM pcv x JOIN pcv y
-        |  ON x.v = y.v AND (x.doc_id < y.doc_id OR
-        |    (x.doc_id = y.doc_id AND x.frame < y.frame))""".stripMargin
+    "pipe_video_dedup_compact" -> y4mFramePairsSql("pc")
   )
 }

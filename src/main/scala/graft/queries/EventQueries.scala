@@ -11,7 +11,6 @@ import graft.streaming.StreamingOps
   * Names: `ev`, `join`, `skew`. */
 object EventQueries extends QuerySet {
 
-
   /** The `ev_funnel` oracle, shared with the queries that wrap it. */
   private lazy val EvFunnelSql: String =
     """WITH s AS (
@@ -30,6 +29,77 @@ object EventQueries extends QuerySet {
   private def itemCol =
     nullif(regexp_extract(col("props"), "\"k\": ([0-9]+)", 1), lit(""))
       .cast("int")
+
+  /** Last-touch attribution pairs over events `e`: each purchase joined
+    * to the user's latest click at or before it (the as-of join), with the
+    * purchase's `p_ms` and the click's `click_ms` epoch milliseconds. */
+  private def attributionPairs(e: DataFrame): DataFrame = {
+    val purchases = e.where(col("event_type") === "purchase")
+    val clicks = e.where(col("event_type") === "click")
+    val matched = EventOps.asofJoin(
+      purchases, col("event_id"), col("user_id"), col("ts"),
+      clicks, col("event_id"), col("user_id"), col("ts"), col("value"))
+    val clickTs = clicks.select(col("event_id").as("matched_id"),
+      floor(unix_micros(col("ts")) / 1000).as("click_ms"))
+    matched.where(col("matched_id").isNotNull)
+      .withColumn("p_ms", floor(unix_micros(col("ts")) / 1000))
+      .join(clickTs, "matched_id")
+  }
+
+  /** Oracle CTE body (no `WITH`): [[attributionPairs]]' mirror —
+    * `j(lid, p_us, c_us, rn)`, each purchase with the user's clicks at or
+    * before it, rn = 1 the latest (microsecond order, greatest id on ties). */
+  private val AttributionCte =
+    """l AS (SELECT event_id, user_id, epoch_us(ts) AS us
+      |  FROM events WHERE event_type = 'purchase'),
+      |r AS (SELECT event_id, user_id, epoch_us(ts) AS us
+      |  FROM events WHERE event_type = 'click'),
+      |j AS (
+      |  SELECT l.event_id AS lid, l.us AS p_us, r.us AS c_us,
+      |    row_number() OVER (PARTITION BY l.event_id
+      |      ORDER BY r.us DESC, r.event_id DESC) AS rn
+      |  FROM l JOIN r ON l.user_id = r.user_id AND r.us <= l.us)""".stripMargin
+
+  /** Oracle CTE body (no `WITH`): each user's event types in (ms, id)
+    * order (`s`) and every consecutive pair `p.pr` = {f, t}. */
+  private[queries] val TransitionCte =
+    """s AS (SELECT user_id,
+      |    list(event_type ORDER BY (epoch_us(ts) // 1000), event_id) AS seq
+      |  FROM events GROUP BY user_id),
+      |p AS (SELECT unnest(list_transform(
+      |    generate_series(1, len(seq) - 1),
+      |    i -> {f: seq[i], t: seq[i + 1]})) AS pr
+      |  FROM s WHERE len(seq) > 1)""".stripMargin
+
+  /** The least-squares sums over hourly counts `y` at offset `hr - mn`. */
+  private val HourFitSums =
+    """sum(hr - mn)::BIGINT AS sx, sum(y)::BIGINT AS sy,
+      |    sum((hr - mn) * (hr - mn))::BIGINT AS sxx,
+      |    sum((hr - mn) * y)::BIGINT AS sxy""".stripMargin
+
+  /** Each `key`'s least-squares slope and intercept from the sums in `s`. */
+  private def hourFitSelect(key: String): String =
+    s"""SELECT $key, n,
+       |  (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE AS slope,
+       |  (sy::DOUBLE - ((n * sxy - sx * sy)::DOUBLE
+       |      / (n * sxx - sx * sx)::DOUBLE) * sx::DOUBLE) / n::DOUBLE
+       |    AS intercept
+       |FROM s""".stripMargin
+
+  /** The as-of join oracle: each click matched to the purchase ranked
+    * first by `order` among the user's purchases meeting `cond` (NULL when
+    * none does). */
+  private def asofSql(order: String, cond: String): String =
+    s"""WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+      |r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
+      |j AS (
+      |  SELECT l.event_id AS lid, r.event_id AS rid, r.value AS rv,
+      |    row_number() OVER (PARTITION BY l.event_id $order) AS rn
+      |  FROM l JOIN r ON l.user_id = r.user_id $cond
+      |)
+      |SELECT l.event_id AS left_id, l.user_id AS k, l.ts,
+      |  j.rid AS matched_id, j.rv AS matched_value
+      |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON j.lid = l.event_id""".stripMargin
 
   private val BenfordP: Seq[(Int, Double)] = Seq(
     1 -> 0.3010299956639812, 2 -> 0.17609125905568124,
@@ -245,41 +315,19 @@ object EventQueries extends QuerySet {
     // click is within the window — daily attributed-conversion counts.
     // Composes the as-of join (one key shuffle) + an id-keyed lookup of
     // the matched click's timestamp.
-    "ev_attribution" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      val purchases = e.where(col("event_type") === "purchase")
-      val clicks = e.where(col("event_type") === "click")
-      val matched = EventOps.asofJoin(
-        purchases, col("event_id"), col("user_id"), col("ts"),
-        clicks, col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clickTs = clicks.select(col("event_id").as("matched_id"),
-        floor(unix_micros(col("ts")) / 1000).as("click_ms"))
-      matched.where(col("matched_id").isNotNull)
-        .withColumn("p_ms", floor(unix_micros(col("ts")) / 1000))
-        .join(clickTs, "matched_id")
+    "ev_attribution" -> ((s, dir) =>
+      attributionPairs(Tables.events(s, dir))
         .where(col("p_ms") - col("click_ms") <= 86400000L)
         .groupBy(floor(col("p_ms") / 86400000L).cast("long").as("day"))
-        .agg(count(lit(1)).as("n_attributed"))
-    }),
+        .agg(count(lit(1)).as("n_attributed"))),
 
     // Click→purchase conversion-lag histogram (hours, top-coded at 48):
     // same as-of attribution pairs as ev_attribution, bucketed by lag
-    "ev_conversion_lag" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      val purchases = e.where(col("event_type") === "purchase")
-      val clicks = e.where(col("event_type") === "click")
-      val matched = EventOps.asofJoin(
-        purchases, col("event_id"), col("user_id"), col("ts"),
-        clicks, col("event_id"), col("user_id"), col("ts"), col("value"))
-      val clickTs = clicks.select(col("event_id").as("matched_id"),
-        floor(unix_micros(col("ts")) / 1000).as("click_ms"))
-      matched.where(col("matched_id").isNotNull)
-        .withColumn("p_ms", floor(unix_micros(col("ts")) / 1000))
-        .join(clickTs, "matched_id")
+    "ev_conversion_lag" -> ((s, dir) =>
+      attributionPairs(Tables.events(s, dir))
         .groupBy(least(floor((col("p_ms") - col("click_ms")) / 3600000),
           lit(48L)).cast("long").as("lag_hours"))
-        .agg(count(lit(1)).as("n"))
-    }),
+        .agg(count(lit(1)).as("n"))),
 
     // Exact join-output census WITHOUT running the join: the click×purchase
     // self-join's cardinality and worst per-key fan-out, computed from two
@@ -671,6 +719,21 @@ object EventQueries extends QuerySet {
     })
   )
 
+  /** Oracle CTE body (no `WITH`): `s`, every event with `is_start` = 1
+    * when it opens a session (the user's first event, or more than 30
+    * minutes after the previous one). */
+  private[queries] val SessionStartCte =
+    """e AS (
+      |  SELECT user_id, event_id, value, epoch_ms(ts) AS ts_ms FROM events
+      |),
+      |s AS (
+      |  SELECT *, CASE
+      |    WHEN lag(ts_ms) OVER w IS NULL THEN 1
+      |    WHEN ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1
+      |    ELSE 0 END AS is_start
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
+      |)""".stripMargin
+
   def oracles: Map[String, String] = Map(
 
     "skew_salted_agg" ->
@@ -695,17 +758,7 @@ object EventQueries extends QuerySet {
     // deterministic explicit form of ASOF LEFT JOIN: latest right ts,
     // greatest right id on ties — the operator's documented tie-break
     "ev_asof_join" ->
-      """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        |  SELECT l.event_id AS lid, r.event_id AS rid, r.value AS rv,
-        |    row_number() OVER (PARTITION BY l.event_id
-        |      ORDER BY r.ts DESC, r.event_id DESC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
-        |)
-        |SELECT l.event_id AS left_id, l.user_id AS k, l.ts,
-        |  j.rid AS matched_id, j.rv AS matched_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON j.lid = l.event_id""".stripMargin,
+      asofSql("ORDER BY r.ts DESC, r.event_id DESC", "AND r.ts <= l.ts"),
 
     // the same stage automaton as a string-state list_reduce over the
     // (ts, event_id)-ordered per-user sequence
@@ -909,30 +962,14 @@ object EventQueries extends QuerySet {
     // the as-of match orders at MICROsecond precision (the raw ts, as the
     // operator does); only the window-gap arithmetic floors to ms
     "ev_attribution" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'purchase'),
-        |r AS (SELECT event_id, user_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'click'),
-        |j AS (
-        |  SELECT l.event_id AS lid, l.us AS p_us, r.us AS c_us,
-        |    row_number() OVER (PARTITION BY l.event_id
-        |      ORDER BY r.us DESC, r.event_id DESC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id AND r.us <= l.us)
+      s"""WITH $AttributionCte
         |SELECT ((p_us // 1000) // 86400000)::BIGINT AS day,
         |  count(*)::BIGINT AS n_attributed
         |FROM j WHERE rn = 1 AND (p_us // 1000) - (c_us // 1000) <= 86400000
         |GROUP BY 1""".stripMargin,
 
     "ev_conversion_lag" ->
-      """WITH l AS (SELECT event_id, user_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'purchase'),
-        |r AS (SELECT event_id, user_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'click'),
-        |j AS (
-        |  SELECT l.event_id AS lid, l.us AS p_us, r.us AS c_us,
-        |    row_number() OVER (PARTITION BY l.event_id
-        |      ORDER BY r.us DESC, r.event_id DESC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id AND r.us <= l.us)
+      s"""WITH $AttributionCte
         |SELECT least(((p_us // 1000) - (c_us // 1000)) // 3600000, 48)::BIGINT
         |  AS lag_hours, count(*)::BIGINT AS n
         |FROM j WHERE rn = 1 GROUP BY 1""".stripMargin,
@@ -1031,21 +1068,14 @@ object EventQueries extends QuerySet {
         |FROM w WHERE typ = 'purchase'""".stripMargin,
 
     "ev_trend_slope" ->
-      """WITH h AS (SELECT event_type,
+      s"""WITH h AS (SELECT event_type,
         |    (epoch_us(ts) // 3600000000)::BIGINT AS hr, count(*)::BIGINT AS y
         |  FROM events GROUP BY 1, 2),
         |m AS (SELECT event_type, min(hr) AS mn FROM h GROUP BY 1),
         |s AS (SELECT h.event_type, count(*)::BIGINT AS n,
-        |    sum(hr - mn)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-        |    sum((hr - mn) * (hr - mn))::BIGINT AS sxx,
-        |    sum((hr - mn) * y)::BIGINT AS sxy
+        |    $HourFitSums
         |  FROM h JOIN m USING (event_type) GROUP BY 1)
-        |SELECT event_type, n,
-        |  (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE AS slope,
-        |  (sy::DOUBLE - ((n * sxy - sx * sy)::DOUBLE
-        |      / (n * sxx - sx * sx)::DOUBLE) * sx::DOUBLE) / n::DOUBLE
-        |    AS intercept
-        |FROM s""".stripMargin,
+        |${hourFitSelect("event_type")}""".stripMargin,
 
     // the moment arithmetic mirrors the Spark expression tree operand for
     // operand (left-assoc products, sqrt not pow) — see valueMoments
@@ -1098,9 +1128,7 @@ object EventQueries extends QuerySet {
         |FROM d""".stripMargin,
 
     "ev_item_cooc" ->
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
+      s"""WITH ${GraphQueries.UserItemCte},
         |ni AS (SELECT item, count(*)::BIGINT AS n_item FROM ui GROUP BY 1),
         |nu AS (SELECT count(DISTINCT u)::BIGINT AS n_users FROM ui),
         |p AS (SELECT a.item AS i, b.item AS j, count(*)::BIGINT AS n_co
@@ -1245,13 +1273,7 @@ object EventQueries extends QuerySet {
         |FROM d""".stripMargin,
 
     "ev_entropy_rate" ->
-      """WITH s AS (SELECT user_id,
-        |    list(event_type ORDER BY (epoch_us(ts) // 1000), event_id) AS seq
-        |  FROM events GROUP BY user_id),
-        |p AS (SELECT unnest(list_transform(
-        |    generate_series(1, len(seq) - 1),
-        |    i -> {f: seq[i], t: seq[i + 1]})) AS pr
-        |  FROM s WHERE len(seq) > 1),
+      s"""WITH $TransitionCte,
         |c AS (SELECT pr.f AS f, pr.t AS t, count(*)::BIGINT AS n
         |  FROM p GROUP BY 1, 2),
         |ns AS (SELECT f, sum(n)::BIGINT AS ns FROM c GROUP BY 1),
@@ -1267,79 +1289,34 @@ object EventQueries extends QuerySet {
         |FROM terms""".stripMargin,
 
     "ev_item_trend" ->
-      """WITH h AS (SELECT json_extract_string(props, '$.k')::INT AS item,
+      s"""WITH h AS (SELECT json_extract_string(props, '$$.k')::INT AS item,
         |    (epoch_us(ts) // 3600000000)::BIGINT AS hr, count(*)::BIGINT AS y
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL
+        |  FROM events WHERE json_extract_string(props, '$$.k') IS NOT NULL
         |  GROUP BY 1, 2),
         |m AS (SELECT item, min(hr) AS mn FROM h GROUP BY 1),
         |s AS (SELECT h.item, count(*)::BIGINT AS n,
-        |    sum(hr - mn)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-        |    sum((hr - mn) * (hr - mn))::BIGINT AS sxx,
-        |    sum((hr - mn) * y)::BIGINT AS sxy
+        |    $HourFitSums
         |  FROM h JOIN m USING (item) GROUP BY 1)
-        |SELECT item, n,
-        |  (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE AS slope,
-        |  (sy::DOUBLE - ((n * sxy - sx * sy)::DOUBLE
-        |      / (n * sxx - sx * sx)::DOUBLE) * sx::DOUBLE) / n::DOUBLE
-        |    AS intercept
-        |FROM s""".stripMargin,
+        |${hourFitSelect("item")}""".stripMargin,
 
     // identical to ev_asof_join's oracle — the operator must reproduce
     // the composed form bit-for-bit
     "ev_asof_native" ->
-      """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        |  SELECT l.event_id AS lid, r.event_id AS rid, r.value AS rv,
-        |    row_number() OVER (PARTITION BY l.event_id
-        |      ORDER BY r.ts DESC, r.event_id DESC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
-        |)
-        |SELECT l.event_id AS left_id, l.user_id AS k, l.ts,
-        |  j.rid AS matched_id, j.rv AS matched_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON j.lid = l.event_id""".stripMargin,
+      asofSql("ORDER BY r.ts DESC, r.event_id DESC", "AND r.ts <= l.ts"),
 
     "ev_asof_forward" ->
-      """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        |  SELECT l.event_id AS lid, r.event_id AS rid, r.value AS rv,
-        |    row_number() OVER (PARTITION BY l.event_id
-        |      ORDER BY r.ts ASC, r.event_id ASC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id AND r.ts >= l.ts
-        |)
-        |SELECT l.event_id AS left_id, l.user_id AS k, l.ts,
-        |  j.rid AS matched_id, j.rv AS matched_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON j.lid = l.event_id""".stripMargin,
+      asofSql("ORDER BY r.ts ASC, r.event_id ASC", "AND r.ts >= l.ts"),
 
     "ev_asof_nearest" ->
-      """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        |  SELECT l.event_id AS lid, r.event_id AS rid, r.value AS rv,
-        |    row_number() OVER (PARTITION BY l.event_id ORDER BY
-        |      abs(epoch_us(r.ts) - epoch_us(l.ts)) ASC,
-        |      CASE WHEN r.ts <= l.ts THEN 0 ELSE 1 END ASC,
-        |      CASE WHEN r.ts <= l.ts THEN -r.event_id ELSE r.event_id END ASC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id
-        |)
-        |SELECT l.event_id AS left_id, l.user_id AS k, l.ts,
-        |  j.rid AS matched_id, j.rv AS matched_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON j.lid = l.event_id""".stripMargin,
+      asofSql(
+        """ORDER BY
+          |      abs(epoch_us(r.ts) - epoch_us(l.ts)) ASC,
+          |      CASE WHEN r.ts <= l.ts THEN 0 ELSE 1 END ASC,
+          |      CASE WHEN r.ts <= l.ts THEN -r.event_id ELSE r.event_id END ASC""".stripMargin, ""),
 
     "ev_asof_tolerance" ->
-      """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase'),
-        |j AS (
-        |  SELECT l.event_id AS lid, r.event_id AS rid, r.value AS rv,
-        |    row_number() OVER (PARTITION BY l.event_id
-        |      ORDER BY r.ts DESC, r.event_id DESC) AS rn
-        |  FROM l JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
-        |    AND epoch_us(l.ts) - epoch_us(r.ts) <= 3600000000
-        |)
-        |SELECT l.event_id AS left_id, l.user_id AS k, l.ts,
-        |  j.rid AS matched_id, j.rv AS matched_value
-        |FROM l LEFT JOIN (SELECT * FROM j WHERE rn = 1) j ON j.lid = l.event_id""".stripMargin,
+      asofSql("ORDER BY r.ts DESC, r.event_id DESC",
+        "AND r.ts <= l.ts AND epoch_us(l.ts) - epoch_us(r.ts) <= 3600000000"),
 
     "ev_item_session_cooc" ->
       """WITH e AS (
@@ -1407,16 +1384,7 @@ object EventQueries extends QuerySet {
         |FROM s""".stripMargin,
 
     "ev_sessions_native" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, value, epoch_ms(ts) AS ts_ms FROM events
-        |),
-        |s AS (
-        |  SELECT *, CASE
-        |    WHEN lag(ts_ms) OVER w IS NULL THEN 1
-        |    WHEN ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1
-        |    ELSE 0 END AS is_start
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
-        |),
+      s"""WITH $SessionStartCte,
         |sid AS (
         |  SELECT *, sum(is_start) OVER (PARTITION BY user_id
         |    ORDER BY ts_ms, event_id

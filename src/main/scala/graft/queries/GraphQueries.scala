@@ -9,15 +9,41 @@ import graft.ops.GraphOps
   * Names: `graph`. */
 object GraphQueries extends QuerySet {
 
+  /** Oracle CTE: `ui(u, item)`, the distinct (user, item) pairs of the
+    * events that carry an item. */
+  private[queries] val UserItemCte =
+    """ui AS (SELECT DISTINCT user_id AS u,
+      |    json_extract_string(props, '$.k')::INT AS item
+      |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL)""".stripMargin
+
+  /** Oracle CTE body: [[UserItemCte]] and `edges(a, b)`, the item pairs a
+    * < b that one user touched — the co-item graph. */
+  private def coItemCte(edges: String): String =
+    s"""$UserItemCte,
+       |$edges AS (SELECT DISTINCT a.item AS a, b.item AS b
+       |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item)""".stripMargin
+
+  /** Oracle CTE body over the co-item edges `p`: `dir`, both directions,
+    * and `r1`..`r3(seed, v)`, the vertices within 1, 2 and 3 hops of each
+    * seed (the seed itself excluded). */
+  private val ReachHopsCte =
+    """dir AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
+      |r1 AS (SELECT DISTINCT a AS seed, b AS v FROM dir),
+      |r2 AS (SELECT DISTINCT seed, v FROM (
+      |    SELECT seed, v FROM r1
+      |    UNION SELECT r1.seed, d.b AS v FROM r1 JOIN dir d ON r1.v = d.a)
+      |  WHERE v <> seed),
+      |r3 AS (SELECT DISTINCT seed, v FROM (
+      |    SELECT seed, v FROM r2
+      |    UNION SELECT r2.seed, d.b AS v FROM r2 JOIN dir d ON r2.v = d.a)
+      |  WHERE v <> seed)""".stripMargin
 
   // The oracle unrolls the 10 supersteps as generated CTEs (aggregates
   // are not allowed in a recursive CTE's recursive term) — every step is
   // integer arithmetic, so the mirror is exact, not approximate.
   private val PageRankSql: String = {
     val prelude =
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
+      s"""WITH $UserItemCte,
         |p AS (SELECT DISTINCT a.item AS src, b.item AS dst
         |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
         |edges AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
@@ -150,11 +176,7 @@ object GraphQueries extends QuerySet {
     "graph_pagerank" -> PageRankSql,
 
     "graph_triangles" ->
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |e AS (SELECT DISTINCT a.item AS a, b.item AS b
-        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+      s"""WITH ${coItemCte("e")},
         |tri AS (SELECT count(*)::BIGINT AS n_triangles
         |  FROM e e1 JOIN e e2 ON e1.b = e2.a
         |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
@@ -168,21 +190,8 @@ object GraphQueries extends QuerySet {
         |FROM tri, w""".stripMargin,
 
     "graph_reach" ->
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |p AS (SELECT DISTINCT a.item AS a, b.item AS b
-        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
-        |dir AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
-        |r1 AS (SELECT DISTINCT a AS seed, b AS v FROM dir),
-        |r2 AS (SELECT DISTINCT seed, v FROM (
-        |    SELECT seed, v FROM r1
-        |    UNION SELECT r1.seed, d.b AS v FROM r1 JOIN dir d ON r1.v = d.a)
-        |  WHERE v <> seed),
-        |r3 AS (SELECT DISTINCT seed, v FROM (
-        |    SELECT seed, v FROM r2
-        |    UNION SELECT r2.seed, d.b AS v FROM r2 JOIN dir d ON r2.v = d.a)
-        |  WHERE v <> seed)
+      s"""WITH ${coItemCte("p")},
+        |$ReachHopsCte
         |SELECT c1.seed::BIGINT AS seed, c1.n1, c2.n2, c3.n3
         |FROM (SELECT seed, count(*)::BIGINT AS n1 FROM r1 GROUP BY 1) c1
         |JOIN (SELECT seed, count(*)::BIGINT AS n2 FROM r2 GROUP BY 1) c2 USING (seed)
@@ -192,21 +201,8 @@ object GraphQueries extends QuerySet {
     // the oracle replays the EXACT census and asserts every seed's sketch
     // estimate was within tolerance: n_within must equal n_seeds per hop
     "graph_reach_sketch" ->
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |p AS (SELECT DISTINCT a.item AS a, b.item AS b
-        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
-        |dir AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
-        |r1 AS (SELECT DISTINCT a AS seed, b AS v FROM dir),
-        |r2 AS (SELECT DISTINCT seed, v FROM (
-        |    SELECT seed, v FROM r1
-        |    UNION SELECT r1.seed, d.b AS v FROM r1 JOIN dir d ON r1.v = d.a)
-        |  WHERE v <> seed),
-        |r3 AS (SELECT DISTINCT seed, v FROM (
-        |    SELECT seed, v FROM r2
-        |    UNION SELECT r2.seed, d.b AS v FROM r2 JOIN dir d ON r2.v = d.a)
-        |  WHERE v <> seed),
+      s"""WITH ${coItemCte("p")},
+        |$ReachHopsCte,
         |s1 AS (SELECT seed FROM r1 GROUP BY 1),
         |s2 AS (SELECT seed FROM r2 GROUP BY 1),
         |s3 AS (SELECT seed FROM r3 GROUP BY 1)
@@ -216,22 +212,14 @@ object GraphQueries extends QuerySet {
         |UNION ALL SELECT 3, count(*)::BIGINT, count(*)::BIGINT FROM s3""".stripMargin,
 
     "graph_degree_hist" ->
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |e AS (SELECT DISTINCT a.item AS a, b.item AS b
-        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+      s"""WITH ${coItemCte("e")},
         |deg AS (SELECT v, count(*)::BIGINT AS d
         |  FROM (SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e)
         |  GROUP BY 1)
         |SELECT d, count(*)::BIGINT AS n_vertices FROM deg GROUP BY 1""".stripMargin,
 
     "graph_components" ->
-      """WITH RECURSIVE ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |p AS (SELECT DISTINCT a.item AS a, b.item AS b
-        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+      s"""WITH RECURSIVE ${coItemCte("p")},
         |e AS (SELECT a, b AS bb FROM p UNION ALL SELECT b, a FROM p),
         |n AS (SELECT DISTINCT a AS node FROM e),
         |reach(node, r) AS (
@@ -245,11 +233,7 @@ object GraphQueries extends QuerySet {
         |FROM sizes GROUP BY 1""".stripMargin,
 
     "graph_lpa" ->
-      """WITH ui AS (SELECT DISTINCT user_id AS u,
-        |    json_extract_string(props, '$.k')::INT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |e0 AS (SELECT DISTINCT a.item AS a, b.item AS b
-        |  FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item),
+      s"""WITH ${coItemCte("e0")},
         |und AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
         |l0 AS (SELECT DISTINCT a AS v, a::BIGINT AS label FROM und),
         |c1 AS (SELECT u.a, l.label, count(*) AS cnt

@@ -505,12 +505,7 @@ object LakeQueries extends QuerySet {
       if (LayoutOps.latestVersion(s, p) == 2)
         LayoutOps.compactSnapshot(s, p, targetFiles = 2,
           statsCols = Seq("day"))
-      def agg(v: Int, tag: String): DataFrame =
-        LayoutOps.readVersion(s, p, v)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("vmic").as("vmic"))
-          .withColumn("phase", lit(tag))
-      agg(2, "pre").unionByName(agg(3, "post"))
+      prePostTotals(s, p)
     }),
 
     // Day-ranged read through manifest-stats pruning: of the three
@@ -624,12 +619,7 @@ object LakeQueries extends QuerySet {
           greatest(col("day") - 19700L, lit(0L)),
           pmod(col("event_id"), lit(64)), bits = 8, targetFiles = 2,
           statsCols = Seq("day"))
-      def agg(v: Int, tag: String): DataFrame =
-        LayoutOps.readVersion(s, p, v)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("vmic").as("vmic"))
-          .withColumn("phase", lit(tag))
-      agg(2, "pre").unionByName(agg(3, "post"))
+      prePostTotals(s, p)
     }),
 
     // Retention DELETE with directory-granular rewrites: removing a day
@@ -701,6 +691,54 @@ object LakeQueries extends QuerySet {
     })
   )
 
+  /** Oracle CTE: `e(event_type, day, vmic)`, each event's epoch day and
+    * value in integer micro-units. */
+  private val DayVmicCte =
+    """e AS (SELECT event_type,
+      |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
+      |    floor(value * 1000000.0)::BIGINT AS vmic
+      |  FROM events)""".stripMargin
+
+  /** Per-event-type count and micro-unit value sum over the events whose
+    * day meets `where`. */
+  private def dayTotalsSql(where: String): String =
+    s"""WITH $DayVmicCte
+      |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
+      |FROM e WHERE $where
+      |GROUP BY event_type""".stripMargin
+
+  /** Per-event-type count and micro-unit value sum over all events. */
+  private val VmicTotalsSql =
+    """WITH e AS (SELECT event_type,
+      |    floor(value * 1000000.0)::BIGINT AS vmic
+      |  FROM events)
+      |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
+      |FROM e GROUP BY event_type""".stripMargin
+
+  /** [[VmicTotalsSql]]'s totals twice, as phases `pre` and `post`: a
+    * rewrite of the table must leave them unchanged. */
+  private val PrePostTotalsSql =
+    """WITH e AS (SELECT event_type,
+      |    floor(value * 1000000.0)::BIGINT AS vmic
+      |  FROM events),
+      |a AS (SELECT event_type, count(*)::BIGINT AS n,
+      |    sum(vmic)::BIGINT AS vmic
+      |  FROM e GROUP BY event_type)
+      |SELECT event_type, n, vmic, 'pre' AS phase FROM a
+      |UNION ALL
+      |SELECT event_type, n, vmic, 'post' AS phase FROM a""".stripMargin
+
+  /** Per-event-type count and micro-unit value sum of lake `p`'s version
+    * 2 (phase `pre`) and version 3 (phase `post`). */
+  private def prePostTotals(s: SparkSession, p: String): DataFrame = {
+    def agg(v: Int, tag: String): DataFrame =
+      LayoutOps.readVersion(s, p, v)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("vmic").as("vmic"))
+        .withColumn("phase", lit(tag))
+    agg(2, "pre").unionByName(agg(3, "post"))
+  }
+
   def oracles: Map[String, String] = Map(
 
     "s1_scan" ->
@@ -719,16 +757,7 @@ object LakeQueries extends QuerySet {
         |FROM events GROUP BY 1, 2""".stripMargin,
 
     "stream_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, value, epoch_ms(ts) AS ts_ms FROM events
-        |),
-        |s AS (
-        |  SELECT *, CASE
-        |    WHEN lag(ts_ms) OVER w IS NULL THEN 1
-        |    WHEN ts_ms - lag(ts_ms) OVER w > 1800000 THEN 1
-        |    ELSE 0 END AS is_start
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms, event_id)
-        |),
+      s"""WITH ${EventQueries.SessionStartCte},
         |sid AS (
         |  SELECT *, CAST(sum(is_start) OVER (PARTITION BY user_id ORDER BY ts_ms, event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1 AS BIGINT) AS session_id
@@ -1011,10 +1040,7 @@ object LakeQueries extends QuerySet {
         |    GROUP BY doc_id HAVING count(*) > 1)) = 0""".stripMargin,
 
     "o5_time_travel" ->
-      """WITH e AS (SELECT event_type,
-        |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
+      s"""WITH $DayVmicCte
         |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic,
         |  0 AS version
         |FROM e WHERE day < 19737 GROUP BY event_type
@@ -1048,59 +1074,17 @@ object LakeQueries extends QuerySet {
         |UNION ALL
         |SELECT lang, 'chars' AS metric, chars AS value FROM census""".stripMargin,
 
-    "o5_compact_travel" ->
-      """WITH e AS (SELECT event_type,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events),
-        |a AS (SELECT event_type, count(*)::BIGINT AS n,
-        |    sum(vmic)::BIGINT AS vmic
-        |  FROM e GROUP BY event_type)
-        |SELECT event_type, n, vmic, 'pre' AS phase FROM a
-        |UNION ALL
-        |SELECT event_type, n, vmic, 'post' AS phase FROM a""".stripMargin,
+    "o5_compact_travel" -> PrePostTotalsSql,
 
-    "o5_stats_skip" ->
-      """WITH e AS (SELECT event_type,
-        |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
-        |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
-        |FROM e WHERE day BETWEEN 19735 AND 19739
-        |GROUP BY event_type""".stripMargin,
+    "o5_stats_skip" -> dayTotalsSql("day BETWEEN 19735 AND 19739"),
 
-    "o5_pushdown_skip" ->
-      """WITH e AS (SELECT event_type,
-        |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
-        |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
-        |FROM e WHERE day BETWEEN 19735 AND 19739
-        |GROUP BY event_type""".stripMargin,
+    "o5_pushdown_skip" -> dayTotalsSql("day BETWEEN 19735 AND 19739"),
 
-    "o5_tail_mirror" ->
-      """WITH e AS (SELECT event_type,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
-        |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
-        |FROM e GROUP BY event_type""".stripMargin,
+    "o5_tail_mirror" -> VmicTotalsSql,
 
-    "o5_stream_tail" ->
-      """WITH e AS (SELECT event_type,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
-        |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
-        |FROM e GROUP BY event_type""".stripMargin,
+    "o5_stream_tail" -> VmicTotalsSql,
 
-    "o5_zorder_travel" ->
-      """WITH e AS (SELECT event_type,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events),
-        |a AS (SELECT event_type, count(*)::BIGINT AS n,
-        |    sum(vmic)::BIGINT AS vmic
-        |  FROM e GROUP BY event_type)
-        |SELECT event_type, n, vmic, 'pre' AS phase FROM a
-        |UNION ALL
-        |SELECT event_type, n, vmic, 'post' AS phase FROM a""".stripMargin,
+    "o5_zorder_travel" -> PrePostTotalsSql,
 
     "o5_merge_into" ->
       """WITH e AS (SELECT event_id, event_type,
@@ -1111,22 +1095,8 @@ object LakeQueries extends QuerySet {
         |                THEN 2 * vmic ELSE vmic END)::BIGINT AS vmic
         |FROM e GROUP BY event_type""".stripMargin,
 
-    "o5_delete_where" ->
-      """WITH e AS (SELECT event_type,
-        |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
-        |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
-        |FROM e WHERE day < 19735 OR day > 19739
-        |GROUP BY event_type""".stripMargin,
+    "o5_delete_where" -> dayTotalsSql("day < 19735 OR day > 19739"),
 
-    "o5_version_delta" ->
-      """WITH e AS (SELECT event_type,
-        |    (epoch_us(ts) // 86400000000)::BIGINT AS day,
-        |    floor(value * 1000000.0)::BIGINT AS vmic
-        |  FROM events)
-        |SELECT event_type, count(*)::BIGINT AS n, sum(vmic)::BIGINT AS vmic
-        |FROM e WHERE day >= 19732
-        |GROUP BY event_type""".stripMargin
+    "o5_version_delta" -> dayTotalsSql("day >= 19732")
   )
 }

@@ -33,6 +33,27 @@ object MediaQueries extends QuerySet {
       col("pos").cast("long").as("j") :+ round(col("col"), 6).as("feat")): _*)
   }
 
+  /** One (doc_id, keep…, idx, j, feat) row per feature j of each frame
+    * of `frames`, a (doc_id, keep…, pos, col) posexplode of per-frame
+    * feature arrays; `pos` becomes the long frame index `idx` and feat is
+    * rounded to 6 dp. */
+  private def frameFeatureRows(frames: DataFrame, idx: String,
+      keep: String*): DataFrame = {
+    val kept = col("doc_id") +: keep.map(col)
+    frames.withColumnRenamed("pos", idx)
+      .select(kept :+ asLong(idx) :+ posexplode(col("col")): _*)
+      .select(kept :+ col(idx) :+ col("pos").cast("long").as("j") :+
+        round(col("col"), 6).as("feat"): _*)
+  }
+
+  /** The 4×4 raster features of each composited frame of an 8×8
+    * animated GIF built from `frames`. */
+  private def compositeFeatures(frames: Seq[ImageCodec.GifFrame])
+      : IndexedSeq[Seq[Double]] =
+    ImageCodec.decodeGifComposited(
+      ImageCodec.encodeGifAnimatedComposite(8, 8, frames))
+      .map(r => ImageCodec.rasterFeatures(r, 4, 4).toSeq)
+
   /** The `doc_id % m` class column `name`. */
   private def docClass(name: String, m: Int): Column =
     (col("doc_id") % m).cast("long").as(name)
@@ -448,18 +469,23 @@ object MediaQueries extends QuerySet {
     * the `mm_y4m_frame_dedup` derivation, shared by the incremental
     * pipeline.  Output: (doc_id, frame, luma, __k). */
   private[queries] def y4mFrameHashes(d: DataFrame): DataFrame = {
-    val frameHashes = udf((id: Long, text: String) => {
-      val src = MultimodalOps.asciiBytes(text)
-      VideoCodec.decodeY4mFrames(VideoCodec.encodeY4m(8, 8,
-        (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }, chroma = "420"))
-        .map(r => r.lumaSum3.mkString(","))
-    })
+    val frameHashes = udf((id: Long, text: String) =>
+      VideoCodec.decodeY4mFrames(
+        VideoCodec.encodeY4m(8, 8, walkFrames(text, 3), chroma = "420"))
+        .map(r => r.lumaSum3.mkString(",")))
     d.select(col("doc_id"),
         posexplode(frameHashes(col("doc_id"), col("text"))))
       .select(col("doc_id"), col("pos").cast("long").as("frame"),
         col("col").as("luma"), md5(col("col")).as("__k"))
+  }
+
+  /** Frames 0 until `n` of the 8×8 video fixture: frame f walks the
+    * document's bytes from offset 29·f in row-major order. */
+  private def walkFrames(text: String, n: Int): IndexedSeq[(Int, Int) => Int] = {
+    val src = MultimodalOps.asciiBytes(text)
+    (0 until n).map { f =>
+      (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
+    }
   }
 
   /** Canonically-ordered equal-frame pairs WITHIN one frame-hash set:
@@ -1054,22 +1080,14 @@ object MediaQueries extends QuerySet {
 
     "mm_gif_animated" -> ((s, dir) => {
       val decodeFrames = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val enc = ImageCodec.encodeGifAnimated(8, 8, frames, delayCs = 4)
         ImageCodec.decodeGifFrames(enc)
           .map(r => ImageCodec.rasterFeatures(r, 4, 4).toSeq)
       })
-      Tables.docs(s, dir)
-        .select(col("doc_id"),
-          posexplode(decodeFrames(col("doc_id"), col("text"))))
-        .withColumnRenamed("pos", "frame")
-        .select(col("doc_id"), asLong("frame"),
-          posexplode(col("col")))
-        .select(col("doc_id"), col("frame"),
-          col("pos").cast("long").as("j"), round(col("col"), 6).as("feat"))
+      frameFeatureRows(Tables.docs(s, dir)
+        .select(col("doc_id"), posexplode(decodeFrames(col("doc_id"), col("text")))),
+        "frame")
     }),
 
     "mm_flac_wasted" -> ((s, dir) => {
@@ -1137,10 +1155,7 @@ object MediaQueries extends QuerySet {
 
     "mm_y4m_frames" -> ((s, dir) => {
       val decodeFrames = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val chroma = (id % 4) match {
           case 0 => "mono"; case 1 => "420"; case 2 => "422"; case _ => "444"
         }
@@ -1159,28 +1174,9 @@ object MediaQueries extends QuerySet {
     }),
 
     "mm_y4m_frame_dedup" -> ((s, dir) => {
-      val frameHashes = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        VideoCodec.decodeY4mFrames(VideoCodec.encodeY4m(8, 8,
-          (0 until 3).map { f =>
-            (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-          }, chroma = "420"))
-          .map(r => r.lumaSum3.mkString(","))
-      })
-      val frames = Tables.docs(s, dir)
-        .select(col("doc_id"),
-          posexplode(frameHashes(col("doc_id"), col("text"))))
-        .select(col("doc_id"), col("pos").cast("long").as("frame"),
-          col("col").as("luma"), md5(col("col")).as("__k"))
-        .persist()
+      val frames = y4mFrameHashes(Tables.docs(s, dir)).persist()
       graft.core.CacheScope.register(frames)
-      frames.as("a").join(frames.as("b"),
-          col("a.__k") === col("b.__k") && col("a.luma") === col("b.luma") &&
-            (col("a.doc_id") < col("b.doc_id") ||
-              (col("a.doc_id") === col("b.doc_id") &&
-                col("a.frame") < col("b.frame"))))
-        .select(col("a.doc_id").as("doc_a"), col("a.frame").as("frame_a"),
-          col("b.doc_id").as("doc_b"), col("b.frame").as("frame_b"))
+      framePairsWithin(frames)
     }),
 
     "mm_au_aiff" -> ((s, dir) => {
@@ -1256,18 +1252,11 @@ object MediaQueries extends QuerySet {
             (u, v) => at(v * 4 + u + 96)),
           ImageCodec.GifFrame(4, 0, 4, 4, 1,
             (u, v) => at(v * 4 + u + 128)))
-        ImageCodec.decodeGifComposited(
-          ImageCodec.encodeGifAnimatedComposite(8, 8, frames))
-          .map(r => ImageCodec.rasterFeatures(r, 4, 4).toSeq)
+        compositeFeatures(frames)
       })
-      Tables.docs(s, dir)
-        .select(col("doc_id"),
-          posexplode(compFeats(col("doc_id"), col("text"))))
-        .withColumnRenamed("pos", "frame")
-        .select(col("doc_id"), asLong("frame"),
-          posexplode(col("col")))
-        .select(col("doc_id"), col("frame"),
-          col("pos").cast("long").as("j"), round(col("col"), 6).as("feat"))
+      frameFeatureRows(Tables.docs(s, dir)
+        .select(col("doc_id"), posexplode(compFeats(col("doc_id"), col("text")))),
+        "frame")
     }),
 
     // cross-container conformance: the SAME frames through both video
@@ -1276,10 +1265,7 @@ object MediaQueries extends QuerySet {
     // (row order, padding, plane sizes) breaks the in-row equality
     "mm_video_containers" -> ((s, dir) => {
       val biteq = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val y4m = VideoCodec.decodeY4mFrames(
           VideoCodec.encodeY4m(8, 8, frames, chroma = "420"))
         val avi = VideoCodec.decodeAviFrames(
@@ -1324,33 +1310,22 @@ object MediaQueries extends QuerySet {
 
     "mm_avi_frames" -> ((s, dir) => {
       val decodeFrames = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val payload = VideoCodec.encodeAvi(8, 8, frames)
         (payload.length,
           VideoCodec.decodeAviFrames(payload)
             .map(r => ImageCodec.rasterFeatures(r, 4, 4).toSeq))
       })
-      Tables.docs(s, dir)
+      frameFeatureRows(Tables.docs(s, dir)
         .select(col("doc_id"),
           decodeFrames(col("doc_id"), col("text")).as("d"))
         .select(col("doc_id"), col("d._1").cast("long").as("byte_len"),
-          posexplode(col("d._2")))
-        .withColumnRenamed("pos", "frame")
-        .select(col("doc_id"), col("byte_len"),
-          asLong("frame"), posexplode(col("col")))
-        .select(col("doc_id"), col("byte_len"), col("frame"),
-          col("pos").cast("long").as("j"), round(col("col"), 6).as("feat"))
+          posexplode(col("d._2"))), "frame", "byte_len")
     }),
 
     "mm_avi_mjpeg" -> ((s, dir) => {
       val biteq = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val dec = VideoCodec.decodeAviFrames(
           VideoCodec.encodeAvi(8, 8, frames, codec = "MJPG"))
         frames.indices.map { f =>
@@ -1381,46 +1356,28 @@ object MediaQueries extends QuerySet {
           ImageCodec.GifFrame(2, 2, 4, 4, 1,
             (u, v) => if ((u + v) % 2 == 0) T else at(v * 4 + u + 128),
             transparent = Some(T)))
-        ImageCodec.decodeGifComposited(
-          ImageCodec.encodeGifAnimatedComposite(8, 8, frames))
-          .map(r => ImageCodec.rasterFeatures(r, 4, 4).toSeq)
+        compositeFeatures(frames)
       })
-      Tables.docs(s, dir)
-        .select(col("doc_id"),
-          posexplode(compFeats(col("doc_id"), col("text"))))
-        .withColumnRenamed("pos", "frame")
-        .select(col("doc_id"), asLong("frame"),
-          posexplode(col("col")))
-        .select(col("doc_id"), col("frame"),
-          col("pos").cast("long").as("j"), round(col("col"), 6).as("feat"))
+      frameFeatureRows(Tables.docs(s, dir)
+        .select(col("doc_id"), posexplode(compFeats(col("doc_id"), col("text")))),
+        "frame")
     }),
 
     "mm_y4m_interlaced" -> ((s, dir) => {
       val fieldFeats = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 2).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 2)
         VideoCodec.decodeY4mFrames(VideoCodec.encodeY4m(8, 8, frames,
             chroma = "420", interlace = if (id % 2 == 0) "t" else "b"))
           .map(r => ImageCodec.rasterFeatures(r, 4, 4).toSeq)
       })
-      Tables.docs(s, dir)
-        .select(col("doc_id"),
-          posexplode(fieldFeats(col("doc_id"), col("text"))))
-        .withColumnRenamed("pos", "field")
-        .select(col("doc_id"), asLong("field"),
-          posexplode(col("col")))
-        .select(col("doc_id"), col("field"),
-          col("pos").cast("long").as("j"), round(col("col"), 6).as("feat"))
+      frameFeatureRows(Tables.docs(s, dir)
+        .select(col("doc_id"), posexplode(fieldFeats(col("doc_id"), col("text")))),
+        "field")
     }),
 
     "mm_avi_rec" -> ((s, dir) => {
       val biteq = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val flat = VideoCodec.decodeAviFrames(
           VideoCodec.encodeAvi(8, 8, frames))
         val rec = VideoCodec.encodeAvi(8, 8, frames, recGroup = 2,
@@ -1440,10 +1397,7 @@ object MediaQueries extends QuerySet {
 
     "mm_avi_mjpeg_notables" -> ((s, dir) => {
       val biteq = udf((id: Long, text: String) => {
-        val src = MultimodalOps.asciiBytes(text)
-        val frames = (0 until 3).map { f =>
-          (x: Int, y: Int) => src((y * 8 + x + 29 * f) % src.length) & 0xff
-        }
+        val frames = walkFrames(text, 3)
         val full = VideoCodec.encodeAvi(8, 8, frames, codec = "MJPG")
         val stripped = VideoCodec.encodeAvi(8, 8, frames, codec = "MJPG",
           stripTables = true)
@@ -1493,6 +1447,27 @@ object MediaQueries extends QuerySet {
       MultimodalOps.clipOverlapPairs(fr, col("doc_id"), col("__k"))
     })
   )
+
+  /** The all-pairs frame-dedup oracle: (doc, frame) pairs of the three
+    * 64-pixel Y4M frames whose luma agrees, ordered lexicographically; the
+    * CTE names start with `p`. */
+  private[queries] def y4mFramePairsSql(p: String): String =
+    s"""WITH ${p}a AS (SELECT doc_id,
+      |    regexp_replace(text, '[^ -~]', '?', 'g') AS text
+      |  FROM documents),
+      |${p}f AS (SELECT doc_id, text,
+      |    unnest(generate_series(0, 2)) AS frame FROM ${p}a),
+      |${p}v AS (
+      |  SELECT doc_id, frame,
+      |    list_transform(generate_series(0, 63), j ->
+      |      ascii(substr(text,
+      |        (((j + 29 * frame) % length(text)) + 1)::INT, 1))) AS v
+      |  FROM ${p}f)
+      |SELECT x.doc_id AS doc_a, x.frame::BIGINT AS frame_a,
+      |  y.doc_id AS doc_b, y.frame::BIGINT AS frame_b
+      |FROM ${p}v x JOIN ${p}v y
+      |  ON x.v = y.v AND (x.doc_id < y.doc_id OR
+      |    (x.doc_id = y.doc_id AND x.frame < y.frame))""".stripMargin
 
   def oracles: Map[String, String] = Map(
 
@@ -1857,23 +1832,7 @@ object MediaQueries extends QuerySet {
 
     // frame-level exact dedup: (doc, frame) pairs whose 64-pixel luma
     // agrees, ordered lexicographically
-    "mm_y4m_frame_dedup" ->
-      """WITH fda AS (SELECT doc_id,
-        |    regexp_replace(text, '[^ -~]', '?', 'g') AS text
-        |  FROM documents),
-        |fdf AS (SELECT doc_id, text,
-        |    unnest(generate_series(0, 2)) AS frame FROM fda),
-        |fdv AS (
-        |  SELECT doc_id, frame,
-        |    list_transform(generate_series(0, 63), j ->
-        |      ascii(substr(text,
-        |        (((j + 29 * frame) % length(text)) + 1)::INT, 1))) AS v
-        |  FROM fdf)
-        |SELECT x.doc_id AS doc_a, x.frame::BIGINT AS frame_a,
-        |  y.doc_id AS doc_b, y.frame::BIGINT AS frame_b
-        |FROM fdv x JOIN fdv y
-        |  ON x.v = y.v AND (x.doc_id < y.doc_id OR
-        |    (x.doc_id = y.doc_id AND x.frame < y.frame))""".stripMargin,
+    "mm_y4m_frame_dedup" -> y4mFramePairsSql("fd"),
 
     // AU = 24-byte header + 512 sample bytes; AIFF = FORM(12) +
     // COMM(8+18) + SSND(8 + 8 prelude + 512)

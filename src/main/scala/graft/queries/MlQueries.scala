@@ -14,20 +14,12 @@ object MlQueries extends QuerySet {
   import SimilarityQueries.cosSql
   import TextQueries.toksSql
 
-  /** The `ml_nb_classify` oracle, shared with the queries that wrap it. */
-  private lazy val MlNbClassifySql: String =
-    s"""WITH tok AS (
-      |  SELECT doc_id, source,
-      |    unnest(${toksSql("text")}) AS tok
-      |  FROM documents),
-      |cnt AS (SELECT source AS lbl, tok, count(*)::DOUBLE AS c FROM tok GROUP BY 1, 2),
-      |ntot AS (SELECT lbl, sum(c) AS n FROM cnt GROUP BY 1),
-      |v AS (SELECT count(DISTINCT tok)::DOUBLE AS vs FROM tok),
-      |pri AS (
-      |  SELECT source AS lbl,
-      |    ln(count(*)::DOUBLE / (SELECT count(*)::DOUBLE FROM documents)) AS lp
-      |  FROM documents GROUP BY 1),
-      |dt AS (SELECT doc_id, tok, count(*)::DOUBLE AS m FROM tok GROUP BY 1, 2),
+  /** Naive-Bayes scoring CTE body (no `WITH`) over `tokens(doc_id, tok)`
+    * and the trained `cnt`, `ntot`, `v`, `pri`: each document's per-label
+    * score (alpha = 1, term for term MlOps.nbScore) in `sc` and its
+    * ranking `r` (rn = 1 is the prediction, ties to the smaller label). */
+  private def nbScoreCte(tokens: String): String =
+    s"""dt AS (SELECT doc_id, tok, count(*)::DOUBLE AS m FROM $tokens GROUP BY 1, 2),
       |mdoc AS (SELECT doc_id, sum(m) AS mm FROM dt GROUP BY 1),
       |adj AS (
       |  SELECT dt.doc_id, cnt.lbl, sum(dt.m * ln(cnt.c + 1.0)) AS adj
@@ -43,7 +35,22 @@ object MlQueries extends QuerySet {
       |r AS (
       |  SELECT doc_id, lbl, score,
       |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lbl) AS rn
-      |  FROM sc)
+      |  FROM sc)""".stripMargin
+
+  /** The `ml_nb_classify` oracle, shared with the queries that wrap it. */
+  private lazy val MlNbClassifySql: String =
+    s"""WITH tok AS (
+      |  SELECT doc_id, source,
+      |    unnest(${toksSql("text")}) AS tok
+      |  FROM documents),
+      |cnt AS (SELECT source AS lbl, tok, count(*)::DOUBLE AS c FROM tok GROUP BY 1, 2),
+      |ntot AS (SELECT lbl, sum(c) AS n FROM cnt GROUP BY 1),
+      |v AS (SELECT count(DISTINCT tok)::DOUBLE AS vs FROM tok),
+      |pri AS (
+      |  SELECT source AS lbl,
+      |    ln(count(*)::DOUBLE / (SELECT count(*)::DOUBLE FROM documents)) AS lp
+      |  FROM documents GROUP BY 1),
+      |${nbScoreCte("tok")}
       |SELECT doc_id, lbl AS pred_label, score FROM r WHERE rn = 1""".stripMargin
 
   /** Shared Cramer-rule arithmetic for ml_ridge — evaluated by BOTH
@@ -117,23 +124,7 @@ object MlQueries extends QuerySet {
        |  SELECT doc_id,
        |    unnest(${toksSql("text")}) AS tok
        |  FROM test),
-       |dt AS (SELECT doc_id, tok, count(*)::DOUBLE AS m FROM stok GROUP BY 1, 2),
-       |mdoc AS (SELECT doc_id, sum(m) AS mm FROM dt GROUP BY 1),
-       |adj AS (
-       |  SELECT dt.doc_id, cnt.lbl, sum(dt.m * ln(cnt.c + 1.0)) AS adj
-       |  FROM dt JOIN cnt ON cnt.tok = dt.tok GROUP BY 1, 2),
-       |sc AS (
-       |  SELECT md.doc_id, p.lbl,
-       |    round(p.lp - md.mm * ln(nt.n + v.vs) + coalesce(adj.adj, 0), 6) AS score
-       |  FROM mdoc md
-       |  CROSS JOIN pri p
-       |  JOIN ntot nt ON nt.lbl = p.lbl
-       |  CROSS JOIN v
-       |  LEFT JOIN adj ON adj.doc_id = md.doc_id AND adj.lbl = p.lbl),
-       |r AS (
-       |  SELECT doc_id, lbl, score,
-       |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lbl) AS rn
-       |  FROM sc),
+       |${nbScoreCte("stok")},
        |pred AS (SELECT doc_id, lbl FROM r WHERE rn = 1)
        |SELECT $f AS fold, count(*)::BIGINT AS n_test,
        |  sum(CASE WHEN pred.lbl = t.source THEN 1 ELSE 0 END)::BIGINT AS n_correct,
@@ -455,6 +446,39 @@ object MlQueries extends QuerySet {
     })
   )
 
+  /** kNN-vote oracle CTE body (no `WITH`): the `k` nearest neighbours by
+    * cosine of each query vec_id < `queries` (`s`, `r`), the label votes
+    * `v` and their ranking `a` (rn = 1 is the winning label, ties to the
+    * smaller label). */
+  private def knnVoteCte(queries: Int, k: Int): String =
+    s"""s AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    ${cosSql("q.embedding", "c.embedding")} AS cos
+       |  FROM embeddings c CROSS JOIN
+       |    (SELECT * FROM embeddings WHERE vec_id < $queries) q
+       |  WHERE c.vec_id <> q.vec_id),
+       |r AS (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s),
+       |v AS (
+       |  SELECT r.query_id, e.label AS pred_label, count(*)::BIGINT AS votes
+       |  FROM r JOIN embeddings e ON e.vec_id = r.neighbor_id
+       |  WHERE r.rank < $k GROUP BY 1, 2),
+       |a AS (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY votes DESC, pred_label) AS rn FROM v)""".stripMargin
+
+  /** Oracle CTE body over [[knnVoteCte]]'s `a`: each query's winning vote
+    * count as a score `s` with `y` = 1 when its label is right (`j`), and
+    * the per-score counts `g(s, cnt, pos)`. */
+  private val VoteOutcomeCte =
+    """p0 AS (SELECT query_id, pred_label, votes FROM a WHERE rn = 1),
+      |j AS (SELECT votes AS s,
+      |    CASE WHEN p0.pred_label = t.label THEN 1 ELSE 0 END AS y
+      |  FROM p0 JOIN embeddings t ON t.vec_id = p0.query_id),
+      |g AS (SELECT s, count(*)::BIGINT AS cnt, sum(y)::BIGINT AS pos
+      |  FROM j GROUP BY 1)""".stripMargin
+
   def oracles: Map[String, String] = Map(
 
     // invariant oracle: if any point's assigned centroid were not its
@@ -467,22 +491,7 @@ object MlQueries extends QuerySet {
     "ml_nb_classify" -> MlNbClassifySql,
 
     "ml_knn_classify" ->
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "c.embedding")} AS cos
-         |  FROM embeddings c CROSS JOIN
-         |    (SELECT * FROM embeddings WHERE vec_id < 20) q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s),
-         |v AS (
-         |  SELECT r.query_id, e.label AS pred_label, count(*)::BIGINT AS votes
-         |  FROM r JOIN embeddings e ON e.vec_id = r.neighbor_id
-         |  WHERE r.rank < 5 GROUP BY 1, 2),
-         |a AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY votes DESC, pred_label) AS rn FROM v)
+      s"""WITH ${knnVoteCte(20, 5)}
          |SELECT query_id, pred_label, votes FROM a WHERE rn = 1""".stripMargin,
 
     "ml_nb_confusion" ->
@@ -492,22 +501,7 @@ object MlQueries extends QuerySet {
          |GROUP BY 1, 2""".stripMargin,
 
     "ml_reliability" ->
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "c.embedding")} AS cos
-         |  FROM embeddings c CROSS JOIN
-         |    (SELECT * FROM embeddings WHERE vec_id < 200) q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s),
-         |v AS (
-         |  SELECT r.query_id, e.label AS pred_label, count(*)::BIGINT AS votes
-         |  FROM r JOIN embeddings e ON e.vec_id = r.neighbor_id
-         |  WHERE r.rank < 10 GROUP BY 1, 2),
-         |a AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY votes DESC, pred_label) AS rn FROM v),
+      s"""WITH ${knnVoteCte(200, 10)},
          |p AS (SELECT query_id, pred_label, votes FROM a WHERE rn = 1)
          |SELECT votes, count(*)::BIGINT AS n,
          |  sum(CASE WHEN p.pred_label = t.label THEN 1 ELSE 0 END)::BIGINT
@@ -518,28 +512,8 @@ object MlQueries extends QuerySet {
          |GROUP BY votes""".stripMargin,
 
     "ml_auc" ->
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "c.embedding")} AS cos
-         |  FROM embeddings c CROSS JOIN
-         |    (SELECT * FROM embeddings WHERE vec_id < 200) q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s),
-         |v AS (
-         |  SELECT r.query_id, e.label AS pred_label, count(*)::BIGINT AS votes
-         |  FROM r JOIN embeddings e ON e.vec_id = r.neighbor_id
-         |  WHERE r.rank < 10 GROUP BY 1, 2),
-         |a AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY votes DESC, pred_label) AS rn FROM v),
-         |p0 AS (SELECT query_id, pred_label, votes FROM a WHERE rn = 1),
-         |j AS (SELECT votes AS s,
-         |    CASE WHEN p0.pred_label = t.label THEN 1 ELSE 0 END AS y
-         |  FROM p0 JOIN embeddings t ON t.vec_id = p0.query_id),
-         |g AS (SELECT s, count(*)::BIGINT AS cnt, sum(y)::BIGINT AS pos
-         |  FROM j GROUP BY 1),
+      s"""WITH ${knnVoteCte(200, 10)},
+         |$VoteOutcomeCte,
          |c AS (SELECT *, sum(cnt) OVER (ORDER BY s
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM g),
          |f AS (SELECT sum(pos)::BIGINT AS p, sum(cnt - pos)::BIGINT AS n,
@@ -549,28 +523,8 @@ object MlQueries extends QuerySet {
          |FROM f""".stripMargin,
 
     "ml_pr_curve" ->
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "c.embedding")} AS cos
-         |  FROM embeddings c CROSS JOIN
-         |    (SELECT * FROM embeddings WHERE vec_id < 200) q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s),
-         |v AS (
-         |  SELECT r.query_id, e.label AS pred_label, count(*)::BIGINT AS votes
-         |  FROM r JOIN embeddings e ON e.vec_id = r.neighbor_id
-         |  WHERE r.rank < 10 GROUP BY 1, 2),
-         |a AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY votes DESC, pred_label) AS rn FROM v),
-         |p0 AS (SELECT query_id, pred_label, votes FROM a WHERE rn = 1),
-         |j AS (SELECT votes AS s,
-         |    CASE WHEN p0.pred_label = t.label THEN 1 ELSE 0 END AS y
-         |  FROM p0 JOIN embeddings t ON t.vec_id = p0.query_id),
-         |g AS (SELECT s, count(*)::BIGINT AS cnt, sum(y)::BIGINT AS pos
-         |  FROM j GROUP BY 1),
+      s"""WITH ${knnVoteCte(200, 10)},
+         |$VoteOutcomeCte,
          |c AS (SELECT *,
          |    sum(pos) OVER (ORDER BY s DESC
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
@@ -585,13 +539,7 @@ object MlQueries extends QuerySet {
          |FROM c CROSS JOIN t""".stripMargin,
 
     "ml_markov_backtest" ->
-      """WITH s AS (SELECT user_id,
-        |    list(event_type ORDER BY (epoch_us(ts) // 1000), event_id) AS seq
-        |  FROM events GROUP BY user_id),
-        |p AS (SELECT unnest(list_transform(
-        |    generate_series(1, len(seq) - 1),
-        |    i -> {f: seq[i], t: seq[i + 1]})) AS pr
-        |  FROM s WHERE len(seq) > 1),
+      s"""WITH ${EventQueries.TransitionCte},
         |c AS (SELECT pr.f AS from_type, pr.t AS to_type,
         |    count(*)::BIGINT AS n FROM p GROUP BY 1, 2),
         |r AS (SELECT *, row_number() OVER (PARTITION BY from_type

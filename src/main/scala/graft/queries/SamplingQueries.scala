@@ -96,7 +96,9 @@ object SamplingQueries extends QuerySet {
       |FROM documents
       |GROUP BY lang""".stripMargin
 
-  private val FlatQuantiles =
+  /** HDR length-bucket CTE: `h(bucket_id, lb, ub, n)` over the
+    * documents' n_chars, 4 significant bits per bucket. */
+  private val HdrLenCte =
     """h AS (
       |  SELECT (sh::BIGINT * 32 + (v >> sh)) AS bucket_id,
       |    ((v >> sh) << sh)::BIGINT AS lb,
@@ -105,7 +107,10 @@ object SamplingQueries extends QuerySet {
       |  FROM (SELECT n_chars::BIGINT AS v,
       |      greatest(0, length(bin(n_chars::BIGINT)) - 1 - 4) AS sh
       |    FROM documents)
-      |  GROUP BY 1, 2, 3),
+      |  GROUP BY 1, 2, 3)""".stripMargin
+
+  private val FlatQuantiles =
+    s"""$HdrLenCte,
       |c AS (SELECT bucket_id, lb, ub,
       |    sum(n) OVER (ORDER BY bucket_id) AS cum FROM h),
       |t AS (SELECT sum(n)::BIGINT AS n_total FROM h),
@@ -304,13 +309,7 @@ object SamplingQueries extends QuerySet {
     // U6: custom codegen Expression — sparse (index,value) rows → dense,
     // flattened for comparison
     "u6_sparse_to_dense" -> ((s, dir) => {
-      val sparse = s.read.parquet(s"$dir/lineitem.parquet")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_list(
-          struct(col("l_linenumber"), col("l_quantity")))).as("sl"))
-        .select(col("l_orderkey"),
-          transform(col("sl"), x => x("l_linenumber").cast("long")).as("genes"),
-          transform(col("sl"), x => x("l_quantity")).as("exprs"))
+      val sparse = sparseLines(s.read.parquet(s"$dir/lineitem.parquet"))
       sparse.select(col("l_orderkey"),
           posexplode(SparseToDense.sparseToDense(col("genes"), col("exprs"), 7)))
         .select(col("l_orderkey"), col("pos").cast("long").as("pos"),
@@ -337,13 +336,7 @@ object SamplingQueries extends QuerySet {
     // U5: AnnData materialize analogue — densify sparse rows AND project an
     // obs metadata column in one pass (broadcast dimension join)
     "u5_densify_project" -> ((s, dir) => {
-      val sparse = s.read.parquet(s"$dir/lineitem.parquet")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_list(
-          struct(col("l_linenumber"), col("l_quantity")))).as("sl"))
-        .select(col("l_orderkey"),
-          transform(col("sl"), x => x("l_linenumber").cast("long")).as("genes"),
-          transform(col("sl"), x => x("l_quantity")).as("exprs"))
+      val sparse = sparseLines(s.read.parquet(s"$dir/lineitem.parquet"))
       val obs = s.read.parquet(s"$dir/orders.parquet")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
       sparse.join(broadcast(obs), Seq("l_orderkey"))
@@ -650,6 +643,46 @@ object SamplingQueries extends QuerySet {
     })
   )
 
+  /** Systematic-resampling CTE body over weights `w(…, row_id, wi)`: the
+    * running weight `c.cum`, the total and the md5 offset (seed `seed`) in
+    * `params`, and each row's copy count `cp.copies` out of `draws`. */
+  private def systematicCopiesCte(seed: Int, draws: String): String =
+    s"""c AS (
+       |  SELECT *, sum(wi) OVER (ORDER BY row_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |  FROM w
+       |),
+       |params AS (
+       |  SELECT max(cum)::DOUBLE AS tw,
+       |         (('0x' || substr(md5('offset:$seed'), 1, 8))::BIGINT / 4294967296.0) AS off
+       |  FROM c
+       |),
+       |cp AS (
+       |  SELECT *,
+       |    CAST(ceil(cum::DOUBLE / (SELECT tw FROM params) * CAST($draws AS DOUBLE) - (SELECT off FROM params))
+       |       - ceil((cum - wi)::DOUBLE / (SELECT tw FROM params) * CAST($draws AS DOUBLE) - (SELECT off FROM params)) AS INT) AS copies
+       |  FROM c
+       |)""".stripMargin
+
+  /** Block-shuffle CTE over the sampled rows `sr(…, srank)`: `k`, each
+    * row's md5 key for its block of `block` consecutive ranks (seed
+    * `seed`). */
+  private def blockKeyCte(seed: Int, block: Int): String =
+    s"""k AS (
+       |  SELECT *, md5(concat_ws(':', 'wblock', '$seed', (srank // $block)::VARCHAR)) AS bkey
+       |  FROM sr
+       |)""".stripMargin
+
+  /** Each order's lines of `lineitem` as sparse rows: line numbers
+    * (`genes`) and quantities (`exprs`) sorted by line number. */
+  private def sparseLines(lineitem: DataFrame): DataFrame =
+    lineitem.groupBy("l_orderkey")
+      .agg(sort_array(collect_list(
+        struct(col("l_linenumber"), col("l_quantity")))).as("sl"))
+      .select(col("l_orderkey"),
+        transform(col("sl"), x => x("l_linenumber").cast("long")).as("genes"),
+        transform(col("sl"), x => x("l_quantity")).as("exprs"))
+
   def oracles: Map[String, String] = Map(
 
     "p5_limit" ->
@@ -762,22 +795,7 @@ object SamplingQueries extends QuerySet {
          |     (SELECT sum(l_linenumber::DOUBLE) FROM lineitem))) AS BIGINT) AS wi
          |  FROM ranked
          |),
-         |c AS (
-         |  SELECT *, sum(wi) OVER (ORDER BY row_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM w
-         |),
-         |params AS (
-         |  SELECT max(cum)::DOUBLE AS tw,
-         |         (('0x' || substr(md5('offset:11'), 1, 8))::BIGINT / 4294967296.0) AS off
-         |  FROM c
-         |),
-         |cp AS (
-         |  SELECT *,
-         |    CAST(ceil(cum::DOUBLE / (SELECT tw FROM params) * CAST(2 * (SELECT count(*) FROM lineitem) AS DOUBLE) - (SELECT off FROM params))
-         |       - ceil((cum - wi)::DOUBLE / (SELECT tw FROM params) * CAST(2 * (SELECT count(*) FROM lineitem) AS DOUBLE) - (SELECT off FROM params)) AS INT) AS copies
-         |  FROM c
-         |),
+         |${systematicCopiesCte(11, "2 * (SELECT count(*) FROM lineitem)")},
          |ex AS (
          |  SELECT l_orderkey, l_linenumber, row_id,
          |         unnest(generate_series(1, copies)) AS copy
@@ -786,10 +804,7 @@ object SamplingQueries extends QuerySet {
          |sr AS (
          |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
          |),
-         |k AS (
-         |  SELECT *, md5(concat_ws(':', 'wblock', '11', (srank // 8)::VARCHAR)) AS bkey
-         |  FROM sr
-         |)
+         |${blockKeyCte(11, 8)}
          |SELECT l_orderkey, l_linenumber, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
          |FROM k""".stripMargin,
@@ -807,10 +822,7 @@ object SamplingQueries extends QuerySet {
          |),
          |sel AS (SELECT l_orderkey, l_linenumber, row_id FROM ar WHERE arank < (SELECT count(*) // 3 FROM lineitem)),
          |sr AS (SELECT *, row_number() OVER (ORDER BY row_id) - 1 AS srank FROM sel),
-         |k AS (
-         |  SELECT *, md5(concat_ws(':', 'wblock', '11', (srank // 8)::VARCHAR)) AS bkey
-         |  FROM sr
-         |)
+         |${blockKeyCte(11, 8)}
          |SELECT l_orderkey, l_linenumber,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
          |FROM k""".stripMargin,
@@ -839,10 +851,7 @@ object SamplingQueries extends QuerySet {
          |              unnest(generate_series(1, c)) AS copy
          |       FROM g),
          |sr AS (SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex),
-         |k AS (
-         |  SELECT *, md5(concat_ws(':', 'wblock', '11', (srank // 8)::VARCHAR)) AS bkey
-         |  FROM sr
-         |)
+         |${blockKeyCte(11, 8)}
          |SELECT l_orderkey, l_linenumber, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
          |FROM k""".stripMargin,
@@ -855,22 +864,7 @@ object SamplingQueries extends QuerySet {
          |    ((SELECT count(*) FROM cnts) * c.cnt)::DOUBLE) AS BIGINT) AS wi
          |  FROM ranked r JOIN cnts c ON r.l_returnflag = c.lbl
          |),
-         |c AS (
-         |  SELECT *, sum(wi) OVER (ORDER BY row_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM w
-         |),
-         |params AS (
-         |  SELECT max(cum)::DOUBLE AS tw,
-         |         (('0x' || substr(md5('offset:13'), 1, 8))::BIGINT / 4294967296.0) AS off
-         |  FROM c
-         |),
-         |cp AS (
-         |  SELECT *,
-         |    CAST(ceil(cum::DOUBLE / (SELECT tw FROM params) * CAST(3 * (SELECT count(*) FROM lineitem) // 2 AS DOUBLE) - (SELECT off FROM params))
-         |       - ceil((cum - wi)::DOUBLE / (SELECT tw FROM params) * CAST(3 * (SELECT count(*) FROM lineitem) // 2 AS DOUBLE) - (SELECT off FROM params)) AS INT) AS copies
-         |  FROM c
-         |),
+         |${systematicCopiesCte(13, "3 * (SELECT count(*) FROM lineitem) // 2")},
          |ex AS (
          |  SELECT l_orderkey, l_linenumber, l_returnflag, row_id,
          |         unnest(generate_series(1, copies)) AS copy
@@ -879,10 +873,7 @@ object SamplingQueries extends QuerySet {
          |sr AS (
          |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
          |),
-         |k AS (
-         |  SELECT *, md5(concat_ws(':', 'wblock', '13', (srank // 16)::VARCHAR)) AS bkey
-         |  FROM sr
-         |)
+         |${blockKeyCte(13, 16)}
          |SELECT l_orderkey, l_linenumber, l_returnflag, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
          |FROM k""".stripMargin,
@@ -1045,22 +1036,7 @@ object SamplingQueries extends QuerySet {
          |    ((SELECT sum(parts) FROM prt) * c.cnt)::DOUBLE) AS BIGINT) AS wi
          |  FROM r JOIN cnts c ON r.source = c.lbl JOIN prt p ON r.source = p.lbl
          |),
-         |c AS (
-         |  SELECT *, sum(wi) OVER (ORDER BY row_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM w
-         |),
-         |params AS (
-         |  SELECT max(cum)::DOUBLE AS tw,
-         |         (('0x' || substr(md5('offset:17'), 1, 8))::BIGINT / 4294967296.0) AS off
-         |  FROM c
-         |),
-         |cp AS (
-         |  SELECT *,
-         |    CAST(ceil(cum::DOUBLE / (SELECT tw FROM params) * CAST(2 * (SELECT count(*) FROM documents) AS DOUBLE) - (SELECT off FROM params))
-         |       - ceil((cum - wi)::DOUBLE / (SELECT tw FROM params) * CAST(2 * (SELECT count(*) FROM documents) AS DOUBLE) - (SELECT off FROM params)) AS INT) AS copies
-         |  FROM c
-         |),
+         |${systematicCopiesCte(17, "2 * (SELECT count(*) FROM documents)")},
          |ex AS (
          |  SELECT doc_id, source, row_id,
          |         unnest(generate_series(1, copies)) AS copy
@@ -1069,10 +1045,7 @@ object SamplingQueries extends QuerySet {
          |sr AS (
          |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
          |),
-         |k AS (
-         |  SELECT *, md5(concat_ws(':', 'wblock', '17', (srank // 8)::VARCHAR)) AS bkey
-         |  FROM sr
-         |)
+         |${blockKeyCte(17, 8)}
          |SELECT doc_id, source, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
          |FROM k""".stripMargin
@@ -1184,36 +1157,7 @@ object SamplingQueries extends QuerySet {
     "pipeline_curate" -> {
       val u = graft.core.Rng.Md5.uniformSql(42L, "split", Seq("doc_id"))
       val sk = graft.core.Rng.Md5.sortKeySql(5L, "shard", Seq("doc_id"))
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |         ${toksSql("text")} AS toks
-         |  FROM documents
-         |),
-         |f AS (
-         |  SELECT doc_id,
-         |    len(toks) AS n_tokens,
-         |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
-         |    len(list_filter(toks, x -> x IN ('the','a','an','and','of','to','in','is','for','on'))) AS stop_hits,
-         |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
-         |    len(list_filter(toks, x -> x IN ('el','los','las','una','que','por'))) AS s_es,
-         |    len(list_filter(toks, x -> x IN ('le','les','des','est','dans','pour'))) AS s_fr,
-         |    len(list_filter(toks, x -> x IN ('the','and','of','is','to','in'))) AS s_en
-         |  FROM t
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |    CASE WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
-         |         WHEN s_es > s_en AND s_es > s_fr THEN 'es'
-         |         WHEN s_fr > s_en THEN 'fr'
-         |         ELSE 'en' END AS lang_pred,
-         |    n_tokens,
-         |    round(
-         |      0.4 * least(CAST(1.0 AS DOUBLE), n_tokens::DOUBLE / 200.0) +
-         |      0.3 * (CAST(1.0 AS DOUBLE) - least(CAST(1.0 AS DOUBLE), punct_cnt::DOUBLE / greatest(n_tokens, 1)::DOUBLE)) +
-         |      0.3 * least(CAST(1.0 AS DOUBLE), (stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE) * 5.0),
-         |      6) AS quality
-         |  FROM f
-         |),
+      s"""WITH ${TextQueries.GateCte},
          |g AS (
          |  SELECT doc_id FROM q
          |  WHERE n_tokens >= 20 AND n_tokens <= 1000 AND quality >= 0.5
@@ -1319,15 +1263,7 @@ object SamplingQueries extends QuerySet {
          |GROUP BY lang""".stripMargin,
 
     "pipeline_corpus_card" ->
-      """WITH h AS (
-        |  SELECT (sh::BIGINT * 32 + (v >> sh)) AS bucket_id,
-        |    ((v >> sh) << sh)::BIGINT AS lb,
-        |    (((v >> sh) << sh) + ((1::BIGINT << sh) - 1))::BIGINT AS ub,
-        |    count(*)::BIGINT AS n
-        |  FROM (SELECT n_chars::BIGINT AS v,
-        |      greatest(0, length(bin(n_chars::BIGINT)) - 1 - 4) AS sh
-        |    FROM documents)
-        |  GROUP BY 1, 2, 3),
+      s"""WITH $HdrLenCte,
         |c AS (SELECT lb, ub, sum(n) OVER (ORDER BY bucket_id) AS cum,
         |    bucket_id FROM h),
         |t AS (SELECT sum(n)::BIGINT AS n_total FROM h),
@@ -1374,33 +1310,7 @@ object SamplingQueries extends QuerySet {
     // query (max over candidates == max over the top-k) → exact own-label
     // centroid → prototype margin → the curriculum closed form
     "pipeline_contrastive" ->
-      s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv
-         |  FROM embeddings WHERE vec_id < 32),
-         |asg0 AS (
-         |  SELECT e.vec_id AS neighbor_id, e.embedding AS nv,
-         |    e.label AS nl, c.centroid_id,
-         |    ${SimilarityQueries.cosSql("e.embedding", "c.cv")} AS acos
-         |  FROM embeddings e CROSS JOIN c
-         |),
-         |asg AS (
-         |  SELECT neighbor_id, nv, nl, centroid_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY neighbor_id
-         |      ORDER BY acos DESC, centroid_id) AS rn
-         |    FROM asg0) WHERE rn = 1
-         |),
-         |qp AS (
-         |  SELECT neighbor_id AS query_id, nv AS qv, nl AS ql,
-         |    centroid_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY neighbor_id
-         |      ORDER BY acos DESC, centroid_id) AS rn
-         |    FROM asg0) WHERE rn <= 2
-         |),
-         |s AS (
-         |  SELECT qp.query_id, a.neighbor_id,
-         |    ${SimilarityQueries.cosSql("qp.qv", "a.nv")} AS cos
-         |  FROM asg a JOIN qp ON a.centroid_id = qp.centroid_id
-         |  WHERE a.neighbor_id <> qp.query_id AND a.nl <> qp.ql
-         |),
+      s"""WITH ${SimilarityQueries.HardNegCandSql},
          |hn AS (SELECT query_id, max(cos) AS hneg FROM s GROUP BY 1),
          |cx AS (
          |  SELECT label::BIGINT AS label,

@@ -62,19 +62,11 @@ object SimilarityQueries extends QuerySet {
       .select(col("sub"), col("code_id"),
         slice(col("e"), col("sub") * 16 + 1, lit(16)).as("cv"))
 
-  /** PQ encoding CTE prefix: subspace codebooks (vec_id < 4 slices) and
-    * per-(vector, subspace, code) squared distances — ‖a‖² + ‖b‖² − 2·a·b
-    * with the same sequential folds as the Spark kernels. */
-  private val PqEncSql =
-    """subs AS (SELECT unnest(generate_series(0, 3)) AS sub),
-      |cb AS (
-      |  SELECT s.sub, e.vec_id AS code_id,
-      |    e.embedding[s.sub*16+1 : s.sub*16+16] AS cv
-      |  FROM embeddings e CROSS JOIN subs s
-      |  WHERE e.vec_id < 4),
-      |enc AS (
-      |  SELECT e.vec_id, c.sub, c.code_id,
-      |    round(
+  /** The squared distance ‖a‖² + ‖b‖² − 2·a·b of embedding `e`'s
+    * subspace slice `c.sub` to codeword `c.cv`, 6-dp rounded, with the same
+    * sequential folds as the Spark kernels. */
+  private val PqSubDistSql =
+    """round(
       |      list_reduce(list_transform(e.embedding[c.sub*16+1 : c.sub*16+16],
       |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) +
       |      list_reduce(list_transform(c.cv,
@@ -82,22 +74,48 @@ object SimilarityQueries extends QuerySet {
       |      2 * list_reduce(list_transform(
       |        list_zip(e.embedding[c.sub*16+1 : c.sub*16+16], c.cv),
       |        x -> x[1]::DOUBLE * x[2]::DOUBLE), (x, y) -> x + y),
-      |      6) AS d
+      |      6)""".stripMargin
+
+  /** PQ encoding CTE prefix: subspace codebooks (vec_id < 4 slices) and
+    * per-(vector, subspace, code) squared distances. */
+  private val PqEncSql =
+    s"""subs AS (SELECT unnest(generate_series(0, 3)) AS sub),
+      |cb AS (
+      |  SELECT s.sub, e.vec_id AS code_id,
+      |    e.embedding[s.sub*16+1 : s.sub*16+16] AS cv
+      |  FROM embeddings e CROSS JOIN subs s
+      |  WHERE e.vec_id < 4),
+      |enc AS (
+      |  SELECT e.vec_id, c.sub, c.code_id,
+      |    $PqSubDistSql AS d
       |  FROM embeddings e CROSS JOIN cb c)""".stripMargin
+
+  /** PQ CTEs after [[PqEncSql]]: each vector's nearest code per subspace
+    * (`codes`) and the per-query lookup table `lutq` (vec_id < 10). */
+  private val PqCodesLutSql =
+    s"""codes AS (
+      |  SELECT vec_id, sub, arg_min(code_id, (round(d * 1000000))::BIGINT * 10 + code_id) AS code
+      |  FROM enc GROUP BY vec_id, sub),
+      |lutq AS (
+      |  SELECT e.vec_id AS query_id, c.sub, c.code_id,
+      |    $PqSubDistSql AS ld
+      |  FROM embeddings e CROSS JOIN cb c WHERE e.vec_id < 10)""".stripMargin
+
+  /** The ADC ranking `rk(query_id, vec_id, adist, rank)` over `ap`. */
+  private val PqRankSql =
+    """rk AS (
+      |  SELECT query_id, vec_id, adist,
+      |    row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) - 1 AS rank
+      |  FROM ap)""".stripMargin
 
   /** JL projection CTE prefix: per-(vector, output-dim) signed dot against
     * the md5 (seed=42) plane convention of the LSH oracles, scaled by
     * 1/√16 = 0.25 exactly, plus the packed per-vector array form. */
   private val RpSql =
-    """js AS (SELECT unnest(generate_series(0, 15)) AS j),
+    s"""js AS (SELECT unnest(generate_series(0, 15)) AS j),
       |rp AS (
       |  SELECT e.vec_id, js.j,
-      |    round(list_reduce(list_transform(generate_series(0, 63), i ->
-      |      e.embedding[i + 1]::DOUBLE *
-      |      (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', js.j::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-      |                  / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-      |            THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
-      |      (a, b) -> a + b) * 0.25, 6) AS val
+      |    round(${srpProjSql("e.embedding", "js.j")} * 0.25, 6) AS val
       |  FROM embeddings e CROSS JOIN js),
       |rv AS (
       |  SELECT vec_id, list(val ORDER BY j) AS rvec FROM rp GROUP BY vec_id)""".stripMargin
@@ -143,39 +161,8 @@ object SimilarityQueries extends QuerySet {
       |  SELECT vec_id AS query_id, centroid_id FROM (
       |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, centroid_id) AS rn
       |    FROM sc WHERE vec_id < 10) WHERE rn <= 2),
-      |subs AS (SELECT unnest(generate_series(0, 3)) AS sub),
-      |cb AS (
-      |  SELECT s.sub, e.vec_id AS code_id,
-      |    e.embedding[s.sub*16+1 : s.sub*16+16] AS cv
-      |  FROM embeddings e CROSS JOIN subs s
-      |  WHERE e.vec_id < 4),
-      |enc AS (
-      |  SELECT e.vec_id, c.sub, c.code_id,
-      |    round(
-      |      list_reduce(list_transform(e.embedding[c.sub*16+1 : c.sub*16+16],
-      |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) +
-      |      list_reduce(list_transform(c.cv,
-      |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) -
-      |      2 * list_reduce(list_transform(
-      |        list_zip(e.embedding[c.sub*16+1 : c.sub*16+16], c.cv),
-      |        x -> x[1]::DOUBLE * x[2]::DOUBLE), (x, y) -> x + y),
-      |      6) AS d
-      |  FROM embeddings e CROSS JOIN cb c),
-      |codes AS (
-      |  SELECT vec_id, sub, arg_min(code_id, (round(d * 1000000))::BIGINT * 10 + code_id) AS code
-      |  FROM enc GROUP BY vec_id, sub),
-      |lutq AS (
-      |  SELECT e.vec_id AS query_id, c.sub, c.code_id,
-      |    round(
-      |      list_reduce(list_transform(e.embedding[c.sub*16+1 : c.sub*16+16],
-      |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) +
-      |      list_reduce(list_transform(c.cv,
-      |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) -
-      |      2 * list_reduce(list_transform(
-      |        list_zip(e.embedding[c.sub*16+1 : c.sub*16+16], c.cv),
-      |        x -> x[1]::DOUBLE * x[2]::DOUBLE), (x, y) -> x + y),
-      |      6) AS ld
-      |  FROM embeddings e CROSS JOIN cb c WHERE e.vec_id < 10),
+      |$PqEncSql,
+      |$PqCodesLutSql,
       |ap AS (
       |  SELECT l.query_id, cd.vec_id, round(sum(l.ld), 6) AS adist
       |  FROM codes cd
@@ -184,10 +171,7 @@ object SimilarityQueries extends QuerySet {
       |  JOIN lutq l ON l.query_id = p.query_id AND l.sub = cd.sub AND l.code_id = cd.code
       |  WHERE cd.vec_id <> l.query_id
       |  GROUP BY 1, 2),
-      |rk AS (
-      |  SELECT query_id, vec_id, adist,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) - 1 AS rank
-      |  FROM ap)""".stripMargin
+      |$PqRankSql""".stripMargin
 
   /** The `sim_ivfpq_topk` oracle, shared with the queries that wrap it. */
   private lazy val SimIvfpqTopkSql: String =
@@ -206,13 +190,112 @@ object SimilarityQueries extends QuerySet {
        |       sqrt(list_reduce(list_transform($b, x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y))),
        |      6)""".stripMargin
 
-  /** kNN-join mirror (self-join form over embeddings, 32 fixed centroids,
-    * nprobe=2, k=3): cell assignment AND probe selection = rank over ALL
-    * centroids (the flat pass); shared by `sim_knn_join` and its
-    * persisted-index layout twin. */
-  private lazy val KnnJoinSql: String =
-    s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id < 32),
-       |asg0 AS (
+  /** The signed projection of the 64-dim embedding `v` onto SRP plane
+    * `plane` (seed 42): each coordinate times ±1 by the md5 of
+    * (seed, plane, i), summed in index order — the SQL mirror of
+    * [[graft.ops.SimilarityOps.planeProjection]]. */
+  private[queries] def srpProjSql(v: String, plane: String): String =
+    s"""list_reduce(list_transform(generate_series(0, 63), i ->
+       |          $v[i + 1]::DOUBLE *
+       |          (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', $plane::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
+       |                      / CAST(4294967296.0 AS DOUBLE)) >= 0.5
+       |                THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
+       |          (a, b) -> a + b)""".stripMargin
+
+  /** The `bits`-bit SRP key of `v`: bit j set when the projection onto
+    * plane `plane` (an expression over j) is positive — the SQL mirror of
+    * [[graft.ops.SimilarityOps.lshBucket]]. */
+  private[queries] def srpKeySql(v: String, bits: Int, plane: String = "j"): String =
+    s"""list_reduce(list_transform(generate_series(0, ${bits - 1}), j ->
+       |      CASE WHEN
+       |        ${srpProjSql(v, plane)} > 0.0
+       |      THEN (1 << j) ELSE 0 END), (a, b) -> a + b)""".stripMargin
+
+  /** The `emb_gram` oracle: the exact micro-unit Gram sums (upper
+    * triangle), the column sums as row 0 and the count at (0, 0). */
+  private val EmbGramSql =
+    """WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+      |    unnest(embedding)::DOUBLE AS v FROM embeddings),
+      |q AS (SELECT a.i::INT AS i, b.i::INT AS j,
+      |    sum(floor(a.v * b.v * 1000000000000.0)::BIGINT)::BIGINT AS q
+      |  FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
+      |  GROUP BY 1, 2),
+      |s AS (SELECT 0::INT AS i, i::INT AS j,
+      |    sum(floor(v * 1000000000.0)::BIGINT)::BIGINT AS q
+      |  FROM x GROUP BY 2),
+      |n AS (SELECT 0::INT AS i, 0::INT AS j, count(*)::BIGINT AS q
+      |  FROM embeddings)
+      |SELECT i, j, q FROM q
+      |UNION ALL SELECT i, j, q FROM s
+      |UNION ALL SELECT i, j, q FROM n""".stripMargin
+
+  /** Oracle CTE body: `m(label, dim, m)`, every embedding coordinate in
+    * floored micro-units with its label and 0-based dim. */
+  private val LabelDimCte =
+    """x AS (
+      |  SELECT label::BIGINT AS label,
+      |         unnest(generate_series(1, len(embedding))) AS i,
+      |         embedding AS e
+      |  FROM embeddings
+      |),
+      |m AS (
+      |  SELECT label, CAST(i - 1 AS BIGINT) AS dim,
+      |         CAST(floor(e[i]::DOUBLE * 1000000.0) AS BIGINT) AS m
+      |  FROM x
+      |)""".stripMargin
+
+  /** Oracle CTE body: every vector ranked by cosine to each query vec_id
+    * < 10 (`s`), 0-based `rank` per query in `r`. */
+  private val QueryRankCte =
+    s"""s AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    ${cosSql("q.embedding", "c.embedding")} AS cos
+       |  FROM embeddings c CROSS JOIN
+       |    (SELECT * FROM embeddings WHERE vec_id < 10) q
+       |  WHERE c.vec_id <> q.vec_id),
+       |r AS (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id
+       |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s)""".stripMargin
+
+  /** Recall@5 tail over the approximate top-5 `appx(query_id,
+    * neighbor_id)`: the exact cosine top-5 of each query vec_id < 10 and
+    * each query's hits and recall against it. */
+  private val Recall5Sql =
+    s"""es AS (
+       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+       |    ${cosSql("q.embedding", "e.embedding")} AS cos
+       |  FROM embeddings e CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) q
+       |  WHERE e.vec_id <> q.vec_id),
+       |er AS (
+       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) - 1 AS rank
+       |  FROM es),
+       |exact AS (SELECT query_id, neighbor_id FROM er WHERE rank < 5)
+       |SELECT e.query_id,
+       |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hits,
+       |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / 5.0 AS recall
+       |FROM exact e LEFT JOIN appx a USING (query_id, neighbor_id)
+       |GROUP BY e.query_id""".stripMargin
+
+  /** Two-level routing CTE body over fine centroids `c(centroid_id, cv)`
+    * and coarse centroids `g(coarse_id, gv)`: each fine centroid's 3
+    * nearest coarse routes (`routes0`) plus each coarse centroid's
+    * identity route, in `routes(coarse_id, centroid_id, cv)`. */
+  private val RouteCte =
+    s"""routes0 AS (
+       |  SELECT coarse_id, centroid_id, cv FROM (
+       |    SELECT c.centroid_id, c.cv, g.coarse_id,
+       |      row_number() OVER (PARTITION BY c.centroid_id ORDER BY
+       |        ${cosSql("c.cv", "g.gv")} DESC, g.coarse_id) AS rn
+       |    FROM c CROSS JOIN g) WHERE rn <= 3),
+       |routes AS (
+       |  SELECT coarse_id, centroid_id, cv FROM routes0
+       |  UNION
+       |  SELECT coarse_id, coarse_id AS centroid_id, gv AS cv FROM g)""".stripMargin
+
+  /** kNN-join CTE body over centroids `c`: each vector's embedding `nv`
+    * and cosine `acos` to every centroid (`asg0`) and its cell (`asg`). */
+  private val KnnAsgCte =
+    s"""asg0 AS (
        |  SELECT e.vec_id AS neighbor_id, e.embedding AS nv, c.centroid_id,
        |    ${cosSql("e.embedding", "c.cv")} AS acos
        |  FROM embeddings e CROSS JOIN c
@@ -221,13 +304,12 @@ object SimilarityQueries extends QuerySet {
        |  SELECT neighbor_id, nv, centroid_id FROM (
        |    SELECT *, row_number() OVER (PARTITION BY neighbor_id ORDER BY acos DESC, centroid_id) AS rn
        |    FROM asg0) WHERE rn = 1
-       |),
-       |qp AS (
-       |  SELECT neighbor_id AS query_id, nv AS qv, centroid_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY neighbor_id ORDER BY acos DESC, centroid_id) AS rn
-       |    FROM asg0) WHERE rn <= 2
-       |),
-       |s AS (
+       |)""".stripMargin
+
+  /** kNN-join tail over `asg` and the probed cells `qp(query_id, qv,
+    * centroid_id)`: the top-3 neighbours by cosine within the probes. */
+  private val KnnTopSql =
+    s"""s AS (
        |  SELECT qp.query_id, a.neighbor_id,
        |    ${cosSql("qp.qv", "a.nv")} AS cos
        |  FROM asg a JOIN qp ON a.centroid_id = qp.centroid_id
@@ -239,6 +321,52 @@ object SimilarityQueries extends QuerySet {
        |)
        |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank < 3""".stripMargin
 
+  /** Hard-negative candidates (no `WITH`): [[KnnJoinSql]]'s flat cell
+    * assignment and 2-probe selection over 32 centroids, carrying labels,
+    * ending at `s(query_id, neighbor_id, cos)` over different-label pairs. */
+  private[queries] val HardNegCandSql =
+    s"""c AS (SELECT vec_id AS centroid_id, embedding AS cv
+       |  FROM embeddings WHERE vec_id < 32),
+       |asg0 AS (
+       |  SELECT e.vec_id AS neighbor_id, e.embedding AS nv,
+       |    e.label AS nl, c.centroid_id,
+       |    ${cosSql("e.embedding", "c.cv")} AS acos
+       |  FROM embeddings e CROSS JOIN c
+       |),
+       |asg AS (
+       |  SELECT neighbor_id, nv, nl, centroid_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY neighbor_id
+       |      ORDER BY acos DESC, centroid_id) AS rn
+       |    FROM asg0) WHERE rn = 1
+       |),
+       |qp AS (
+       |  SELECT neighbor_id AS query_id, nv AS qv, nl AS ql,
+       |    centroid_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY neighbor_id
+       |      ORDER BY acos DESC, centroid_id) AS rn
+       |    FROM asg0) WHERE rn <= 2
+       |),
+       |s AS (
+       |  SELECT qp.query_id, a.neighbor_id,
+       |    ${cosSql("qp.qv", "a.nv")} AS cos
+       |  FROM asg a JOIN qp ON a.centroid_id = qp.centroid_id
+       |  WHERE a.neighbor_id <> qp.query_id AND a.nl <> qp.ql
+       |)""".stripMargin
+
+  /** kNN-join mirror (self-join form over embeddings, 32 fixed centroids,
+    * nprobe=2, k=3): cell assignment AND probe selection = rank over ALL
+    * centroids (the flat pass); shared by `sim_knn_join` and its
+    * persisted-index layout twin. */
+  private lazy val KnnJoinSql: String =
+    s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id < 32),
+       |$KnnAsgCte,
+       |qp AS (
+       |  SELECT neighbor_id AS query_id, nv AS qv, centroid_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY neighbor_id ORDER BY acos DESC, centroid_id) AS rn
+       |    FROM asg0) WHERE rn <= 2
+       |),
+       |$KnnTopSql""".stripMargin
+
   /** The ROUTED kNN-join mirror (`sim_knn_join_routed`): cell assignment
     * = flat rank-1 (as built/persisted), probe selection = the TWO-LEVEL
     * route the Spark side runs (coarse = first-6 centroid prefix,
@@ -247,26 +375,8 @@ object SimilarityQueries extends QuerySet {
   private lazy val KnnJoinRoutedSql: String =
     s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv FROM embeddings WHERE vec_id < 32),
        |g AS (SELECT vec_id AS coarse_id, embedding AS gv FROM embeddings WHERE vec_id < 6),
-       |asg0 AS (
-       |  SELECT e.vec_id AS neighbor_id, e.embedding AS nv, c.centroid_id,
-       |    ${cosSql("e.embedding", "c.cv")} AS acos
-       |  FROM embeddings e CROSS JOIN c
-       |),
-       |asg AS (
-       |  SELECT neighbor_id, nv, centroid_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY neighbor_id ORDER BY acos DESC, centroid_id) AS rn
-       |    FROM asg0) WHERE rn = 1
-       |),
-       |routes0 AS (
-       |  SELECT coarse_id, centroid_id, cv FROM (
-       |    SELECT c.centroid_id, c.cv, g.coarse_id,
-       |      row_number() OVER (PARTITION BY c.centroid_id ORDER BY
-       |        ${cosSql("c.cv", "g.gv")} DESC, g.coarse_id) AS rn
-       |    FROM c CROSS JOIN g) WHERE rn <= 3),
-       |routes AS (
-       |  SELECT coarse_id, centroid_id, cv FROM routes0
-       |  UNION
-       |  SELECT coarse_id, coarse_id AS centroid_id, gv AS cv FROM g),
+       |$KnnAsgCte,
+       |$RouteCte,
        |v2c AS (
        |  SELECT query_id, qv, coarse_id FROM (
        |    SELECT e.vec_id AS query_id, e.embedding AS qv, g.coarse_id,
@@ -280,17 +390,22 @@ object SimilarityQueries extends QuerySet {
        |        ${cosSql("v.qv", "r.cv")} DESC, r.centroid_id) AS rn
        |    FROM v2c v JOIN routes r ON r.coarse_id = v.coarse_id) WHERE rn <= 2
        |),
-       |s AS (
-       |  SELECT qp.query_id, a.neighbor_id,
-       |    ${cosSql("qp.qv", "a.nv")} AS cos
-       |  FROM asg a JOIN qp ON a.centroid_id = qp.centroid_id
-       |  WHERE a.neighbor_id <> qp.query_id
-       |),
-       |r AS (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) - 1 AS rank
-       |  FROM s
-       |)
-       |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank < 3""".stripMargin
+       |$KnnTopSql""".stripMargin
+
+  /** The hybrid-retrieval rank lists of queries 0–4, top 10 each: lexical
+    * token overlap over the documents and exact dense cosine over the
+    * embeddings, with the embeddings frame between them. */
+  private def hybridLists(s: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val d = Tables.docs(s, dir)
+    val lex = TextOps.tokenOverlapTopK(d, col("doc_id"), col("text"),
+      d.where(col("doc_id") < 5), col("doc_id"), col("text"), k = 10)
+    val e = Tables.emb(s, dir)
+    val dense = SimilarityOps.bruteTopK(e, col("embedding"),
+      col("vec_id"), e.where(col("vec_id") < 5), col("embedding"),
+      col("vec_id"), k = 10)
+    (lex, e, dense)
+  }
 
   /** k = ⌈n/64⌉ floor 8 — same convention as `DedupQueries.ivfClusters`. */
   private def kOf(n: Long): Long =
@@ -387,17 +502,7 @@ object SimilarityQueries extends QuerySet {
   private val LshTopkSql =
     s"""lb AS (
       |  SELECT vec_id, embedding,
-      |    list_reduce(list_transform(generate_series(0, 7), j ->
-      |      CASE WHEN
-      |        list_reduce(list_transform(generate_series(0, 63), i ->
-      |          embedding[i + 1]::DOUBLE *
-      |          (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane',
-      |                '42', j::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-      |                / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-      |                THEN CAST(1.0 AS DOUBLE)
-      |                ELSE CAST(-1.0 AS DOUBLE) END)),
-      |          (a, b) -> a + b) > 0.0
-      |      THEN (1 << j) ELSE 0 END), (a, b) -> a + b) AS bucket
+      |    ${srpKeySql("embedding", 8)} AS bucket
       |  FROM embeddings
       |),
       |ls AS (
@@ -877,13 +982,7 @@ object SimilarityQueries extends QuerySet {
     // one plan.  doc_id and vec_id share an id space in the testdata;
     // candidates found by only one side flow through the full outer.
     "sim_hybrid_topk" -> ((s, dir) => {
-      val d = Tables.docs(s, dir)
-      val lex = TextOps.tokenOverlapTopK(d, col("doc_id"), col("text"),
-        d.where(col("doc_id") < 5), col("doc_id"), col("text"), k = 10)
-      val e = Tables.emb(s, dir)
-      val dense = SimilarityOps.bruteTopK(e, col("embedding"),
-        col("vec_id"), e.where(col("vec_id") < 5), col("embedding"),
-        col("vec_id"), k = 10)
+      val (lex, _, dense) = hybridLists(s, dir)
       SimilarityOps.rrfFuse(lex, dense, k = 10)
     }),
 
@@ -975,13 +1074,7 @@ object SimilarityQueries extends QuerySet {
     // RRF-fused per query — the production ensemble shape (each list
     // keyed, |lists|−1 outer joins, no global stage)
     "sim_hybrid3_topk" -> ((s, dir) => {
-      val d = Tables.docs(s, dir)
-      val lex = TextOps.tokenOverlapTopK(d, col("doc_id"), col("text"),
-        d.where(col("doc_id") < 5), col("doc_id"), col("text"), k = 10)
-      val e = Tables.emb(s, dir)
-      val dense = SimilarityOps.bruteTopK(e, col("embedding"),
-        col("vec_id"), e.where(col("vec_id") < 5), col("embedding"),
-        col("vec_id"), k = 10)
+      val (lex, e, dense) = hybridLists(s, dir)
       val approx = SimilarityOps.lshTopK(e, col("embedding"),
         col("vec_id"), dims = 64, planes = 8, seed = 42L, k = 10)
         .where(col("query_id") < 5)
@@ -1094,16 +1187,8 @@ object SimilarityQueries extends QuerySet {
         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank < 10""".stripMargin,
 
     "sim_lsh_buckets" ->
-      """SELECT vec_id,
-        |  list_reduce(list_transform(generate_series(0, 7), j ->
-        |    CASE WHEN
-        |      list_reduce(list_transform(generate_series(0, 63), i ->
-        |        embedding[i + 1]::DOUBLE *
-        |        (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', j::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-        |                    / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-        |              THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
-        |        (a, b) -> a + b) > 0.0
-        |    THEN (1 << j) ELSE 0 END), (a, b) -> a + b) AS bucket
+      s"""SELECT vec_id,
+        |  ${srpKeySql("embedding", 8)} AS bucket
         |FROM embeddings""".stripMargin,
 
     "sim_ivf_assign" ->
@@ -1124,15 +1209,7 @@ object SimilarityQueries extends QuerySet {
     "sim_lsh_topk" ->
       s"""WITH b AS (
         |  SELECT vec_id, embedding,
-        |    list_reduce(list_transform(generate_series(0, 7), j ->
-        |      CASE WHEN
-        |        list_reduce(list_transform(generate_series(0, 63), i ->
-        |          embedding[i + 1]::DOUBLE *
-        |          (CASE WHEN (('0x' || substr(md5(concat_ws(':', 'plane', '42', j::VARCHAR, i::VARCHAR)), 1, 8))::BIGINT
-        |                      / CAST(4294967296.0 AS DOUBLE)) >= 0.5
-        |                THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)),
-        |          (a, b) -> a + b) > 0.0
-        |      THEN (1 << j) ELSE 0 END), (a, b) -> a + b) AS bucket
+        |    ${srpKeySql("embedding", 8)} AS bucket
         |  FROM embeddings
         |),
         |s AS (
@@ -1147,17 +1224,7 @@ object SimilarityQueries extends QuerySet {
         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank < 5""".stripMargin,
 
     "emb_centroids" ->
-      """WITH x AS (
-        |  SELECT label::BIGINT AS label,
-        |         unnest(generate_series(1, len(embedding))) AS i,
-        |         embedding AS e
-        |  FROM embeddings
-        |),
-        |m AS (
-        |  SELECT label, CAST(i - 1 AS BIGINT) AS dim,
-        |         CAST(floor(e[i]::DOUBLE * 1000000.0) AS BIGINT) AS m
-        |  FROM x
-        |)
+      s"""WITH $LabelDimCte
         |SELECT label, dim,
         |       CAST(sum(m) AS DOUBLE) / (count(*)::DOUBLE * 1000000.0) AS centroid,
         |       count(*) AS n
@@ -1175,30 +1242,13 @@ object SimilarityQueries extends QuerySet {
 
     "sim_pq_topk" ->
       s"""WITH $PqEncSql,
-         |codes AS (
-         |  SELECT vec_id, sub, arg_min(code_id, (round(d * 1000000))::BIGINT * 10 + code_id) AS code
-         |  FROM enc GROUP BY vec_id, sub),
-         |lutq AS (
-         |  SELECT e.vec_id AS query_id, c.sub, c.code_id,
-         |    round(
-         |      list_reduce(list_transform(e.embedding[c.sub*16+1 : c.sub*16+16],
-         |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) +
-         |      list_reduce(list_transform(c.cv,
-         |        x -> x::DOUBLE * x::DOUBLE), (x, y) -> x + y) -
-         |      2 * list_reduce(list_transform(
-         |        list_zip(e.embedding[c.sub*16+1 : c.sub*16+16], c.cv),
-         |        x -> x[1]::DOUBLE * x[2]::DOUBLE), (x, y) -> x + y),
-         |      6) AS ld
-         |  FROM embeddings e CROSS JOIN cb c WHERE e.vec_id < 10),
+         |$PqCodesLutSql,
          |ap AS (
          |  SELECT l.query_id, cd.vec_id, round(sum(l.ld), 6) AS adist
          |  FROM codes cd JOIN lutq l ON l.sub = cd.sub AND l.code_id = cd.code
          |  WHERE cd.vec_id <> l.query_id
          |  GROUP BY 1, 2),
-         |rk AS (
-         |  SELECT query_id, vec_id, adist,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY adist, vec_id) - 1 AS rank
-         |  FROM ap)
+         |$PqRankSql
          |SELECT query_id, vec_id AS neighbor_id, adist, rank::BIGINT AS rank
          |FROM rk WHERE rank < 5""".stripMargin,
 
@@ -1240,20 +1290,7 @@ object SimilarityQueries extends QuerySet {
       s"""WITH $RpSql,
          |$RpTopkSql,
          |appx AS (SELECT query_id, neighbor_id FROM r WHERE rank < 5),
-         |es AS (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "e.embedding")} AS cos
-         |  FROM embeddings e CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) q
-         |  WHERE e.vec_id <> q.vec_id),
-         |er AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) - 1 AS rank
-         |  FROM es),
-         |exact AS (SELECT query_id, neighbor_id FROM er WHERE rank < 5)
-         |SELECT e.query_id,
-         |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hits,
-         |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / 5.0 AS recall
-         |FROM exact e LEFT JOIN appx a USING (query_id, neighbor_id)
-         |GROUP BY e.query_id""".stripMargin,
+         |$Recall5Sql""".stripMargin,
 
     "sim_ivfpq_topk" -> SimIvfpqTopkSql,
 
@@ -1269,17 +1306,7 @@ object SimilarityQueries extends QuerySet {
     "sim_knn_join_persisted" -> KnnJoinSql,
 
     "emb_outliers" ->
-      s"""WITH x AS (
-         |  SELECT label::BIGINT AS label,
-         |         unnest(generate_series(1, len(embedding))) AS i,
-         |         embedding AS e
-         |  FROM embeddings
-         |),
-         |m AS (
-         |  SELECT label, CAST(i - 1 AS BIGINT) AS dim,
-         |         CAST(floor(e[i]::DOUBLE * 1000000.0) AS BIGINT) AS m
-         |  FROM x
-         |),
+      s"""WITH $LabelDimCte,
          |cent AS (
          |  SELECT label, dim,
          |         CAST(sum(m) AS DOUBLE) / (count(*)::DOUBLE * 1000000.0) AS centroid
@@ -1375,41 +1402,19 @@ object SimilarityQueries extends QuerySet {
         |SELECT anchor_id, negative_id, rank::BIGINT AS rank
         |FROM p WHERE rank < 5""".stripMargin,
 
-    "emb_hard_negatives" -> {
-      val cos =
-        s"""${cosSql("q.embedding", "c.embedding")}""".stripMargin
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    $cos AS cos
-         |  FROM embeddings c CROSS JOIN
-         |    (SELECT * FROM embeddings WHERE vec_id < 10) q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s)
+    "emb_hard_negatives" ->
+      s"""WITH $QueryRankCte
          |SELECT query_id, neighbor_id, cos, rank FROM r
-         |WHERE rank >= 5 AND rank < 10""".stripMargin
-    },
+         |WHERE rank >= 5 AND rank < 10""".stripMargin,
 
-    "emb_triplets" -> {
-      val cos =
-        s"""${cosSql("q.embedding", "c.embedding")}""".stripMargin
-      s"""WITH s AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    $cos AS cos
-         |  FROM embeddings c CROSS JOIN
-         |    (SELECT * FROM embeddings WHERE vec_id < 10) q
-         |  WHERE c.vec_id <> q.vec_id),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cos DESC, neighbor_id) - 1 AS rank FROM s),
+    "emb_triplets" ->
+      s"""WITH $QueryRankCte,
          |pos AS (SELECT query_id AS anchor_id, neighbor_id AS positive_id
          |  FROM r WHERE rank = 0),
          |neg AS (SELECT query_id AS anchor_id, neighbor_id AS negative_id
          |  FROM r WHERE rank >= 5 AND rank < 8)
          |SELECT pos.anchor_id, pos.positive_id, neg.negative_id
-         |FROM pos JOIN neg USING (anchor_id)""".stripMargin
-    },
+         |FROM pos JOIN neg USING (anchor_id)""".stripMargin,
 
     "sim_rerank_recall" ->
       s"""WITH ${RpSql},
@@ -1427,20 +1432,7 @@ object SimilarityQueries extends QuerySet {
          |      ORDER BY cos DESC, neighbor_id) - 1 AS rank
          |  FROM ex0),
          |appx AS (SELECT query_id, neighbor_id FROM rr WHERE rank < 5),
-         |es AS (
-         |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-         |    ${cosSql("q.embedding", "e.embedding")} AS cos
-         |  FROM embeddings e CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 10) q
-         |  WHERE e.vec_id <> q.vec_id),
-         |er AS (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) - 1 AS rank
-         |  FROM es),
-         |exact AS (SELECT query_id, neighbor_id FROM er WHERE rank < 5)
-         |SELECT e.query_id,
-         |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hits,
-         |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / 5.0 AS recall
-         |FROM exact e LEFT JOIN appx a USING (query_id, neighbor_id)
-         |GROUP BY e.query_id""".stripMargin,
+         |$Recall5Sql""".stripMargin,
 
     "emb_norm_hist" ->
       """WITH n AS (
@@ -1450,21 +1442,7 @@ object SimilarityQueries extends QuerySet {
         |  FROM embeddings)
         |SELECT bucket, count(*)::BIGINT AS n_vecs FROM n GROUP BY bucket""".stripMargin,
 
-    "emb_gram" ->
-      """WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    unnest(embedding)::DOUBLE AS v FROM embeddings),
-        |q AS (SELECT a.i::INT AS i, b.i::INT AS j,
-        |    sum(floor(a.v * b.v * 1000000000000.0)::BIGINT)::BIGINT AS q
-        |  FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |  GROUP BY 1, 2),
-        |s AS (SELECT 0::INT AS i, i::INT AS j,
-        |    sum(floor(v * 1000000000.0)::BIGINT)::BIGINT AS q
-        |  FROM x GROUP BY 2),
-        |n AS (SELECT 0::INT AS i, 0::INT AS j, count(*)::BIGINT AS q
-        |  FROM embeddings)
-        |SELECT i, j, q FROM q
-        |UNION ALL SELECT i, j, q FROM s
-        |UNION ALL SELECT i, j, q FROM n""".stripMargin,
+    "emb_gram" -> EmbGramSql,
 
     "sim_assign2_agree" ->
       s"""WITH
@@ -1478,16 +1456,7 @@ object SimilarityQueries extends QuerySet {
          |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
          |        ${cosSql("e.embedding", "c.cv")} DESC, c.centroid_id) AS rn
          |    FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-         |routes0 AS (
-         |  SELECT coarse_id, centroid_id, cv FROM (
-         |    SELECT c.centroid_id, c.cv, g.coarse_id,
-         |      row_number() OVER (PARTITION BY c.centroid_id ORDER BY
-         |        ${cosSql("c.cv", "g.gv")} DESC, g.coarse_id) AS rn
-         |    FROM c CROSS JOIN g) WHERE rn <= 3),
-         |routes AS (
-         |  SELECT coarse_id, centroid_id, cv FROM routes0
-         |  UNION
-         |  SELECT coarse_id, coarse_id AS centroid_id, gv AS cv FROM g),
+         |$RouteCte,
          |v2c AS (
          |  SELECT vec_id, coarse_id FROM (
          |    SELECT e.vec_id, g.coarse_id,
@@ -1573,15 +1542,7 @@ object SimilarityQueries extends QuerySet {
     "sketch_merge" -> cmsGridSql("documents"),
 
     // merged partials must equal the direct whole-corpus HDR table
-    "sketch_hdr_merge" ->
-      """SELECT (sh::BIGINT * 32 + (v >> sh)) AS bucket_id,
-        |       ((v >> sh) << sh)::BIGINT AS lb,
-        |       (((v >> sh) << sh) + ((1::BIGINT << sh) - 1))::BIGINT AS ub,
-        |       count(*)::BIGINT AS n
-        |FROM (
-        |  SELECT v, greatest(0, length(bin(v)) - 1 - 4) AS sh
-        |  FROM (SELECT n_chars::BIGINT AS v FROM documents))
-        |GROUP BY 1, 2, 3""".stripMargin,
+    "sketch_hdr_merge" -> HdrBuckets,
 
     "sketch_hll_merge" ->
       """SELECT count(DISTINCT text)::BIGINT AS n_exact,
@@ -1694,52 +1655,12 @@ object SimilarityQueries extends QuerySet {
 
     // the DIRECT whole-corpus replay (emb_gram's grammar) — merged
     // partials must hash-equal it
-    "emb_gram_merge" ->
-      """WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    unnest(embedding)::DOUBLE AS v FROM embeddings),
-        |q AS (SELECT a.i::INT AS i, b.i::INT AS j,
-        |    sum(floor(a.v * b.v * 1000000000000.0)::BIGINT)::BIGINT AS q
-        |  FROM x a JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i
-        |  GROUP BY 1, 2),
-        |s AS (SELECT 0::INT AS i, i::INT AS j,
-        |    sum(floor(v * 1000000000.0)::BIGINT)::BIGINT AS q
-        |  FROM x GROUP BY 2),
-        |n AS (SELECT 0::INT AS i, 0::INT AS j, count(*)::BIGINT AS q
-        |  FROM embeddings)
-        |SELECT i, j, q FROM q
-        |UNION ALL SELECT i, j, q FROM s
-        |UNION ALL SELECT i, j, q FROM n""".stripMargin,
+    "emb_gram_merge" -> EmbGramSql,
 
     // KnnJoinSql's grammar (flat cell assignment + 2-probe selection)
     // with the different-label filter ahead of the rank window
     "sim_hard_neg_ivf" ->
-      s"""WITH c AS (SELECT vec_id AS centroid_id, embedding AS cv
-         |  FROM embeddings WHERE vec_id < 32),
-         |asg0 AS (
-         |  SELECT e.vec_id AS neighbor_id, e.embedding AS nv,
-         |    e.label AS nl, c.centroid_id,
-         |    ${cosSql("e.embedding", "c.cv")} AS acos
-         |  FROM embeddings e CROSS JOIN c
-         |),
-         |asg AS (
-         |  SELECT neighbor_id, nv, nl, centroid_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY neighbor_id
-         |      ORDER BY acos DESC, centroid_id) AS rn
-         |    FROM asg0) WHERE rn = 1
-         |),
-         |qp AS (
-         |  SELECT neighbor_id AS query_id, nv AS qv, nl AS ql,
-         |    centroid_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY neighbor_id
-         |      ORDER BY acos DESC, centroid_id) AS rn
-         |    FROM asg0) WHERE rn <= 2
-         |),
-         |s AS (
-         |  SELECT qp.query_id, a.neighbor_id,
-         |    ${cosSql("qp.qv", "a.nv")} AS cos
-         |  FROM asg a JOIN qp ON a.centroid_id = qp.centroid_id
-         |  WHERE a.neighbor_id <> qp.query_id AND a.nl <> qp.ql
-         |),
+      s"""WITH $HardNegCandSql,
          |r AS (
          |  SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY cos DESC, neighbor_id) - 1 AS rank

@@ -12,8 +12,84 @@ import graft.ops._
 object TextQueries extends QuerySet {
 
   import Tables.docs
-  import DedupQueries.{ParaSep, WinnowFpSql}
+  import DedupQueries.{ParaCte, ParaSep, WinnowFpSql, WinnowSelCte, shingleCte,
+    winnowGramCte}
   import SimilarityQueries.OverlapTopkSql
+
+  /** Per-language stopword hits `s_de`, `s_es`, `s_fr`, `s_en` over a
+    * `toks` list — the scores of the language-id oracles. */
+  private val LangHitsSql =
+    """len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
+      |    len(list_filter(toks, x -> x IN ('el','los','las','una','que','por'))) AS s_es,
+      |    len(list_filter(toks, x -> x IN ('le','les','des','est','dans','pour'))) AS s_fr,
+      |    len(list_filter(toks, x -> x IN ('the','and','of','is','to','in'))) AS s_en""".stripMargin
+
+  /** The language predicted from [[LangHitsSql]]'s scores: the strict
+    * maximum of de, es, fr over en, else en (NULL for a NULL text). */
+  private val LangPredSql =
+    """CASE WHEN s_de IS NULL THEN NULL
+      |       WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
+      |       WHEN s_es > s_en AND s_es > s_fr THEN 'es'
+      |       WHEN s_fr > s_en THEN 'fr'
+      |       ELSE 'en' END""".stripMargin
+
+  /** The 6-dp quality score over `n_tokens`, `punct_cnt` and `stop_hits`:
+    * length, punctuation and stopword terms weighted 0.4 / 0.3 / 0.3. */
+  private val QualitySql =
+    """round(
+      |    0.4 * least(CAST(1.0 AS DOUBLE), n_tokens::DOUBLE / 200.0) +
+      |    0.3 * (CAST(1.0 AS DOUBLE) - least(CAST(1.0 AS DOUBLE), punct_cnt::DOUBLE / greatest(n_tokens, 1)::DOUBLE)) +
+      |    0.3 * least(CAST(1.0 AS DOUBLE), (stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE) * 5.0),
+      |    6)""".stripMargin
+
+  /** Oracle CTE body (no `WITH`): each document's [[QualitySql]] score,
+    * `q(doc_id, keep…, quality)`; `keep` is empty or a column list ending
+    * in ", ". */
+  private def qualityCte(keep: String): String =
+    s"""t AS (
+      |  SELECT doc_id, ${keep}text,
+      |         ${toksSql("text")} AS toks
+      |  FROM documents
+      |),
+      |f AS (
+      |  SELECT doc_id, $keep
+      |    len(toks) AS n_tokens,
+      |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
+      |    len(list_filter(toks, x -> x IN ('the','a','an','and','of','to','in','is','for','on'))) AS stop_hits
+      |  FROM t
+      |),
+      |q AS (
+      |  SELECT doc_id, $keep$QualitySql AS quality
+      |  FROM f
+      |)""".stripMargin
+
+  /** Oracle CTE body (no `WITH`): the quality gate's scores,
+    * `q(doc_id, lang_pred, n_tokens, quality)` — the front of
+    * `text_filter_pipeline`, which filters it. */
+  private[queries] val GateCte =
+    s"""t AS (
+      |  SELECT doc_id, text,
+      |         ${toksSql("text")} AS toks
+      |  FROM documents
+      |),
+      |f AS (
+      |  SELECT doc_id,
+      |    len(toks) AS n_tokens,
+      |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
+      |    len(list_filter(toks, x -> x IN ('the','a','an','and','of','to','in','is','for','on'))) AS stop_hits,
+      |    $LangHitsSql
+      |  FROM t
+      |),
+      |q AS (
+      |  SELECT doc_id,
+      |    CASE WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
+      |         WHEN s_es > s_en AND s_es > s_fr THEN 'es'
+      |         WHEN s_fr > s_en THEN 'fr'
+      |         ELSE 'en' END AS lang_pred,
+      |    n_tokens,
+      |    $QualitySql AS quality
+      |  FROM f
+      |)""".stripMargin
 
   /** The `text_quality` oracle, shared with the queries that wrap it. */
   private lazy val TextQualitySql: String =
@@ -33,11 +109,7 @@ object TextQueries extends QuerySet {
       |SELECT doc_id, n_tokens, punct_cnt,
       |  round(char_sum::DOUBLE / greatest(n_tokens, 1)::DOUBLE, 6) AS avg_token_len,
       |  round(stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE, 6) AS stop_ratio,
-      |  CASE WHEN n_tokens IS NULL THEN NULL ELSE round(
-      |    0.4 * least(CAST(1.0 AS DOUBLE), n_tokens::DOUBLE / 200.0) +
-      |    0.3 * (CAST(1.0 AS DOUBLE) - least(CAST(1.0 AS DOUBLE), punct_cnt::DOUBLE / greatest(n_tokens, 1)::DOUBLE)) +
-      |    0.3 * least(CAST(1.0 AS DOUBLE), (stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE) * 5.0),
-      |    6) END AS quality
+      |  CASE WHEN n_tokens IS NULL THEN NULL ELSE $QualitySql END AS quality
       |FROM f""".stripMargin
 
   /** Fixture merge table for the BPE query: common English merges, ranked
@@ -59,17 +131,7 @@ object TextQueries extends QuerySet {
     * for the corpus and the probe (docs 0-4) — the `dd_jaccard` shingle
     * vocabulary, uncapped. */
   private val ContamSql =
-    s"""toks AS (
-      |  SELECT doc_id, ${toksSql("text")} AS t
-      |  FROM documents
-      |),
-      |shg AS (
-      |  SELECT doc_id,
-      |         CASE WHEN len(t) >= 5
-      |              THEN list_transform(generate_series(1, len(t) - 4), i -> array_to_string(t[i:i+4], ' '))
-      |              ELSE [array_to_string(t, ' ')] END AS shs
-      |  FROM toks
-      |),
+    s"""${shingleCte(distinct = false, n = 5)},
       |post AS (
       |  SELECT DISTINCT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS sh
       |  FROM (SELECT doc_id, unnest(shs) AS s FROM shg)
@@ -776,18 +838,11 @@ object TextQueries extends QuerySet {
         |),
         |sc AS (
         |  SELECT doc_id, lang,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('el','los','las','una','que','por'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('le','les','des','est','dans','pour'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','is','to','in'))) AS s_en
+        |    $LangHitsSql
         |  FROM t
         |)
         |SELECT doc_id, lang,
-        |  CASE WHEN s_de IS NULL THEN NULL
-        |       WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
-        |       WHEN s_es > s_en AND s_es > s_fr THEN 'es'
-        |       WHEN s_fr > s_en THEN 'fr'
-        |       ELSE 'en' END AS lang_pred
+        |  $LangPredSql AS lang_pred
         |FROM sc""".stripMargin,
 
     "text_fingerprint" ->
@@ -807,36 +862,7 @@ object TextQueries extends QuerySet {
         |FROM shg""".stripMargin,
 
     "text_filter_pipeline" ->
-      s"""WITH t AS (
-        |  SELECT doc_id, text,
-        |         ${toksSql("text")} AS toks
-        |  FROM documents
-        |),
-        |f AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_tokens,
-        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
-        |    len(list_filter(toks, x -> x IN ('the','a','an','and','of','to','in','is','for','on'))) AS stop_hits,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('el','los','las','una','que','por'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('le','les','des','est','dans','pour'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','is','to','in'))) AS s_en
-        |  FROM t
-        |),
-        |q AS (
-        |  SELECT doc_id,
-        |    CASE WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
-        |         WHEN s_es > s_en AND s_es > s_fr THEN 'es'
-        |         WHEN s_fr > s_en THEN 'fr'
-        |         ELSE 'en' END AS lang_pred,
-        |    n_tokens,
-        |    round(
-        |      0.4 * least(CAST(1.0 AS DOUBLE), n_tokens::DOUBLE / 200.0) +
-        |      0.3 * (CAST(1.0 AS DOUBLE) - least(CAST(1.0 AS DOUBLE), punct_cnt::DOUBLE / greatest(n_tokens, 1)::DOUBLE)) +
-        |      0.3 * least(CAST(1.0 AS DOUBLE), (stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE) * 5.0),
-        |      6) AS quality
-        |  FROM f
-        |)
+      s"""WITH $GateCte
         |SELECT doc_id, lang_pred, n_tokens, quality FROM q
         |WHERE n_tokens >= 20 AND n_tokens <= 1000 AND quality >= 0.5
         |  AND lang_pred IN ('en', 'de', 'es', 'fr')""".stripMargin,
@@ -858,28 +884,8 @@ object TextQueries extends QuerySet {
     // winnowing mirror: window-min by composite HUGEINT key (hv, pos) over
     // full windows; short docs take their single overall minimum
     "text_winnow" ->
-      """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents WHERE text IS NOT NULL),
-        |g AS (SELECT doc_id, t, length(t) - 8 + 1 AS nh FROM d WHERE length(t) >= 8),
-        |hx AS (SELECT doc_id, nh, unnest(generate_series(1, nh)) AS i, t FROM g),
-        |h AS (
-        |  SELECT doc_id, nh, i - 1 AS pos,
-        |         ('0x' || substr(md5(substr(t, i, 8)), 1, 15))::BIGINT AS hv
-        |  FROM hx
-        |),
-        |sf AS (
-        |  SELECT doc_id, nh, pos,
-        |    arg_min(pos, hv::HUGEINT * 1048576 + pos) OVER
-        |      (PARTITION BY doc_id ORDER BY pos
-        |       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-        |  FROM h
-        |),
-        |sels AS (
-        |  SELECT DISTINCT doc_id, sel AS pos FROM sf
-        |  WHERE nh > 4 AND pos <= nh - 4
-        |  UNION
-        |  SELECT doc_id, arg_min(pos, hv::HUGEINT * 1048576 + pos) AS pos
-        |  FROM h WHERE nh <= 4 GROUP BY doc_id
-        |)
+      s"""WITH ${winnowGramCte(8, withGram = false)},
+        |$WinnowSelCte
         |SELECT s.doc_id, s.pos, h.hv AS fp
         |FROM sels s JOIN h ON h.doc_id = s.doc_id AND h.pos = s.pos""".stripMargin,
 
@@ -898,26 +904,7 @@ object TextQueries extends QuerySet {
     // quality formula identical to text_quality's oracle; tiers by exact
     // rank over (quality DESC, doc_id)
     "text_quality_tiers" ->
-      s"""WITH t AS (
-        |  SELECT doc_id, text,
-        |         ${toksSql("text")} AS toks
-        |  FROM documents
-        |),
-        |f AS (
-        |  SELECT doc_id,
-        |    len(toks) AS n_tokens,
-        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
-        |    len(list_filter(toks, x -> x IN ('the','a','an','and','of','to','in','is','for','on'))) AS stop_hits
-        |  FROM t
-        |),
-        |q AS (
-        |  SELECT doc_id, round(
-        |    0.4 * least(CAST(1.0 AS DOUBLE), n_tokens::DOUBLE / 200.0) +
-        |    0.3 * (CAST(1.0 AS DOUBLE) - least(CAST(1.0 AS DOUBLE), punct_cnt::DOUBLE / greatest(n_tokens, 1)::DOUBLE)) +
-        |    0.3 * least(CAST(1.0 AS DOUBLE), (stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE) * 5.0),
-        |    6) AS quality
-        |  FROM f
-        |),
+      s"""WITH ${qualityCte("")},
         |r AS (
         |  SELECT doc_id, quality,
         |         row_number() OVER (ORDER BY quality DESC, doc_id) - 1 AS rk
@@ -1140,26 +1127,7 @@ object TextQueries extends QuerySet {
         |FROM r WHERE rn <= 5""".stripMargin,
 
     "text_quality_tiers_by" ->
-      s"""WITH t AS (
-        |  SELECT doc_id, lang, text,
-        |         ${toksSql("text")} AS toks
-        |  FROM documents
-        |),
-        |f AS (
-        |  SELECT doc_id, lang,
-        |    len(toks) AS n_tokens,
-        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
-        |    len(list_filter(toks, x -> x IN ('the','a','an','and','of','to','in','is','for','on'))) AS stop_hits
-        |  FROM t
-        |),
-        |q AS (
-        |  SELECT doc_id, lang, round(
-        |    0.4 * least(CAST(1.0 AS DOUBLE), n_tokens::DOUBLE / 200.0) +
-        |    0.3 * (CAST(1.0 AS DOUBLE) - least(CAST(1.0 AS DOUBLE), punct_cnt::DOUBLE / greatest(n_tokens, 1)::DOUBLE)) +
-        |    0.3 * least(CAST(1.0 AS DOUBLE), (stop_hits::DOUBLE / greatest(n_tokens, 1)::DOUBLE) * 5.0),
-        |    6) AS quality
-        |  FROM f
-        |),
+      s"""WITH ${qualityCte("lang, ")},
         |r AS (
         |  SELECT doc_id, lang AS cls, quality,
         |         row_number() OVER (PARTITION BY lang ORDER BY quality DESC, doc_id) - 1 AS rk,
@@ -1234,21 +1202,7 @@ object TextQueries extends QuerySet {
         |FROM lp GROUP BY doc_id""".stripMargin,
 
     "text_boilerplate" ->
-      """WITH p0 AS (
-        |  SELECT doc_id,
-        |         list_filter(list_transform(string_split(text, ' table '),
-        |           x -> trim(x)), x -> x <> '') AS ps
-        |  FROM documents
-        |),
-        |x AS (
-        |  SELECT doc_id, unnest(generate_series(1, len(ps))) AS i, ps
-        |  FROM p0
-        |),
-        |p AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS para_idx, ps[i] AS para,
-        |         md5(ps[i]) AS para_hash
-        |  FROM x
-        |),
+      s"""$ParaCte,
         |hot AS (
         |  SELECT para_hash FROM p GROUP BY para_hash
         |  HAVING count(DISTINCT doc_id) > 2
@@ -1508,18 +1462,11 @@ object TextQueries extends QuerySet {
         |),
         |sc AS (
         |  SELECT lang,
-        |    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht'))) AS s_de,
-        |    len(list_filter(toks, x -> x IN ('el','los','las','una','que','por'))) AS s_es,
-        |    len(list_filter(toks, x -> x IN ('le','les','des','est','dans','pour'))) AS s_fr,
-        |    len(list_filter(toks, x -> x IN ('the','and','of','is','to','in'))) AS s_en
+        |    $LangHitsSql
         |  FROM t
         |)
         |SELECT lang,
-        |  CASE WHEN s_de IS NULL THEN NULL
-        |       WHEN s_de > s_en AND s_de > s_es AND s_de > s_fr THEN 'de'
-        |       WHEN s_es > s_en AND s_es > s_fr THEN 'es'
-        |       WHEN s_fr > s_en THEN 'fr'
-        |       ELSE 'en' END AS lang_pred,
+        |  $LangPredSql AS lang_pred,
         |  count(*)::BIGINT AS n
         |FROM sc GROUP BY 1, 2""".stripMargin,
 

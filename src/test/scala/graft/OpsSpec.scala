@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.{rm, withTempDir}
 
 /** Invariants for the extension operators (dedup, similarity, multimodal,
   * streaming) and the auxiliary surfaces (hooks, union, auto-config) that
@@ -279,8 +280,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet reads prune partitions from the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toFile
-    try {
+    withTempDir("graft-part") { dir =>
       spark.range(1000).toDF("k")
         .withColumn("plate", concat(lit("p"), col("k") % 4))
         .write.partitionBy("plate").mode("overwrite")
@@ -291,11 +291,6 @@ class OpsSpec extends AnyFunSuite {
       val physical = q.queryExecution.executedPlan.toString
       assert(physical.contains("PartitionFilters") &&
         physical.contains("p1"), s"no partition pruning in:\n$physical")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
@@ -311,8 +306,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("materialize round-trips the ranked collection with pushdown-ready row ids") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mat").toFile
-    try {
+    withTempDir("graft-mat") { dir =>
       val sc = ScCollection.fromDataFrame(spark.range(500).toDF("k"), col("k"))
       val mat = sc.materialize(dir.getAbsolutePath)
       assert(mat.contiguous && mat.length == 500)
@@ -326,11 +320,6 @@ class OpsSpec extends AnyFunSuite {
       val out = BlockShuffling(8).plan(mat, 3)
         .select(SamplingStrategy.Ord).collect().map(_.getLong(0)).sorted
       assert(out.toSeq == (0L until 500L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
@@ -350,9 +339,6 @@ class OpsSpec extends AnyFunSuite {
       assert(back.count() == 4)
       assert(back.agg(sum("n")).head.getLong(0) == 100L)
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
       rm(dir); rm(out)
     }
   }
@@ -405,8 +391,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("streaming: watermark finalizes windows and drops late data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-late").toFile
-    try {
+    withTempDir("graft-late") { dir =>
       def t(s: String) = java.sql.Timestamp.valueOf(s)
       val schema = Seq((1L, t("2026-01-01 10:05:00"), "a", 1.0))
         .toDF("event_id", "ts", "event_type", "value").schema
@@ -436,17 +421,11 @@ class OpsSpec extends AnyFunSuite {
       // dropped, not retro-added; the 12:00 window finalized in batch 2
       assert(rows(w10) == 1L, s"late row leaked into finalized window: $rows")
       assert(rows(w12) == 1L, s"missing 12:00 window: $rows")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
   test("streaming: watermarked dedup drops repeated ids across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sdedup").toFile
-    try {
+    withTempDir("graft-sdedup") { dir =>
       def t(s: String) = java.sql.Timestamp.valueOf(s)
       val batch = Seq(
         (1L, t("2026-01-01 10:00:00"), "a", 1.0),
@@ -465,17 +444,11 @@ class OpsSpec extends AnyFunSuite {
         .select("event_id").as[Long].collect().sorted
       q.stop()
       assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
   test("streaming band-key dedup accumulates the batch bandFirstOwners table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-banddd").toFile
-    try {
+    withTempDir("graft-banddd") { dir =>
       def t(s: String) = java.sql.Timestamp.valueOf(s)
       val b1 = Seq(
         (1L, t("2026-01-01 10:00:00"), "the quick brown fox jumps over the lazy dog"),
@@ -505,17 +478,11 @@ class OpsSpec extends AnyFunSuite {
       // the exact dup claimed no bucket: doc 3 owns nothing
       assert(!streamed.exists(_._3 == 3L))
       assert(streamed.exists(_._3 == 4L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
   test("streaming quality gate equals the batch filterPipeline on the same docs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-qgate").toFile
-    try {
+    withTempDir("graft-qgate") { dir =>
       val b1 = Seq(
         (1L, "the quick brown fox jumps over the lazy dog and then the fox " +
           "runs far away into the deep green forest tonight"),
@@ -546,17 +513,11 @@ class OpsSpec extends AnyFunSuite {
       val kept = streamed.map(_._1)
       assert(kept.contains(1L) && kept.contains(3L))
       assert(!kept.contains(2L) && !kept.contains(4L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
   test("streaming: flatMapGroupsWithState running stats accumulate across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-state").toFile
-    try {
+    withTempDir("graft-state") { dir =>
       def t(s: String) = java.sql.Timestamp.valueOf(s)
       def df(rows: Seq[(Long, java.sql.Timestamp, Long, Double)]) =
         rows.toDF("event_id", "ts", "user_id", "value")
@@ -590,17 +551,11 @@ class OpsSpec extends AnyFunSuite {
           rs.map(_._2.getTime).max)
       }.toSet
       assert(out == expect)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
   test("streaming: session_window sessionization matches batch sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toFile
-    try {
+    withTempDir("graft-sess") { dir =>
       def t(s: String) = java.sql.Timestamp.valueOf(s)
       val batch = Seq(
         (1L, t("2026-01-01 10:00:00"), 7L, "a", 1.0),
@@ -625,11 +580,6 @@ class OpsSpec extends AnyFunSuite {
         .as[(Long, Long, Long, Double)].collect().toSet
       assert(stream == b, s"stream=$stream batch=$b")
       assert(stream.size == 3)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
@@ -654,9 +604,6 @@ class OpsSpec extends AnyFunSuite {
       q.stop()
       assert(res == Set(("a", 2L, 4.0), ("b", 1L, 4.0)))
     } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
       rm(dir); rm(out)
     }
   }
@@ -2070,8 +2017,7 @@ class OpsSpec extends AnyFunSuite {
       ref, col("text"), vocabSize = 2))
     assert(stateless == joined && stateless.size == 3)
     // stream form: same kernel over a file stream = same rows
-    val dir = java.nio.file.Files.createTempDirectory("graft-oov").toFile
-    try {
+    withTempDir("graft-oov") { dir =>
       corpus.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.oovScoreStream(spark, dir.getAbsolutePath,
           corpus.schema, vocab)
@@ -2081,11 +2027,6 @@ class OpsSpec extends AnyFunSuite {
       val streamed = rows(spark.table("graft_oov_test"))
       q.stop()
       assert(streamed == stateless)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 

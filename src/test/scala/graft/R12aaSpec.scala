@@ -4,15 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.functions.TopKAgg
+import TestFiles.ts
 
 /** Invariants for the round-12aa surface: trailing features, audit
   * manifest, and the bounded-state top-k aggregate. */
 class R12aaSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("trailingFeatures counts per horizon and never leaks the future") {
     val ev = Seq(

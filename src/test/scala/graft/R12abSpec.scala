@@ -4,15 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Invariants for the round-12ab surface: Gram statistics, PCA, trend
   * slope, moments, and the streaming rate limiter. */
 class R12abSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("gramTable matches a scalar reference and ignores malformed rows") {
     val vs = Seq(Seq(1.0f, 2.0f), Seq(3.0f, -1.0f), Seq(0.5f, 0.5f),
@@ -91,8 +89,7 @@ class R12abSpec extends AnyFunSuite {
       (1L, ts("2024-01-01 00:00:04"), 4L, "click", 0.0),
       (2L, ts("2024-01-01 00:00:02"), 2L, "view", 0.0)
     ).toDF("user_id", "ts", "event_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rate").toFile
-    try {
+    withTempDir("graft-rate") { dir =>
       ev.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.rateLimitStream(spark, dir.getAbsolutePath,
           ev.schema, maxPerKey = 2)
@@ -104,11 +101,6 @@ class R12abSpec extends AnyFunSuite {
       q.stop()
       // user 1: earliest two by ts are ids 1, 3; user 2 under quota
       assert(got == Set((1L, 1L, 1L), (1L, 3L, 2L), (2L, 2L, 1L)))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 }

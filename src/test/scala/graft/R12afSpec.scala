@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Invariants for the round-12af surface: cross-correlation and keyness. */
 class R12afSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("crossCorrelation peaks at the planted lag") {
     // b(h) = a(h-2): 1 purchase two hours after every click burst; a has

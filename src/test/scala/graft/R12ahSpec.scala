@@ -4,16 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.rm
 
 /** Invariants for the round-12ah surface: DP release and the streaming
   * upsert sink (incl. checkpoint recovery). */
 class R12ahSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-  }
 
   test("dpNoisyCounts: deterministic per seed, bounded, seed-sensitive") {
     val df = (1 to 300).map(i => s"g${i % 3}").toDF("g")

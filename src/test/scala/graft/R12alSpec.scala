@@ -3,20 +3,16 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.LayoutOps
+import TestFiles.withTempDir
 
 /** Invariants for the round-12al surface: versioned-lake time travel. */
 class R12alSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-  }
-
   test("append/overwrite commits; every old snapshot stays readable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tt").toFile
-    val p = dir.getAbsolutePath + "/table"
-    try {
+    withTempDir("graft-tt") { dir =>
+      val p = dir.getAbsolutePath + "/table"
       assert(LayoutOps.latestVersion(spark, p) == -1)
       assert(LayoutOps.commitAppend(Seq(1L, 2L).toDF("id"), p) == 0)
       assert(LayoutOps.commitAppend(Seq(3L).toDF("id"), p) == 1)
@@ -29,13 +25,12 @@ class R12alSpec extends AnyFunSuite {
       assert(read(2) == Set(9L))           // overwrite started fresh
       // v1 still intact AFTER the overwrite — no file was rewritten
       assert(read(1) == Set(1L, 2L, 3L))
-    } finally rm(dir)
+    }
   }
 
   test("vacuum reclaims only unreferenced files; kept snapshots intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vac").toFile
-    val p = dir.getAbsolutePath + "/table"
-    try {
+    withTempDir("graft-vac") { dir =>
+      val p = dir.getAbsolutePath + "/table"
       LayoutOps.commitAppend(Seq(1L, 2L).toDF("id"), p)      // v0
       LayoutOps.commitOverwrite(Seq(9L).toDF("id"), p)       // v1 (fresh)
       LayoutOps.commitAppend(Seq(10L).toDF("id"), p)         // v2 = v1+delta
@@ -50,26 +45,24 @@ class R12alSpec extends AnyFunSuite {
       intercept[Exception] { LayoutOps.readVersion(spark, p, 0).collect() }
       // vacuum keeping everything deletes nothing
       assert(LayoutOps.vacuum(spark, p, keepFrom = 1) == 0)
-    } finally rm(dir)
+    }
   }
 
   test("vacuum never reclaims files shared into kept versions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vac2").toFile
-    val p = dir.getAbsolutePath + "/table"
-    try {
+    withTempDir("graft-vac2") { dir =>
+      val p = dir.getAbsolutePath + "/table"
       LayoutOps.commitAppend(Seq(1L).toDF("id"), p)          // v0
       LayoutOps.commitAppend(Seq(2L).toDF("id"), p)          // v1 carries v0
       val n = LayoutOps.vacuum(spark, p, keepFrom = 1)
       assert(n == 0)  // v0's files live on inside v1's manifest
       assert(LayoutOps.readVersion(spark, p, 1)
         .as[Long].collect().toSet == Set(1L, 2L))
-    } finally rm(dir)
+    }
   }
 
   test("append commit writes only the delta's files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ttd").toFile
-    val p = dir.getAbsolutePath + "/table"
-    try {
+    withTempDir("graft-ttd") { dir =>
+      val p = dir.getAbsolutePath + "/table"
       LayoutOps.commitAppend((1L to 100L).toDF("id"), p)
       // v0's data directory as the manifest records it (directory names
       // are writer-unique; manifests are the only name authority)
@@ -84,6 +77,6 @@ class R12alSpec extends AnyFunSuite {
         java.nio.file.Paths.get(v0dir)).count()
       assert(before == after)  // v0's files untouched by the v1 commit
       assert(LayoutOps.readVersion(spark, p, 1).count() == 101L)
-    } finally rm(dir)
+    }
   }
 }

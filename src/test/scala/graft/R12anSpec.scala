@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
+import TestFiles.{rm, ts, withTempDir}
 
 /** Invariants for the round-12an surface: left-outer attribution stream
   * and the rollup-maintenance sink. */
@@ -10,16 +11,8 @@ class R12anSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-  }
-
   test("attributionStreamOuter emits orphans once the watermark passes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-attro").toFile
-    try {
+    withTempDir("graft-attro") { dir =>
       val batch1 = Seq(
         (1L, ts("2024-01-01 10:30:00"), 1L, "click", 0.0),
         (1L, ts("2024-01-01 11:00:00"), 2L, "purchase", 9.0),  // attributed
@@ -54,7 +47,7 @@ class R12anSpec extends AnyFunSuite {
       q.stop()
       assert(got.contains((2L, Some(1L))))   // matched pair
       assert(got.contains((3L, None)))       // orphan finalized as null
-    } finally rm(dir)
+    }
   }
 
   test("rollupSink maintains the additive rollup across micro-batches") {

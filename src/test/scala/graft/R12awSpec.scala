@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Planted-fixture specs for session-2 composition cards that were
   * previously oracle-only: Benford, audience overlap, expectations
@@ -11,9 +12,6 @@ import graft.ops._
 class R12awSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("Benford digit extraction: integer cents, first digit, chi2 terms") {
     // values 1.00..9.00 once each → uniform digits, n=9, p(1)=log10(2)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Invariants for the round-12b surface: the event-relational tier
   * (as-of join, funnel, bounded range join), CCNet normalization, the
@@ -12,9 +13,6 @@ import graft.streaming.StreamingOps
 class R12bSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("asofJoin: latest at-or-before match, ties to greatest id, null when none") {
     // user 1: left at :10 sees right at :05; left at :04 sees nothing.
@@ -216,8 +214,7 @@ class R12bSpec extends AnyFunSuite {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.select("event_id", "tier").as[(Long, Option[String])].collect().toSet
     val batch = rows(ev.join(dim, Seq("user_id"), "left"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-enrich").toFile
-    try {
+    withTempDir("graft-enrich") { dir =>
       ev.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.enrichStream(spark, dir.getAbsolutePath,
           ev.schema, dim, "user_id")
@@ -228,11 +225,6 @@ class R12bSpec extends AnyFunSuite {
       q.stop()
       assert(streamed == batch && streamed.size == 3)
       assert(streamed.exists(_._2.isEmpty)) // unmatched key stays, null dim
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 
@@ -301,8 +293,7 @@ class R12bSpec extends AnyFunSuite {
       col("vec_id"), df.where(col("vec_id") < 4), col("embedding"),
       col("vec_id")))
     assert(stateless == joined && stateless.size == 40)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cass").toFile
-    try {
+    withTempDir("graft-cass") { dir =>
       df.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.centroidAssignStream(spark, dir.getAbsolutePath,
           df.schema, centRows)
@@ -312,11 +303,6 @@ class R12bSpec extends AnyFunSuite {
       val streamed = rows(spark.table("graft_cass_test"))
       q.stop()
       assert(streamed == stateless)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Invariants for the round-12c surface: salted join, cohort retention,
   * inter-event gaps, edit-distance confirm, readability, and the
@@ -10,9 +11,6 @@ import graft.ops._
 class R12cSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("saltedJoin == plain join; dim replicated once per salt") {
     val fact = Seq((1L, "en"), (2L, "en"), (3L, "de"), (4L, "en"))

@@ -3,15 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Invariants for the round-12d surface: sessionized conversion,
   * z-score outliers, and weighted per-class sampling. */
 class R12dSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("sessionConversion: gap splits sessions; double purchase counts once") {
     val gap = 10000L // 10 s

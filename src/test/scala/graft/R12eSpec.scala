@@ -100,4 +100,18 @@ class R12eSpec extends AnyFunSuite {
         col("vec_id"), dims = 16, minCosine = 0.0)
     }
   }
+
+  test("embedding index: a seed outside Int range fails instead of aliasing") {
+    // 4294967338 = 42 + 2^32: the stored Int seed would read back as 42
+    // while the band keys were hashed under the full Long seed
+    val dir = java.nio.file.Files.createTempDirectory("embidx3").toString
+    val vs = randVecs(20, 3).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      DedupOps.embIndexWrite(vs, col("embedding"), col("vec_id"), dims = 8,
+        dir, seed = 4294967338L)
+      DedupOps.embCandidatesAgainst(dir, vs, col("embedding"), col("vec_id"),
+        dims = 8, minCosine = 0.0, seed = 42L).collect()
+    }
+    assert(e.getMessage.contains("seed"))
+  }
 }

@@ -4,15 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Invariants for the round-12g surface: exact-moment correlation and the
   * stateless/stream outlier scorer. */
 class R12gSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("valueHourCorr: planted perfect/anti/degenerate correlations") {
     // type "up": value == hour -> r = 1; "down": value == -hour -> r = -1;
@@ -50,8 +48,7 @@ class R12gSpec extends AnyFunSuite {
       .select("event_id", "z").as[(Long, Double)].collect().toMap
     joined.foreach { case (id, z) => assert(stateless(id).contains(z)) }
     // stream form is bit-equal on the same stats
-    val dir = java.nio.file.Files.createTempDirectory("graft-oss").toFile
-    try {
+    withTempDir("graft-oss") { dir =>
       ev.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.outlierScoreStream(spark, dir.getAbsolutePath,
           ev.schema, stats)
@@ -61,11 +58,6 @@ class R12gSpec extends AnyFunSuite {
       val streamed = rows(spark.table("graft_oss_test"))
       q.stop()
       assert(streamed == stateless)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 }

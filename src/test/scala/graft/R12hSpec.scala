@@ -4,15 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Invariants for the round-12h surface: streaming funnel and the
   * compaction contract. */
 class R12hSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("funnelStream == batch funnelStages on ordered arrival") {
     val ev = Seq(
@@ -28,8 +26,7 @@ class R12hSpec extends AnyFunSuite {
         col("event_id"), col("event_type"), steps)
       .as[(Long, Int)].collect().toMap
     assert(batch == Map(1L -> 3, 2L -> 1, 3L -> 1))
-    val dir = java.nio.file.Files.createTempDirectory("graft-fstr").toFile
-    try {
+    withTempDir("graft-fstr") { dir =>
       ev.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.funnelStream(spark, dir.getAbsolutePath,
           ev.schema, steps)
@@ -40,11 +37,6 @@ class R12hSpec extends AnyFunSuite {
         .as[(Long, Int)].collect().toMap
       q.stop()
       assert(streamed == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 

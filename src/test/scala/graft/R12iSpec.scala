@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.withTempDir
 
 /** Invariants for the round-12i surface: ingest-time streaming dedup
   * against the persisted exact index. */
@@ -28,8 +29,7 @@ class R12iSpec extends AnyFunSuite {
     val expected = DedupOps.exactDedup(batchNew, col("text"), col("doc_id"))
       .select("doc_id").as[Long].collect().toSet
     assert(expected == Set(10L, 13L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-eds").toFile
-    try {
+    withTempDir("graft-eds") { dir =>
       arriving.coalesce(1).write.mode("append")
         .parquet(dir.getAbsolutePath)
       val q = StreamingOps.exactDedupStream(spark, dir.getAbsolutePath,
@@ -41,11 +41,6 @@ class R12iSpec extends AnyFunSuite {
         .select("doc_id").as[Long].collect().toSet
       q.stop()
       assert(streamed == expected)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 }

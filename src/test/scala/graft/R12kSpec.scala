@@ -3,15 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Invariants for the round-12k surface: Markov transitions and
   * percentile rank. */
 class R12kSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("transitionMatrix: hand-built journeys; rows normalize to 1") {
     val ev = Seq(

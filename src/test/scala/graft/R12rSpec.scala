@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Invariants for the round-12r surface: upsert and seasonal anomalies. */
 class R12rSpec extends AnyFunSuite {
@@ -16,9 +17,6 @@ class R12rSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toMap
     assert(out == Map(1L -> "a", 2L -> "B2", 3L -> "c", 9L -> "new"))
   }
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("hourlyAnomalies: spike against same-hour baseline flagged") {
     // type "e": 7 days of exactly 2 events at 03:00, then a day with 30 —

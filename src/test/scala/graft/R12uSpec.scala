@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Invariants for the round-12u surface: the streaming anomaly monitor. */
 class R12uSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("anomalyStream == batch scoring on the same baseline") {
     // 2 events at 03:xx daily baseline (mean 2, sd 1); a 10-event spike day
@@ -30,8 +28,7 @@ class R12uSpec extends AnyFunSuite {
     assert(batch.values.map(_._1).toSeq.sorted == Seq(2L, 2L, 2L, 10L))
     assert(batch.values.exists(v => v._1 == 10L && v._2.contains(8.0)))
     assert(batch.values.filter(_._1 == 2L).forall(_._2.contains(0.0)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-anom").toFile
-    try {
+    withTempDir("graft-anom") { dir =>
       ev.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.anomalyStream(spark, dir.getAbsolutePath,
           ev.schema, "2 hours", baseline)
@@ -43,11 +40,6 @@ class R12uSpec extends AnyFunSuite {
         .map(r => r._1 -> ((r._3, r._4))).toMap
       q.stop()
       assert(streamed == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 

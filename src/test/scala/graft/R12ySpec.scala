@@ -4,15 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Invariants for the round-12y surface: join census, bloom prune,
   * interpolation, and the stream–stream attribution join. */
 class R12ySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("joinSizeCensus equals the materialized join's census") {
     val a = Seq(1, 1, 1, 2, 2, 3, 5).toDF("k")
@@ -84,8 +82,7 @@ class R12ySpec extends AnyFunSuite {
         .select($"purchase_id", $"click_id").as[(Long, Long)].collect().toSet
     }
     assert(batch == Set((3L, 1L), (3L, 2L)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toFile
-    try {
+    withTempDir("graft-attr") { dir =>
       ev.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.attributionStream(spark, dir.getAbsolutePath,
           ev.schema, windowMs)
@@ -96,11 +93,6 @@ class R12ySpec extends AnyFunSuite {
         .select("purchase_id", "click_id").as[(Long, Long)].collect().toSet
       q.stop()
       assert(streamed == batch)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
     }
   }
 }

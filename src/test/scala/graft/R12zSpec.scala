@@ -3,15 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops._
+import TestFiles.ts
 
 /** Invariants for the round-12z surface: SCD-2, path n-grams, BM25,
   * rollup merge, and the Z-order layout. */
 class R12zSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
 
   test("scd2Intervals: abutting intervals, one current row per key") {
     val ev = Seq(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.LayoutOps
 import graft.streaming.StreamingOps
+import TestFiles.withTempDir
 
 /** The streaming lake sink: one micro-batch = one version, replays are
   * no-ops, every snapshot stays readable. */
@@ -11,15 +12,10 @@ class R13fSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def rmr(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
-  }
-
   test("lakeSink commits one version per micro-batch and time travel " +
       "sees each snapshot") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lake").toFile
-    val src = s"$root/src"; val lake = s"$root/lake"; val cp = s"$root/cp"
-    try {
+    withTempDir("graft-lake") { root =>
+      val src = s"$root/src"; val lake = s"$root/lake"; val cp = s"$root/cp"
       Seq((1L, "a"), (2L, "b")).toDF("id", "v")
         .coalesce(1).write.mode("append").parquet(src)
       val schema = spark.read.parquet(src).schema
@@ -39,13 +35,12 @@ class R13fSpec extends AnyFunSuite {
       // restart with nothing new: the checkpoint replays nothing
       run()
       assert(LayoutOps.latestVersion(spark, lake) == 1)
-    } finally rmr(root)
+    }
   }
 
   test("commitBatchIdempotent: replaying the same batch id is a no-op") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lake2").toFile
-    val lake = s"$root/lake"
-    try {
+    withTempDir("graft-lake2") { root =>
+      val lake = s"$root/lake"
       val b = Seq((1L, "a")).toDF("id", "v")
       StreamingOps.commitBatchIdempotent(b, 7L, lake)
       StreamingOps.commitBatchIdempotent(b, 7L, lake) // replay
@@ -54,14 +49,13 @@ class R13fSpec extends AnyFunSuite {
       StreamingOps.commitBatchIdempotent(b, 8L, lake) // a NEW batch lands
       assert(LayoutOps.latestVersion(spark, lake) == 1)
       assert(LayoutOps.readVersion(spark, lake, 1).count() == 2)
-    } finally rmr(root)
+    }
   }
 
   test("a crash-orphaned data dir neither blocks nor pollutes a batch " +
       "retry: writer-unique names make it invisible until vacuumed") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lake3").toFile
-    val lake = s"$root/lake"
-    try {
+    withTempDir("graft-lake3") { root =>
+      val lake = s"$root/lake"
       val b = Seq((1L, "a")).toDF("id", "v")
       StreamingOps.commitBatchIdempotent(b, 0L, lake)
       // simulate a crash AFTER a data write but BEFORE its manifest —
@@ -77,6 +71,6 @@ class R13fSpec extends AnyFunSuite {
       assert(LayoutOps.vacuum(spark, lake, keepFrom = 0) == 1)
       assert(!new java.io.File(s"$lake/files/v1-deadbeef").exists)
       assert(LayoutOps.readVersion(spark, lake, 1).count() == 2)
-    } finally rmr(root)
+    }
   }
 }

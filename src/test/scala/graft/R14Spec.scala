@@ -5,16 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{EventOps, LayoutOps}
 import graft.streaming.StreamingOps
 import scala.jdk.CollectionConverters._
+import TestFiles.withTempDir
 
 /** Round-14 hardening of the native as-of join's declared physical
   * properties and the lake sink's exactly-once commit. */
 class R14Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def rmr(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
-  }
 
   // a non-nullable fixture (long keys/ts built from tuple columns) so the
   // wrapper plans the bare AsOfJoin node with no null branch
@@ -158,9 +155,8 @@ class R14Spec extends AnyFunSuite {
 
   test("commitBatchIdempotent survives a crash AFTER the commit with no " +
       "separate-marker window: the batch id lives in the manifest itself") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lake4").toFile
-    val lake = s"$root/lake"
-    try {
+    withTempDir("graft-lake4") { root =>
+      val lake = s"$root/lake"
       val b = Seq((1L, "a")).toDF("id", "v")
       // simulate: commitAppend landed (manifest written, txn recorded)
       // and the process died immediately — under the old marker-file
@@ -176,14 +172,13 @@ class R14Spec extends AnyFunSuite {
       assert(LayoutOps.readVersion(spark, lake, 1).count() == 2)
       LayoutOps.vacuum(spark, lake, keepFrom = 1)
       assert(LayoutOps.readVersion(spark, lake, 1).count() == 2)
-    } finally rmr(root)
+    }
   }
 
   test("vacuum carries txn markers of dropped manifests forward: a replay " +
       "of a vacuumed batch stays a no-op") {
-    val root = java.nio.file.Files.createTempDirectory("graft-lake5").toFile
-    val lake = s"$root/lake"
-    try {
+    withTempDir("graft-lake5") { root =>
+      val lake = s"$root/lake"
       val b = Seq((1L, "a")).toDF("id", "v")
       (0L to 2L).foreach(StreamingOps.commitBatchIdempotent(b, _, lake))
       assert(LayoutOps.latestVersion(spark, lake) == 2)
@@ -201,6 +196,6 @@ class R14Spec extends AnyFunSuite {
       // and both surviving snapshots still read correctly
       assert(LayoutOps.readVersion(spark, lake, 2).count() == 3)
       assert(LayoutOps.readVersion(spark, lake, 3).count() == 3)
-    } finally rmr(root)
+    }
   }
 }

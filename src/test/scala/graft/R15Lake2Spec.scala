@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.LayoutOps
+import TestFiles.withTempDir
 
 /** Round-15: lake OPTIMIZE (snapshot compaction with conflict
   * detection) and manifest-level column stats (listing-level data
@@ -120,12 +121,8 @@ class R15Lake2Spec extends AnyFunSuite {
   test("a stats-recording, auto-compacting stream sink: micro-batches " +
       "land with manifest stats, fragmentation is bounded by the " +
       "maybeCompact policy, and a ranged read prunes from the manifest") {
-    val root = java.nio.file.Files.createTempDirectory("r15sink").toFile
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
-    }
-    val src = s"$root/src"; val lake = s"$root/lake"; val cp = s"$root/cp"
-    try {
+    withTempDir("r15sink") { root =>
+      val src = s"$root/src"; val lake = s"$root/lake"; val cp = s"$root/cp"
       val schema = Seq((0L, 0L)).toDF("day", "v").schema
       def feed(d: Long): Unit = Seq((d, d * 10L), (d, d * 10L + 1L))
         .toDF("day", "v").coalesce(1).write.mode("append").parquet(src)
@@ -163,7 +160,7 @@ class R15Lake2Spec extends AnyFunSuite {
         ._2.nonEmpty)
       assert(LayoutOps.readVersionRange(spark, lake, v2, "day", 1L, 5L)
         .count() == 10)
-    } finally rmr(root)
+    }
   }
 
   test("sorted compaction re-clusters the snapshot on the sort column " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.EventOps
 import graft.streaming.StreamingOps
+import TestFiles.{ts, withTempDir}
 
 /** Round-15: streaming as-of enrichment == batch asofJoin under ordered
   * arrival, including across micro-batch boundaries (state carries the
@@ -11,13 +12,6 @@ import graft.streaming.StreamingOps
 class R15StreamSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s)
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-  }
 
   // clicks enriched with the latest at-or-before purchase; covers: match
   // at the same instant (side rule), equal-ts purchases (greatest id
@@ -69,13 +63,11 @@ class R15StreamSpec extends AnyFunSuite {
       (3L, 2L, None, None),
       (4L, 2L, Some(13L), Some(4.0)),
       (5L, 3L, None, None)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-asofstream")
-      .toFile
-    try {
+    withTempDir("graft-asofstream") { dir =>
       events.coalesce(1).write.mode("append")
         .parquet(dir.getAbsolutePath)
       assert(streamRows(dir.getAbsolutePath, "graft_asof_one") == batch)
-    } finally rm(dir)
+    }
   }
 
   test("tolerance bounds staleness: stream == batch native as-of with " +
@@ -93,9 +85,7 @@ class R15StreamSpec extends AnyFunSuite {
       "the 9.5 h-old purchase is outside the 1 h tolerance")
     assert(batch.contains((2L, 1L, Some(12L), Some(9.0))),
       "the same-instant match survives any tolerance")
-    val dir = java.nio.file.Files.createTempDirectory("graft-asofstream3")
-      .toFile
-    try {
+    withTempDir("graft-asofstream3") { dir =>
       events.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.asofEnrichStream(spark, dir.getAbsolutePath,
           events.schema, toleranceMs = tolMs)
@@ -107,7 +97,7 @@ class R15StreamSpec extends AnyFunSuite {
         .as[(Long, Long, Option[Long], Option[Double])].collect().toSet
       q.stop()
       assert(out == batch)
-    } finally rm(dir)
+    }
   }
 
   test("null semantics match the batch join: null-key/ts left rows emit " +
@@ -122,9 +112,7 @@ class R15StreamSpec extends AnyFunSuite {
         jl(2L), "click", 0.0),                           // null-key left
       (jl(2L), null.asInstanceOf[java.sql.Timestamp], jl(3L), "click", 0.0))
       .toDF("user_id", "ts", "event_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-asofstream5")
-      .toFile
-    try {
+    withTempDir("graft-asofstream5") { dir =>
       nullable.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = StreamingOps.asofEnrichStream(spark, dir.getAbsolutePath,
           nullable.schema)
@@ -140,14 +128,12 @@ class R15StreamSpec extends AnyFunSuite {
         (Some(2L), None),      // null-key click preserved, unmatched
         (Some(3L), None)),     // null-ts click preserved, unmatched
         s"got $out — and the null-key purchase (11) must match nothing")
-    } finally rm(dir)
+    }
   }
 
   test("stateTtl bounds total state: an idle key is evicted once the " +
       "watermark passes its TTL, a fresh key's state survives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-asofstream4")
-      .toFile
-    try {
+    withTempDir("graft-asofstream4") { dir =>
       def ev(rows: Seq[(Long, String, Long, String, Double)]) =
         rows.map { case (u, t, id, et, v) => (u, ts(t), id, et, v) }
           .toDF("user_id", "ts", "event_id", "event_type", "value")
@@ -178,14 +164,12 @@ class R15StreamSpec extends AnyFunSuite {
       assert(out(201L) == Some(200L), "fresh key's state survives the TTL")
       assert(out(101L) == None,
         "evicted key: the 08:00 purchase is gone, the click is unmatched")
-    } finally rm(dir)
+    }
   }
 
   test("ordered arrival across micro-batches: per-key state carries the " +
       "running latest purchase over the batch boundary") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-asofstream2")
-      .toFile
-    try {
+    withTempDir("graft-asofstream2") { dir =>
       // time-split the SAME events into two micro-batches by draining
       // the first file before the second lands — user 2's 18:00 click
       // must match the 08:30 purchase seen a batch earlier (carried in
@@ -208,6 +192,6 @@ class R15StreamSpec extends AnyFunSuite {
         .as[(Long, Long, Option[Long], Option[Double])].collect().toSet
       q.stop()
       assert(out == batchRows)
-    } finally rm(dir)
+    }
   }
 }

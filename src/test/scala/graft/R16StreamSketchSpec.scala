@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SketchOps
+import TestFiles.withTempDir
 
 /** The sketch tier's streaming twin: [[SketchOps.cmsSketch]] and
   * [[SketchOps.hdrHistogram]] are single map-side-combined aggregations,
@@ -16,15 +17,10 @@ class R16StreamSketchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-  }
-
   test("cmsSketch over a file stream == batch sketch of all arrivals") {
     val w1 = Seq("a", "b", "a", "c").toDF("tok")
     val w2 = Seq("b", "b", "d").toDF("tok")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms-s").toFile
-    try {
+    withTempDir("graft-cms-s") { dir =>
       w1.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val src = spark.readStream.schema(w1.schema)
         .parquet(dir.getAbsolutePath)
@@ -45,14 +41,13 @@ class R16StreamSketchSpec extends AnyFunSuite {
       val batchAll = SketchOps.cmsSketch(w1.union(w2), col("tok"), 4, 16)
         .as[(Int, Long, Long)].collect().toSet
       assert(fin == batchAll)
-    } finally rm(dir)
+    }
   }
 
   test("hdrHistogram over a file stream == batch histogram of arrivals") {
     val w1 = Seq(3L, 100L, 9999L).toDF("v")
     val w2 = Seq(3L, 100000L).toDF("v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-hdr-s").toFile
-    try {
+    withTempDir("graft-hdr-s") { dir =>
       w1.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val src = spark.readStream.schema(w1.schema)
         .parquet(dir.getAbsolutePath)
@@ -68,6 +63,6 @@ class R16StreamSketchSpec extends AnyFunSuite {
       val batchAll = SketchOps.hdrHistogram(w1.union(w2), col("v"), 4)
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(fin == batchAll)
-    } finally rm(dir)
+    }
   }
 }

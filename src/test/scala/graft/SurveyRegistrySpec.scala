@@ -107,4 +107,41 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(q.diff(o).isEmpty, s"queries without oracle SQL: ${q.diff(o).toSeq.sorted}")
     assert(o.diff(q).isEmpty, s"oracle SQL without query: ${o.diff(q).toSeq.sorted}")
   }
+
+  test("every oracle's SQL text is pinned, per domain set, up to whitespace") {
+    import graft.queries._
+    // sha256 over `name\tsql\n` for each oracle, name-sorted, with every
+    // whitespace run collapsed to one space: folding oracle text into shared
+    // pieces must leave the SQL a DuckDB oracle runs unchanged.
+    def digest(set: QuerySet): String = {
+      val text = set.oracles.toSeq.sortBy(_._1).map { case (n, q) =>
+        s"$n\t${q.replaceAll("\\s+", " ").trim}\n" }.mkString
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(text.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    }
+    val pinned: Seq[(QuerySet, String)] = Seq(
+      SamplingQueries ->
+        "b73314533a44303760d9069df9bfa40b1a0e529e51a2063c1ea33f67a8d9657d",
+      DedupQueries ->
+        "3c422aa8f31221e0592a4c6906a4e01a50cea2e5e71fab93e52fa1bc0d70b380",
+      TextQueries ->
+        "76bac638d07a88432418c2e6f6ae41e2a3eb2e96a5f2bff484c3f313025b688c",
+      SimilarityQueries ->
+        "b70dc66009f7041d7065e57e348745992d0846d022be25e234cb52d3299ec422",
+      MediaQueries ->
+        "fb3ef1b349c11c343d3c879c23ee11494bd7cc3fd4f0b551a46b242ec598a84b",
+      EventQueries ->
+        "81306ec84bdee970360b9213e1a55e61ddf4d86df5c61baf9f557da3f2f6b0a1",
+      TpchQueries ->
+        "ebe85687f32fe757982183128b1ff302305050d7fd44686b1a68c29885dd0e94",
+      MlQueries ->
+        "728bed5a5d2552f5406fb85d33dba0b8b4df7a7a07e2cdaa17085bebf4fa8b0e",
+      GraphQueries ->
+        "426f6057913e7ffa186631ec16473a8e1e77bb68cb6974b9223aaa1673c99563",
+      LakeQueries ->
+        "08b58ba5295d28888738f488a0b0de819142963b342f3a48410784d39383bf39")
+    val moved = pinned.collect { case (set, d) if digest(set) != d =>
+      s"${set.getClass.getSimpleName.stripSuffix("$")}: ${digest(set)}" }
+    assert(moved.isEmpty, "oracle text changed:\n" + moved.mkString("\n"))
+  }
 }

@@ -12,7 +12,9 @@ import graft.core.CacheScope
   * codegen stages.  `Probe plans` prints one `PLANS` table row per query
   * and a summary; `--bank FILE` also writes the banked PLANS markdown and
   * `--dump SUFFIX` writes each query's `explain("formatted")` to
-  * `<out>/<query>_<suffix>.txt` (default out: `plans`).  The session runs
+  * `<out>/<query>_<suffix>.txt` (default out: `plans`) and its [[masked]]
+  * copy to `<out>/<query>_<suffix>.masked.txt`, so the dumps of two
+  * checkouts diff directly.  The session runs
   * with AQE off, so plans show their full static shape (codegen stages
   * included) rather than an unexecuted adaptive stub. */
 object Plans {
@@ -54,6 +56,25 @@ object Plans {
         lines.slice(i + 1, i + 4).exists(_.contains("Exchange SinglePartition"))
     }
 
+  /** `plan` with what differs between two runs of the same code replaced
+    * by a fixed token: expression ids (`#12`), plan ids, object hashes,
+    * lambda class names, the `roots` (working directory, warehouse) and
+    * the per-run scratch root, lake data-file version nonces and part-file
+    * UUIDs. */
+  def masked(plan: String, roots: Seq[String]): String = {
+    val rooted = roots.filter(_.nonEmpty).sortBy(-_.length)
+      .foldLeft(plan)((p, r) => p.replace(r, "<root>"))
+    Seq(
+      "#\\d+" -> "#_",
+      "plan_id=\\d+" -> "plan_id=_",
+      "\\$+Lambda[$/\\w]*" -> "\\$Lambda",
+      "@[0-9a-f]+\\b" -> "@_",
+      "[\\w/.-]*/graft_run_\\d+" -> "<scratch>",
+      "/v(\\d+[a-z]?)-[0-9a-f]+" -> "/v$1-_",
+      "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}" -> "<uuid>"
+    ).foldLeft(rooted) { case (p, (re, to)) => p.replaceAll(re, to) }
+  }
+
   /** The census of each named query's executed plan, or the error that
     * building it raised; `each` sees every built frame first. */
   def audit(spark: SparkSession, sfDir: String, names: Seq[String],
@@ -84,8 +105,12 @@ object Plans {
     val out = a.opt("out", "plans")
     val dump = a.opts.get("dump").fold((_: String, _: DataFrame) => ()) { suffix =>
       new java.io.File(out).mkdirs()
-      (name: String, df: DataFrame) => Files.writeString(
-        Paths.get(s"$out/${name}_$suffix.txt"), df.queryExecution.explainString(FormattedMode))
+      val roots = Seq(System.getProperty("user.dir"), spark.conf.get("spark.sql.warehouse.dir"))
+      (name: String, df: DataFrame) => {
+        val plan = df.queryExecution.explainString(FormattedMode)
+        Files.writeString(Paths.get(s"$out/${name}_$suffix.txt"), plan)
+        Files.writeString(Paths.get(s"$out/${name}_$suffix.masked.txt"), masked(plan, roots))
+      }
     }
     val rows = audit(spark, sfDir, a.names.getOrElse(Probe.allNames), dump)
     val flagged = rows.collect { case (n, Right(c)) if c.singlePartitionWindow => n }
