@@ -1,18 +1,21 @@
 package graft.ops
 
-/** Dependency-free image codec for the two classic uncompressed raster
-  * formats — 24-bit BI_RGB BMP and binary PPM (P6) — written from their
-  * public format specifications (the Windows BITMAPINFOHEADER layout and
-  * the netpbm P6 grammar).  This is the REAL (non-stub) kernel behind the
+/** Dependency-free image codec, written from the public format
+  * specifications: BMP (24-bit, 16-bit 555/565, 8- and 4-bit palette,
+  * uncompressed or RLE, bottom-up or top-down), Netpbm P1–P6 at maxval
+  * 255 or 65535, PNG, GIF, and — through [[TiffCodec]] and [[JpegCodec]] —
+  * TIFF and baseline or progressive JPEG.  Each container has one writer
+  * and one reader.  This is the REAL (non-stub) kernel behind the
   * [[MultimodalOps.DecodeKernel]] seam: decode → block-mean luminance
   * features → aHash / near-dup / resize run on actual pixel data.
   *
   * Everything is integer until the final per-cell mean (one IEEE double
   * division of an integer sum), so features are engine-exact and the SQL
-  * oracle can replay them from the source bytes.  Unsupported shapes
-  * (compressed BMP, bit depths ≠ 24, 16-bit PPM, top-down BMP) fail
-  * loudly — a decoder silently misreading pixels would poison every
-  * downstream fingerprint.
+  * oracle can replay them from the source bytes.  Unsupported shapes and
+  * malformed headers fail loudly with an IllegalArgumentException — a
+  * decoder silently misreading pixels would poison every downstream
+  * fingerprint — and the BMP, Netpbm, GIF and PNG readers check a
+  * header's declared size before allocating any pixel buffer.
   */
 object ImageCodec {
 
@@ -21,82 +24,54 @@ object ImageCodec {
     * kept integer). */
   final case class Raster(width: Int, height: Int, lumaSum3: Array[Int])
 
-  // ---- encoders (fixture/query side: deterministic bytes, no codec) ----
+  /** Pixel cap of the containers whose byte count bounds no pixel count
+    * (RLE BMP, GIF, PNG): a crafted header must not allocate the heap
+    * away before a single pixel is checked. */
+  private val MaxPixels = 1 << 26
 
-  /** 24-bit uncompressed BMP (BITMAPFILEHEADER + BITMAPINFOHEADER,
-    * bottom-up rows, BGR byte order, rows padded to 4 bytes). `rgb(x, y)`
-    * is top-down row-major, channels 0..255. */
-  def encodeBmp(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int))
-      : Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val stride = (w * 3 + 3) / 4 * 4
-    val dataSize = stride * h
-    val out = java.nio.ByteBuffer.allocate(54 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put('B'.toByte).put('M'.toByte)
-    out.putInt(54 + dataSize).putInt(0).putInt(54) // size, reserved, offset
-    out.putInt(40).putInt(w).putInt(h)             // DIB size, w, h (+h ⇒ bottom-up)
-    out.putShort(1).putShort(24)                   // planes, bpp
-    out.putInt(0).putInt(dataSize)                 // BI_RGB, image size
-    out.putInt(2835).putInt(2835).putInt(0).putInt(0) // 72 dpi, palette
-    for (fileRow <- 0 until h) {
-      val y = h - 1 - fileRow                      // bottom-up storage
-      for (x <- 0 until w) {
-        val (r, g, b) = rgb(x, y)
-        out.put(b.toByte).put(g.toByte).put(r.toByte)
-      }
-      for (_ <- w * 3 until stride) out.put(0.toByte)
-    }
-    out.array()
+  private def pixelCap(w: Int, h: Int, what: String): Unit =
+    require(w.toLong * h <= MaxPixels,
+      s"$what ${w}x$h exceeds the $MaxPixels-pixel decode cap")
+
+  // ---- the text-to-pixel fixtures ------------------------------------------
+
+  /** Gray pixel (x, y) of a `w`-wide image is `src((y·w + x) mod
+    * src.length) & 0xff` — the deterministic "encode the document as
+    * pixels" map that every container's fixture and its SQL oracle
+    * compute independently. */
+  private[ops] def srcGray(w: Int, src: Array[Byte]): (Int, Int) => Int = {
+    require(src.nonEmpty, "empty source bytes")
+    (x, y) => src((y * w + x) % src.length) & 0xff
   }
 
-  /** Binary PPM (P6): ASCII header `P6 <w> <h> 255`, then w·h RGB
-    * triplets, top-down row-major. */
-  def encodePpm(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int))
-      : Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val header = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + w * h * 3)
-    System.arraycopy(header, 0, out, 0, header.length)
-    var p = header.length
-    for (y <- 0 until h; x <- 0 until w) {
-      val (r, g, b) = rgb(x, y)
-      out(p) = r.toByte; out(p + 1) = g.toByte; out(p + 2) = b.toByte
-      p += 3
-    }
-    out
-  }
+  /** A gray map as RGB with three equal channels. */
+  private[ops] def grayRgb(g: (Int, Int) => Int): (Int, Int) => (Int, Int, Int) =
+    (x, y) => { val v = g(x, y); (v, v, v) }
 
-  /** Gray image whose pixel (x, y) is `src(((y·w + x) mod src.length))`
-    * — the deterministic "encode the document as pixels" fixture both
-    * the query and its SQL oracle compute independently. */
+  /** [[srcGray]] as a binary PPM (`asPpm`) or a 24-bit BMP. */
   def grayFromBytes(w: Int, h: Int, src: Array[Byte], asPpm: Boolean)
       : Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    val f = (x: Int, y: Int) => {
-      val v = src((y * w + x) % src.length) & 0xff
-      (v, v, v)
-    }
+    val f = grayRgb(srcGray(w, src))
     if (asPpm) encodePpm(w, h, f) else encodeBmp(w, h, f)
   }
 
-  /** [[grayFromBytes]], PNG container: same pixel map, chosen color type
-    * and per-row filter — so one corpus sweep exercises the compressed
-    * path (chunk walk, CRC, inflate, unfilter) with every filter kind. */
+  /** [[srcGray]], PNG container: chosen color type and per-row filter —
+    * so one corpus sweep exercises the compressed path (chunk walk, CRC,
+    * inflate, unfilter) with every filter kind. */
   def grayPng(w: Int, h: Int, src: Array[Byte], colorType: Int,
       filter: Int, interlace: Boolean = false,
-      depth: Int = 8): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encodePng(w, h, (x, y) => {
-      val v = src((y * w + x) % src.length) & 0xff
-      (v, v, v)
-    }, colorType, filter, interlace, depth,
+      depth: Int = 8): Array[Byte] =
+    encodePng(w, h, grayRgb(srcGray(w, src)), colorType, filter, interlace,
+      depth,
       // color type 3: pixel v doubles as the index through the identity
       // gray palette (the indirection itself is proven in the spec with
       // an inverted palette)
       palette = if (colorType == 3) Array.tabulate(256)(i => (i, i, i))
         else null)
-  }
+
+  /** [[srcGray]], GIF container. */
+  def grayGif(w: Int, h: Int, src: Array[Byte]): Array[Byte] =
+    encodeGif(w, h, srcGray(w, src))
 
   // ---- PNG (the first COMPRESSED container in the tier) -------------------
   //
@@ -335,6 +310,7 @@ object ImageCodec {
           val (comp, filt, ilace) =
             (hb.get() & 0xff, hb.get() & 0xff, hb.get() & 0xff)
           require(w > 0 && h > 0, s"bad PNG dims ${w}x$h")
+          pixelCap(w, h, "PNG")
           require(colorType == 0 || colorType == 2 || colorType == 3,
             s"only gray/truecolor/palette PNG supported, got color " +
               s"type $colorType")
@@ -446,18 +422,19 @@ object ImageCodec {
     Raster(w, h, sums)
   }
 
-  // ---- GIF87a (LZW — the tier's third compression family) -----------------
+  // ---- GIF (LZW — the tier's third compression family) -------------------
   //
-  // Written from the public GIF87a specification: logical screen
+  // Written from the public GIF87a/89a specifications: logical screen
   // descriptor, 256-entry grayscale global color table, image descriptor,
   // and variable-width LZW with clear/EOI codes, little-endian bit
   // packing, dictionary growth to 12 bits, and the KwKwK case.  Lossless,
   // so the text-derived oracles replay features hash-exactly (same
   // pattern as BMP/PPM/PNG).  GIF has no checksums — corruption safety is
   // structural only (magic, bounds, sub-block walk); the PNG tier is the
-  // checksummed one.  Interlace (four-pass row order, r17) and local
-  // color tables (per-image override of the global, r17) are supported;
-  // sub-8-bit palettes fail loudly.
+  // checksummed one.  Interlace (four-pass row order), local color tables
+  // (per-image override of the global) and 89a animation (NETSCAPE2.0
+  // loop block, Graphic Control Extensions, partial frames, disposal,
+  // transparency) are supported; sub-8-bit palettes fail loudly.
 
   /** GIF interlace row order (spec: four passes — every 8th row from 0,
     * every 8th from 4, every 4th from 2, every 2nd from 1). */
@@ -466,6 +443,20 @@ object ImageCodec {
       start until h by step
     }).toArray
 
+  /** One frame of an animated GIF: a `w`×`h` image placed at (`left`,
+    * `top`) inside the logical screen, with the GCE disposal method that
+    * governs the canvas AFTER this frame renders — 1 = leave in place,
+    * 2 = restore the frame's rectangle to the background color, 3 =
+    * restore the canvas to its pre-frame state (spec "restore to
+    * previous").  `px` is frame-local: `px(u, v)` for u < w, v < h.
+    * `transparent` marks one palette index as a HOLE — pixels carrying it
+    * leave the underlying canvas untouched (the GCE transparent-color
+    * flag, how real animated GIFs encode unchanged regions inside the
+    * stored rectangle). */
+  final case class GifFrame(left: Int, top: Int, w: Int, h: Int,
+      disposal: Int, px: (Int, Int) => Int,
+      transparent: Option[Int] = None)
+
   /** 8-bit grayscale GIF87a: pixel (x, y) = palette index v(x, y) where
     * the global table maps i → (i, i, i).  Real LZW compression (string
     * table, not literal-only), so decode exercises dictionary hits.
@@ -473,22 +464,102 @@ object ImageCodec {
     * `localTable` attaches a per-image color table (identity gray) and
     * INVERTS the global one — so a decoder that ignores the local table
     * produces provably wrong pixels, not silently right ones. */
-  /** One image: descriptor + optional local table + LZW data blocks —
-    * shared by the single-image and animated containers. */
-  private def gifWriteFrame(out: java.io.ByteArrayOutputStream, w: Int,
-      h: Int, gray: (Int, Int) => Int, interlace: Boolean,
-      localTable: Boolean, left: Int = 0, top: Int = 0): Unit = {
+  def encodeGif(w: Int, h: Int, gray: (Int, Int) => Int,
+      interlace: Boolean = false, localTable: Boolean = false)
+      : Array[Byte] =
+    writeGif(w, h, Seq(GifFrame(0, 0, w, h, 1, gray)), None,
+      interlace = interlace, localTable = localTable)
+
+  /** ANIMATED GIF89a — the real-world GIF shape: NETSCAPE2.0 looping
+    * application extension, then one Graphic Control Extension (disposal
+    * 1 = leave in place, `delayCs` centiseconds, no transparency) +
+    * full-screen image per frame.  Frames share the global table. */
+  def encodeGifAnimated(w: Int, h: Int,
+      frames: Seq[(Int, Int) => Int], delayCs: Int = 10): Array[Byte] =
+    encodeGifAnimatedComposite(w, h, frames.map(GifFrame(0, 0, w, h, 1, _)),
+      delayCs)
+
+  /** Animated GIF89a with PARTIAL frames and disposal methods — how
+    * real animated GIFs are actually authored (only the changed
+    * rectangle is stored per frame; the disposal method says what the
+    * next frame composites over).  Same container grammar as
+    * [[encodeGifAnimated]] (NETSCAPE2.0 loop + GCE per frame), but each
+    * frame carries its own geometry and disposal, and the logical
+    * screen descriptor's background color index is `background`
+    * (disposal 2 restores to it). */
+  def encodeGifAnimatedComposite(w: Int, h: Int, frames: Seq[GifFrame],
+      delayCs: Int = 10, background: Int = 0): Array[Byte] =
+    writeGif(w, h, frames, Some(delayCs), background)
+
+  /** The one GIF writer: header and 256-entry global gray table (inverted
+    * when `localTable` gives every image an identity table of its own),
+    * then each frame's image.  An animation (`delayCs` set) is GIF89a
+    * with the NETSCAPE2.0 loop block and a Graphic Control Extension
+    * before each image; a still image is GIF87a with neither. */
+  private def writeGif(w: Int, h: Int, frames: Seq[GifFrame],
+      delayCs: Option[Int], background: Int = 0, interlace: Boolean = false,
+      localTable: Boolean = false): Array[Byte] = {
+    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "bad dims")
+    require(frames.nonEmpty, "no frames")
+    delayCs.foreach(d => require(d >= 0 && d <= 0xffff, "bad delay"))
+    require(background >= 0 && background <= 255, "bad background index")
+    frames.foreach { f =>
+      require(f.w > 0 && f.h > 0 && f.left >= 0 && f.top >= 0 &&
+        f.left + f.w <= w && f.top + f.h <= h,
+        s"frame rect ${f.w}x${f.h}@(${f.left},${f.top}) escapes " +
+          s"the ${w}x$h logical screen")
+      require(f.disposal >= 1 && f.disposal <= 3,
+        s"bad disposal method ${f.disposal} (1=leave/2=background/" +
+          "3=previous)")
+      f.transparent.foreach(t => require(t >= 0 && t <= 255,
+        s"bad transparent index $t"))
+    }
+    val out = new java.io.ByteArrayOutputStream
     def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write(0x2c) // image descriptor
-    u16(left); u16(top); u16(w); u16(h)
-    out.write((if (localTable) 0x87 else 0) |
-      (if (interlace) 0x40 else 0)) // local table (256), interlace flags
-    if (localTable)
-      for (i <- 0 until 256) { out.write(i); out.write(i); out.write(i) }
-    out.write(8) // LZW minimum code size
-    // LZW: dictionary of pixel strings; codes 0..255 literals, 256 clear,
-    // 257 EOI; width grows when the NEXT code would not fit; at 4096 we
-    // emit clear and restart (the spec's standard overflow policy)
+    // length-prefixed sub-blocks, then the block terminator
+    def blocks(bs: Iterator[Array[Byte]]): Unit = {
+      bs.foreach { s => out.write(s.length); out.write(s) }
+      out.write(0)
+    }
+    def grayTable(invert: Boolean): Unit =
+      for (i <- 0 until 3 * 256) out.write(if (invert) 255 - i / 3 else i / 3)
+    out.write((if (delayCs.isEmpty) "GIF87a" else "GIF89a").getBytes("US-ASCII"))
+    u16(w); u16(h)
+    out.write(0xf7) // global table, 8-bit color resolution, 256 entries
+    out.write(background); out.write(0) // background index, aspect
+    grayTable(invert = localTable)
+    if (delayCs.isDefined) {
+      // NETSCAPE2.0 looping extension (the de-facto-standard block every
+      // real animated GIF carries): sub-block {1, loopCount=0 (forever)}
+      out.write(0x21); out.write(0xff)
+      blocks(Iterator("NETSCAPE2.0".getBytes("US-ASCII"), Array[Byte](1, 0, 0)))
+    }
+    frames.foreach { f =>
+      delayCs.foreach { d =>
+        // GCE: packed (disposal in bits 4:2, transparent-color flag in
+        // bit 0), delay u16, transparent index
+        out.write(0x21); out.write(0xf9)
+        blocks(Iterator(Array((f.disposal << 2) |
+          (if (f.transparent.isDefined) 1 else 0), d & 0xff, d >> 8,
+          f.transparent.getOrElse(0)).map(_.toByte)))
+      }
+      out.write(0x2c) // image descriptor
+      u16(f.left); u16(f.top); u16(f.w); u16(f.h)
+      out.write((if (localTable) 0x87 else 0) |
+        (if (interlace) 0x40 else 0)) // local table (256), interlace flags
+      if (localTable) grayTable(invert = false)
+      out.write(8) // LZW minimum code size
+      blocks(gifLzw(f, interlace).grouped(255))
+    }
+    out.write(0x3b) // trailer
+    out.toByteArray
+  }
+
+  /** LZW code stream of one frame's pixels: codes 0..255 literals, 256
+    * clear, 257 EOI; width grows when the NEXT code would not fit; at
+    * 4096 we emit clear and restart (the spec's standard overflow
+    * policy). */
+  private def gifLzw(f: GifFrame, interlace: Boolean): Array[Byte] = {
     val bits = new java.io.ByteArrayOutputStream
     var acc = 0L; var nAcc = 0
     var width = 9
@@ -504,9 +575,9 @@ object ImageCodec {
     def resetDict(): Unit = { dict.clear(); nextCode = 258; width = 9 }
     put(256) // initial clear
     var prefix = -1
-    val rows = if (interlace) gifRowOrder(h) else Array.range(0, h)
-    for (y <- rows; x <- 0 until w) {
-      val px = gray(x, y) & 0xff
+    val rows = if (interlace) gifRowOrder(f.h) else Array.range(0, f.h)
+    for (y <- rows; x <- 0 until f.w) {
+      val px = f.px(x, y) & 0xff
       if (prefix < 0) prefix = px
       else {
         val key = (prefix.toLong << 8) | px
@@ -527,183 +598,81 @@ object ImageCodec {
     if (prefix >= 0) put(prefix)
     put(257) // EOI
     if (nAcc > 0) bits.write((acc & 0xff).toInt)
-    val data = bits.toByteArray
-    var off = 0
-    while (off < data.length) {
-      val n = math.min(255, data.length - off)
-      out.write(n); out.write(data, off, n); off += n
-    }
-    out.write(0) // block terminator
+    bits.toByteArray
   }
 
-  /** GIF header + 256-entry global gray table (inverted when a local
-    * table will override it — the adversarial fixture shape). */
-  private def gifWriteHeader(out: java.io.ByteArrayOutputStream, w: Int,
-      h: Int, magic: String, invertGlobal: Boolean,
-      background: Int = 0): Unit = {
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    out.write(magic.getBytes("US-ASCII"))
-    u16(w); u16(h)
-    out.write(0xf7) // global table, 8-bit color resolution, 256 entries
-    out.write(background); out.write(0) // background index, aspect
-    for (i <- 0 until 256) {
-      val v = if (invertGlobal) 255 - i else i
-      out.write(v); out.write(v); out.write(v)
+  /** Logical screen: dims, background index, global table as per-entry
+    * r+g+b sums (empty when absent — legal when every image carries a
+    * local table), and the offset of the first block after it. */
+  private final case class GifScreen(w: Int, h: Int, background: Int,
+      palette: Array[Int], start: Int)
+
+  /** `n`-entry color table at `p` → per-entry r+g+b sums. */
+  private def gifTable(b: Array[Byte], p: Int, n: Int,
+      what: String): Array[Int] = {
+    require(b.length >= p + 3 * n, s"truncated GIF $what")
+    Array.tabulate(n) { i =>
+      (b(p + 3 * i) & 0xff) + (b(p + 3 * i + 1) & 0xff) +
+        (b(p + 3 * i + 2) & 0xff)
     }
   }
 
-  def encodeGif(w: Int, h: Int, gray: (Int, Int) => Int,
-      interlace: Boolean = false, localTable: Boolean = false)
-      : Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "bad dims")
-    val out = new java.io.ByteArrayOutputStream
-    gifWriteHeader(out, w, h, "GIF87a", invertGlobal = localTable)
-    gifWriteFrame(out, w, h, gray, interlace, localTable)
-    out.write(0x3b) // trailer
-    out.toByteArray
-  }
-
-  /** ANIMATED GIF89a — the real-world GIF shape: NETSCAPE2.0 looping
-    * application extension, then one Graphic Control Extension (disposal
-    * 1 = leave in place, `delayCs` centiseconds, no transparency) +
-    * full-screen image per frame.  Frames share the global table. */
-  def encodeGifAnimated(w: Int, h: Int,
-      frames: Seq[(Int, Int) => Int], delayCs: Int = 10): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "bad dims")
-    require(frames.nonEmpty, "no frames")
-    require(delayCs >= 0 && delayCs <= 0xffff, "bad delay")
-    val out = new java.io.ByteArrayOutputStream
-    gifWriteHeader(out, w, h, "GIF89a", invertGlobal = false)
-    // NETSCAPE2.0 looping extension (the de-facto-standard block every
-    // real animated GIF carries): app extension, 11-byte id, sub-block
-    // {1, loopCount=0 (forever)}, terminator
-    out.write(0x21); out.write(0xff); out.write(11)
-    out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-    out.write(3); out.write(1); out.write(0); out.write(0)
-    out.write(0)
-    frames.foreach { f =>
-      // GCE: label F9, block size 4, packed (disposal 1 <<2), delay,
-      // no transparent index
-      out.write(0x21); out.write(0xf9); out.write(4)
-      out.write(0x04)
-      out.write(delayCs & 0xff); out.write((delayCs >> 8) & 0xff)
-      out.write(0); out.write(0)
-      gifWriteFrame(out, w, h, f, interlace = false, localTable = false)
-    }
-    out.write(0x3b) // trailer
-    out.toByteArray
-  }
-
-  /** One frame of a COMPOSITED animated GIF: a `w`×`h` image placed at
-    * (`left`, `top`) inside the logical screen, with the GCE disposal
-    * method that governs the canvas AFTER this frame renders —
-    * 1 = leave in place, 2 = restore the frame's rectangle to the
-    * background color, 3 = restore the canvas to its pre-frame state
-    * (spec "restore to previous").  `px` is frame-local: `px(u, v)` for
-    * u < w, v < h.  `transparent` marks one palette index as a HOLE —
-    * pixels carrying it leave the underlying canvas untouched (the GCE
-    * transparent-color flag, how real animated GIFs encode unchanged
-    * regions inside the stored rectangle). */
-  final case class GifFrame(left: Int, top: Int, w: Int, h: Int,
-      disposal: Int, px: (Int, Int) => Int,
-      transparent: Option[Int] = None)
-
-  /** Animated GIF89a with PARTIAL frames and disposal methods — how
-    * real animated GIFs are actually authored (only the changed
-    * rectangle is stored per frame; the disposal method says what the
-    * next frame composites over).  Same container grammar as
-    * [[encodeGifAnimated]] (NETSCAPE2.0 loop + GCE per frame), but each
-    * frame carries its own geometry and disposal, and the logical
-    * screen descriptor's background color index is `background`
-    * (disposal 2 restores to it). */
-  def encodeGifAnimatedComposite(w: Int, h: Int, frames: Seq[GifFrame],
-      delayCs: Int = 10, background: Int = 0): Array[Byte] = {
-    require(w > 0 && h > 0 && w <= 0xffff && h <= 0xffff, "bad dims")
-    require(frames.nonEmpty, "no frames")
-    require(delayCs >= 0 && delayCs <= 0xffff, "bad delay")
-    require(background >= 0 && background <= 255, "bad background index")
-    frames.foreach { f =>
-      require(f.w > 0 && f.h > 0 && f.left >= 0 && f.top >= 0 &&
-        f.left + f.w <= w && f.top + f.h <= h,
-        s"frame rect ${f.w}x${f.h}@(${f.left},${f.top}) escapes " +
-          s"the ${w}x$h logical screen")
-      require(f.disposal >= 1 && f.disposal <= 3,
-        s"bad disposal method ${f.disposal} (1=leave/2=background/" +
-          "3=previous)")
-      f.transparent.foreach(t => require(t >= 0 && t <= 255,
-        s"bad transparent index $t"))
-    }
-    val out = new java.io.ByteArrayOutputStream
-    gifWriteHeader(out, w, h, "GIF89a", invertGlobal = false,
-      background = background)
-    out.write(0x21); out.write(0xff); out.write(11)
-    out.write("NETSCAPE2.0".getBytes("US-ASCII"))
-    out.write(3); out.write(1); out.write(0); out.write(0)
-    out.write(0)
-    frames.foreach { f =>
-      out.write(0x21); out.write(0xf9); out.write(4)
-      // packed: disposal in bits 4:2, transparent-color flag in bit 0
-      out.write((f.disposal << 2) | (if (f.transparent.isDefined) 1 else 0))
-      out.write(delayCs & 0xff); out.write((delayCs >> 8) & 0xff)
-      out.write(f.transparent.getOrElse(0)); out.write(0)
-      gifWriteFrame(out, f.w, f.h, f.px, interlace = false,
-        localTable = false, left = f.left, top = f.top)
-    }
-    out.write(0x3b) // trailer
-    out.toByteArray
-  }
-
-  /** [[grayFromBytes]], GIF container. */
-  def grayGif(w: Int, h: Int, src: Array[Byte]): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encodeGif(w, h, (x, y) => src((y * w + x) % src.length) & 0xff)
-  }
-
-  /** Header + logical screen + global table → (palette sums, next pos,
-    * screen w, screen h). */
-  private def gifHeader(b: Array[Byte]): (Array[Int], Int, Int, Int) = {
+  private def gifScreen(b: Array[Byte]): GifScreen = {
     require(b.length >= 13, "truncated GIF header")
     val magic = new String(b, 0, 6, "US-ASCII")
     require(magic == "GIF87a" || magic == "GIF89a", s"bad GIF magic $magic")
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    var p = 6
-    val sw = u16(p); val sh = u16(p + 2)
-    p += 4
-    val packed = b(p) & 0xff; p += 3
-    val palette: Array[Int] =
-      if ((packed & 0x80) != 0) {
-        val n = 1 << ((packed & 7) + 1)
-        require(b.length >= p + 3 * n, "truncated GIF color table")
-        val pal = Array.tabulate(n) { i =>
-          (b(p + 3 * i) & 0xff) + (b(p + 3 * i + 1) & 0xff) +
-            (b(p + 3 * i + 2) & 0xff)
-        }
-        p += 3 * n
-        pal
-      } else Array.emptyIntArray // legal when a local table follows
-    (palette, p, sw, sh)
+    val packed = b(10) & 0xff
+    val n = if ((packed & 0x80) != 0) 1 << ((packed & 7) + 1) else 0
+    GifScreen(i16(b, 6), i16(b, 8), b(11) & 0xff,
+      gifTable(b, 13, n, "color table"), 13 + 3 * n)
   }
 
-  /** Walk over any 0x21 extension blocks (GCE, app, comment — all share
-    * the sub-block grammar; CRC-less, so structure is the only check). */
-  private def gifSkipExtensions(b: Array[Byte], p0: Int): Int = {
-    var p = p0
-    while (p < b.length && (b(p) & 0xff) == 0x21) {
-      p += 2 // extension introducer + label
-      require(p < b.length, "truncated GIF extension")
-      while ((b(p) & 0xff) != 0) {
-        p += 1 + (b(p) & 0xff)
-        require(p < b.length, "truncated GIF extension")
+  /** One decoded image at PALETTE-INDEX granularity (row-major indices
+    * and the active table) — the compositing decoder needs raw indices
+    * because a transparent index must leave the canvas pixel untouched,
+    * and the index→palette map is not injective in general. */
+  private final case class GifImage(idx: Array[Int], w: Int, h: Int,
+      left: Int, top: Int, palette: Array[Int]) {
+    def raster: Raster = Raster(w, h, idx.map(palette))
+  }
+
+  /** The one GIF block walker, from the end of the global table to the
+    * trailer: each 0x21 extension is walked on its own, sub-block by
+    * sub-block (a Graphic Control Extension is first handed to `gce` at
+    * its introducer's offset), and each 0x2c image is decoded and handed
+    * to `image`, which returns whether to go on. */
+  private def gifWalk(b: Array[Byte], s: GifScreen)(gce: Int => Unit)(
+      image: GifImage => Boolean): Unit = {
+    var p = s.start
+    var go = true
+    while (go) {
+      require(p < b.length, "GIF unterminated (missing trailer)")
+      (b(p) & 0xff) match {
+        case 0x3b => go = false
+        case 0x21 =>
+          if (p + 1 < b.length && (b(p + 1) & 0xff) == 0xf9) gce(p)
+          p += 2 // extension introducer + label
+          require(p < b.length, "truncated GIF extension")
+          while ((b(p) & 0xff) != 0) {
+            p += 1 + (b(p) & 0xff)
+            require(p < b.length, "truncated GIF extension")
+          }
+          p += 1
+        case 0x2c =>
+          val (img, np) = gifImageAt(b, p, s.palette)
+          p = np
+          go = image(img)
+        case x => throw new IllegalArgumentException(
+          f"unexpected GIF block 0x$x%02x")
       }
-      p += 1
     }
-    p
   }
 
   private def decodeGif(b: Array[Byte]): Raster = {
-    val (palette, p0, _, _) = gifHeader(b)
-    val p = gifSkipExtensions(b, p0)
-    gifImageAt(b, p, palette)._1
+    var first: Raster = null
+    gifWalk(b, gifScreen(b))(_ => ()) { img => first = img.raster; false }
+    require(first != null, "GIF has no image frames")
+    first
   }
 
   /** Every frame of an (animated) GIF, decoded independently.  Scope:
@@ -712,25 +681,14 @@ object ImageCodec {
     * BY NAME rather than approximated (a half-composited frame would
     * poison downstream fingerprints). */
   def decodeGifFrames(b: Array[Byte]): IndexedSeq[Raster] = {
-    val (palette, p0, sw, sh) = gifHeader(b)
-    var p = p0
+    val s = gifScreen(b)
     val frames = scala.collection.mutable.ArrayBuffer.empty[Raster]
-    var done = false
-    while (!done) {
-      p = gifSkipExtensions(b, p)
-      require(p < b.length, "GIF unterminated (missing trailer)")
-      (b(p) & 0xff) match {
-        case 0x3b => done = true
-        case 0x2c =>
-          val (r, left, top, np) = gifImageAt(b, p, palette)
-          require(left == 0 && top == 0 && r.width == sw && r.height == sh,
-            "partial-frame GIF compositing unsupported " +
-              "(full-screen frames only)")
-          frames += r
-          p = np
-        case x => throw new IllegalArgumentException(
-          f"unexpected GIF block 0x$x%02x")
-      }
+    gifWalk(b, s)(_ => ()) { img =>
+      require(img.left == 0 && img.top == 0 && img.w == s.w && img.h == s.h,
+        "partial-frame GIF compositing unsupported " +
+          "(full-screen frames only)")
+      frames += img.raster
+      true
     }
     require(frames.nonEmpty, "GIF has no image frames")
     frames.toIndexedSeq
@@ -750,138 +708,95 @@ object ImageCodec {
     * map is not injective, so a sum-level composite could not tell a
     * hole from an opaque pixel that happens to share the color). */
   def decodeGifComposited(b: Array[Byte]): IndexedSeq[Raster] = {
-    val (palette, p0, sw, sh) = gifHeader(b)
-    require(palette.nonEmpty,
+    val s = gifScreen(b)
+    val (sw, sh) = (s.w, s.h)
+    require(s.palette.nonEmpty,
       "composited GIF needs a global color table (background color)")
-    require(sw > 0 && sh > 0 && sw.toLong * sh <= (1 << 26),
+    require(sw > 0 && sh > 0 && sw.toLong * sh <= MaxPixels,
       s"bad GIF logical screen ${sw}x$sh")
-    val bgIndex = b(11) & 0xff
-    require(bgIndex < palette.length,
-      s"GIF background index $bgIndex outside the ${palette.length}" +
-        "-entry table")
-    val bg = palette(bgIndex)
+    require(s.background < s.palette.length,
+      s"GIF background index ${s.background} outside the " +
+        s"${s.palette.length}-entry table")
+    val bg = s.palette(s.background)
     val canvas = Array.fill(sw * sh)(bg)
     val frames = scala.collection.mutable.ArrayBuffer.empty[Raster]
     var disposal = 0 // GCE applies to the NEXT image; default = none
     var transIdx = -1 // transparent palette index, -1 = opaque frame
-    var p = p0
-    var done = false
-    while (!done) {
-      require(p < b.length, "GIF unterminated (missing trailer)")
-      (b(p) & 0xff) match {
-        case 0x3b => done = true
-        case 0x21 =>
-          if (p + 1 < b.length && (b(p + 1) & 0xff) == 0xf9) {
-            // Graphic Control Extension: capture disposal + the
-            // transparent index (block: size 4, packed, delay u16,
-            // transparent index)
-            require(p + 7 < b.length && (b(p + 2) & 0xff) == 4,
-              "bad GIF graphic control extension")
-            val packed = b(p + 3) & 0xff
-            disposal = (packed >> 2) & 7
-            require(disposal <= 3,
-              s"reserved GIF disposal method $disposal")
-            transIdx = if ((packed & 1) != 0) b(p + 6) & 0xff else -1
-          }
-          // skip exactly THIS extension (gifSkipExtensions would
-          // swallow a whole run — and with it the GCE after a
-          // NETSCAPE block, silently dropping that frame's disposal)
-          p += 2
-          require(p < b.length, "truncated GIF extension")
-          while ((b(p) & 0xff) != 0) {
-            p += 1 + (b(p) & 0xff)
-            require(p < b.length, "truncated GIF extension")
-          }
-          p += 1
-        case 0x2c =>
-          val (idx, fw, fh, left, top, pal, np) =
-            gifImageIndicesAt(b, p, palette)
-          require(left + fw <= sw && top + fh <= sh,
-            s"GIF frame ${fw}x$fh@($left,$top) escapes " +
-              s"the ${sw}x$sh logical screen")
-          val before =
-            if (disposal == 3) canvas.clone() else null
-          var v = 0
-          while (v < fh) {
-            var u = 0
-            while (u < fw) {
-              val i = idx(v * fw + u)
-              if (i != transIdx) canvas((top + v) * sw + left + u) = pal(i)
-              u += 1
-            }
-            v += 1
-          }
-          frames += Raster(sw, sh, canvas.clone())
-          disposal match {
-            case 2 => // restore the frame's rect to background
-              var y = top
-              while (y < top + fh) {
-                java.util.Arrays.fill(canvas, y * sw + left,
-                  y * sw + left + fw, bg)
-                y += 1
-              }
-            case 3 => System.arraycopy(before, 0, canvas, 0, canvas.length)
-            case _ => () // 0/1: leave in place
-          }
-          disposal = 0 // a GCE governs exactly one following image
-          transIdx = -1
-          p = np
-        case x => throw new IllegalArgumentException(
-          f"unexpected GIF block 0x$x%02x")
+    gifWalk(b, s) { p =>
+      // Graphic Control Extension: capture disposal + the transparent
+      // index (block: size 4, packed, delay u16, transparent index)
+      require(p + 7 < b.length && (b(p + 2) & 0xff) == 4,
+        "bad GIF graphic control extension")
+      val packed = b(p + 3) & 0xff
+      disposal = (packed >> 2) & 7
+      require(disposal <= 3, s"reserved GIF disposal method $disposal")
+      transIdx = if ((packed & 1) != 0) b(p + 6) & 0xff else -1
+    } { img =>
+      val (fw, fh, left, top) = (img.w, img.h, img.left, img.top)
+      require(left + fw <= sw && top + fh <= sh,
+        s"GIF frame ${fw}x$fh@($left,$top) escapes " +
+          s"the ${sw}x$sh logical screen")
+      val before = if (disposal == 3) canvas.clone() else null
+      var v = 0
+      while (v < fh) {
+        var u = 0
+        while (u < fw) {
+          val i = img.idx(v * fw + u)
+          if (i != transIdx) canvas((top + v) * sw + left + u) = img.palette(i)
+          u += 1
+        }
+        v += 1
       }
+      frames += Raster(sw, sh, canvas.clone())
+      disposal match {
+        case 2 => // restore the frame's rect to background
+          var y = top
+          while (y < top + fh) {
+            java.util.Arrays.fill(canvas, y * sw + left, y * sw + left + fw, bg)
+            y += 1
+          }
+        case 3 => System.arraycopy(before, 0, canvas, 0, canvas.length)
+        case _ => () // 0/1: leave in place
+      }
+      disposal = 0 // a GCE governs exactly one following image
+      transIdx = -1
+      true
     }
     require(frames.nonEmpty, "GIF has no image frames")
     frames.toIndexedSeq
   }
 
-  /** Decode the image whose descriptor starts at `p0` → (raster, left,
-    * top, position after the data terminator). */
+  /** Decode the image whose descriptor starts at `p0` → (image, position
+    * after its data terminator). */
   private def gifImageAt(b: Array[Byte], p0: Int,
-      palette: Array[Int]): (Raster, Int, Int, Int) = {
-    val (idx, w, h, left, top, pal, np) = gifImageIndicesAt(b, p0, palette)
-    (Raster(w, h, idx.map(pal)), left, top, np)
-  }
-
-  /** [[gifImageAt]] at PALETTE-INDEX granularity → (indices row-major,
-    * w, h, left, top, active palette sums, position after the data
-    * terminator) — the compositing decoder needs raw indices because a
-    * transparent index must leave the canvas pixel untouched, and the
-    * index→palette map is not injective in general. */
-  private def gifImageIndicesAt(b: Array[Byte], p0: Int,
-      palette: Array[Int])
-      : (Array[Int], Int, Int, Int, Int, Array[Int], Int) = {
-    def u16(o: Int): Int = (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    var p = p0
-    require(p < b.length && (b(p) & 0xff) == 0x2c, "GIF image descriptor missing")
-    val left = u16(p + 1); val top = u16(p + 3)
-    val w = u16(p + 5); val h = u16(p + 7)
+      global: Array[Int]): (GifImage, Int) = {
+    require(p0 + 10 <= b.length, "truncated GIF image descriptor")
+    val left = i16(b, p0 + 1); val top = i16(b, p0 + 3)
+    val w = i16(b, p0 + 5); val h = i16(b, p0 + 7)
     require(w > 0 && h > 0, s"bad GIF dims ${w}x$h")
-    val ipacked = b(p + 9) & 0xff
-    val interlaced = (ipacked & 0x40) != 0
-    p += 10
+    pixelCap(w, h, "GIF image")
+    val ipacked = b(p0 + 9) & 0xff
+    var p = p0 + 10
     // a local color table overrides the global for this image (spec
     // §20); its size comes from the descriptor's low bits
-    val activePalette: Array[Int] =
+    val palette: Array[Int] =
       if ((ipacked & 0x80) != 0) {
         val n = 1 << ((ipacked & 7) + 1)
-        require(b.length >= p + 3 * n, "truncated GIF local color table")
-        val pal = Array.tabulate(n) { i =>
-          (b(p + 3 * i) & 0xff) + (b(p + 3 * i + 1) & 0xff) +
-            (b(p + 3 * i + 2) & 0xff)
-        }
+        val pal = gifTable(b, p, n, "local color table")
         p += 3 * n
         pal
       } else {
-        require(palette.nonEmpty,
+        require(global.nonEmpty,
           "GIF with neither global nor local color table")
-        palette
+        global
       }
+    require(p < b.length, "GIF data blocks unterminated")
     val minCode = b(p) & 0xff; p += 1
     require(minCode == 8, s"only 8-bit GIF palettes supported, got $minCode")
     // 8-bit codes address 256 palette slots — a shorter declared table
     // would make a legal literal index out of bounds
-    require(activePalette.length >= 256,
-      s"GIF color table too small (${activePalette.length}) for 8-bit codes")
+    require(palette.length >= 256,
+      s"GIF color table too small (${palette.length}) for 8-bit codes")
     // concatenate LZW sub-blocks
     val z = new java.io.ByteArrayOutputStream
     while (p < b.length && (b(p) & 0xff) != 0) {
@@ -890,10 +805,24 @@ object ImageCodec {
       z.write(b, p + 1, n); p += 1 + n
     }
     require(p < b.length, "GIF data blocks unterminated")
-    val data = z.toByteArray
-    // LZW decode
+    val px = gifUnLzw(z.toByteArray, w * h)
+    val idx =
+      if ((ipacked & 0x40) == 0) px
+      else {
+        // stored row r is actual row gifRowOrder(h)(r): scatter back
+        val o = new Array[Int](w * h)
+        val order = gifRowOrder(h)
+        for (r <- 0 until h)
+          System.arraycopy(px, r * w, o, order(r) * w, w)
+        o
+      }
+    (GifImage(idx, w, h, left, top, palette), p + 1)
+  }
+
+  /** LZW-decode exactly `n` pixel indices. */
+  private def gifUnLzw(data: Array[Byte], n: Int): Array[Int] = {
     val clear = 256; val eoi = 257
-    val px = new Array[Int](w * h)
+    val px = new Array[Int](n)
     var nPx = 0
     var width = 9
     var acc = 0L; var nAcc = 0; var dp = 0
@@ -948,32 +877,21 @@ object ImageCodec {
         prev = code
       }
     }
-    require(nPx == w * h, s"GIF pixel data short: $nPx of ${w * h}")
-    val ordered =
-      if (!interlaced) px
-      else {
-        // stored row r is actual row gifRowOrder(h)(r): scatter back
-        val o = new Array[Int](w * h)
-        val order = gifRowOrder(h)
-        for (r <- 0 until h)
-          System.arraycopy(px, r * w, o, order(r) * w, w)
-        o
-      }
-    require(p < b.length, "GIF data blocks unterminated")
-    (ordered, w, h, left, top, activePalette, p + 1)
+    require(nPx == n, s"GIF pixel data short: $nPx of $n")
+    px
   }
 
   // ---- decoder -----------------------------------------------------------
 
-  /** Sniff the magic and decode: BMP ("BM"), PPM ("P6"), PNG, GIF,
-    * TIFF ("II"/"MM"), or JPEG (FFD8).  Returns dims plus per-pixel
+  /** Sniff the magic and decode: BMP ("BM"), Netpbm ("P1"–"P6"), PNG,
+    * GIF, TIFF ("II"/"MM"), or JPEG (FFD8).  Returns dims plus per-pixel
     * integer r+g+b sums, top-down row-major. */
   def decode(bytes: Array[Byte]): Raster = {
     require(bytes.length >= 2, "truncated image")
     if (bytes(0) == 'B'.toByte && bytes(1) == 'M'.toByte) decodeBmp(bytes)
     else if (bytes(0) == 'P'.toByte && bytes(1) >= '1'.toByte &&
         bytes(1) <= '6'.toByte)
-      decodePpm(bytes) // Netpbm family: P1-P6 (r18 adds the bitmaps)
+      decodeNetpbm(bytes)
     else if (bytes(0) == 0x89.toByte && bytes(1) == 'P'.toByte)
       decodePng(bytes)
     else if (bytes(0) == 'G'.toByte && bytes(1) == 'I'.toByte)
@@ -985,7 +903,8 @@ object ImageCodec {
       JpegCodec.decode(bytes) // the LOSSY tier (baseline and progressive)
     else throw new IllegalArgumentException(
       f"unknown image magic 0x${bytes(0)}%02x${bytes(1)}%02x " +
-        "(BMP, binary PPM, PNG, GIF, TIFF, and baseline JPEG supported)")
+        "(BMP, Netpbm P1-P6, PNG, GIF, TIFF, and baseline or progressive " +
+        "JPEG supported)")
   }
 
   private def i32(b: Array[Byte], off: Int): Int =
@@ -994,6 +913,170 @@ object ImageCodec {
 
   private def i16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+
+  // ---- BMP -----------------------------------------------------------------
+  //
+  // Windows BITMAPFILEHEADER + BITMAPINFOHEADER: 24-bit BI_RGB, 16-bit
+  // X1R5G5B5 (BI_RGB) or R5G6B5 (BI_BITFIELDS), and 8- or 4-bit palette
+  // images, uncompressed (bottom-up or top-down rows padded to 4 bytes)
+  // or run-length coded (BI_RLE8 / BI_RLE4, bottom-up only per spec).
+
+  /** The one BMP container writer: BITMAPFILEHEADER, a 40-byte
+    * BITMAPINFOHEADER (`hStored` < 0 ⇒ top-down rows), then `extra`
+    * (palette or bit masks, `colors` = biClrUsed palette entries) and the
+    * pixel data. */
+  private def bmpFile(w: Int, hStored: Int, bpp: Int, compression: Int,
+      colors: Int, extra: Array[Byte], data: Array[Byte]): Array[Byte] = {
+    val dataOff = 54 + extra.length
+    val out = java.nio.ByteBuffer.allocate(dataOff + data.length)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    out.put('B'.toByte).put('M'.toByte)
+    out.putInt(dataOff + data.length).putInt(0).putInt(dataOff) // size, reserved, offset
+    out.putInt(40).putInt(w).putInt(hStored)   // DIB size, w, h
+    out.putShort(1).putShort(bpp.toShort)       // planes, bpp
+    out.putInt(compression).putInt(data.length) // compression, image size
+    out.putInt(2835).putInt(2835).putInt(colors).putInt(0) // 72 dpi, palette
+    out.put(extra).put(data)
+    out.array()
+  }
+
+  /** Uncompressed rows: file row r holds image row r (`topDown`) or
+    * h−1−r, written by `row` and zero-padded to 4 bytes. */
+  private def bmpRows(h: Int, topDown: Boolean)(
+      row: (Int, java.io.ByteArrayOutputStream) => Unit): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    for (fy <- 0 until h) {
+      val start = out.size
+      row(if (topDown) fy else h - 1 - fy, out)
+      while ((out.size - start) % 4 != 0) out.write(0)
+    }
+    out.toByteArray
+  }
+
+  /** Run-length framing (BI_RLE8 / BI_RLE4): bottom-up rows, each coded
+    * by `row` and closed by an end-of-line marker, then end of bitmap. */
+  private def bmpRle(h: Int)(
+      row: (Int, java.io.ByteArrayOutputStream) => Unit): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    for (fy <- 0 until h) {
+      row(h - 1 - fy, out)
+      out.write(0); out.write(0) // end of line
+    }
+    out.write(0); out.write(1) // end of bitmap
+    out.toByteArray
+  }
+
+  /** `n`-entry BGRA gray palette, entry i = i·step. */
+  private def bmpGrayPalette(n: Int, step: Int): Array[Byte] =
+    Array.tabulate(4 * n)(k => if (k % 4 == 3) 0.toByte else (k / 4 * step).toByte)
+
+  /** 24-bit uncompressed BMP (bottom-up rows, BGR byte order, rows padded
+    * to 4 bytes). `rgb(x, y)` is top-down row-major, channels 0..255. */
+  def encodeBmp(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int))
+      : Array[Byte] = {
+    require(w > 0 && h > 0, "bad dims")
+    bmpFile(w, h, 24, 0, 0, Array.emptyByteArray,
+      bmpRows(h, topDown = false) { (y, out) =>
+        for (x <- 0 until w) {
+          val (r, g, b) = rgb(x, y)
+          out.write(b); out.write(g); out.write(r)
+        }
+      })
+  }
+
+  /** 8-bit palette BMP (grayscale identity palette): `topDown` writes
+    * the spec's negative-height row order; `rle` compresses with
+    * BI_RLE8 (encoded runs + absolute mode + EOL/EOB markers —
+    * bottom-up only, per spec). */
+  def encodeBmp8(w: Int, h: Int, gray: (Int, Int) => Int,
+      topDown: Boolean = false, rle: Boolean = false): Array[Byte] = {
+    require(w > 0 && h > 0, "bad dims")
+    require(!(topDown && rle), "RLE8 BMP must be bottom-up (spec)")
+    def g(x: Int, y: Int): Int = gray(x, y) & 0xff
+    val data =
+      if (!rle) bmpRows(h, topDown)((y, out) => for (x <- 0 until w) out.write(g(x, y)))
+      else bmpRle(h) { (y, out) =>
+        var x = 0
+        while (x < w) {
+          val v = g(x, y)
+          var run = 1
+          while (x + run < w && run < 255 && g(x + run, y) == v) run += 1
+          if (run >= 2) {
+            out.write(run); out.write(v)
+            x += run
+          } else {
+            // literal stretch until a run of ≥ 3 or 255 pixels;
+            // absolute mode needs ≥ 3 literals, else encoded singles
+            var j = x + 1
+            while (j < w && j - x < 255 &&
+              !(j + 2 < w && g(j, y) == g(j + 1, y) && g(j, y) == g(j + 2, y)))
+              j += 1
+            val cnt = j - x
+            if (cnt >= 3) {
+              out.write(0); out.write(cnt)
+              for (i <- 0 until cnt) out.write(g(x + i, y))
+              if ((cnt & 1) == 1) out.write(0) // word align
+            } else
+              for (i <- 0 until cnt) { out.write(1); out.write(g(x + i, y)) }
+            x = j
+          }
+        }
+      }
+    bmpFile(w, if (topDown) -h else h, 8, if (rle) 1 else 0, 256,
+      bmpGrayPalette(256, 1), data)
+  }
+
+  /** 16-bit BMP: BI_RGB X1R5G5B5, or BI_BITFIELDS R5G6B5 when
+    * `use565` — the two real-world HighColor layouts.  Channels
+    * quantize v → v>>3 (v>>2 for the 565 green); the decoder's
+    * bit-replication expansion makes the round trip SQL-replayable. */
+  def encodeBmp16(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
+      use565: Boolean = false): Array[Byte] = {
+    require(w > 0 && h > 0, "bad dims")
+    val masks =
+      if (!use565) Array.emptyByteArray
+      else java.nio.ByteBuffer.allocate(12).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(0xf800).putInt(0x7e0).putInt(0x1f).array()
+    bmpFile(w, h, 16, if (use565) 3 else 0, 0, masks,
+      bmpRows(h, topDown = false) { (y, out) =>
+        for (x <- 0 until w) {
+          val (r, g, b) = rgb(x, y)
+          val u =
+            if (use565) ((r >> 3) << 11) | ((g >> 2) << 5) | (b >> 3)
+            else ((r >> 3) << 10) | ((g >> 3) << 5) | (b >> 3)
+          out.write(u); out.write(u >> 8)
+        }
+      })
+  }
+
+  /** 4-bit palette BMP (16-entry i·17 grayscale table — the standard
+    * 4→8 expansion): `idx(x, y)` ∈ 0..15; `rle` writes BI_RLE4
+    * (alternating-nibble encoded runs + packed absolute mode). */
+  def encodeBmp4(w: Int, h: Int, idx: (Int, Int) => Int,
+      rle: Boolean = false): Array[Byte] = {
+    require(w > 0 && h > 0, "bad dims")
+    def n(x: Int, y: Int): Int = idx(x, y) & 0xf
+    val data =
+      if (!rle) bmpRows(h, topDown = false) { (y, out) =>
+        for (x <- 0 until w by 2)
+          out.write((n(x, y) << 4) | (if (x + 1 < w) n(x + 1, y) else 0))
+      }
+      else bmpRle(h) { (y, out) =>
+        var x = 0
+        while (x < w) {
+          val a = n(x, y)
+          val b2 = if (x + 1 < w) n(x + 1, y) else a
+          // run of the alternating pair (a, b2)
+          var run = 1
+          while (x + run < w && run < 254 &&
+            n(x + run, y) == (if (run % 2 == 0) a else b2)) run += 1
+          if (run >= 2) { out.write(run); out.write((a << 4) | b2) }
+          else { out.write(1); out.write(a << 4) }
+          x += run
+        }
+      }
+    bmpFile(w, h, 4, if (rle) 2 else 0, 16, bmpGrayPalette(16, 17), data)
+  }
 
   private def decodeBmp(b: Array[Byte]): Raster = {
     require(b.length >= 54, "truncated BMP header")
@@ -1017,7 +1100,8 @@ object ImageCodec {
     require(compression == 0 || (compression == 1 && bpp == 8) ||
       (compression == 2 && bpp == 4) || (compression == 3 && bpp == 16),
       s"unsupported BMP compression $compression for $bpp bpp")
-    require(!(topDown && (compression == 1 || compression == 2)),
+    val rle = compression == 1 || compression == 2
+    require(!(topDown && rle),
       "top-down RLE BMP is invalid (spec: RLE bitmaps are bottom-up)")
     // palette follows the DIB header (biClrUsed entries, 0 ⇒ 2^bpp)
     val palette: Array[Int] =
@@ -1031,352 +1115,205 @@ object ImageCodec {
           (b(palOff + 4 * i) & 0xff) + (b(palOff + 4 * i + 1) & 0xff) +
             (b(palOff + 4 * i + 2) & 0xff))
       } else null
-    // 16-bit: BI_RGB = X1R5G5B5; BI_BITFIELDS = three mask DWORDs right
-    // after the header — only the two real-world layouts (555 / 565)
-    // are accepted, decoded with the standard bit-replication expansion
-    val masks16: (Int, Int, Int) =
-      if (bpp != 16) null
-      else if (compression == 0) (0x7c00, 0x3e0, 0x1f)
-      else {
-        require(b.length >= 14 + dibSize + 12,
-          "truncated BI_BITFIELDS masks")
-        val m = (i32(b, 14 + dibSize), i32(b, 14 + dibSize + 4),
-          i32(b, 14 + dibSize + 8))
-        require(m == ((0xf800, 0x7e0, 0x1f)) || m == ((0x7c00, 0x3e0, 0x1f)),
-          s"unsupported BI_BITFIELDS masks $m (565 or 555 only)")
-        m
+    require(dataOff >= 0, s"bad BMP pixel data offset $dataOff")
+    def pal(idx: Int): Int = {
+      require(idx < palette.length,
+        s"BMP palette index $idx out of range (${palette.length})")
+      palette(idx)
+    }
+    if (rle) decodeBmpRle(b, dataOff, w, h, nibbles = compression == 2, pal)
+    else {
+      // 16-bit: BI_RGB = X1R5G5B5; BI_BITFIELDS = three mask DWORDs right
+      // after the header — only the two real-world layouts (555 / 565)
+      // are accepted, decoded with the standard bit-replication expansion
+      // (5-bit (v<<3)|(v>>2), 6-bit (v<<2)|(v>>4)); blue is always 0x1f
+      val (rm, gm) =
+        if (bpp != 16 || compression == 0) (0x7c00, 0x3e0)
+        else {
+          require(b.length >= 14 + dibSize + 12,
+            "truncated BI_BITFIELDS masks")
+          val m = (i32(b, 14 + dibSize), i32(b, 14 + dibSize + 4),
+            i32(b, 14 + dibSize + 8))
+          require(m == ((0xf800, 0x7e0, 0x1f)) || m == ((0x7c00, 0x3e0, 0x1f)),
+            s"unsupported BI_BITFIELDS masks $m (565 or 555 only)")
+          (m._1, m._2)
+        }
+      val (rs, gs) = (Integer.numberOfTrailingZeros(rm),
+        Integer.numberOfTrailingZeros(gm))
+      val gw = Integer.bitCount(gm) // 5 or 6; r/b always 5
+      def expand(v: Int, width: Int): Int =
+        if (width == 5) (v << 3) | (v >> 2) else (v << 2) | (v >> 4)
+      // one row loop for every uncompressed depth: (row offset, x) → r+g+b
+      val px: (Int, Int) => Int = bpp match {
+        case 24 => (o, x) => {
+          val q = o + 3 * x
+          (b(q) & 0xff) + (b(q + 1) & 0xff) + (b(q + 2) & 0xff)
+        }
+        case 16 => (o, x) => {
+          val u = i16(b, o + 2 * x)
+          expand((u & rm) >> rs, 5) + expand((u & gm) >> gs, gw) +
+            expand(u & 0x1f, 5)
+        }
+        case 8 => (o, x) => pal(b(o + x) & 0xff)
+        case _ => (o, x) => { // nibbles, high first
+          val v = b(o + x / 2) & 0xff
+          pal(if (x % 2 == 0) v >> 4 else v & 0xf)
+        }
       }
-    // 5-bit (v<<3)|(v>>2) / 6-bit (v<<2)|(v>>4) channel expansion
-    def expand(v: Int, width: Int): Int =
-      if (width == 5) (v << 3) | (v >> 2) else (v << 2) | (v >> 4)
-    // file row r → image row (top-down: r; bottom-up: h-1-r)
-    def imageRow(r: Int): Int = if (topDown) r else h - 1 - r
+      val stride = (w.toLong * bpp + 31) / 32 * 4
+      // checked before allocating: the declared rows must be in the input
+      require(b.length - dataOff >= stride * h, "truncated BMP pixel data")
+      val sums = new Array[Int](w * h)
+      for (r <- 0 until h) {
+        val o = dataOff + r * stride.toInt
+        val row = (if (topDown) r else h - 1 - r) * w
+        var x = 0
+        while (x < w) { sums(row + x) = px(o, x); x += 1 }
+      }
+      Raster(w, h, sums)
+    }
+  }
+
+  /** BI_RLE8 / BI_RLE4: one walker over their shared grammar — encoded
+    * run, end of line, end of bitmap, delta (skipped pixels stay 0) and
+    * word-aligned absolute run — whose index unit is a byte, or a nibble
+    * (an encoded RLE4 run alternates the high and low nibble of its
+    * byte; absolute nibbles are packed high first). */
+  private def decodeBmpRle(b: Array[Byte], dataOff: Int, w: Int, h: Int,
+      nibbles: Boolean, pal: Int => Int): Raster = {
+    val name = if (nibbles) "RLE4" else "RLE8"
+    pixelCap(w, h, s"$name BMP")
     val sums = new Array[Int](w * h)
-    if (bpp == 24) {
-      val stride = (w * 3 + 3) / 4 * 4
-      require(b.length >= dataOff + stride.toLong * h,
-        "truncated BMP pixel data")
-      for (r <- 0 until h) {
-        val rowOff = dataOff + r * stride
-        val y = imageRow(r)
-        var x = 0
-        while (x < w) {
-          val p = rowOff + x * 3
-          sums(y * w + x) =
-            (b(p) & 0xff) + (b(p + 1) & 0xff) + (b(p + 2) & 0xff)
-          x += 1
-        }
-      }
-    } else if (bpp == 16) {
-      val stride = (w * 2 + 3) / 4 * 4
-      require(b.length >= dataOff + stride.toLong * h,
-        "truncated BMP pixel data")
-      val (rm, gm, bm) = masks16
-      val gw = java.lang.Integer.bitCount(gm) // 5 or 6; r/b always 5
-      for (r <- 0 until h) {
-        val rowOff = dataOff + r * stride
-        val y = imageRow(r)
-        var x = 0
-        while (x < w) {
-          val u = (b(rowOff + 2 * x) & 0xff) |
-            ((b(rowOff + 2 * x + 1) & 0xff) << 8)
-          sums(y * w + x) =
-            expand((u & rm) >> java.lang.Integer.numberOfTrailingZeros(rm), 5) +
-              expand((u & gm) >> java.lang.Integer.numberOfTrailingZeros(gm), gw) +
-              expand(u & bm, 5)
-          x += 1
-        }
-      }
-    } else if (compression == 0 && bpp == 8) { // uncompressed 8-bit palette
-      val stride = (w + 3) / 4 * 4
-      require(b.length >= dataOff + stride.toLong * h,
-        "truncated BMP pixel data")
-      for (r <- 0 until h) {
-        val rowOff = dataOff + r * stride
-        val y = imageRow(r)
-        var x = 0
-        while (x < w) {
-          val idx = b(rowOff + x) & 0xff
-          require(idx < palette.length, s"BMP palette index $idx out of" +
-            s" range (${palette.length})")
-          sums(y * w + x) = palette(idx)
-          x += 1
-        }
-      }
-    } else if (compression == 0) { // uncompressed 4-bit: nibbles, high first
-      val stride = ((w + 1) / 2 + 3) / 4 * 4
-      require(b.length >= dataOff + stride.toLong * h,
-        "truncated BMP pixel data")
-      for (r <- 0 until h) {
-        val rowOff = dataOff + r * stride
-        val y = imageRow(r)
-        var x = 0
-        while (x < w) {
-          val byte = b(rowOff + x / 2) & 0xff
-          val idx = if (x % 2 == 0) byte >> 4 else byte & 0xf
-          require(idx < palette.length, s"BMP palette index $idx out of" +
-            s" range (${palette.length})")
-          sums(y * w + x) = palette(idx)
-          x += 1
-        }
-      }
-    } else if (compression == 2) { // BI_RLE4: runs of ALTERNATING nibbles
-      var p = dataOff
-      var fx = 0
-      var fy = 0
-      var eob = false
-      def put4(idx: Int): Unit = {
-        require(fx < w && fy < h, s"RLE4 cursor out of bounds ($fx,$fy)")
-        require(idx < palette.length, s"BMP palette index $idx out of" +
-          s" range (${palette.length})")
-        sums((h - 1 - fy) * w + fx) = palette(idx)
-        fx += 1
-      }
-      while (!eob) {
-        require(p + 1 < b.length, "truncated BMP RLE4 stream")
-        val n = b(p) & 0xff
-        val v = b(p + 1) & 0xff
-        p += 2
-        if (n > 0) { // encoded: n pixels alternating high/low nibble of v
+    var p = dataOff
+    var fx = 0 // file-coordinate cursor (bottom-up rows)
+    var fy = 0
+    def put(idx: Int): Unit = {
+      require(fx < w && fy < h, s"$name cursor out of bounds ($fx,$fy)")
+      sums((h - 1 - fy) * w + fx) = pal(idx)
+      fx += 1
+    }
+    // index i of a run whose byte is v (RLE4: alternating nibbles)
+    def unit(v: Int, i: Int): Int =
+      if (!nibbles) v else if (i % 2 == 0) v >> 4 else v & 0xf
+    var eob = false
+    while (!eob) {
+      require(p + 1 < b.length, s"truncated BMP $name stream")
+      val n = b(p) & 0xff
+      val v = b(p + 1) & 0xff
+      p += 2
+      if (n > 0) { // encoded mode: n pixels from v
+        var i = 0
+        while (i < n) { put(unit(v, i)); i += 1 }
+      } else v match {
+        case 0 => fx = 0; fy += 1 // end of line
+        case 1 => eob = true      // end of bitmap
+        case 2 =>                  // delta
+          require(p + 1 < b.length, s"truncated BMP $name delta")
+          fx += b(p) & 0xff
+          fy += b(p + 1) & 0xff
+          p += 2
+        case cnt =>               // absolute mode: cnt literal indices
+          val nb = if (nibbles) (cnt + 1) / 2 else cnt
+          require(p + nb <= b.length, s"truncated BMP $name literals")
           var i = 0
-          while (i < n) {
-            put4(if (i % 2 == 0) v >> 4 else v & 0xf)
+          while (i < cnt) {
+            put(if (nibbles) unit(b(p + i / 2) & 0xff, i) else b(p + i) & 0xff)
             i += 1
           }
-        } else v match {
-          case 0 => fx = 0; fy += 1 // end of line
-          case 1 => eob = true      // end of bitmap
-          case 2 =>                  // delta: skipped pixels stay 0
-            require(p + 1 < b.length, "truncated BMP RLE4 delta")
-            fx += b(p) & 0xff
-            fy += b(p + 1) & 0xff
-            p += 2
-          case cnt =>               // absolute: cnt packed nibbles
-            val nb = (cnt + 1) / 2
-            require(p + nb <= b.length, "truncated BMP RLE4 literals")
-            var i = 0
-            while (i < cnt) {
-              val byte = b(p + i / 2) & 0xff
-              put4(if (i % 2 == 0) byte >> 4 else byte & 0xf)
-              i += 1
-            }
-            p += nb + (nb & 1)      // word-aligned
-        }
-      }
-    } else { // BI_RLE8 (spec: encoded runs, absolute mode, EOL/EOB/delta)
-      var p = dataOff
-      var fx = 0 // file-coordinate cursor (bottom-up rows)
-      var fy = 0
-      var eob = false
-      def setPx(): Int => Unit = idx => {
-        require(fx < w && fy < h, s"RLE8 cursor out of bounds ($fx,$fy)")
-        require(idx < palette.length, s"BMP palette index $idx out of" +
-          s" range (${palette.length})")
-        sums((h - 1 - fy) * w + fx) = palette(idx)
-        fx += 1
-      }
-      val put = setPx()
-      while (!eob) {
-        require(p + 1 < b.length, "truncated BMP RLE8 stream")
-        val n = b(p) & 0xff
-        val v = b(p + 1) & 0xff
-        p += 2
-        if (n > 0) { // encoded mode: n pixels of index v
-          var i = 0
-          while (i < n) { put(v); i += 1 }
-        } else v match {
-          case 0 => fx = 0; fy += 1 // end of line
-          case 1 => eob = true      // end of bitmap
-          case 2 =>                  // delta: skipped pixels stay 0
-            require(p + 1 < b.length, "truncated BMP RLE8 delta")
-            fx += b(p) & 0xff
-            fy += b(p + 1) & 0xff
-            p += 2
-          case cnt =>               // absolute mode: cnt literal indices
-            require(p + cnt <= b.length, "truncated BMP RLE8 literals")
-            var i = 0
-            while (i < cnt) { put(b(p + i) & 0xff); i += 1 }
-            p += cnt + (cnt & 1)    // word-aligned
-        }
+          p += nb + (nb & 1)      // word-aligned
       }
     }
     Raster(w, h, sums)
   }
 
-  /** 8-bit palette BMP (grayscale identity palette): `topDown` writes
-    * the spec's negative-height row order; `rle` compresses with
-    * BI_RLE8 (encoded runs + absolute mode + EOL/EOB markers —
-    * bottom-up only, per spec). */
-  def encodeBmp8(w: Int, h: Int, gray: (Int, Int) => Int,
-      topDown: Boolean = false, rle: Boolean = false): Array[Byte] = {
+  // ---- Netpbm ----------------------------------------------------------------
+  //
+  // "P" + format digit, then whitespace-separated w, h and (except for
+  // the P1/P4 bitmaps) maxval, with '#' comments.  P1/P2/P3 carry ASCII
+  // decimal samples (bitmap / gray / RGB), P4/P5/P6 binary ones: P4 bits
+  // MSB-first with each row padded to a byte, P5/P6 one byte per sample
+  // at maxval 255 or a big-endian pair at 65535.
+
+  /** The one Netpbm writer: `pixel(x, y)` gives a pixel's samples (one
+    * for bitmaps — 1 = black — and gray, three for RGB), 0..255 (0/1 for
+    * a bitmap).  At maxval 65535 the 8-bit value is the HIGH byte and the
+    * low byte is a deliberately different ((v·131+17) mod 256) — ASCII
+    * writes v·256+37 — so the decoder's high-byte projection recovers v
+    * exactly and a wrong-byte read cannot pass.  ASCII rows put one
+    * space between pixels and between a pixel's samples, one line per
+    * row. */
+  private def encodeNetpbm(w: Int, h: Int, ascii: Boolean, maxval: Int,
+      gray: Boolean, pixel: (Int, Int) => Seq[Int]): Array[Byte] = {
     require(w > 0 && h > 0, "bad dims")
-    require(!(topDown && rle), "RLE8 BMP must be bottom-up (spec)")
-    val pixels = new java.io.ByteArrayOutputStream
-    if (rle) {
-      for (fy <- 0 until h) {
-        val y = h - 1 - fy // bottom-up file rows
-        var x = 0
-        while (x < w) {
-          val v = gray(x, y) & 0xff
-          var run = 1
-          while (x + run < w && run < 255 &&
-            (gray(x + run, y) & 0xff) == v) run += 1
-          if (run >= 2) {
-            pixels.write(run); pixels.write(v)
-            x += run
-          } else {
-            // literal stretch until a run of ≥ 3 or 255 pixels;
-            // absolute mode needs ≥ 3 literals, else encoded singles
-            var j = x + 1
-            var stop = false
-            while (j < w && j - x < 255 && !stop) {
-              if (j + 2 < w && (gray(j, y) & 0xff) == (gray(j + 1, y) & 0xff)
-                && (gray(j, y) & 0xff) == (gray(j + 2, y) & 0xff)) stop = true
-              else j += 1
-            }
-            val cnt = j - x
-            if (cnt >= 3) {
-              pixels.write(0); pixels.write(cnt)
-              for (i <- 0 until cnt) pixels.write(gray(x + i, y) & 0xff)
-              if ((cnt & 1) == 1) pixels.write(0) // word align
-              x = j
-            } else {
-              for (i <- 0 until cnt) {
-                pixels.write(1); pixels.write(gray(x + i, y) & 0xff)
-              }
-              x = j
-            }
-          }
+    val wide = maxval == 65535
+    val fmt = (if (maxval == 1) 1 else if (gray) 2 else 3) + (if (ascii) 0 else 3)
+    val out = new java.io.ByteArrayOutputStream
+    out.write((s"P$fmt\n$w $h\n" + (if (maxval == 1) "" else s"$maxval\n"))
+      .getBytes("US-ASCII"))
+    if (ascii) {
+      val sb = new StringBuilder
+      for (y <- 0 until h) {
+        for (x <- 0 until w) {
+          sb.append(pixel(x, y).map(v => if (wide) v * 256 + 37 else v)
+            .mkString(" "))
+          if (x < w - 1) sb.append(' ')
         }
-        pixels.write(0); pixels.write(0) // end of line
+        sb.append('\n')
       }
-      pixels.write(0); pixels.write(1) // end of bitmap
-    } else {
-      val stride = (w + 3) / 4 * 4
-      for (fy <- 0 until h) {
-        val y = if (topDown) fy else h - 1 - fy
-        for (x <- 0 until w) pixels.write(gray(x, y) & 0xff)
-        for (_ <- w until stride) pixels.write(0)
+      out.write(sb.toString.getBytes("US-ASCII"))
+    } else if (maxval == 1)
+      for (y <- 0 until h; x0 <- 0 until w by 8)
+        out.write((x0 until math.min(w, x0 + 8)).foldLeft(0) { (acc, x) =>
+          acc | (pixel(x, y).head << (7 - (x - x0)))
+        })
+    else
+      for (y <- 0 until h; x <- 0 until w; v <- pixel(x, y)) {
+        out.write(v)
+        if (wide) out.write((v * 131 + 17) & 0xff)
       }
-    }
-    val data = pixels.toByteArray
-    val dataOff = 54 + 4 * 256
-    val out = java.nio.ByteBuffer.allocate(dataOff + data.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put('B'.toByte).put('M'.toByte)
-    out.putInt(dataOff + data.length).putInt(0).putInt(dataOff)
-    out.putInt(40).putInt(w).putInt(if (topDown) -h else h)
-    out.putShort(1).putShort(8)
-    out.putInt(if (rle) 1 else 0).putInt(data.length)
-    out.putInt(2835).putInt(2835).putInt(256).putInt(0)
-    for (i <- 0 until 256) { // BGRA grayscale identity palette
-      out.put(i.toByte).put(i.toByte).put(i.toByte).put(0.toByte)
-    }
-    out.put(data)
-    out.array()
+    out.toByteArray
   }
 
-  /** 16-bit BMP: BI_RGB X1R5G5B5, or BI_BITFIELDS R5G6B5 when
-    * `use565` — the two real-world HighColor layouts.  Channels
-    * quantize v → v>>3 (v>>2 for the 565 green); the decoder's
-    * bit-replication expansion makes the round trip SQL-replayable. */
-  def encodeBmp16(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
-      use565: Boolean = false): Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val stride = (w * 2 + 3) / 4 * 4
-    val masksLen = if (use565) 12 else 0
-    val dataOff = 54 + masksLen
-    val out = java.nio.ByteBuffer.allocate(dataOff + stride * h)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put('B'.toByte).put('M'.toByte)
-    out.putInt(dataOff + stride * h).putInt(0).putInt(dataOff)
-    out.putInt(40).putInt(w).putInt(h)
-    out.putShort(1).putShort(16)
-    out.putInt(if (use565) 3 else 0).putInt(stride * h)
-    out.putInt(2835).putInt(2835).putInt(0).putInt(0)
-    if (use565) { out.putInt(0xf800); out.putInt(0x7e0); out.putInt(0x1f) }
-    for (fy <- 0 until h) {
-      val y = h - 1 - fy
-      for (x <- 0 until w) {
-        val (r, g, b) = rgb(x, y)
-        val u =
-          if (use565) ((r >> 3) << 11) | ((g >> 2) << 5) | (b >> 3)
-          else ((r >> 3) << 10) | ((g >> 3) << 5) | (b >> 3)
-        out.putShort(u.toShort)
-      }
-      for (_ <- w * 2 until stride) out.put(0.toByte)
-    }
-    out.array()
+  /** The samples of `rgb`: its r channel alone when `gray`. */
+  private def rgbSamples(rgb: (Int, Int) => (Int, Int, Int),
+      gray: Boolean): (Int, Int) => Seq[Int] = (x, y) => {
+    val (r, g, b) = rgb(x, y)
+    if (gray) Seq(r) else Seq(r, g, b)
   }
 
-  /** 4-bit palette BMP (16-entry i·17 grayscale table — the standard
-    * 4→8 expansion): `idx(x, y)` ∈ 0..15; `rle` writes BI_RLE4
-    * (alternating-nibble encoded runs + packed absolute mode). */
-  def encodeBmp4(w: Int, h: Int, idx: (Int, Int) => Int,
-      rle: Boolean = false): Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val pixels = new java.io.ByteArrayOutputStream
-    if (rle) {
-      for (fy <- 0 until h) {
-        val y = h - 1 - fy
-        var x = 0
-        while (x < w) {
-          val a = idx(x, y) & 0xf
-          val b2 = if (x + 1 < w) idx(x + 1, y) & 0xf else a
-          // run of the alternating pair (a, b2)
-          var run = 1
-          while (x + run < w && run < 254 &&
-            (idx(x + run, y) & 0xf) ==
-              (if (run % 2 == 0) a else b2)) run += 1
-          if (run >= 2) {
-            pixels.write(run); pixels.write((a << 4) | b2)
-            x += run
-          } else {
-            pixels.write(1); pixels.write(a << 4)
-            x += 1
-          }
-        }
-        pixels.write(0); pixels.write(0) // end of line
-      }
-      pixels.write(0); pixels.write(1) // end of bitmap
-    } else {
-      val stride = ((w + 1) / 2 + 3) / 4 * 4
-      for (fy <- 0 until h) {
-        val y = h - 1 - fy
-        var rowBytes = 0
-        var x = 0
-        while (x < w) {
-          val hi = idx(x, y) & 0xf
-          val lo = if (x + 1 < w) idx(x + 1, y) & 0xf else 0
-          pixels.write((hi << 4) | lo)
-          rowBytes += 1
-          x += 2
-        }
-        for (_ <- rowBytes until stride) pixels.write(0)
-      }
-    }
-    val data = pixels.toByteArray
-    val dataOff = 54 + 4 * 16
-    val out = java.nio.ByteBuffer.allocate(dataOff + data.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put('B'.toByte).put('M'.toByte)
-    out.putInt(dataOff + data.length).putInt(0).putInt(dataOff)
-    out.putInt(40).putInt(w).putInt(h)
-    out.putShort(1).putShort(4)
-    out.putInt(if (rle) 2 else 0).putInt(data.length)
-    out.putInt(2835).putInt(2835).putInt(16).putInt(0)
-    for (i <- 0 until 16) { // BGRA i·17 grayscale palette
-      val v = (i * 17).toByte
-      out.put(v).put(v).put(v).put(0.toByte)
-    }
-    out.put(data)
-    out.array()
-  }
+  /** Binary PPM (P6): ASCII header `P6 <w> <h> 255`, then w·h RGB
+    * triplets, top-down row-major. */
+  def encodePpm(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int))
+      : Array[Byte] =
+    encodeNetpbm(w, h, ascii = false, 255, gray = false,
+      rgbSamples(rgb, gray = false))
 
-  private def decodePpm(b: Array[Byte]): Raster = {
-    // Netpbm family (r17 widens beyond P6): header grammar is "P" +
-    // format digit, then whitespace-separated w, h, maxval with '#'
-    // comments; P5/P6 follow with ONE whitespace byte then binary
+  /** Binary PGM (P5), grayscale single-byte samples. */
+  def encodePgm(w: Int, h: Int, gray: (Int, Int) => Int): Array[Byte] =
+    encodeNetpbm(w, h, ascii = false, 255, gray = true,
+      (x, y) => Seq(gray(x, y) & 0xff))
+
+  /** 16-bit Netpbm (maxval 65535): binary P5/P6 or ASCII P2/P3, gray
+    * content taken from the r channel. */
+  def encodePnm16(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
+      gray: Boolean, ascii: Boolean): Array[Byte] =
+    encodeNetpbm(w, h, ascii, 65535, gray, rgbSamples(rgb, gray))
+
+  /** PBM bitmap (P4 binary / P1 ASCII): bit (x, y) true = BLACK (the
+    * Netpbm polarity — decodes to gray 0; false = white = 255). */
+  def encodePbm(w: Int, h: Int, bit: (Int, Int) => Boolean,
+      ascii: Boolean = false): Array[Byte] =
+    encodeNetpbm(w, h, ascii, 1, gray = true,
+      (x, y) => Seq(if (bit(x, y)) 1 else 0))
+
+  /** ASCII Netpbm (P2 gray / P3 RGB), decimal samples with line
+    * wrapping — the human-readable interchange shape. */
+  def encodePnmAscii(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
+      gray: Boolean): Array[Byte] =
+    encodeNetpbm(w, h, ascii = true, 255, gray, rgbSamples(rgb, gray))
+
+  private def decodeNetpbm(b: Array[Byte]): Raster = {
+    // P5/P6 follow the header with ONE whitespace byte then binary
     // samples, P2/P3 with whitespace-separated ASCII decimal samples
     val fmt = b(1).toChar
     require(fmt >= '1' && fmt <= '6',
@@ -1414,6 +1351,14 @@ object ImageCodec {
     // projected to 8-bit via the HIGH byte (the PNG-16 convention)
     val wide = maxv == 65535
     val spp = if (gray || bitmap) 1 else 3
+    if (!ascii) p += 1 // the single whitespace after the header
+    // checked before allocating: every ASCII sample takes at least one
+    // byte, and the binary body has an exact size
+    val need =
+      if (fmt == '4') (w + 7) / 8 * h.toLong
+      else w.toLong * h * spp * (if (wide && !ascii) 2 else 1)
+    require(need <= b.length - p, s"truncated Netpbm pixel data " +
+      s"(P$fmt ${w}x$h needs $need bytes, ${math.max(0, b.length - p)} left)")
     val sums = new Array[Int](w * h)
     if (fmt == '1') {
       // P1: '0'/'1' digits, whitespace OPTIONAL between them (spec
@@ -1429,11 +1374,8 @@ object ImageCodec {
         i += 1
       }
     } else if (fmt == '4') {
-      // P4: one whitespace after h, then bit-packed rows MSB-first,
-      // each ROW padded to a byte boundary
-      p += 1
+      // P4: bit-packed rows MSB-first, each ROW padded to a byte boundary
       val rowBytes = (w + 7) / 8
-      require(b.length >= p + rowBytes * h, "truncated P4 pixel data")
       for (y <- 0 until h; x <- 0 until w) {
         val bit = (b(p + y * rowBytes + (x >> 3)) >> (7 - (x & 7))) & 1
         sums(y * w + x) = if (bit == 1) 0 else 3 * 255
@@ -1453,14 +1395,10 @@ object ImageCodec {
         i += 1
       }
     } else {
-      p += 1 // the single whitespace after maxval
-      val bytesPer = if (wide) 2 else 1
-      require(b.length >= p + w * h * spp * bytesPer,
-        "truncated Netpbm pixel data")
-      var i = 0
       def next(): Int =
         if (wide) { val v = b(p) & 0xff; p += 2; v } // BE high byte
         else { val v = b(p) & 0xff; p += 1; v }
+      var i = 0
       while (i < w * h) {
         if (gray) sums(i) = 3 * next()
         else sums(i) = next() + next() + next()
@@ -1468,117 +1406,6 @@ object ImageCodec {
       }
     }
     Raster(w, h, sums)
-  }
-
-  /** Binary PGM (P5), grayscale single-byte samples. */
-  def encodePgm(w: Int, h: Int, gray: (Int, Int) => Int): Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val header = s"P5\n$w $h\n255\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + w * h)
-    System.arraycopy(header, 0, out, 0, header.length)
-    var p = header.length
-    for (y <- 0 until h; x <- 0 until w) {
-      out(p) = (gray(x, y) & 0xff).toByte
-      p += 1
-    }
-    out
-  }
-
-  /** 16-bit Netpbm (maxval 65535): binary P5/P6 write big-endian pairs
-    * with the HIGH byte the 8-bit value and a deliberately different
-    * low byte ((v·131+17) mod 256); ASCII P2/P3 write v·256+37 — either
-    * way the decoder's high-byte projection recovers v exactly and a
-    * wrong-byte read cannot pass. */
-  def encodePnm16(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
-      gray: Boolean, ascii: Boolean): Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val fmt = (gray, ascii) match {
-      case (true, false) => "P5"
-      case (false, false) => "P6"
-      case (true, true) => "P2"
-      case _ => "P3"
-    }
-    val header = s"$fmt\n$w $h\n65535\n"
-    if (ascii) {
-      val sb = new StringBuilder(header)
-      for (y <- 0 until h) {
-        for (x <- 0 until w) {
-          val (r, g, b) = rgb(x, y)
-          val vs = if (gray) Seq(r) else Seq(r, g, b)
-          sb.append(vs.map(v => (v * 256 + 37).toString).mkString(" "))
-          if (x < w - 1) sb.append(' ')
-        }
-        sb.append('\n')
-      }
-      sb.toString.getBytes("US-ASCII")
-    } else {
-      val hb = header.getBytes("US-ASCII")
-      val spp = if (gray) 1 else 3
-      val out = new Array[Byte](hb.length + w * h * spp * 2)
-      System.arraycopy(hb, 0, out, 0, hb.length)
-      var p = hb.length
-      for (y <- 0 until h; x <- 0 until w) {
-        val (r, g, b) = rgb(x, y)
-        val vs = if (gray) Seq(r) else Seq(r, g, b)
-        vs.foreach { v =>
-          out(p) = v.toByte
-          out(p + 1) = ((v * 131 + 17) & 0xff).toByte
-          p += 2
-        }
-      }
-      out
-    }
-  }
-
-  /** PBM bitmap (P4 binary / P1 ASCII): bit (x, y) true = BLACK (the
-    * Netpbm polarity — decodes to gray 0; false = white = 255).  P4
-    * packs bits MSB-first with each ROW padded to a byte boundary; P1
-    * writes '0'/'1' digits, line-wrapped. */
-  def encodePbm(w: Int, h: Int, bit: (Int, Int) => Boolean,
-      ascii: Boolean = false): Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val header = s"P${if (ascii) 1 else 4}\n$w $h\n".getBytes("US-ASCII")
-    if (ascii) {
-      val sb = new StringBuilder
-      for (y <- 0 until h) {
-        for (x <- 0 until w) {
-          sb.append(if (bit(x, y)) '1' else '0')
-          if (x < w - 1) sb.append(' ')
-        }
-        sb.append('\n')
-      }
-      header ++ sb.toString.getBytes("US-ASCII")
-    } else {
-      val rowBytes = (w + 7) / 8
-      val out = new Array[Byte](header.length + rowBytes * h)
-      System.arraycopy(header, 0, out, 0, header.length)
-      for (y <- 0 until h; x <- 0 until w)
-        if (bit(x, y))
-          out(header.length + y * rowBytes + (x >> 3)) =
-            (out(header.length + y * rowBytes + (x >> 3)) |
-              (1 << (7 - (x & 7)))).toByte
-      out
-    }
-  }
-
-  /** ASCII Netpbm (P2 gray / P3 RGB), decimal samples with line
-    * wrapping — the human-readable interchange shape. */
-  def encodePnmAscii(w: Int, h: Int, rgb: (Int, Int) => (Int, Int, Int),
-      gray: Boolean): Array[Byte] = {
-    require(w > 0 && h > 0, "bad dims")
-    val sb = new StringBuilder
-    sb.append(if (gray) "P2" else "P3").append('\n')
-      .append(w).append(' ').append(h).append("\n255\n")
-    for (y <- 0 until h) {
-      for (x <- 0 until w) {
-        val (r, g, b) = rgb(x, y)
-        if (gray) sb.append(r)
-        else sb.append(r).append(' ').append(g).append(' ').append(b)
-        if (x < w - 1) sb.append(' ')
-      }
-      sb.append('\n')
-    }
-    sb.toString.getBytes("US-ASCII")
   }
 
   // ---- the real DecodeKernel ----------------------------------------------

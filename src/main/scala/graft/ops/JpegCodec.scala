@@ -1007,14 +1007,6 @@ object JpegCodec {
 
   // ---- text-fixture wrappers ------------------------------------------
 
-  /** the shared text→raster fixture formula: pixel (x, y) =
-    * src[(y·w + x) mod len] — [[ImageCodec.grayFromBytes]]'s map in a
-    * lossy container */
-  private def textGray(w: Int, src: Array[Byte]): (Int, Int) => Int = {
-    require(src.nonEmpty, "empty source bytes")
-    (x, y) => src((y * w + x) % src.length) & 0xff
-  }
-
   /** the shared three-phase text→RGB pixel map of the color fixtures:
     * channel c of pixel (x, y) is src[(y·w + x + offs_c) mod len] with
     * offsets (0, 13, 29) — three phase-shifted reads of the SAME byte
@@ -1034,7 +1026,7 @@ object JpegCodec {
   /** Gray JPEG of the text fixture map. */
   def grayJpeg(w: Int, h: Int, src: Array[Byte],
       quality: Int = 90): Array[Byte] =
-    encode(w, h, textGray(w, src), quality)
+    encode(w, h, ImageCodec.srcGray(w, src), quality)
 
   /** Color JPEG of the three-phase text fixture map. */
   def colorJpeg(w: Int, h: Int, src: Array[Byte],
@@ -1062,7 +1054,7 @@ object JpegCodec {
   /** [[grayJpeg]] in the progressive container. */
   def progJpeg(w: Int, h: Int, src: Array[Byte], quality: Int = 90,
       bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63))): Array[Byte] =
-    encodeProgressive(w, h, textGray(w, src), quality, bands)
+    encodeProgressive(w, h, ImageCodec.srcGray(w, src), quality, bands)
 
   /** [[colorJpeg]] in the progressive container — the three-phase text
     * pixel map through the interleaved-DC + per-component-AC scan

@@ -416,20 +416,17 @@ object MlOps {
     * rounding, so the result is engine-independent).
     *
     * Shape at scale: the model table broadcast-joins onto the exploded
-    * test tokens (`broadcastModel=false` falls back to a shuffle join on
-    * `tok` for a vocab × classes table too big for one executor); the two
-    * aggregations and the argmax window all hash on doc_id.  Unseen
+    * test tokens; the two aggregations and the argmax window all hash on
+    * doc_id.  Unseen
     * tokens cost nothing per class — their smoothing mass folds into the
     * closed form `mm·(ln α − ln(n + αV))` instead of a dense join. */
-  def nbScore(model: NbModel, test: DataFrame, text: Column, idCol: Column,
-      broadcastModel: Boolean = true): DataFrame = {
+  def nbScore(model: NbModel, test: DataFrame, text: Column, idCol: Column)
+      : DataFrame = {
     val a = model.alpha
     val dt = test.select(idCol.as("doc_id"), explode(TextOps.tokens(text)).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).cast("double").as("m"))
     val mdoc = dt.groupBy("doc_id").agg(sum("m").as("mm"))
-    val cntB = if (broadcastModel) broadcast(model.classCounts)
-               else model.classCounts
-    val adj = dt.join(cntB, "tok").groupBy("doc_id", "lbl")
+    val adj = dt.join(broadcast(model.classCounts), "tok").groupBy("doc_id", "lbl")
       .agg(sum(col("m") * (log(col("c") + a) - math.log(a))).as("adj"))
     val params = model.classStats
       .select(col("lbl"), col("lp"), col("n"))
@@ -455,9 +452,9 @@ object MlOps {
   /** Train on `train`, score `test` — the one-call form. */
   def nbClassify(train: DataFrame, trainText: Column, trainLabel: Column,
       test: DataFrame, testText: Column, testId: Column,
-      alpha: Double = 1.0, broadcastModel: Boolean = true): DataFrame =
+      alpha: Double = 1.0): DataFrame =
     nbScore(nbTrain(train, trainText, trainLabel, alpha),
-      test, testText, testId, broadcastModel)
+      test, testText, testId)
 
   /** kNN classification over an embedding column: each query takes the
     * majority label among its k nearest labeled neighbours by cosine

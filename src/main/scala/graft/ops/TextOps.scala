@@ -986,11 +986,11 @@ object TextOps {
     * with term-lexicographic tie-break so ranking is engine-exact.
     *
     * Shape: two hash aggregations (document-term, then term), a
-    * vocabulary-table join (broadcast by default), and a rank ≤ k
+    * broadcast vocabulary-table join, and a rank ≤ k
     * predicate that plans as WindowGroupLimit — per-document state is
     * O(k), never a full per-document sort. */
-  def tfidfTopTerms(df: DataFrame, text: Column, idCol: Column, k: Int,
-      broadcastVocab: Boolean = true): DataFrame = {
+  def tfidfTopTerms(df: DataFrame, text: Column, idCol: Column, k: Int)
+      : DataFrame = {
     require(k > 0, "k must be positive")
     import org.apache.spark.sql.expressions.Window
     val toks = df.select(idCol.as("doc_id"), explode(tokens(text)).as("tok"))
@@ -998,8 +998,7 @@ object TextOps {
       .agg(count(lit(1)).cast("double").as("tf"))
     val n = df.select(count(lit(1)).cast("double").as("__n"))
     val dfreq = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("__df"))
-    val vocab = if (broadcastVocab) broadcast(dfreq) else dfreq
-    val scored = tf.join(vocab, "tok").crossJoin(broadcast(n))
+    val scored = tf.join(broadcast(dfreq), "tok").crossJoin(broadcast(n))
       .select(col("doc_id"), col("tok").as("term"),
         round(col("tf") * log(col("__n") / col("__df")), 6).as("tfidf"))
     val w = Window.partitionBy("doc_id")
@@ -1212,20 +1211,16 @@ object TextOps {
     * final division — the [[dsirWeights]] discipline.
     *
     * Shape at scale: both model tables collapse map-side to their key
-    * cardinality; scoring joins on (w1, w2) — broadcast when the reference
-    * is a curated sample (the CCNet setup: the LM is trained on the small
-    * clean corpus), shuffle-join with AQE otherwise.  Documents with < 2
+    * cardinality; scoring joins on (w1, w2) against the broadcast model
+    * (the CCNet setup: the LM is trained on the small curated corpus, so
+    * the model tables are reference-sized).  Documents with < 2
     * tokens produce no row.
     * Output: (doc_id, n_bigrams, mean_lp). */
   def bigramLmScore(df: DataFrame, text: Column, idCol: Column,
-      ref: DataFrame, refText: Column,
-      broadcastModel: Boolean = true): DataFrame = {
-    // the model tables are reference-sized (the CCNet setup trains the LM
-    // on the small curated corpus): broadcast them by default so scoring
-    // is a narrow pass — a post-agg table has no stats, and the planner's
-    // blind default is a sort-merge join that sorts the corpus bigrams.
-    // Pass broadcastModel = false for a reference too big to broadcast.
-    def side(t: DataFrame): DataFrame = if (broadcastModel) broadcast(t) else t
+      ref: DataFrame, refText: Column): DataFrame = {
+    // the model tables are reference-sized: broadcast them so scoring is
+    // a narrow pass — a post-agg table has no stats, and the planner's
+    // blind default is a sort-merge join that sorts the corpus bigrams
     // ONE bigram aggregate; the w1 marginal is a sum over the MODEL table
     // (c1(w1) = Σ_w2 c12), not a second pass over the reference bigrams
     val bgAgg = graft.core.CacheScope.persist(
@@ -1233,8 +1228,8 @@ object TextOps {
         .groupBy(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
         .agg(count(lit(1)).as("c12")),
       eager = false)
-    val c12 = side(bgAgg)
-    val c1 = side(bgAgg.groupBy("w1").agg(sum("c12").as("c1")))
+    val c12 = broadcast(bgAgg)
+    val c1 = broadcast(bgAgg.groupBy("w1").agg(sum("c12").as("c1")))
     val vSize = ref.select(explode(tokens(refText)).as("tok"))
       .agg(count_distinct(col("tok")).cast("double").as("__v"))
     val scored = df.select(idCol.as("doc_id"), explode(bigrams(text)).as("bg"))
@@ -1273,13 +1268,11 @@ object TextOps {
     *
     * Shape at 100 TB: all model tables collapse map-side to n-gram-type
     * cardinality and broadcast (the reference corpus is the small curated
-    * sample — pass broadcastModel=false otherwise); scoring is a narrow
+    * sample); scoring is a narrow
     * explode over the corpus scan whose only shuffle is the final per-doc
     * hash agg.  Output: (doc_id, n_trigrams, mean_lp). */
   def sboScore(df: DataFrame, text: Column, idCol: Column,
-      ref: DataFrame, refText: Column,
-      broadcastModel: Boolean = true): DataFrame = {
-    def side(t: DataFrame): DataFrame = if (broadcastModel) broadcast(t) else t
+      ref: DataFrame, refText: Column): DataFrame = {
     val c123 = ref.select(explode(trigrams(refText)).as("tg"))
       .groupBy(col("tg.w1").as("w1"), col("tg.w2").as("w2"),
         col("tg.w3").as("w3"))
@@ -1301,7 +1294,7 @@ object TextOps {
       ref.select(explode(tokens(refText)).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cu")),
       eager = false)
-    val c3 = side(uniAgg.select(col("tok").as("w3"), col("cu").as("c3")))
+    val c3 = broadcast(uniAgg.select(col("tok").as("w3"), col("cu").as("c3")))
     val nv = uniAgg.agg(sum("cu").cast("double").as("__n"),
       count(lit(1)).cast("double").as("__v"))
     // Backoff ratios PRECOMPUTED at model-build time: every reference
@@ -1311,10 +1304,10 @@ object TextOps {
     // trigram stream then pays THREE broadcast probes instead of five.
     // The divisions are the same IEEE ops the score previously did per
     // row, so results are bit-identical (and oracle-unchanged).
-    val r123 = side(c123.join(c12, Seq("w1", "w2"))
+    val r123 = broadcast(c123.join(c12, Seq("w1", "w2"))
       .select(col("w1"), col("w2"), col("w3"),
         (col("c123").cast("double") / col("c12")).as("r3")))
-    val r23 = side(c23.join(uniAgg.select(col("tok").as("w2"),
+    val r23 = broadcast(c23.join(uniAgg.select(col("tok").as("w2"),
         col("cu").as("c2")), Seq("w2"))
       .select(col("w2"), col("w3"),
         (lit(0.4) * col("c23").cast("double") / col("c2")).as("r2")))

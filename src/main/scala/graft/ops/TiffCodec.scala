@@ -454,7 +454,7 @@ object TiffCodec {
     out.toByteArray
   }
 
-  /** [[ImageCodec.grayFromBytes]]'s pixel map in a TIFF container.
+  /** [[ImageCodec.srcGray]]'s pixel map in a TIFF container.
     * `tileW`/`tileH` switch to the tiled layout; `asPalette` writes the
     * same pixels as photometric-3 indices through the identity gray
     * ColorMap (v·257 entries, so the decode is pixel-identical — the
@@ -462,17 +462,13 @@ object TiffCodec {
   def grayTiff(w: Int, h: Int, src: Array[Byte], compression: Int,
       predictor: Int = 1, bigEndian: Boolean = false,
       rowsPerStrip: Int = 0, tileW: Int = 0, tileH: Int = 0,
-      asPalette: Boolean = false): Array[Byte] = {
-    require(src.nonEmpty, "empty source bytes")
-    encode(w, h, (x, y) => {
-      val v = src((y * w + x) % src.length) & 0xff
-      (v, v, v)
-    }, gray = !asPalette, compression = compression, predictor = predictor,
+      asPalette: Boolean = false): Array[Byte] =
+    encode(w, h, ImageCodec.grayRgb(ImageCodec.srcGray(w, src)),
+      gray = !asPalette, compression = compression, predictor = predictor,
       rowsPerStrip = rowsPerStrip, bigEndian = bigEndian,
       tileW = tileW, tileH = tileH,
       palette = if (asPalette) Array.tabulate(256)(i => (i, i, i))
         else null)
-  }
 
   // ---- decoder -------------------------------------------------------------
 

@@ -1,11 +1,44 @@
 package graft
 
+import java.nio.ByteBuffer
+import java.security.MessageDigest
 import java.util.SplittableRandom
+import graft.ops.ImageCodec
 
-/** Seeded image content for the JPEG pins, the allocation guard and the
-  * `Probe kernels` codec rung.  Every image is a pure function of its
-  * seed and dims. */
+/** Seeded image content for the codec pins, the allocation guard and the
+  * `Probe kernels` codec rung, plus the digest helpers the pins share.
+  * Every image is a pure function of its seed and dims. */
 object JpegCorpus {
+
+  /** sha256 over a length-prefixed concatenation, so a single changed
+    * byte anywhere, or a moved boundary between parts, changes it. */
+  def sha256(parts: Seq[Array[Byte]]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    parts.foreach { p =>
+      md.update(ByteBuffer.allocate(4).putInt(p.length).array)
+      md.update(p)
+    }
+    md.digest.map(b => f"$b%02x").mkString
+  }
+
+  /** A raster as bytes: dims, then every `lumaSum3` entry. */
+  def rasterBytes(r: ImageCodec.Raster): Array[Byte] = {
+    val bb = ByteBuffer.allocate(8 + 4 * r.lumaSum3.length)
+    bb.putInt(r.width).putInt(r.height)
+    r.lumaSum3.foreach(v => bb.putInt(v))
+    bb.array
+  }
+
+  /** The names of `actual` are exactly `expected`'s keys, and every
+    * digest matches; a failure lists each drifted name with its digest. */
+  def pinDrift(expected: Map[String, String],
+      actual: Seq[(String, String)]): Seq[String] = {
+    val missing = (expected.keySet -- actual.map(_._1)).toSeq.sorted
+      .map(n => s"$n -> (missing)")
+    missing ++ actual.collect {
+      case (n, d) if !expected.get(n).contains(d) => s"$n -> $d"
+    }
+  }
 
   /** The shape of perfbench's `media_neardup` inputs: an 8×8 grid of
     * cells at seeded brightness levels (60..200) with a seeded chroma
@@ -56,4 +89,28 @@ object JpegCorpus {
     val n = noise(seed, w, h)
     (x, y) => n(x, y)._1
   }
+
+  /** Run-heavy content: 6×3 bands, alternating between two values on the
+    * left half of each row and flat on the right half, so the RLE and LZW
+    * encoders meet long runs, alternating pairs and literal stretches. */
+  def bands(w: Int): (Int, Int) => (Int, Int, Int) = (x, y) => {
+    val alt = if (2 * x < w) (x % 2) * 16 else 0
+    val v = ((x / 6) * 37 + (y / 3) * 91 + alt) % 256
+    (v, (v + 85) % 256, 255 - v)
+  }
+
+  /** The three contents of the raster-container pins at (w, h). */
+  def pinContents(w: Int, h: Int): Seq[(Int, Int) => (Int, Int, Int)] =
+    Seq(textured(7, math.max(w, h)), noise(11, w, h), bands(w))
+
+  /** Dims of the raster-container pins: single pixel, odd and padded
+    * rows, the 96×96 bench size, and a row longer than an RLE run. */
+  val PinDims: Seq[(Int, Int)] =
+    Seq((1, 1), (3, 2), (13, 11), (17, 9), (37, 29), (96, 96), (300, 2))
+
+  /** Source bytes of the text-to-pixel fixtures: ASCII text, and 97
+    * bytes that cover every value mod 256 in a scrambled order. */
+  val PinSources: Seq[Array[Byte]] = Seq(
+    "pin every raster container byte: 0123456789".getBytes("US-ASCII"),
+    Array.tabulate(97)(i => (i * 53 + 11).toByte))
 }

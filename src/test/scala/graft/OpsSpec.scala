@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ops._
 import graft.streaming.StreamingOps
-import TestFiles.{rm, withTempDir}
+import TestFiles.{rm, ts, withTempDir}
 
 /** Invariants for the extension operators (dedup, similarity, multimodal,
   * streaming) and the auxiliary surfaces (hooks, union, auto-config) that
@@ -392,15 +392,14 @@ class OpsSpec extends AnyFunSuite {
 
   test("streaming: watermark finalizes windows and drops late data") {
     withTempDir("graft-late") { dir =>
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
-      val schema = Seq((1L, t("2026-01-01 10:05:00"), "a", 1.0))
+      val schema = Seq((1L, ts("2026-01-01 10:05:00"), "a", 1.0))
         .toDF("event_id", "ts", "event_type", "value").schema
       def write(rows: Seq[(Long, java.sql.Timestamp, String, Double)], part: String): Unit =
         rows.toDF("event_id", "ts", "event_type", "value")
           .coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       write(Seq(
-        (1L, t("2026-01-01 10:05:00"), "a", 1.0),
-        (2L, t("2026-01-01 12:05:00"), "a", 2.0)), "b1")
+        (1L, ts("2026-01-01 10:05:00"), "a", 1.0),
+        (2L, ts("2026-01-01 12:05:00"), "a", 2.0)), "b1")
       val q = StreamingOps.tumblingCountsStream(spark, dir.getAbsolutePath,
           schema, "1 hour", "1 hour")
         .writeStream.format("memory").queryName("graft_late_test")
@@ -409,14 +408,14 @@ class OpsSpec extends AnyFunSuite {
       // second micro-batch: one LATE row (10:30, behind the 11:05 watermark)
       // and one fresh row advancing time
       write(Seq(
-        (3L, t("2026-01-01 10:30:00"), "a", 4.0),
-        (4L, t("2026-01-01 14:05:00"), "a", 8.0)), "b2")
+        (3L, ts("2026-01-01 10:30:00"), "a", 4.0),
+        (4L, ts("2026-01-01 14:05:00"), "a", 8.0)), "b2")
       q.processAllAvailable()
       val rows = spark.table("graft_late_test")
         .select("window_start_ms", "cnt").as[(Long, Long)].collect().toMap
       q.stop()
-      val w10 = t("2026-01-01 10:00:00").getTime
-      val w12 = t("2026-01-01 12:00:00").getTime
+      val w10 = ts("2026-01-01 10:00:00").getTime
+      val w12 = ts("2026-01-01 12:00:00").getTime
       // the 10:00 window finalized with ONE event — the late 10:30 row was
       // dropped, not retro-added; the 12:00 window finalized in batch 2
       assert(rows(w10) == 1L, s"late row leaked into finalized window: $rows")
@@ -426,13 +425,12 @@ class OpsSpec extends AnyFunSuite {
 
   test("streaming: watermarked dedup drops repeated ids across micro-batches") {
     withTempDir("graft-sdedup") { dir =>
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
       val batch = Seq(
-        (1L, t("2026-01-01 10:00:00"), "a", 1.0),
-        (1L, t("2026-01-01 10:01:00"), "a", 1.0), // dup id
-        (2L, t("2026-01-01 10:02:00"), "b", 2.0),
-        (2L, t("2026-01-01 10:03:00"), "b", 2.0), // dup id
-        (3L, t("2026-01-01 10:04:00"), "c", 3.0),
+        (1L, ts("2026-01-01 10:00:00"), "a", 1.0),
+        (1L, ts("2026-01-01 10:01:00"), "a", 1.0), // dup id
+        (2L, ts("2026-01-01 10:02:00"), "b", 2.0),
+        (2L, ts("2026-01-01 10:03:00"), "b", 2.0), // dup id
+        (3L, ts("2026-01-01 10:04:00"), "c", 3.0),
       ).toDF("event_id", "ts", "event_type", "value")
       batch.write.mode("overwrite").parquet(dir.getAbsolutePath)
       val q = StreamingOps.dedupStream(spark, dir.getAbsolutePath,
@@ -449,13 +447,12 @@ class OpsSpec extends AnyFunSuite {
 
   test("streaming band-key dedup accumulates the batch bandFirstOwners table") {
     withTempDir("graft-banddd") { dir =>
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
       val b1 = Seq(
-        (1L, t("2026-01-01 10:00:00"), "the quick brown fox jumps over the lazy dog"),
-        (2L, t("2026-01-01 10:01:00"), "completely different text with no overlap at all"))
+        (1L, ts("2026-01-01 10:00:00"), "the quick brown fox jumps over the lazy dog"),
+        (2L, ts("2026-01-01 10:01:00"), "completely different text with no overlap at all"))
       val b2 = Seq(
-        (3L, t("2026-01-01 10:02:00"), "the quick brown fox jumps over the lazy dog"), // dup of 1
-        (4L, t("2026-01-01 10:03:00"), "alpha beta gamma delta epsilon zeta eta theta"))
+        (3L, ts("2026-01-01 10:02:00"), "the quick brown fox jumps over the lazy dog"), // dup of 1
+        (4L, ts("2026-01-01 10:03:00"), "alpha beta gamma delta epsilon zeta eta theta"))
       def df(rows: Seq[(Long, java.sql.Timestamp, String)]) =
         rows.toDF("doc_id", "ts", "text")
       // two ts-ordered micro-batches (arrival order == ts order)
@@ -518,16 +515,15 @@ class OpsSpec extends AnyFunSuite {
 
   test("streaming: flatMapGroupsWithState running stats accumulate across micro-batches") {
     withTempDir("graft-state") { dir =>
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
       def df(rows: Seq[(Long, java.sql.Timestamp, Long, Double)]) =
         rows.toDF("event_id", "ts", "user_id", "value")
       val b1 = Seq(
-        (1L, t("2026-01-01 10:00:00"), 7L, 1.5),
-        (2L, t("2026-01-01 10:01:00"), 7L, 2.25),
-        (3L, t("2026-01-01 10:02:00"), 9L, 4.0))
+        (1L, ts("2026-01-01 10:00:00"), 7L, 1.5),
+        (2L, ts("2026-01-01 10:01:00"), 7L, 2.25),
+        (3L, ts("2026-01-01 10:02:00"), 9L, 4.0))
       val b2 = Seq(
-        (4L, t("2026-01-01 10:03:00"), 7L, 0.125),
-        (5L, t("2026-01-01 10:04:00"), 9L, 1.0))
+        (4L, ts("2026-01-01 10:03:00"), 7L, 0.125),
+        (5L, ts("2026-01-01 10:04:00"), 9L, 1.0))
       df(b1).coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
       val q = graft.streaming.StreamingOps.runningUserStats(spark,
           dir.getAbsolutePath, df(b1).schema, watermark = "1 hour")
@@ -556,12 +552,11 @@ class OpsSpec extends AnyFunSuite {
 
   test("streaming: session_window sessionization matches batch sessions") {
     withTempDir("graft-sess") { dir =>
-      def t(s: String) = java.sql.Timestamp.valueOf(s)
       val batch = Seq(
-        (1L, t("2026-01-01 10:00:00"), 7L, "a", 1.0),
-        (2L, t("2026-01-01 10:10:00"), 7L, "a", 2.0), // same session (gap 30m)
-        (3L, t("2026-01-01 11:30:00"), 7L, "a", 4.0), // new session
-        (4L, t("2026-01-01 10:00:00"), 8L, "b", 8.0),
+        (1L, ts("2026-01-01 10:00:00"), 7L, "a", 1.0),
+        (2L, ts("2026-01-01 10:10:00"), 7L, "a", 2.0), // same session (gap 30m)
+        (3L, ts("2026-01-01 11:30:00"), 7L, "a", 4.0), // new session
+        (4L, ts("2026-01-01 10:00:00"), 8L, "b", 8.0),
       ).toDF("event_id", "ts", "user_id", "event_type", "value")
       batch.write.mode("overwrite").parquet(dir.getAbsolutePath)
       val q = StreamingOps.sessionizeStream(spark, dir.getAbsolutePath,
@@ -588,9 +583,9 @@ class OpsSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-sink").toFile
     try {
       val batch = Seq(
-        (1L, java.sql.Timestamp.valueOf("2026-01-01 10:05:00"), "a", 1.5),
-        (2L, java.sql.Timestamp.valueOf("2026-01-01 10:20:00"), "a", 2.5),
-        (3L, java.sql.Timestamp.valueOf("2026-01-01 11:05:00"), "b", 4.0),
+        (1L, ts("2026-01-01 10:05:00"), "a", 1.5),
+        (2L, ts("2026-01-01 10:20:00"), "a", 2.5),
+        (3L, ts("2026-01-01 11:05:00"), "b", 4.0),
       ).toDF("event_id", "ts", "event_type", "value")
       batch.write.mode("overwrite").parquet(dir.getAbsolutePath)
       val q = StreamingOps.tumblingCountsStream(spark, dir.getAbsolutePath,
@@ -1991,11 +1986,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("recencyWeights: newest event weighs 1.0, mass matches hand-computed decay") {
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
     val ev = Seq(
-      (1L, t("2026-01-08 00:00:00"), 7L),  // newest: age 0 → weight 1.0
-      (2L, t("2026-01-01 00:00:00"), 7L),  // age = one half-life → 0.5
-      (3L, t("2026-01-01 00:00:00"), 9L),
+      (1L, ts("2026-01-08 00:00:00"), 7L),  // newest: age 0 → weight 1.0
+      (2L, ts("2026-01-01 00:00:00"), 7L),  // age = one half-life → 0.5
+      (3L, ts("2026-01-01 00:00:00"), 9L),
     ).toDF("event_id", "ts", "user_id")
     val out = StreamingOps.recencyWeights(ev, halfLifeDays = 7.0)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap

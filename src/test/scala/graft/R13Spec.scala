@@ -13,8 +13,9 @@ class R13Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.valueOf(s + " 00:00:00")
+  /** Midnight of the date `yyyy-mm-dd`. */
+  private def day(d: String): java.sql.Timestamp =
+    java.sql.Timestamp.valueOf(d + " 00:00:00")
 
   private lazy val dir: String = {
     val d = java.nio.file.Files.createTempDirectory("r13fix").toString
@@ -32,10 +33,10 @@ class R13Spec extends AnyFunSuite {
       .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       .write.mode("overwrite").parquet(s"$d/supplier.parquet")
     // q21 orders: o1/o2/o4 finalized, o3 open (excluded)
-    Seq((1L, 9L, "F", 10.0, ts("1997-01-01"), "2-HIGH"),
-        (2L, 9L, "F", 10.0, ts("1997-01-01"), "2-HIGH"),
-        (3L, 9L, "O", 10.0, ts("1997-01-01"), "2-HIGH"),
-        (4L, 9L, "F", 10.0, ts("1997-01-01"), "2-HIGH"))
+    Seq((1L, 9L, "F", 10.0, day("1997-01-01"), "2-HIGH"),
+        (2L, 9L, "F", 10.0, day("1997-01-01"), "2-HIGH"),
+        (3L, 9L, "O", 10.0, day("1997-01-01"), "2-HIGH"),
+        (4L, 9L, "F", 10.0, day("1997-01-01"), "2-HIGH"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .write.mode("overwrite").parquet(s"$d/orders.parquet")
@@ -45,8 +46,8 @@ class R13Spec extends AnyFunSuite {
       .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size",
         "p_retailprice")
       .write.mode("overwrite").parquet(s"$d/part.parquet")
-    val late = ts("1997-06-01")   // 151 days after the order date
-    val ok = ts("1997-01-15")
+    val late = day("1997-06-01")   // 151 days after the order date
+    val ok = day("1997-01-15")
     // o1: s1 late TWICE, s2 on time  -> s1 numwait += 2
     // o2: s1 late, s2 late           -> two late suppliers, nobody counted
     // o3: s1 late but order is open  -> excluded

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{ImageCodec, MultimodalOps}
+import graft.ops.{ImageCodec, JpegCodec, MultimodalOps}
 
 /** Hand-fixture checks for the real BMP/PPM codec (the corpus-level check
   * is the mm_real_* oracle trio, whose features the DuckDB side recomputes
@@ -123,6 +123,33 @@ class R16CodecSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {       // non-255/65535 maxval
       ImageCodec.decode(("P6\n1 1\n1023\n" + "\u0000" * 6)
         .getBytes("ISO-8859-1")) }
+    // headers declaring 46340×46340 pixels (one Int sum each is 8.6 GB,
+    // more than any test heap) fail before anything is allocated
+    val big = 46340
+    for (hdr <- Seq(s"P6\n$big $big\n255\n", s"P3\n$big $big\n255\n1 2 3\n",
+        s"P1\n$big $big\n0 1\n", s"P4\n$big $big\n\u0000"))
+      intercept[IllegalArgumentException] {
+        ImageCodec.decode(hdr.getBytes("US-ASCII")) }
+    def dims(b: Array[Byte], off: Int): Array[Byte] = {
+      java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(off, big).putInt(off + 4, big)
+      b
+    }
+    val bmp = dims(ok.take(54), 18)                 // 24-bit, header only
+    val rle8 = dims(ImageCodec.encodeBmp8(2, 2, (_, _) => 1, rle = true), 18)
+    val gif = ImageCodec.encodeGif(1, 1, (_, _) => 1)
+    for (off <- Seq(6, 8, 13 + 768 + 5, 13 + 768 + 7)) { // screen, image
+      gif(off) = big.toByte; gif(off + 1) = (big >> 8).toByte
+    }
+    val png = ImageCodec.encodePng(1, 1, (_, _) => (1, 1, 1), colorType = 0)
+    val crc = new java.util.zip.CRC32
+    java.nio.ByteBuffer.wrap(png).putInt(16, big).putInt(20, big)
+    crc.update(png, 12, 17)                          // IHDR type + data
+    java.nio.ByteBuffer.wrap(png).putInt(29, crc.getValue.toInt)
+    for (b <- Seq(bmp, rle8, gif, png))
+      intercept[IllegalArgumentException] { ImageCodec.decode(b) }
+    intercept[IllegalArgumentException] { ImageCodec.decodeGifFrames(gif) }
+    intercept[IllegalArgumentException] { ImageCodec.decodeGifComposited(gif) }
   }
 
   test("kernel: block means exact on divisible AND non-divisible grids") {
@@ -189,5 +216,193 @@ class R16CodecSpec extends AnyFunSuite {
         Array.fill(8)(204.toByte)) // would be 32768 > Short.MaxValue
     }
     assert(e.getMessage.contains("overflows"))
+  }
+
+  // ---- byte and raster pins ---------------------------------------------
+  // sha256 per public BMP/Netpbm encoder and text-to-pixel fixture over
+  // JpegCorpus.PinDims × its contents (or sources), and over the decode
+  // of each output: a literal may change only with an intended change of
+  // the container bytes or of the decoder.
+  private type Rgb = (Int, Int) => (Int, Int, Int)
+
+  private lazy val pinEncoders: Seq[(String, Seq[Array[Byte]])] = {
+    def rgb(enc: (Int, Int, Rgb) => Array[Byte]): Seq[Array[Byte]] =
+      for ((w, h) <- JpegCorpus.PinDims; f <- JpegCorpus.pinContents(w, h))
+        yield enc(w, h, f)
+    def gray(enc: (Int, Int, (Int, Int) => Int) => Array[Byte]) =
+      rgb((w, h, f) => enc(w, h, (x, y) => f(x, y)._1))
+    def text(enc: (Int, Int, Array[Byte]) => Array[Byte]) =
+      for ((w, h) <- JpegCorpus.PinDims; src <- JpegCorpus.PinSources)
+        yield enc(w, h, src)
+    Seq(
+      "encodeBmp" -> rgb(ImageCodec.encodeBmp),
+      "encodeBmp8" -> gray(ImageCodec.encodeBmp8(_, _, _)),
+      "encodeBmp8/topDown" -> gray(ImageCodec.encodeBmp8(_, _, _, topDown = true)),
+      "encodeBmp8/rle" -> gray(ImageCodec.encodeBmp8(_, _, _, rle = true)),
+      "encodeBmp16" -> rgb(ImageCodec.encodeBmp16(_, _, _)),
+      "encodeBmp16/use565" -> rgb(ImageCodec.encodeBmp16(_, _, _, use565 = true)),
+      "encodeBmp4" -> gray((w, h, g) =>
+        ImageCodec.encodeBmp4(w, h, (x, y) => g(x, y) >> 4)),
+      "encodeBmp4/rle" -> gray((w, h, g) =>
+        ImageCodec.encodeBmp4(w, h, (x, y) => g(x, y) >> 4, rle = true)),
+      "encodePpm" -> rgb(ImageCodec.encodePpm),
+      "encodePgm" -> gray(ImageCodec.encodePgm),
+      "encodePnmAscii/gray" -> rgb(ImageCodec.encodePnmAscii(_, _, _, gray = true)),
+      "encodePnmAscii/rgb" -> rgb(ImageCodec.encodePnmAscii(_, _, _, gray = false)),
+      "encodePnm16/P5" -> rgb(ImageCodec.encodePnm16(_, _, _, gray = true, ascii = false)),
+      "encodePnm16/P6" -> rgb(ImageCodec.encodePnm16(_, _, _, gray = false, ascii = false)),
+      "encodePnm16/P2" -> rgb(ImageCodec.encodePnm16(_, _, _, gray = true, ascii = true)),
+      "encodePnm16/P3" -> rgb(ImageCodec.encodePnm16(_, _, _, gray = false, ascii = true)),
+      "encodePbm" -> gray((w, h, g) => ImageCodec.encodePbm(w, h, g(_, _) >= 128)),
+      "encodePbm/ascii" -> gray((w, h, g) =>
+        ImageCodec.encodePbm(w, h, g(_, _) >= 128, ascii = true)),
+      "grayFromBytes/ppm" -> text(ImageCodec.grayFromBytes(_, _, _, asPpm = true)),
+      "grayFromBytes/bmp" -> text(ImageCodec.grayFromBytes(_, _, _, asPpm = false)),
+      "grayPng/ct2/f3" -> text(ImageCodec.grayPng(_, _, _, 2, 3)),
+      "grayPng/ct3/f1" -> text(ImageCodec.grayPng(_, _, _, 3, 1)),
+      "grayPng/ct0/f4/interlace" -> text(
+        ImageCodec.grayPng(_, _, _, 0, 4, interlace = true)),
+      "grayPng/ct2/f2/depth16/interlace" -> text(
+        ImageCodec.grayPng(_, _, _, 2, 2, interlace = true, depth = 16)),
+      "grayJpeg" -> text(JpegCodec.grayJpeg(_, _, _))) ++
+    (0 to 4).map(f => s"grayPng/ct0/f$f" -> text(ImageCodec.grayPng(_, _, _, 0, f)))
+  }
+
+  private val PinnedBytes: Map[String, String] = Map(
+    "encodeBmp" ->
+      "7f90de07a63c17113cb788c237531e4ba1d9651e29e2146e694a0884d946d102",
+    "encodeBmp8" ->
+      "90433bf22e821be79ac2808a9bcf686c32a34bed5f204df99a04a5abd8bdda51",
+    "encodeBmp8/topDown" ->
+      "ec9f2bcb91a257cf76a422e926b08be5359d1ba1a7a81e04285d1255bdd3d180",
+    "encodeBmp8/rle" ->
+      "538cfec8f475c8fbdf4f977cda745fa5ec9c73bb2820f8845f77ba129fbf0f64",
+    "encodeBmp16" ->
+      "dfee90b5673fb33b34648ad879e1ed8fdea40829e7127cd26600fd85848d9374",
+    "encodeBmp16/use565" ->
+      "8be3296f6855f5ba338ba4db51035ff4541d46a65cfba442ea6ca1e80fc76b5c",
+    "encodeBmp4" ->
+      "97bb49aaac7f69440b9f792df860d93ceffbd4a9ee7b7241c7c4b51e3f959b10",
+    "encodeBmp4/rle" ->
+      "838dd12e5672d2cca7c3fdbed872e548efec371a67109844767fee0996ef9805",
+    "encodePpm" ->
+      "b1d753d11d8c662268fcf04bd35561abdda2dae53e523d73e6ce22f6d6773f23",
+    "encodePgm" ->
+      "bbd580da7bb334bbf705da245aa96dda83dd0d1897665ba1a1c34d5c6bea691e",
+    "encodePnmAscii/gray" ->
+      "5b771c59314efd7f3780aaa1b50dd3d3bdbf1af45f0355da0a39900f4c44f707",
+    "encodePnmAscii/rgb" ->
+      "94b0b5ba008ccbf605524fdab7b80653f461b51e1074dc7c5cadf050f70a37be",
+    "encodePnm16/P5" ->
+      "95db06af8b8129ed9e032853a2a1aa9ffb82057ad7da4e58c58564ea22ae0803",
+    "encodePnm16/P6" ->
+      "6074372e7f1d85776053383d22b6f2a8d6315620942f0f3d58320b1f7902bc72",
+    "encodePnm16/P2" ->
+      "0dd732d9fab5bab1a16707256a82d2b006c9214d8195f5076b25441df6d16d7e",
+    "encodePnm16/P3" ->
+      "51c23bb432637ee5e9635271db993b8981b0e6314cb9d1122a5612d0e4f96a9b",
+    "encodePbm" ->
+      "546d694b5282f1f6a5583173e17dbb688293127fbfea6778680459fa9a0ede25",
+    "encodePbm/ascii" ->
+      "e22e42edc8f82a612f73891468f59e57fef16d2dcfbf4b34092b89d2c1650b81",
+    "grayFromBytes/ppm" ->
+      "6d747ef9608094a12a85419a9b7dde31a79cb70046ff7dfc58580665b115cbdb",
+    "grayFromBytes/bmp" ->
+      "2bf4ec6f76f915c532c8b53770efc05b462f659f81eb4479ac78129b386ec17b",
+    "grayPng/ct2/f3" ->
+      "31510215644ef1b7cf4b50b4eb35239c25cf8d5a0f3724754b0a68b7e280d087",
+    "grayPng/ct3/f1" ->
+      "2fea56da5214cd7ab3547d7f16f5c85dc85d5c662d7587d6e095f5a601fd93b9",
+    "grayPng/ct0/f4/interlace" ->
+      "c2df92bd32107511efaeb1263c98ae9157177aff32fc382b0e55f3a07318467e",
+    "grayPng/ct2/f2/depth16/interlace" ->
+      "bb0d554fc3963358bf7cf6915bd1c19795510859de2dce4e6771f17490670d57",
+    "grayJpeg" ->
+      "e7db75c5115857b22606d12a5d36fc01dc4a62c2e0dbdc52cffbed7877a03bfe",
+    "grayPng/ct0/f0" ->
+      "13497500a2b275957eb0d42621b202710c0b27dff810a2841d5518d54eb842aa",
+    "grayPng/ct0/f1" ->
+      "5da8775b9ab65a838862f76e285b43ecf034e3258683e4bab2771514ed940cd9",
+    "grayPng/ct0/f2" ->
+      "a1267d4de93ad43e24a54b4031e5d5d270b77ced9b5459f742165b89cb7ce877",
+    "grayPng/ct0/f3" ->
+      "3b3016bcb2ee0f0d804904345228e7b4f80b3d818acb6b6511d33dcf0e7b81ba",
+    "grayPng/ct0/f4" ->
+      "5eeb84c5f53e9d71b3057605d3848f7a350ddf229965a23221b05dd4240e0030")
+
+  private val PinnedRasters: Map[String, String] = Map(
+    "encodeBmp" ->
+      "e8ca73357d6943b7b37f5b992ca33f8572ca5b98e1da8d5bdd522fca6c07bf18",
+    "encodeBmp8" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodeBmp8/topDown" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodeBmp8/rle" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodeBmp16" ->
+      "a56415891358e6439fed780999c20b3305cc4c6a98cdd6d47a95c112974f403d",
+    "encodeBmp16/use565" ->
+      "a1b01ae475ab6eaae1a468cfb3d4025026ca39567727ec7a2efbdfafd491061e",
+    "encodeBmp4" ->
+      "7f86f75875b0a3dd321463abb5b3645eb8525f5d24737db24659f385a9902ec0",
+    "encodeBmp4/rle" ->
+      "7f86f75875b0a3dd321463abb5b3645eb8525f5d24737db24659f385a9902ec0",
+    "encodePpm" ->
+      "e8ca73357d6943b7b37f5b992ca33f8572ca5b98e1da8d5bdd522fca6c07bf18",
+    "encodePgm" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodePnmAscii/gray" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodePnmAscii/rgb" ->
+      "e8ca73357d6943b7b37f5b992ca33f8572ca5b98e1da8d5bdd522fca6c07bf18",
+    "encodePnm16/P5" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodePnm16/P6" ->
+      "e8ca73357d6943b7b37f5b992ca33f8572ca5b98e1da8d5bdd522fca6c07bf18",
+    "encodePnm16/P2" ->
+      "340bc5ca47ef3473af2a2d03928ece07b90074a63b9c95293ddab43c0feeeb9c",
+    "encodePnm16/P3" ->
+      "e8ca73357d6943b7b37f5b992ca33f8572ca5b98e1da8d5bdd522fca6c07bf18",
+    "encodePbm" ->
+      "c34b51a8bb5ea9903d4024172cee623f9def0fa884668a79e8be758a358ece9c",
+    "encodePbm/ascii" ->
+      "c34b51a8bb5ea9903d4024172cee623f9def0fa884668a79e8be758a358ece9c",
+    "grayFromBytes/ppm" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayFromBytes/bmp" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct2/f3" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct3/f1" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct0/f4/interlace" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct2/f2/depth16/interlace" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayJpeg" ->
+      "0fee64884410662653d18c7f44c87bbe34ef61ec4da09edb35bf99ba43bf1b01",
+    "grayPng/ct0/f0" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct0/f1" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct0/f2" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct0/f3" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayPng/ct0/f4" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957")
+
+  test("every public BMP/Netpbm encoder and gray fixture's bytes are pinned") {
+    val drift = JpegCorpus.pinDrift(PinnedBytes,
+      pinEncoders.map { case (n, out) => n -> JpegCorpus.sha256(out) })
+    assert(drift.isEmpty, "encoder byte drift: " + drift.mkString(", "))
+  }
+
+  test("decoded BMP/Netpbm/gray-fixture rasters are pinned") {
+    val drift = JpegCorpus.pinDrift(PinnedRasters, pinEncoders.map {
+      case (n, out) => n -> JpegCorpus.sha256(out.map(b =>
+        JpegCorpus.rasterBytes(ImageCodec.decode(b))))
+    })
+    assert(drift.isEmpty, "raster drift: " + drift.mkString(", "))
   }
 }

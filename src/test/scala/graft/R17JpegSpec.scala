@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.ByteBuffer
-import java.security.MessageDigest
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ImageCodec, JpegCodec, MultimodalOps}
+import JpegCorpus.{rasterBytes, sha256}
 
 /** Baseline-JPEG codec fixtures — the R16PngSpec shape for the first
   * LOSSY tier: round-trip TOLERANCE (not hash-exactness: post-DCT the
@@ -557,22 +556,6 @@ class R17JpegSpec extends AnyFunSuite {
       JpegCodec.stripDht(JpegCodec.encodeColor(w, h, pinRgb, q))),
     "stripDht/encodeColor420" -> ((w, h, q) =>
       JpegCodec.stripDht(JpegCodec.encodeColor420(w, h, pinRgb, q))))
-
-  private def sha256(parts: Seq[Array[Byte]]): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    parts.foreach { p =>
-      md.update(ByteBuffer.allocate(4).putInt(p.length).array)
-      md.update(p)
-    }
-    md.digest.map(b => f"$b%02x").mkString
-  }
-
-  private def rasterBytes(r: ImageCodec.Raster): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 + 4 * r.lumaSum3.length)
-    bb.putInt(r.width).putInt(r.height)
-    r.lumaSum3.foreach(v => bb.putInt(v))
-    bb.array
-  }
 
   private def pinOutputs(enc: (Int, Int, Int) => Array[Byte]): Seq[Array[Byte]] =
     for ((w, h) <- PinDims; q <- PinQualities) yield enc(w, h, q)

@@ -170,4 +170,46 @@ class R17TiffSpec extends AnyFunSuite {
       catch { case _: IllegalArgumentException => () }
     }
   }
+
+  // ---- byte and raster pins ---------------------------------------------
+  // sha256 of grayTiff's bytes per shape over JpegCorpus.PinDims × its
+  // sources, and of their decodes
+  private val pinShapes: Seq[(String, (Int, Int, Array[Byte]) => Array[Byte])] =
+    Seq(
+      "grayTiff/c1" -> (TiffCodec.grayTiff(_, _, _, 1)),
+      "grayTiff/c5/p2/be" -> (TiffCodec.grayTiff(_, _, _, 5, predictor = 2,
+        bigEndian = true)),
+      "grayTiff/c32773/rps3" -> (TiffCodec.grayTiff(_, _, _, 32773,
+        rowsPerStrip = 3)),
+      "grayTiff/c5/tile16/palette" -> (TiffCodec.grayTiff(_, _, _, 5,
+        tileW = 16, tileH = 16, asPalette = true)))
+
+  private val PinnedGrayTiff: Map[String, String] = Map(
+    "grayTiff/c1" ->
+      "aacb5811f951f35017c76c028ccaecea2bdc9b5bb9df0d6fc1e36e398c52bdac",
+    "grayTiff/c1/decode" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayTiff/c5/p2/be" ->
+      "abf032783267e9f1fd2496c8de7898c57ff85853dfe4c44932c36ea32915da91",
+    "grayTiff/c5/p2/be/decode" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayTiff/c32773/rps3" ->
+      "f5d8238116f4c7162c244cc38b89235cd2e82158d5c9de3fa7ba3e17ac8f215f",
+    "grayTiff/c32773/rps3/decode" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957",
+    "grayTiff/c5/tile16/palette" ->
+      "5a7d895da323b132a9daab414c24a0549b112cfab0e3b6930236333e05875bcd",
+    "grayTiff/c5/tile16/palette/decode" ->
+      "42f5dc83f08da6397955af0ad5a226b70f1ee9afbcf01258b139be0ea79f0957")
+
+  test("grayTiff bytes and decoded rasters are pinned") {
+    val actual = pinShapes.flatMap { case (n, enc) =>
+      val out = for ((w, h) <- JpegCorpus.PinDims; src <- JpegCorpus.PinSources)
+        yield enc(w, h, src)
+      Seq(n -> JpegCorpus.sha256(out), s"$n/decode" -> JpegCorpus.sha256(
+        out.map(b => JpegCorpus.rasterBytes(ImageCodec.decode(b)))))
+    }
+    val drift = JpegCorpus.pinDrift(PinnedGrayTiff, actual)
+    assert(drift.isEmpty, "grayTiff drift: " + drift.mkString(", "))
+  }
 }
