@@ -272,7 +272,14 @@ final case class BlockWeightedSampling(
   require(blockSize > 0 && totalSize > 0)
   def shuffleBeforeYield: Boolean = true
 
-  def plan(sc: ScCollection, seed: Long): DataFrame = {
+  def plan(sc: ScCollection, seed: Long): DataFrame = sample(sc, sc.df, seed)
+
+  /** [[plan]] with the weight read from `weighted` — rows of `sc.df` with
+    * the weight column(s) added — while the payload comes from `sc.df`
+    * itself, so the fetch never re-derives the weights (nor, for a
+    * non-contiguous collection, re-runs the rank sort). */
+  private[core] def sample(sc: ScCollection, weighted: DataFrame,
+      seed: Long): DataFrame = {
     // Index-first physical design (the reference's own shape: sample the
     // index space, fetch payload last — scdataset.py:487-527).  The whole
     // sampling machinery — stats, prefix sums, copy expansion, block
@@ -281,7 +288,7 @@ final case class BlockWeightedSampling(
     // 100 TB this is the only workable plan: the index is ~24 bytes/row
     // regardless of payload width, so the multi-pass machinery never
     // touches (or caches) the data columns.
-    val wide = ranked(sc)
+    val wide = ranked(sc.copy(df = weighted))
     // Persisted because the plan drives several actions over it (weight
     // stats, prefix-sum partials) before the final consumer executes.
     // CacheScope-registered: the consumer releases it after its terminal
@@ -473,24 +480,57 @@ final case class BlockWeightedSampling(
         .drop("__scum", Ord)
     val index = blockPermute(withSrank, "__srank", blockSize, totalSize,
       rng, seed, "wblock", caps.blockTable).drop("__srank")
-    // fetch payload last: one join of the wide collection against the final
-    // (rowId, copy, ord) index — the only pass that ever touches data
-    // columns.  A driver-sized index (24 bytes × totalSize) is broadcast so
-    // the payload side is never shuffled or sorted; beyond that the
-    // shuffle join is the right plan (both sides hash on rowId).
+    // fetch payload last: one join of the collection's own frame against
+    // the final (rowId, copy, ord) index — the only pass that ever touches
+    // data columns.  A driver-sized index (24 bytes × totalSize) is
+    // broadcast so the payload side is never shuffled or sorted; beyond
+    // that the shuffle join is the right plan (both sides hash on rowId).
     // beyond the broadcast gate, prefer a shuffle-HASH join with the index
     // as build side: both sides exchange on rowId either way, but the
     // sort-merge default additionally SORTS the wide payload side — the
     // index (3 longs/row) is always the cheaper hash build.
-    val joined =
-      if (totalSize <= caps.indexBroadcast)
-        wide.drop(Ord).join(broadcast(index), Seq(sc.rowId))
-      else
-        wide.drop(Ord).join(index.hint("shuffle_hash"), Seq(sc.rowId))
-    joined
+    if (totalSize <= caps.indexBroadcast)
+      sc.df.join(broadcast(index), Seq(sc.rowId))
+    else
+      sc.df.join(index.hint("shuffle_hash"), Seq(sc.rowId))
   }
 
   def outputLen(n: Long): Long = totalSize
+}
+
+/** The seed-free step [[ClassBalancedSampling]] and [[MixtureSampling]]
+  * share: the per-label table their weights are built from is collected to
+  * the driver once and kept on the strategy instance for the last
+  * collection it planned, matched by identity (`eq`) — the contract of
+  * [[ScCollection.length]]'s memo.  Every epoch joins the kept rows as a
+  * local frame, so it runs no label aggregate and no count job.  A
+  * collection whose data changes under the same handle is out of
+  * contract, as it is for `length`; any other handle (a `where`, `subset`
+  * or `limit` of it, say) takes fresh counts. */
+private[core] sealed trait LabelWeightedSampling extends SamplingStrategy {
+  def label: Column
+
+  @transient @volatile private var kept: (ScCollection, DataFrame, Long) = _
+
+  /** `table` (a small per-label aggregate) as a local frame plus its row
+    * count, collected at most once per collection handle. */
+  protected def labelTable(sc: ScCollection)(
+      table: => DataFrame): (DataFrame, Long) = {
+    val hit = kept
+    if (hit != null && (hit._1 eq sc)) (hit._2, hit._3)
+    else {
+      val t = table
+      val rows = t.collect()
+      val local = sc.df.sparkSession
+        .createDataFrame(java.util.Arrays.asList(rows: _*), t.schema)
+      kept = (sc, local, rows.length.toLong)
+      (local, rows.length.toLong)
+    }
+  }
+
+  /** Label → row count over `df`, the aggregate both strategies weigh by. */
+  protected def labelCounts(df: DataFrame): DataFrame =
+    df.groupBy(label.as("__lbl")).agg(count(lit(1)).as("__lcnt"))
 }
 
 /** Domain-mixture sampling: resample so domain d's EXPECTED share of the
@@ -505,6 +545,11 @@ final case class BlockWeightedSampling(
   * the integerized weight is `round(1e6·n·parts_d / (P·count_d))`, exact
   * while `1e6·n·max(parts) < 2^53` — beyond that (corpora past ~10^9 rows
   * with large parts) rescale parts down.
+  *
+  * The domain counts are taken once per (strategy instance, collection
+  * handle) — see [[LabelWeightedSampling]]: later epochs over the same
+  * handle reuse them, so a collection whose data changes under the same
+  * handle is out of contract, as it already is for `length`.
   */
 final case class MixtureSampling(
     label: Column,
@@ -513,7 +558,7 @@ final case class MixtureSampling(
     blockSize: Int = 8,
     replace: Boolean = true,
     rng: Rng = Rng.Xx,
-    caps: SamplingStrategy.Caps = SamplingStrategy.Caps()) extends SamplingStrategy {
+    caps: SamplingStrategy.Caps = SamplingStrategy.Caps()) extends LabelWeightedSampling {
   require(parts.nonEmpty && parts.values.forall(_ >= 0L) &&
     parts.values.sum > 0L, "parts must be non-negative, not all zero")
   def shuffleBeforeYield: Boolean = true
@@ -523,19 +568,18 @@ final case class MixtureSampling(
     import spark.implicits._
     val p = parts.values.sum
     val n = sc.length
-    val counts = sc.df.groupBy(label.as("__lbl"))
-      .agg(count(lit(1)).as("__lcnt"))
-    val partsDf = parts.toSeq.toDF("__lbl", "__parts")
+    val (domains, _) = labelTable(sc) {
+      labelCounts(sc.df).join(parts.toSeq.toDF("__lbl", "__parts"), Seq("__lbl"))
+    }
     val weighted = sc.df
-      .join(broadcast(counts.join(partsDf, Seq("__lbl"))), label === col("__lbl"))
+      .join(broadcast(domains), label === col("__lbl"))
       .withColumn("__mxw",
         round((lit(1000000.0 * n) * col("__parts").cast("double")) /
           (lit(p) * col("__lcnt")).cast("double")))
       .drop("__lbl", "__lcnt", "__parts")
     BlockWeightedSampling(col("__mxw"), totalSize, blockSize, replace,
       integralWeights = replace, rng = rng, caps = caps)
-      .plan(sc.copy(df = weighted), seed)
-      .drop("__mxw")
+      .sample(sc, weighted, seed)
   }
 
   def outputLen(n: Long): Long = totalSize
@@ -555,6 +599,13 @@ final case class MixtureSampling(
   * counts come from the collection being sampled (subset mode); pass
   * `countsFrom = Some(fullDf)` to balance a subset against the FULL
   * dataset's class frequencies (global mode).
+  *
+  * Like the reference, which derives its weights once and draws only the
+  * indices per epoch, the class counts are taken once per (strategy
+  * instance, collection handle) — see [[LabelWeightedSampling]]: later
+  * epochs over the same handle reuse them, so a collection (or
+  * `countsFrom` frame) whose data changes under the same handle is out of
+  * contract, as it already is for `length`.
   */
 final case class ClassBalancedSampling(
     label: Column,
@@ -563,13 +614,11 @@ final case class ClassBalancedSampling(
     replace: Boolean = true,
     countsFrom: Option[DataFrame] = None,
     rng: Rng = Rng.Xx,
-    caps: SamplingStrategy.Caps = SamplingStrategy.Caps()) extends SamplingStrategy {
+    caps: SamplingStrategy.Caps = SamplingStrategy.Caps()) extends LabelWeightedSampling {
   def shuffleBeforeYield: Boolean = true
 
   def plan(sc: ScCollection, seed: Long): DataFrame = {
-    val counts = countsFrom.getOrElse(sc.df).groupBy(label.as("__lbl"))
-      .agg(count(lit(1)).as("__lcnt"))
-    val k = counts.count()
+    val (counts, k) = labelTable(sc)(labelCounts(countsFrom.getOrElse(sc.df)))
     val n = sc.length
     require(k > 0, "empty collection")
     val num = 1000000.0 * n
@@ -579,8 +628,7 @@ final case class ClassBalancedSampling(
       .drop("__lbl", "__lcnt")
     BlockWeightedSampling(col("__cbw"), totalSize, blockSize, replace,
       integralWeights = replace, rng = rng, caps = caps)
-      .plan(sc.copy(df = weighted), seed)
-      .drop("__cbw")
+      .sample(sc, weighted, seed)
   }
 
   def outputLen(n: Long): Long = totalSize

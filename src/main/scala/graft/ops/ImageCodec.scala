@@ -25,11 +25,11 @@ object ImageCodec {
   final case class Raster(width: Int, height: Int, lumaSum3: Array[Int])
 
   /** Pixel cap of the containers whose byte count bounds no pixel count
-    * (RLE BMP, GIF, PNG): a crafted header must not allocate the heap
-    * away before a single pixel is checked. */
+    * (RLE BMP, GIF, PNG, JPEG, TIFF): a crafted header must not allocate
+    * the heap away before a single pixel is checked. */
   private val MaxPixels = 1 << 26
 
-  private def pixelCap(w: Int, h: Int, what: String): Unit =
+  private[ops] def pixelCap(w: Int, h: Int, what: String): Unit =
     require(w.toLong * h <= MaxPixels,
       s"$what ${w}x$h exceeds the $MaxPixels-pixel decode cap")
 

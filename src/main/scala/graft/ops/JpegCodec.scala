@@ -1180,6 +1180,8 @@ object JpegCodec {
           require((b(p + 2) & 0xff) == 8, "only 8-bit JPEG supported")
           val h = u16(p + 3); val w = u16(p + 5)
           require(w > 0 && h > 0, s"bad JPEG dims ${w}x$h")
+          // the coefficient planes below are sized from these dims
+          ImageCodec.pixelCap(w, h, "JPEG")
           val nComp = b(p + 7) & 0xff
           require(nComp == 1 || nComp == 3,
             s"only 1- or 3-component JPEG supported, got $nComp")

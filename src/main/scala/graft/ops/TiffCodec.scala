@@ -551,6 +551,8 @@ object TiffCodec {
     // crafted LONG dims must fail loudly, not wrap Int arithmetic
     require(w <= 65535 && h <= 65535 && w.toLong * h * spp <= Int.MaxValue,
       s"TIFF dims ${w}x$h too large")
+    // the raw sample buffer below is sized from these dims
+    ImageCodec.pixelCap(w, h, "TIFF")
     require(bps == 8, "only 8-bit TIFF supported")
     require(photo == 1 || photo == 2 || photo == 3,
       s"only BlackIsZero/RGB/palette TIFF supported, got photometric $photo")

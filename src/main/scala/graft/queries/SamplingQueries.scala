@@ -664,6 +664,19 @@ object SamplingQueries extends QuerySet {
        |  FROM c
        |)""".stripMargin
 
+  /** Copy expansion over `cp(…, row_id, copies)`: `ex`, one row per copy
+    * carrying `carried` and `row_id`, and `sr`, each copy's sample rank
+    * `srank` in (row_id, copy) order. */
+  private def copyRanksCte(carried: String): String =
+    s"""ex AS (
+       |  SELECT $carried, row_id,
+       |         unnest(generate_series(1, copies)) AS copy
+       |  FROM cp WHERE copies > 0
+       |),
+       |sr AS (
+       |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
+       |)""".stripMargin
+
   /** Block-shuffle CTE over the sampled rows `sr(…, srank)`: `k`, each
     * row's md5 key for its block of `block` consecutive ranks (seed
     * `seed`). */
@@ -796,14 +809,7 @@ object SamplingQueries extends QuerySet {
          |  FROM ranked
          |),
          |${systematicCopiesCte(11, "2 * (SELECT count(*) FROM lineitem)")},
-         |ex AS (
-         |  SELECT l_orderkey, l_linenumber, row_id,
-         |         unnest(generate_series(1, copies)) AS copy
-         |  FROM cp WHERE copies > 0
-         |),
-         |sr AS (
-         |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
-         |),
+         |${copyRanksCte("l_orderkey, l_linenumber")},
          |${blockKeyCte(11, 8)}
          |SELECT l_orderkey, l_linenumber, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
@@ -865,14 +871,7 @@ object SamplingQueries extends QuerySet {
          |  FROM ranked r JOIN cnts c ON r.l_returnflag = c.lbl
          |),
          |${systematicCopiesCte(13, "3 * (SELECT count(*) FROM lineitem) // 2")},
-         |ex AS (
-         |  SELECT l_orderkey, l_linenumber, l_returnflag, row_id,
-         |         unnest(generate_series(1, copies)) AS copy
-         |  FROM cp WHERE copies > 0
-         |),
-         |sr AS (
-         |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
-         |),
+         |${copyRanksCte("l_orderkey, l_linenumber, l_returnflag")},
          |${blockKeyCte(13, 16)}
          |SELECT l_orderkey, l_linenumber, l_returnflag, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord
@@ -1037,14 +1036,7 @@ object SamplingQueries extends QuerySet {
          |  FROM r JOIN cnts c ON r.source = c.lbl JOIN prt p ON r.source = p.lbl
          |),
          |${systematicCopiesCte(17, "2 * (SELECT count(*) FROM documents)")},
-         |ex AS (
-         |  SELECT doc_id, source, row_id,
-         |         unnest(generate_series(1, copies)) AS copy
-         |  FROM cp WHERE copies > 0
-         |),
-         |sr AS (
-         |  SELECT *, row_number() OVER (ORDER BY row_id, copy) - 1 AS srank FROM ex
-         |),
+         |${copyRanksCte("doc_id, source")},
          |${blockKeyCte(17, 8)}
          |SELECT doc_id, source, copy::BIGINT AS copy,
          |       row_number() OVER (ORDER BY bkey, srank) - 1 AS ord

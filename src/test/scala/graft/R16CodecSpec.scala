@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{ImageCodec, JpegCodec, MultimodalOps}
+import graft.ops.{ImageCodec, JpegCodec, MultimodalOps, TiffCodec}
 
 /** Hand-fixture checks for the real BMP/PPM codec (the corpus-level check
   * is the mm_real_* oracle trio, whose features the DuckDB side recomputes
@@ -150,6 +150,25 @@ class R16CodecSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] { ImageCodec.decode(b) }
     intercept[IllegalArgumentException] { ImageCodec.decodeGifFrames(gif) }
     intercept[IllegalArgumentException] { ImageCodec.decodeGifComposited(gif) }
+    // an 8×8 gray JPEG whose SOF0 and an 8×8 gray TIFF whose
+    // ImageWidth/ImageLength declare 46340×46340: both size their buffers
+    // from the dims, so the cap must fire before either allocates
+    val jpeg = JpegCodec.encode(8, 8, (x, y) => x * 16 + y, 90)
+    val sof = (0 until jpeg.length - 1).find(i =>
+      (jpeg(i) & 0xff) == 0xff && (jpeg(i + 1) & 0xff) == 0xc0).get
+    java.nio.ByteBuffer.wrap(jpeg).putShort(sof + 5, big.toShort)
+      .putShort(sof + 7, big.toShort)
+    val tiff = TiffCodec.encode(8, 8, (x, y) => (x, y, 0), gray = true)
+    val le = java.nio.ByteBuffer.wrap(tiff).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val ifd = le.getInt(4)
+    for (i <- 0 until (le.getShort(ifd) & 0xffff)) {
+      val e = ifd + 2 + 12 * i
+      val tag = le.getShort(e) & 0xffff
+      if (tag == 256 || tag == 257) le.putShort(e + 8, big.toShort)
+    }
+    for (b <- Seq(jpeg, tiff))
+      assert(intercept[IllegalArgumentException] { ImageCodec.decode(b) }
+        .getMessage.contains("decode cap"))
   }
 
   test("kernel: block means exact on divisible AND non-divisible grids") {
