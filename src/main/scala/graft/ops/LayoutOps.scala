@@ -1,6 +1,11 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, GreaterThanOrEqual, IsNotNull, LessThanOrEqual, Literal}
+import org.apache.spark.sql.types.StructType
 
 /** Physical-layout operators: bucketed tables and the exchange-free
   * co-located join they buy.
@@ -185,18 +190,24 @@ object LayoutOps {
   // carries the previous manifest's entries forward, an overwrite starts
   // fresh.  Old versions stay readable forever (no file is ever
   // rewritten), and a 100 TB append commits in O(new data), not O(table).
+  //
+  // Each lake decision has one owner here: the manifest codec
+  // (`manifestLines`/`publishManifest`/`carried`), the pruning rule
+  // (`LakeFileIndex.prune`, which `rangeDirs` feeds), the structural
+  // delta (`appendedDirs`), the rewrite publish (`publishRewrite`), the
+  // data-file filter (`dataFiles`) and the footer rule (`newestFooter`,
+  // `unionFooter`).
 
   private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def manifestPath(path: String, v: Int) =
-    new org.apache.hadoop.fs.Path(s"$path/_v$v.manifest")
+    new Path(s"$path/_v$v.manifest")
 
   /** Largest committed version, or -1 if the table does not exist. */
   def latestVersion(spark: SparkSession, path: String): Int = {
     val f = fs(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     if (!f.exists(p)) -1
     else f.listStatus(p).map(_.getPath.getName)
       .collect { case n if n.startsWith("_v") && n.endsWith(".manifest") =>
@@ -222,7 +233,7 @@ object LayoutOps {
     * appeared in between, which surfaces as the same "already exists"
     * conflict the retry loop expects. */
   private def createExclusive(f: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Unit = {
+      target: Path, bytes: Array[Byte]): Unit = {
     val local = f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
       f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
     if (!local) {
@@ -239,6 +250,134 @@ object LayoutOps {
       finally java.nio.file.Files.deleteIfExists(tmp)
     }
   }
+
+  // ---- manifest codec ---------------------------------------------------
+  //
+  // A manifest is UTF-8 text, one entry per line, lines joined by "\n":
+  //   <data dir>                              a directory of the snapshot
+  //   #stats:<dir>:<col>:<kind>:<min>:<max>   see writeWithStats
+  //   #size:<dir>:<bytes>                     see sizeLine
+  //   #txn:<id>                               see commitAppend
+  // where <dir> is a data directory's name and the #stats fields are
+  // URL-encoded.  Every manifest is read by `manifestLines`, written by
+  // `publishManifest`, and carried into a later one by `carried`.
+
+  private def manifestLines(f: org.apache.hadoop.fs.FileSystem, path: String,
+      v: Int): Seq[String] = {
+    val in = f.open(manifestPath(path, v))
+    try new String(in.readAllBytes(), UTF_8).split("\n")
+      .filter(_.nonEmpty).toSeq
+    finally in.close()
+  }
+
+  private def publishManifest(f: org.apache.hadoop.fs.FileSystem,
+      path: String, v: Int, lines: Seq[String]): Unit =
+    createExclusive(f, manifestPath(path, v), lines.mkString("\n")
+      .getBytes(UTF_8))
+
+  /** The carry rule of every commit: the lines of the data directories
+    * whose name `keep` accepts, with their `#stats:`/`#size:` lines — an
+    * append carries every directory, a rewrite the untouched ones.  `#txn`
+    * markers stay in the version that wrote them ([[txnMarkers]] scans
+    * every manifest; [[vacuum]] folds the dropped ones forward). */
+  private def carried(lines: Seq[String],
+      keep: String => Boolean): Seq[String] =
+    lines.filter { l =>
+      if (!l.startsWith("#")) keep(new Path(l).getName)
+      else (l.startsWith("#stats:") || l.startsWith("#size:")) &&
+        keep(dec(l.split(":", -1)(1)))
+    }
+
+  /** Full manifest decode of snapshot `v`: (data dirs, per-(dir, column)
+    * stats, per-dir data bytes).  One tiny manifest read — no file
+    * listing, no footer. */
+  private[graft] def manifestEntries(spark: SparkSession, path: String,
+      v: Int): (Seq[String], Map[(String, String), (String, String, String)],
+        Map[String, Long]) = {
+    val lines = manifestLines(fs(spark, path), path, v)
+    val dirs = lines.filterNot(_.startsWith("#"))
+    val stats = lines.filter(_.startsWith("#stats:")).flatMap { l =>
+      l.stripPrefix("#stats:").split(":", -1) match {
+        case Array(d, c, kind, mn, mx) =>
+          Some((dec(d), dec(c)) -> (kind, dec(mn), dec(mx)))
+        case _ => None
+      }
+    }.toMap
+    val sizes = lines.filter(_.startsWith("#size:")).flatMap { l =>
+      l.stripPrefix("#size:").split(":", -1) match {
+        case Array(d, b) => scala.util.Try(dec(d) -> b.toLong).toOption
+        case _ => None
+      }
+    }.toMap
+    (dirs, stats, sizes)
+  }
+
+  /** The `#txn:` ids of every manifest still present, oldest first;
+    * lazy, so a lookup stops reading at its first hit. */
+  private def txnMarkers(spark: SparkSession, path: String): Iterator[String] = {
+    val f = fs(spark, path)
+    (0 to latestVersion(spark, path)).iterator
+      .filter(v => f.exists(manifestPath(path, v)))
+      .flatMap(v => manifestLines(f, path, v))
+      .collect { case l if l.startsWith("#txn:") => l.stripPrefix("#txn:") }
+  }
+
+  // ---- data directories and footers -------------------------------------
+
+  /** A writer-unique data directory for version `v`; `suffix` tags a
+    * rewrite (c compaction, z Z-order, d delete, m merge).  See
+    * [[commit]] for why names are never reused. */
+  private def newDataDir(path: String, v: Int, suffix: String = ""): String = {
+    val nonce = java.lang.Long.toHexString(
+      System.nanoTime() ^ (Thread.currentThread().getId << 40))
+    s"$path/files/v$v$suffix-$nonce"
+  }
+
+  /** The data files of one lake directory: plain files, without the
+    * `_`/`.`-prefixed job and checksum files. */
+  private[graft] def dataFiles(conf: org.apache.hadoop.conf.Configuration,
+      dir: String): Array[FileStatus] = {
+    val p = new Path(dir)
+    p.getFileSystem(conf).listStatus(p).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
+  /** The schema every snapshot read resolves to: the newest commit's
+    * footer (`dirs.last`), read from one directory.  `spark.read.parquet`
+    * over several directories does not merge footers and does not take
+    * the newest one either, so every reader passes this schema
+    * explicitly. */
+  private[graft] def newestFooter(spark: SparkSession,
+      dirs: Seq[String]): StructType =
+    spark.read.parquet(dirs.last).schema
+
+  /** The union of every directory's footer — one footer read per
+    * directory, for the schema-evolution read and for rewrites, which
+    * must not drop a column some directory still carries. */
+  private def unionFooter(spark: SparkSession, dirs: Seq[String]): StructType =
+    dirs.map(d => spark.read.parquet(d).schema)
+      .reduce(org.apache.spark.sql.GraftBridge.mergeSchemas)
+
+  /** Snapshot `v` (or the `only` subset of its directories) through a
+    * [[graft.sources.LakeFileIndex]] carrying the manifest's stats and
+    * sizes, under the schema `footer` resolves from the snapshot's
+    * directories — the one indexed reader behind every lake read but
+    * [[readVersion]]. */
+  private def lakeTable(spark: SparkSession, path: String, v: Int,
+      only: Option[Seq[String]] = None)(
+      footer: Seq[String] => StructType = newestFooter(spark, _))
+      : (DataFrame, graft.sources.LakeFileIndex) = {
+    val (dirs, stats, sizes) = manifestEntries(spark, path, v)
+    require(dirs.nonEmpty, s"snapshot v$v of $path has no data directories")
+    val sch = footer(dirs)
+    val index = new graft.sources.LakeFileIndex(spark,
+      only.getOrElse(dirs), stats, sizes)
+    (org.apache.spark.sql.GraftBridge.parquetTable(spark, index, sch), index)
+  }
+
+  // ---- commits ------------------------------------------------------------
 
   /** One commit = one data write + one manifest CAS, concurrency-safe by
     * RETRY-ON-CONFLICT rather than a lock.
@@ -266,32 +405,19 @@ object LayoutOps {
       maxRetries: Int = 8, statsCols: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
     val f = fs(spark, path)
-    val nonce = java.lang.Long.toHexString(
-      System.nanoTime() ^ (Thread.currentThread().getId << 40))
-    val dataDir = s"$path/files/v${latestVersion(spark, path) + 1}-$nonce"
-    val statLines = writeWithStats(df, dataDir, statsCols)
+    val dataDir = newDataDir(path, latestVersion(spark, path) + 1)
+    val entries = dataDir +: writeWithStats(df, dataDir, statsCols)
     var attempt = 0
     var committed = -1
     while (committed < 0) {
       val v = latestVersion(spark, path) + 1
-      val prev: Seq[String] =
-        if (carryPrevious && v > 0) {
-          val in = f.open(manifestPath(path, v - 1))
-          val txt = new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8)
-          in.close()
-          // data dirs AND their carried stats/size lines compose the
-          // snapshot; #txn markers stay in the version that wrote them
-          // (txnCommitted scans all manifests, vacuum folds dropped ones)
-          txt.split("\n").filter(l => l.nonEmpty &&
-            (!l.startsWith("#") || l.startsWith("#stats:") ||
-              l.startsWith("#size:"))).toSeq
-        } else Seq.empty
+      val prev =
+        if (carryPrevious && v > 0) carried(manifestLines(f, path, v - 1),
+          _ => true)
+        else Nil
       try {
-        createExclusive(f, manifestPath(path, v),
-          (txn.map(t => s"#txn:$t").toSeq ++ prev ++ (dataDir +: statLines))
-            .mkString("\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        publishManifest(f, path, v,
+          txn.map(t => s"#txn:$t").toSeq ++ prev ++ entries)
         committed = v
       } catch {
         case e: Throwable if alreadyExists(e) && attempt < maxRetries =>
@@ -301,6 +427,30 @@ object LayoutOps {
       }
     }
     committed
+  }
+
+  /** The publish step of every REWRITE commit (compaction, DELETE,
+    * MERGE): write `rewritten` to one new `dirSuffix`-tagged directory,
+    * carry every `kept` directory's manifest lines by name, and CAS the
+    * manifest once at `base+1`.  A rewrite is only correct if nothing
+    * committed after `base`, so a concurrent winner means it is stale:
+    * None, no retry (the orphaned directory is writer-unique and
+    * vacuum-swept, like any crashed commit); callers re-run at the new
+    * tip. */
+  private def publishRewrite(spark: SparkSession, path: String, base: Int,
+      kept: Seq[String], rewritten: DataFrame, sCols: Seq[String],
+      dirSuffix: String): Option[Int] = {
+    val f = fs(spark, path)
+    val dataDir = newDataDir(path, base + 1, dirSuffix)
+    val entries = dataDir +: writeWithStats(rewritten, dataDir, sCols)
+    val keptNames = kept.map(d => new Path(d).getName).toSet
+    try {
+      publishManifest(f, path, base + 1,
+        carried(manifestLines(f, path, base), keptNames) ++ entries)
+      Some(base + 1)
+    } catch {
+      case e: Throwable if alreadyExists(e) => None
+    }
   }
 
   // ---- manifest column statistics (listing-level data skipping) ------
@@ -322,20 +472,21 @@ object LayoutOps {
   private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
   /** Conservative manifest encoding of one observed min/max value:
-    * (kind, literal).  Numerics (and date/time, via their epoch form)
-    * compare as decimals, strings compare lexicographically (Spark's own
-    * string ordering) — anything else is unsupported and yields no stats
-    * line (the directory is then never skipped). */
+    * (kind, literal).  Numerics compare as decimals; date/time values
+    * are recorded in the internal form a Catalyst literal of them
+    * carries (epoch days, epoch microseconds), so stats and filter
+    * literals agree for every date, before 1582 too; strings compare
+    * lexicographically (Spark's own string ordering) — anything else is
+    * unsupported and yields no stats line (the directory is then never
+    * skipped). */
   private def statLit(v: Any): Option[(String, String)] = v match {
     case null => None
     case n: java.lang.Number => Some(("num", n.toString)) // incl. BigDecimal
     case s: String => Some(("str", s))
-    case t: java.sql.Timestamp =>
-      Some(("num", (t.getTime * 1000 + t.getNanos / 1000 % 1000).toString))
-    case i: java.time.Instant =>
-      Some(("num", (i.getEpochSecond * 1000000L + i.getNano / 1000).toString))
-    case d: java.sql.Date => Some(("num", d.toLocalDate.toEpochDay.toString))
-    case d: java.time.LocalDate => Some(("num", d.toEpochDay.toString))
+    case t @ (_: java.sql.Timestamp | _: java.time.Instant |
+        _: java.sql.Date | _: java.time.LocalDate) => Some(("num",
+      org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .convertToCatalyst(t).toString))
     case _ => None
   }
 
@@ -345,12 +496,9 @@ object LayoutOps {
     * answer the planner's size question ([[readVersionIndexed]]'s
     * `sizeInBytes`); absent lines degrade to list-on-demand. */
   private def sizeLine(spark: SparkSession, dataDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dataDir)
-    val bytes = fs(spark, dataDir).listStatus(p).collect {
-      case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".") => s.getLen
-    }.sum
-    s"#size:${enc(p.getName)}:$bytes"
+    val bytes = dataFiles(spark.sparkContext.hadoopConfiguration, dataDir)
+      .map(_.getLen).sum
+    s"#size:${enc(new Path(dataDir).getName)}:$bytes"
   }
 
   /** Write `df` to `dataDir` and return its `#stats:` manifest lines for
@@ -372,7 +520,7 @@ object LayoutOps {
     df.observe(obs, aggs.head, aggs.tail: _*)
       .write.mode("errorifexists").parquet(dataDir)
     val m = obs.get
-    val dirName = new org.apache.hadoop.fs.Path(dataDir).getName
+    val dirName = new Path(dataDir).getName
     statsCols.zipWithIndex.flatMap { case (c, i) =>
       (m(s"mn$i"), m(s"mx$i")) match {
         // kind `none` means the delta had NO NON-NULL VALUES — it must
@@ -390,72 +538,68 @@ object LayoutOps {
     } :+ sizeLine(df.sparkSession, dataDir)
   }
 
+  /** Stat columns of a rewrite: `statsCols`, or else every column the
+    * base manifest already tracks. */
+  private def statColumns(statsCols: Seq[String],
+      stats: Map[(String, String), (String, String, String)]): Seq[String] =
+    if (statsCols.nonEmpty) statsCols
+    else stats.keys.map(_._2).toSeq.distinct.sorted
+
+  /** `lo <= column <= hi` in the Catalyst form
+    * [[graft.sources.LakeFileIndex.mayMatch]] reads, built from the
+    * bounds directly: the analyzer would wrap a column narrower than the
+    * bounds in a Cast that mayMatch cannot prune on.  None — keep every
+    * directory — when the bounds share no stats kind ([[statLit]]); a
+    * NaN or infinite bound orders nothing, so such a range can only rule
+    * out all-null directories. */
+  private def rangeCondition(column: String, lo: Any,
+      hi: Any): Option[Expression] =
+    (statLit(lo), statLit(hi)) match {
+      case (Some((k1, _)), Some((k2, _))) if k1 == k2 =>
+        scala.util.Try((Literal.create(lo), Literal.create(hi))).toOption
+          .map { case (l, h) =>
+            val a = AttributeReference(column, l.dataType)()
+            val ordered = Seq(l, h).forall(b =>
+              graft.sources.LakeFileIndex.litKind(b.value, b.dataType)
+                .isDefined)
+            if (ordered) And(GreaterThanOrEqual(a, l), LessThanOrEqual(a, h))
+            else IsNotNull(a)
+          }
+      case _ => None
+    }
+
   /** Split snapshot `v`'s data directories into (kept, skipped) for the
     * closed range `lo..hi` on `column`, using only manifest stats — no
-    * file listing, no footer reads.  Conservative in every direction:
-    * directories without a stats line for `column` are kept, stats of a
-    * different kind than the bounds are kept, unsupported bound types
-    * keep everything; only a directory whose recorded delta range lies
-    * wholly outside `lo..hi` (or whose delta had no non-null values —
-    * kind `none`) is skipped, which a range predicate cannot observe. */
+    * file listing, no footer reads — by the lake's one pruning rule,
+    * [[graft.sources.LakeFileIndex.prune]].  Conservative in every
+    * direction: directories without a stats line for `column` are kept,
+    * stats of a different kind than the bounds are kept, unsupported
+    * bound types keep everything; only a directory whose recorded delta
+    * range lies wholly outside `lo..hi` (or whose delta had no non-null
+    * values — kind `none`) is skipped, which a range predicate cannot
+    * observe. */
   def rangeDirs(spark: SparkSession, path: String, v: Int, column: String,
       lo: Any, hi: Any): (Seq[String], Seq[String]) = {
-    val (dirs, allStats, _) = manifestEntries(spark, path, v)
-    val stats: Map[String, (String, String, String)] =
-      allStats.collect { case ((d, c), st) if c == column => d -> st }
-    (statLit(lo), statLit(hi)) match {
-      case (Some((bk1, bLo)), Some((bk2, bHi))) if bk1 == bk2 =>
-        // strings compare in UTF8String BYTE order — the ordering
-        // Spark's min/max used when the stats were observed and the
-        // ordering the re-applied filter uses (Java String compare
-        // disagrees for supplementary-plane vs U+E000..U+FFFF values
-        // and would wrongly skip directories)
-        def strCmp(a: String, b: String): Int =
-          org.apache.spark.unsafe.types.UTF8String.fromString(a)
-            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-        val keep = (kind: String, mn: String, mx: String) => kind match {
-          case "none" => false
-          case k if k != bk1 => true // foreign-typed stats: no claim
-          case "num" =>
-            val (l, h) = (new java.math.BigDecimal(bLo),
-              new java.math.BigDecimal(bHi))
-            !(new java.math.BigDecimal(mx).compareTo(l) < 0 ||
-              new java.math.BigDecimal(mn).compareTo(h) > 0)
-          case _ => !(strCmp(mx, bLo) < 0 || strCmp(mn, bHi) > 0)
-        }
-        dirs.partition { d =>
-          val name = new org.apache.hadoop.fs.Path(d).getName
-          stats.get(name).forall { case (k, mn, mx) =>
-            try keep(k, mn, mx)
-            catch { case _: NumberFormatException => true }
-          }
-        }
-      case _ => (dirs, Nil) // unsupported bounds: read everything
-    }
+    val (dirs, stats, _) = manifestEntries(spark, path, v)
+    rangeCondition(column, lo, hi).fold((dirs, Seq.empty[String]))(c =>
+      graft.sources.LakeFileIndex.prune(dirs, stats, Seq(c)))
   }
 
   /** Time-travel read of snapshot `v` restricted to `column` in
-    * `lo..hi` (closed range), with manifest-stats directory pruning.
-    * The predicate is re-applied to the surviving directories, so the
-    * result equals `readVersion(...).where(column between lo and hi)`
-    * whether or not any commit recorded stats. */
+    * `lo..hi` (closed range), with manifest-stats directory pruning: the
+    * indexed reader over [[rangeDirs]]' kept directories.  The predicate
+    * is re-applied to the surviving rows, so the result equals
+    * `readVersion(...).where(column between lo and hi)` — same columns
+    * too, at any bounds — whether or not any commit recorded stats. */
   def readVersionRange(spark: SparkSession, path: String, v: Int,
       column: String, lo: Any, hi: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _) = rangeDirs(spark, path, v, column, lo, hi)
-    val flt = col(column).between(lit(lo), lit(hi))
-    if (kept.isEmpty) {
-      // all directories pruned: build the empty frame from ONE footer
-      // (schema only) — a full-snapshot read here would pay the
-      // O(files) listing cost exactly when pruning saved the most
-      val (dirs, _, _) = manifestEntries(spark, path, v)
-      val sch = spark.read.parquet(dirs.last).schema
-      org.apache.spark.sql.GraftBridge.parquetTable(spark,
-        new graft.sources.LakeFileIndex(spark, Nil, Map.empty, Map.empty),
-        sch).where(flt)
-    }
-    else spark.read.parquet(kept: _*).where(flt)
+    lakeTable(spark, path, v, Some(kept))()._1
+      .where(col(column).between(lit(lo), lit(hi)))
   }
+
+  // ---- compaction ---------------------------------------------------------
 
   /** Rewrite snapshot `base` into `targetFiles` files and publish the
     * result as version `base + 1` — the OPTIMIZE step that undoes the
@@ -468,23 +612,16 @@ object LayoutOps {
     * small directories are reclaimed by [[vacuum]] once `keepFrom`
     * passes them.
     *
-    * Concurrency: the rewrite is only correct if NOTHING commits after
-    * `base` was read, so the manifest CAS here is attempted exactly once
-    * at `base + 1` — a concurrent winner means the compacted data is
-    * stale, and the call returns None WITHOUT retrying (the orphaned
-    * rewrite directory is writer-unique and vacuum-swept, like any
-    * crashed commit).  Callers re-run compaction at the new tip.
-    * `coalesce` keeps the rewrite shuffle-free; pass `statsCols` to
-    * re-establish manifest stats over the merged directory. */
+    * Concurrency: the [[publishRewrite]] discipline — one CAS at
+    * `base + 1`, None if a concurrent commit won it (callers re-run
+    * compaction at the new tip).  `coalesce` keeps the rewrite
+    * shuffle-free; pass `statsCols` to re-establish manifest stats over
+    * the merged directory. */
   def compactFrom(spark: SparkSession, path: String, base: Int,
       targetFiles: Int = 1, statsCols: Seq[String] = Nil,
       sortCol: Option[String] = None): Option[Int] = {
     require(targetFiles > 0, "targetFiles must be positive")
     if (base < 0) return None // not-yet-written table: nothing to compact
-    val f = fs(spark, path)
-    val nonce = java.lang.Long.toHexString(
-      System.nanoTime() ^ (Thread.currentThread().getId << 40))
-    val dataDir = s"$path/files/v${base + 1}c-$nonce"
     val snap = readVersion(spark, path, base)
     // plain compaction is shuffle-free (coalesce); re-CLUSTERING
     // compaction pays one range exchange to sort the snapshot on
@@ -498,15 +635,7 @@ object LayoutOps {
       snap.repartitionByRange(targetFiles, col(c))
         .sortWithinPartitions(col(c))
     }
-    val statLines = writeWithStats(arranged, dataDir, statsCols)
-    try {
-      createExclusive(f, manifestPath(path, base + 1),
-        (dataDir +: statLines).mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Some(base + 1)
-    } catch {
-      case e: Throwable if alreadyExists(e) => None
-    }
+    publishRewrite(spark, path, base, Nil, arranged, statsCols, "c")
   }
 
   /** Z-ORDER compaction: rewrite the latest snapshot clustered on the
@@ -553,7 +682,8 @@ object LayoutOps {
       targetFiles: Int = 1, statsCols: Seq[String] = Nil,
       sortCol: Option[String] = None): Option[Int] = {
     val base = latestVersion(spark, path)
-    if (base < 0 || manifestDirs(spark, path, base).size <= maxDirs) None
+    if (base < 0 || manifestEntries(spark, path, base)._1.size <= maxDirs)
+      None
     else compactFrom(spark, path, base, targetFiles, statsCols, sortCol)
   }
 
@@ -571,19 +701,8 @@ object LayoutOps {
   /** True iff some committed manifest carries `#txn:<txn>` — i.e. the
     * logical write with this id is already part of the table.  O(number
     * of versions) tiny manifest reads; no data files are touched. */
-  def txnCommitted(spark: SparkSession, path: String, txn: String): Boolean = {
-    val f = fs(spark, path)
-    (0 to latestVersion(spark, path)).exists { v =>
-      val mp = manifestPath(path, v)
-      f.exists(mp) && {
-        val in = f.open(mp)
-        val txt = new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        in.close()
-        txt.split("\n").contains(s"#txn:$txn")
-      }
-    }
-  }
+  def txnCommitted(spark: SparkSession, path: String, txn: String): Boolean =
+    txnMarkers(spark, path).contains(txn)
 
   /** Overwrite commit: the new snapshot = `df` alone (old versions stay
     * readable — nothing is deleted). */
@@ -591,46 +710,22 @@ object LayoutOps {
       statsCols: Seq[String] = Nil): Int =
     commit(df, path, carryPrevious = false, statsCols = statsCols)
 
-  /** Full manifest decode of snapshot `v`: (data dirs, per-(dir, column)
-    * stats, per-dir data bytes).  One tiny manifest read — no file
-    * listing, no footer. */
-  private[graft] def manifestEntries(spark: SparkSession, path: String,
-      v: Int): (Seq[String], Map[(String, String), (String, String, String)],
-        Map[String, Long]) = {
-    val in = fs(spark, path).open(manifestPath(path, v))
-    val lines = new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").toSeq
-    in.close()
-    val dirs = lines.filter(l => l.nonEmpty && !l.startsWith("#"))
-    val stats = lines.filter(_.startsWith("#stats:")).flatMap { l =>
-      l.stripPrefix("#stats:").split(":", -1) match {
-        case Array(d, c, kind, mn, mx) =>
-          Some((dec(d), dec(c)) -> (kind, dec(mn), dec(mx)))
-        case _ => None
-      }
-    }.toMap
-    val sizes = lines.filter(_.startsWith("#size:")).flatMap { l =>
-      l.stripPrefix("#size:").split(":", -1) match {
-        case Array(d, b) => scala.util.Try(dec(d) -> b.toLong).toOption
-        case _ => None
-      }
-    }.toMap
-    (dirs, stats, sizes)
+  // ---- snapshot reads -----------------------------------------------------
+
+  /** Time-travel read of snapshot `v` (any committed version): a plain
+    * parquet read of its directories under the newest commit's footer. */
+  def readVersion(spark: SparkSession, path: String, v: Int): DataFrame = {
+    val (dirs, _, _) = manifestEntries(spark, path, v)
+    spark.read.schema(newestFooter(spark, dirs)).parquet(dirs: _*)
   }
 
   /** [[readVersionIndexed]] plus the live [[graft.sources.LakeFileIndex]]
     * for pruning-census assertions. */
   private[graft] def indexedRead(spark: SparkSession, path: String, v: Int,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (DataFrame, graft.sources.LakeFileIndex) = {
-    val (dirs, stats, sizes) = manifestEntries(spark, path, v)
-    require(dirs.nonEmpty, s"snapshot v$v of $path has no data directories")
-    // newest commit's footer wins, matching readVersion's non-merging
-    // parquet schema resolution; pass `schema` explicitly to override
-    val sch = schema.getOrElse(spark.read.parquet(dirs.last).schema)
-    val index = new graft.sources.LakeFileIndex(spark, dirs, stats, sizes)
-    (org.apache.spark.sql.GraftBridge.parquetTable(spark, index, sch), index)
-  }
+      schema: Option[StructType] = None)
+      : (DataFrame, graft.sources.LakeFileIndex) =
+    lakeTable(spark, path, v)(dirs =>
+      schema.getOrElse(newestFooter(spark, dirs)))
 
   /** Time-travel read of snapshot `v` through a manifest-backed
     * [[graft.sources.LakeFileIndex]]: any pushed-down filter on a
@@ -645,8 +740,7 @@ object LayoutOps {
     * predicate (pruning is conservative; Spark re-applies the full
     * filter to surviving rows). */
   def readVersionIndexed(spark: SparkSession, path: String, v: Int,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame =
+      schema: Option[StructType] = None): DataFrame =
     indexedRead(spark, path, v, schema)._1
 
   /** [[readVersionIndexed]] under the UNION of every commit's schema —
@@ -659,116 +753,86 @@ object LayoutOps {
     * old directory happens to be last.  Same planner-integrated pruning:
     * the merged schema rides the same LakeFileIndex. */
   def readVersionEvolved(spark: SparkSession, path: String,
-      v: Int): DataFrame = {
-    val (dirs, _, _) = manifestEntries(spark, path, v)
-    require(dirs.nonEmpty, s"snapshot v$v of $path has no data directories")
-    val merged = dirs.map(d => spark.read.parquet(d).schema)
-      .reduce(org.apache.spark.sql.GraftBridge.mergeSchemas)
-    indexedRead(spark, path, v, Some(merged))._1
-  }
+      v: Int): DataFrame =
+    lakeTable(spark, path, v)(unionFooter(spark, _))._1
 
-  /** Incremental (CDC-style) read: the rows APPENDED between snapshot
-    * `fromV` (exclusive; -1 = from the beginning) and snapshot `toV`
-    * (inclusive), computed structurally from the two manifests — the
-    * delta is exactly the data directories `toV` references that `fromV`
-    * does not, so the cost is O(delta), never a re-read or anti-join of
-    * the full table.  This is how an incremental consumer (a downstream
-    * index append, a DSIR update, a micro-batch tail) catches up with an
-    * append-only lake: checkpoint the last version processed, read the
-    * delta, advance.
-    *
-    * Only sound while every commit in `(fromV, toV]` was an APPEND: a
-    * compaction or overwrite in the interval rewrites history (old
-    * directories vanish), so the structural delta is undefined and this
-    * throws rather than silently replaying the whole snapshot as "new".
-    * The result is served through [[graft.sources.LakeFileIndex]], so
-    * pushed filters prune the delta's directories like any other read. */
-  def readVersionDelta(spark: SparkSession, path: String, fromV: Int,
-      toV: Int): DataFrame = {
+  /** The data directories snapshot `toV` adds to snapshot `fromV`
+    * (exclusive; -1 = from the beginning) — the structural append-delta
+    * behind [[readVersionDelta]], [[lakeTail]], [[lakeMirror]] and the
+    * lake stream source.  Two manifest reads, no listing.  Throws when a
+    * directory of `fromV` is gone from `toV`: a compaction, overwrite,
+    * DELETE or MERGE in between rewrote history, and replaying the
+    * snapshot as "new" would be wrong. */
+  private[graft] def appendedDirs(spark: SparkSession, path: String,
+      fromV: Int, toV: Int): Seq[String] = {
     require(fromV <= toV, s"fromV $fromV must be <= toV $toV")
     val fromDirs: Set[String] =
       if (fromV < 0) Set.empty
       else manifestEntries(spark, path, fromV)._1.toSet
-    val (toDirs, stats, sizes) = manifestEntries(spark, path, toV)
-    val rewritten = fromDirs -- toDirs.toSet
+    val toDirs = manifestEntries(spark, path, toV)._1
+    val rewritten = fromDirs -- toDirs
     require(rewritten.isEmpty,
       s"versions $fromV..$toV of $path contain a compaction/overwrite " +
         s"(${rewritten.size} directories rewritten) — the structural " +
         "append-delta is undefined; re-seed the consumer from a full " +
         "snapshot read instead")
-    val newDirs = toDirs.filterNot(fromDirs)
-    val sch = spark.read.parquet(toDirs.last).schema
-    if (newDirs.isEmpty)
-      org.apache.spark.sql.GraftBridge.parquetTable(spark,
-        new graft.sources.LakeFileIndex(spark, Nil, Map.empty, Map.empty),
-        sch)
-    else {
-      val names = newDirs.map(d =>
-        new org.apache.hadoop.fs.Path(d).getName).toSet
-      org.apache.spark.sql.GraftBridge.parquetTable(spark,
-        new graft.sources.LakeFileIndex(spark, newDirs,
-          stats.filter { case ((d, _), _) => names(d) },
-          sizes.filter { case (d, _) => names(d) }), sch)
-    }
+    toDirs.filterNot(fromDirs)
   }
 
-  /** Shared publish step of the directory-granular REWRITE commits
-    * (DELETE / MERGE): write `survivors` to one new `dirSuffix`-tagged
-    * directory, carry every kept directory's manifest lines verbatim by
-    * name, and CAS the manifest once at `base+1` (a concurrent winner
-    * means the rewrite is stale: None, orphan vacuum-swept — the
-    * [[compactFrom]] discipline). */
-  private def publishRewrite(spark: SparkSession, path: String, base: Int,
-      kept: Seq[String], survivors: DataFrame, sCols: Seq[String],
-      dirSuffix: String): Option[Int] = {
-    val f = fs(spark, path)
-    val nonce = java.lang.Long.toHexString(
-      System.nanoTime() ^ (Thread.currentThread().getId << 40))
-    val dataDir = s"$path/files/v${base + 1}$dirSuffix-$nonce"
-    val statLines = writeWithStats(survivors, dataDir, sCols)
-    val keptNames = kept
-      .map(d => new org.apache.hadoop.fs.Path(d).getName).toSet
-    val in = f.open(manifestPath(path, base))
-    val raw = new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").toSeq
-    in.close()
-    val carried = raw.filter { l =>
-      if (l.isEmpty) false
-      else if (!l.startsWith("#"))
-        keptNames(new org.apache.hadoop.fs.Path(l).getName)
-      else if (l.startsWith("#stats:") || l.startsWith("#size:"))
-        l.split(":", -1).lift(1).exists(d => keptNames(dec(d)))
-      else false // #txn markers stay in the version that wrote them
-    }
-    try {
-      createExclusive(f, manifestPath(path, base + 1),
-        (carried ++ (dataDir +: statLines)).mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Some(base + 1)
-    } catch {
-      case e: Throwable if alreadyExists(e) => None
-    }
-  }
+  /** Incremental (CDC-style) read: the rows APPENDED between snapshot
+    * `fromV` (exclusive; -1 = from the beginning) and snapshot `toV`
+    * (inclusive), computed structurally from the two manifests
+    * ([[appendedDirs]]), so the cost is O(delta), never a re-read or
+    * anti-join of the full table.  This is how an incremental consumer
+    * (a downstream index append, a DSIR update, a micro-batch tail)
+    * catches up with an append-only lake: checkpoint the last version
+    * processed, read the delta, advance.  Only sound while every commit
+    * in `(fromV, toV]` was an APPEND; otherwise this throws.  The result
+    * is served through [[graft.sources.LakeFileIndex]], so pushed
+    * filters prune the delta's directories like any other read. */
+  def readVersionDelta(spark: SparkSession, path: String, fromV: Int,
+      toV: Int): DataFrame =
+    lakeTable(spark, path, toV,
+      Some(appendedDirs(spark, path, fromV, toV)))()._1
+
+  // ---- row-level rewrites -------------------------------------------------
+
+  /** `predicate` analyzed against `schema` — resolved attributes and
+    * Catalyst comparison nodes, the form the pruning rule reads. */
+  private def analyzed(spark: SparkSession, schema: StructType,
+      predicate: org.apache.spark.sql.Column): Expression =
+    org.apache.spark.sql.GraftBridge.analyzedCondition(
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema),
+      predicate)
+
+  /** Read `dirs` under the UNION of their footer schemas — a rewrite
+    * that resolved the schema from one arbitrary footer would silently
+    * DROP evolved columns from the rewritten directory (heterogeneous
+    * commit schemas are a supported lake state; see
+    * [[readVersionEvolved]]). */
+  private def readMerged(spark: SparkSession,
+      dirs: Seq[String]): DataFrame =
+    spark.read.schema(unionFooter(spark, dirs)).parquet(dirs: _*)
 
   /** Row-level DELETE with directory-granular rewrites: publish (as
     * version `base+1`) a snapshot equal to the current one minus every
     * row where `predicate` is TRUE (false/null rows are kept — SQL
     * DELETE semantics).  Cost is ∝ the AFFECTED directories, not the
-    * table: the manifest stats decide, via the same conservative
-    * interval logic the planner-integrated read uses
-    * (`LakeFileIndex.mayMatch`), which directories the predicate could
-    * possibly touch; only those are read, filtered and rewritten into
-    * one new directory — every other directory (and its stats/size
-    * lines) is carried by NAME, its files untouched.  At 100 TB a
-    * day-ranged retention delete on a day-stats'd lake rewrites one
-    * day's commits, not the lake.
+    * table: the manifest stats decide, by the same pruning rule the
+    * planner-integrated read uses (`LakeFileIndex.prune`), which
+    * directories the predicate could possibly touch; only those are
+    * read, filtered and rewritten into one new directory — every other
+    * directory (and its stats/size lines) is carried by NAME, its files
+    * untouched.  At 100 TB a day-ranged retention delete on a
+    * day-stats'd lake rewrites one day's commits, not the lake.
     *
     * Returns Some(newVersion) when a new version was published; None
     * when nothing could match (the delete is trivially complete) or a
-    * concurrent commit won the single CAS (same discipline as
-    * [[compactFrom]] — re-run at the new tip; the orphaned rewrite is
-    * vacuum-swept).  `statsCols = Nil` inherits the stat columns the
-    * base manifest already tracks.  NOTE: a delete REWRITES history, so
+    * concurrent commit won the single CAS ([[publishRewrite]] — re-run
+    * at the new tip; the orphaned rewrite is vacuum-swept).
+    * `statsCols = Nil` inherits the stat columns the base manifest
+    * already tracks.  NOTE: a delete REWRITES history, so
     * structural-delta consumers ([[readVersionDelta]], [[lakeTail]],
     * the lake stream) refuse intervals spanning it — by design. */
   def deleteWhere(spark: SparkSession,
@@ -777,33 +841,14 @@ object LayoutOps {
     val base = latestVersion(spark, path)
     if (base < 0) return None
     val (dirs, stats, _) = manifestEntries(spark, path, base)
-    val expr = org.apache.spark.sql.GraftBridge.analyzedCondition(
-      spark.read.parquet(dirs.last), predicate)
-    val (affected, kept) = dirs.partition { d =>
-      val name = new org.apache.hadoop.fs.Path(d).getName
-      graft.sources.LakeFileIndex.mayMatch(expr,
-        c => stats.get((name, c)))
-    }
+    val (affected, kept) = graft.sources.LakeFileIndex.prune(dirs, stats,
+      Seq(analyzed(spark, newestFooter(spark, dirs), predicate)))
     if (affected.isEmpty) return None
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val sCols =
-      if (statsCols.nonEmpty) statsCols
-      else stats.keys.map(_._2).toSeq.distinct.sorted
     val survivors = readMerged(spark, affected)
       .where(not(coalesce(predicate, lit(false))))
-    publishRewrite(spark, path, base, kept, survivors, sCols, "d")
-  }
-
-  /** Read `dirs` under the UNION of their footer schemas — a rewrite
-    * that resolved the schema from one arbitrary footer would silently
-    * DROP evolved columns from the rewritten directory (heterogeneous
-    * commit schemas are a supported lake state; see
-    * [[readVersionEvolved]]). */
-  private def readMerged(spark: SparkSession,
-      dirs: Seq[String]): DataFrame = {
-    val sch = dirs.map(d => spark.read.parquet(d).schema)
-      .reduce(org.apache.spark.sql.GraftBridge.mergeSchemas)
-    spark.read.schema(sch).parquet(dirs: _*)
+    publishRewrite(spark, path, base, kept, survivors,
+      statColumns(statsCols, stats), "d")
   }
 
   /** MERGE (upsert) into the lake with directory-granular rewrites:
@@ -850,25 +895,16 @@ object LayoutOps {
     if (kr.isNullAt(0) && updates.limit(1).count() == 0) return None
     val (affected, kept) =
       if (kr.isNullAt(0)) (Seq.empty[String], dirs) // all-null keys
-      else {
-        val between = col(key).between(lit(kr.get(0)), lit(kr.get(1)))
-        val expr = org.apache.spark.sql.GraftBridge.analyzedCondition(
-          spark.read.parquet(dirs.last), between)
-        dirs.partition { d =>
-          val name = new org.apache.hadoop.fs.Path(d).getName
-          graft.sources.LakeFileIndex.mayMatch(expr,
-            c => stats.get((name, c)))
-        }
-      }
-    val sCols =
-      if (statsCols.nonEmpty) statsCols
-      else stats.keys.map(_._2).toSeq.distinct.sorted
+      else graft.sources.LakeFileIndex.prune(dirs, stats,
+        Seq(analyzed(spark, newestFooter(spark, dirs),
+          col(key).between(lit(kr.get(0)), lit(kr.get(1))))))
     val survivors =
       if (affected.isEmpty) updates
       else readMerged(spark, affected)
         .join(updates.select(col(key)).distinct(), Seq(key), "left_anti")
         .unionByName(updates, allowMissingColumns = true)
-    publishRewrite(spark, path, base, kept, survivors, sCols, "m")
+    publishRewrite(spark, path, base, kept, survivors,
+      statColumns(statsCols, stats), "m")
   }
 
   // ---- incremental consumption (the dual of StreamingOps.lakeSink) --
@@ -888,13 +924,12 @@ object LayoutOps {
   def lakeTail(spark: SparkSession, path: String, checkpoint: String)
       (f: (DataFrame, Int) => Unit): Int = {
     val fsys = fs(spark, checkpoint)
-    val curPath = new org.apache.hadoop.fs.Path(s"$checkpoint/cursor")
+    val curPath = new Path(s"$checkpoint/cursor")
     val cursor: Int =
       if (!fsys.exists(curPath)) -1
       else {
         val in = fsys.open(curPath)
-        val s = new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
+        val s = new String(in.readAllBytes(), UTF_8).trim
         in.close()
         s.toInt
       }
@@ -904,11 +939,10 @@ object LayoutOps {
       f(readVersionDelta(spark, path, cursor, latest), latest)
       // durable cursor advance: stage + rename (atomic replace on posix
       // and HDFS; a torn cursor is impossible, a stale one only replays)
-      val tmp = new org.apache.hadoop.fs.Path(
+      val tmp = new Path(
         s"$checkpoint/.cursor.${java.util.UUID.randomUUID()}.tmp")
       val out = fsys.create(tmp, true)
-      out.write(latest.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.write(latest.toString.getBytes(UTF_8))
       out.close()
       if (!fsys.rename(tmp, curPath)) {
         fsys.delete(curPath, false)
@@ -935,47 +969,16 @@ object LayoutOps {
       statsCols: Seq[String] = Nil): Option[Int] = {
     val latest = latestVersion(spark, src)
     if (latest < 0) return None
-    // one pass over dst's manifests for the highest mirror marker
-    val f = fs(spark, dst)
-    val mirrored = (0 to latestVersion(spark, dst)).flatMap { v =>
-      val mp = manifestPath(dst, v)
-      if (!f.exists(mp)) Seq.empty[Int]
-      else {
-        val in = f.open(mp)
-        val txt = new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        in.close()
-        txt.split("\n").toSeq
-          .filter(_.startsWith("#txn:mirror"))
-          .flatMap(_.stripPrefix("#txn:mirror").toIntOption)
-      }
-    }.foldLeft(-1)((a, b) => math.max(a, b))
+    val mirrored = txnMarkers(spark, dst)
+      .filter(_.startsWith("mirror"))
+      .flatMap(_.stripPrefix("mirror").toIntOption)
+      .foldLeft(-1)(math.max)
     if (mirrored >= latest) None
     else {
       commitAppend(readVersionDelta(spark, src, mirrored, latest), dst,
         txn = Some(s"mirror$latest"), statsCols = statsCols)
       Some(latest)
     }
-  }
-
-  /** Time-travel read of snapshot `v` (any committed version). */
-  def readVersion(spark: SparkSession, path: String, v: Int): DataFrame = {
-    val in = fs(spark, path).open(manifestPath(path, v))
-    val dirs = new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").filter(l => l.nonEmpty && !l.startsWith("#"))
-    in.close()
-    spark.read.parquet(dirs.toIndexedSeq: _*)
-  }
-
-  private def manifestDirs(spark: SparkSession, path: String,
-      v: Int): Seq[String] = {
-    val in = fs(spark, path).open(manifestPath(path, v))
-    val dirs = new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
-    in.close()
-    dirs
   }
 
   /** VACUUM: drop every version below `keepFrom` and delete every data
@@ -1000,15 +1003,15 @@ object LayoutOps {
       s"keepFrom must be in 0..$latest")
     val f = fs(spark, path)
     val keep = (keepFrom to latest)
-      .flatMap(v => manifestDirs(spark, path, v)).toSet
+      .flatMap(v => manifestEntries(spark, path, v)._1).toSet
     // versions below an earlier vacuum's cut are already gone — skip them
     val present = (0 until keepFrom)
       .filter(v => f.exists(manifestPath(path, v)))
     // sweep by directory NAME under files/ (manifest strings and FS
     // listings may differ in scheme qualification, names cannot)
-    val keepNames = keep.map(d => new org.apache.hadoop.fs.Path(d).getName)
-    val filesRoot = new org.apache.hadoop.fs.Path(s"$path/files")
-    val dropped: Set[org.apache.hadoop.fs.Path] =
+    val keepNames = keep.map(d => new Path(d).getName)
+    val filesRoot = new Path(s"$path/files")
+    val dropped: Set[Path] =
       if (!f.exists(filesRoot)) Set.empty
       else f.listStatus(filesRoot).map(_.getPath)
         .filterNot(p => keepNames.contains(p.getName)).toSet
@@ -1020,21 +1023,11 @@ object LayoutOps {
     // create, the same commit point every write uses; no file is ever
     // rewritten), written BEFORE anything is deleted so a crash at any
     // point loses nothing.
-    def readLines(v: Int): Seq[String] = {
-      val in = f.open(manifestPath(path, v))
-      val txt = new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-      in.close()
-      txt.split("\n").filter(_.nonEmpty).toSeq
-    }
-    val droppedTxns = present.flatMap(readLines)
+    val droppedTxns = present.flatMap(v => manifestLines(f, path, v))
       .filter(_.startsWith("#txn:")).distinct
-    if (droppedTxns.nonEmpty) {
-      val fold = (droppedTxns ++ readLines(latest)).distinct
-      createExclusive(f, manifestPath(path, latest + 1),
-        fold.mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+    if (droppedTxns.nonEmpty)
+      publishManifest(f, path, latest + 1,
+        (droppedTxns ++ manifestLines(f, path, latest)).distinct)
     dropped.foreach(d => f.delete(d, true))
     present.foreach(v => f.delete(manifestPath(path, v), false))
     dropped.size

@@ -11,11 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Catalyst-integrated listing index over one versioned-lake snapshot:
   * the planner's own `dataFilters` drive manifest-stats directory
   * pruning, Delta-style, so `readVersionIndexed(...).where(col > x)`
-  * skips out-of-range commits with NO user hint — the pruning that
-  * `LayoutOps.readVersionRange` only performs when told the column and
-  * bounds explicitly.  (`FileSourceScanExec.selectedPartitions` hands
-  * every pushed data filter to `FileIndex.listFiles`; this index is the
-  * receiving end.)
+  * skips out-of-range commits with NO user hint.
+  * (`FileSourceScanExec.selectedPartitions` hands every pushed data
+  * filter to `FileIndex.listFiles`; this index is the receiving end.)
   *
   * Scale contract (the reason this exists at 100 TB): a pruned
   * directory is never even LISTED — `listFiles` touches the filesystem
@@ -24,8 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * streaming lake would otherwise cost 10 000 driver-side
   * `listStatus` calls per query just to plan).
   *
-  * Correctness contract (mirrors `LayoutOps.rangeDirs`): pruning is
-  * CONSERVATIVE — a directory is skipped only when its recorded
+  * Correctness contract ([[LakeFileIndex.prune]], the lake's one
+  * pruning rule: `LayoutOps.rangeDirs`, `deleteWhere` and `mergeInto`
+  * split directories by it too): pruning is CONSERVATIVE — a
+  * directory is skipped only when its recorded
   * min/max proves no row can satisfy the filters; missing stats,
   * foreign-typed stats, unparseable literals, and unsupported
   * expression shapes all keep the directory, and Spark re-applies the
@@ -54,14 +54,7 @@ class LakeFileIndex(
     new java.util.concurrent.ConcurrentHashMap[String, Array[FileStatus]]()
 
   private def filesOf(dir: String): Array[FileStatus] =
-    listed.computeIfAbsent(dir, d => {
-      val p = new Path(d)
-      val fs = p.getFileSystem(hadoopConf)
-      fs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    })
+    listed.computeIfAbsent(dir, graft.ops.LayoutOps.dataFiles(hadoopConf, _))
 
   /** Pruning census of the most recent `listFiles` call — (kept dirs,
     * skipped dirs); observable by specs and by `require`-gated queries
@@ -78,10 +71,7 @@ class LakeFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val (kept, skipped) = dirs.partition { d =>
-      val name = new Path(d).getName
-      dataFilters.forall(f => mayMatch(f, c => stats.get((name, c))))
-    }
+    val (kept, skipped) = prune(dirs, stats, dataFilters)
     lastPruning = (kept.size, skipped.size)
     kept.map(d => PartitionDirectory(InternalRow.empty, filesOf(d)))
   }
@@ -103,7 +93,7 @@ object LakeFileIndex {
     * decimals ("num"), strings as-is ("str"); None = no sound claim
     * (NaN, infinities, intervals, binary, …) so the caller keeps the
     * directory. */
-  private def litKind(v: Any, dt: DataType): Option[(String, String)] =
+  private[graft] def litKind(v: Any, dt: DataType): Option[(String, String)] =
     (v, dt) match {
       case (null, _) => None
       case (n: Byte, _) => Some(("num", n.toString))
@@ -134,10 +124,21 @@ object LakeFileIndex {
 
   private[graft] type Stat = String => Option[(String, String, String)]
 
+  /** Split `dirs` into (kept, skipped) under `filters`: a directory is
+    * skipped only when its manifest stats prove some filter matches none
+    * of its rows ([[mayMatch]]).  The lake's one pruning rule — planner
+    * scans, `LayoutOps.rangeDirs`, `deleteWhere` and `mergeInto` all
+    * split by it. */
+  private[graft] def prune(dirs: Seq[String],
+      stats: Map[(String, String), (String, String, String)],
+      filters: Seq[Expression]): (Seq[String], Seq[String]) =
+    dirs.partition { d =>
+      val name = new Path(d).getName
+      filters.forall(f => mayMatch(f, c => stats.get((name, c))))
+    }
+
   /** Can some row of a directory with stats `stat` satisfy `e`?
-    * False ONLY when provably not.  (private[graft]: LayoutOps
-    * .deleteWhere reuses it to find the directories a delete predicate
-    * could touch.) */
+    * False ONLY when provably not. */
   private[graft] def mayMatch(e: Expression, stat: Stat): Boolean = e match {
     case And(l, r) => mayMatch(l, stat) && mayMatch(r, stat)
     case Or(l, r) => mayMatch(l, stat) || mayMatch(r, stat)

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.fs.Path
+import graft.ops.LayoutOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -33,9 +33,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Contracts:
   *  - APPEND-ONLY tailing: a compaction/overwrite inside a planned
   *    interval rewrites history, so planning THROWS (the same refusal
-  *    as `LayoutOps.readVersionDelta`) instead of re-delivering old
-  *    rows as new.  Tail from the un-compacted ingest lake, or re-seed
-  *    the consumer after an OPTIMIZE.
+  *    as `LayoutOps.readVersionDelta`, both `LayoutOps.appendedDirs`)
+  *    instead of re-delivering old rows as new.  Tail from the
+  *    un-compacted ingest lake, or re-seed the consumer after an
+  *    OPTIMIZE.
   *  - Only COMMITTED versions are visible (manifests are the name
   *    authority), so a crashed writer's orphan directory can never
   *    leak into the stream.
@@ -77,37 +78,20 @@ object LakeStreamSource {
 
   private[sources] def schemaOf(spark: SparkSession,
       path: String): StructType = {
-    val latest = graft.ops.LayoutOps.latestVersion(spark, path)
+    val latest = LayoutOps.latestVersion(spark, path)
     require(latest >= 0, s"lake at $path has no committed versions yet")
-    val (dirs, _, _) =
-      graft.ops.LayoutOps.manifestEntries(spark, path, latest)
-    spark.read.parquet(dirs.last).schema
+    LayoutOps.newestFooter(spark,
+      LayoutOps.manifestEntries(spark, path, latest)._1)
   }
 
-  /** Commit files of the interval `(fromV, toV]`, append-only checked —
-    * shared by planInputPartitions.  Returns (filePath, length). */
+  /** Commit files of the interval `(fromV, toV]`, append-only checked
+    * ([[LayoutOps.appendedDirs]]) — shared by planInputPartitions.
+    * Returns (filePath, length). */
   private[sources] def deltaFiles(spark: SparkSession, path: String,
       fromV: Int, toV: Int): Seq[(String, Long)] = {
-    val fromDirs: Set[String] =
-      if (fromV < 0) Set.empty
-      else graft.ops.LayoutOps.manifestEntries(spark, path, fromV)._1.toSet
-    val (toDirs, _, _) =
-      graft.ops.LayoutOps.manifestEntries(spark, path, toV)
-    val rewritten = fromDirs -- toDirs.toSet
-    require(rewritten.isEmpty,
-      s"lake stream over $path hit a compaction/overwrite between " +
-        s"versions $fromV and $toV (${rewritten.size} directories " +
-        "rewritten) — an append-only tail cannot continue; re-seed the " +
-        "consumer from a snapshot read")
     val conf = spark.sparkContext.hadoopConfiguration
-    toDirs.filterNot(fromDirs).flatMap { d =>
-      val p = new Path(d)
-      p.getFileSystem(conf).listStatus(p).collect {
-        case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".") =>
-          (s.getPath.toString, s.getLen)
-      }
-    }
+    LayoutOps.appendedDirs(spark, path, fromV, toV).flatMap(d =>
+      LayoutOps.dataFiles(conf, d).map(s => (s.getPath.toString, s.getLen)))
   }
 }
 
@@ -154,7 +138,7 @@ private[sources] class LakeMicroBatchStream(path: String,
 
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTarget =
-      Some(graft.ops.LayoutOps.latestVersion(spark, path))
+      Some(LayoutOps.latestVersion(spark, path))
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -163,7 +147,7 @@ private[sources] class LakeMicroBatchStream(path: String,
       "latestOffset(Offset, ReadLimit) is the admission-control entry")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val cur = graft.ops.LayoutOps.latestVersion(spark, path)
+    val cur = LayoutOps.latestVersion(spark, path)
     val capped = availableNowTarget.fold(cur)(math.min(cur, _))
     val from = start.asInstanceOf[LakeVersionOffset].version
     // pacing: at most maxVersionsPerMicroBatch lake versions per batch
@@ -173,7 +157,7 @@ private[sources] class LakeMicroBatchStream(path: String,
   }
 
   override def reportLatestOffset(): Offset =
-    LakeVersionOffset(graft.ops.LayoutOps.latestVersion(spark, path))
+    LakeVersionOffset(LayoutOps.latestVersion(spark, path))
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] = {

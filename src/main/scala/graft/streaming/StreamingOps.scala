@@ -670,9 +670,37 @@ object StreamingOps {
         col("p_user").as("user_id"))
   }
 
+  /** Replace the plain-parquet table at `path` with `next(current)`
+    * (`current` is None while no table exists): write `path__swap`,
+    * delete the old table, rename the swap copy into place.  Every
+    * FileSystem boolean is checked (Hadoop reports a failed delete or
+    * rename by returning false): a failed rename throws and KEEPS
+    * `__swap`, which then holds the only copy of the table, and the next
+    * call first renames a complete (`_SUCCESS`-marked) `__swap` back into
+    * place when the table is missing, so a replayed batch merges into
+    * the table rather than starting over.  Not atomic: between the
+    * delete and the rename, readers see no table at `path`.  One writer
+    * per table. */
+  private[graft] def swapTable(spark: SparkSession, path: String)(
+      next: Option[DataFrame] => DataFrame): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(path + "__swap")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p) &&
+        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
+      require(fs.rename(tmp, p),
+        s"could not restore $p from the interrupted swap at $tmp")
+    next(if (fs.exists(p)) Some(spark.read.parquet(path)) else None)
+      .write.mode("overwrite").parquet(tmp.toString)
+    require(!fs.exists(p) || fs.delete(p, true),
+      s"could not delete $p to swap in $tmp")
+    require(fs.rename(tmp, p),
+      s"could not rename $tmp to $p; the new table is kept at $tmp")
+  }
+
   /** Streaming incremental-view maintenance: each micro-batch's delta
     * rollup merges into a materialized additive rollup via
-    * [[graft.ops.LayoutOps.mergeRollups]] + atomic swap — the nightly
+    * [[graft.ops.LayoutOps.mergeRollups]] + [[swapTable]] — the nightly
     * 100 TB re-aggregation replaced by per-batch merges whose cost is the
     * ROLLUP's cardinality.  Exactly the associativity invariant
     * `ev_rollup_merge` oracle-checks, run continuously. */
@@ -682,36 +710,15 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           _: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.functions.{col, count, lit, sum}
+        import org.apache.spark.sql.functions.{col, sum}
         val delta = batch.groupBy(keys.map(col): _*)
           .agg(sum(sumCols.head).as(sumCols.head),
             sumCols.tail.map(c => sum(c).as(c)): _*)
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(p))
-            graft.ops.LayoutOps.mergeRollups(spark.read.parquet(path), delta,
-              keys, sumCols)
-          else delta
-        val tmp = new org.apache.hadoop.fs.Path(path + "__swap")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(p, true)
-        fs.rename(tmp, p)
-        ()
+        swapTable(batch.sparkSession, path)(_.fold(delta)(
+          graft.ops.LayoutOps.mergeRollups(_, delta, keys, sumCols)))
       }
       .start()
 
-  /** Streaming MERGE-INTO sink for a plain-parquet lake: each micro-batch
-    * is key-deduplicated and upserted into the target table via
-    * `foreachBatch` + [[graft.ops.LayoutOps.upsert]], landing with a
-    * write-to-temp + atomic-swap so readers never observe a half-written
-    * table.  With a checkpoint location the sink is effectively-once:
-    * after a crash/restart, committed batches are not reprocessed (the
-    * checkpoint's batch log) and a replayed in-flight batch re-upserts the
-    * same keys — idempotent by construction.  This is the
-    * streaming→lakehouse integration a 100 TB ingest pipeline runs all
-    * day: CDC in, queryable parquet out, no table format required. */
   /** One micro-batch → one versioned-lake commit, exactly once: the batch
     * id is recorded INSIDE the version manifest (`#txn:batch<id>`,
     * Delta-`txn`-style), so the commit and its replay marker are ONE
@@ -764,25 +771,27 @@ object StreamingOps {
       }
       .start()
 
+  /** Streaming MERGE-INTO sink for a plain-parquet lake: each micro-batch
+    * is key-deduplicated and upserted into the target table via
+    * `foreachBatch` + [[graft.ops.LayoutOps.upsert]], landing through
+    * [[swapTable]] — readers never see a half-written table, but they see
+    * none at all for the moment between the old table's delete and the
+    * swap copy's rename (the versioned lake's [[lakeSink]] is the sink
+    * with snapshot isolation).  With a checkpoint location the sink is
+    * effectively-once: after a crash/restart, committed batches are not
+    * reprocessed (the checkpoint's batch log) and a replayed in-flight
+    * batch re-upserts the same keys — idempotent by construction.  This
+    * is the streaming→lakehouse integration a 100 TB ingest pipeline runs
+    * all day: CDC in, queryable parquet out, no table format required. */
   def upsertSink(stream: DataFrame, key: String, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           _: Long) =>
-        val spark = batch.sparkSession
         val updates = batch.dropDuplicates(key)
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(p))
-            graft.ops.LayoutOps.upsert(spark.read.parquet(path), updates, key)
-          else updates
-        val tmp = new org.apache.hadoop.fs.Path(path + "__swap")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(p, true)
-        fs.rename(tmp, p)
-        ()
+        swapTable(batch.sparkSession, path)(_.fold(updates)(
+          graft.ops.LayoutOps.upsert(_, updates, key)))
       }
       .start()
 }
